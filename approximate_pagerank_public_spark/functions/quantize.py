@@ -15,18 +15,6 @@ zero: q(x) = floor(x · 2^(W-1)) / 2^(W-1), clamped to [0, 2).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def quantize_col(col: Column | str, total_bits: int = 26, int_bits: int = 1) -> Column:
-    """Quantize a DataFrame column to ap_ufixed<total_bits, int_bits>."""
-    c = F.col(col) if isinstance(col, str) else col
-    frac = total_bits - int_bits
-    scale = float(2**frac)
-    hi = float(2**int_bits)
-    clamped = F.least(F.greatest(c, F.lit(0.0)), F.lit(hi - 1.0 / scale))
-    return F.floor(clamped * scale) / scale
 
 
 def quantize_np(x: np.ndarray, total_bits: int = 26, int_bits: int = 1) -> np.ndarray:

@@ -20,7 +20,7 @@ rounds have tiny balls — made bit-replayable by precomputing the 256
 possible values ``m·ln(m/z)`` as shared f64 literals (no engine libm in
 the estimate path; both engines look the value up in the same table).
 
-Scale shape — four paths, all bit-identical (parity-tested):
+Scale shape — three paths, all bit-identical (parity-tested):
 
 - broadcast (≤ ``BROADCAST_MAX_EDGES``): dense ``(n, 256)`` uint8
   register matrix on the driver, one vectorized ``np.maximum.at`` per
@@ -38,11 +38,6 @@ Scale shape — four paths, all bit-identical (parity-tested):
   is exactly ``(|E| + |V|)`` rows × 256 B — the algorithm's true
   communication cost — independent of how full the balls are. No
   per-vertex set ever materializes.
-- distributed (sparse relation ``(id, register, rho)``): the
-  oracle-shaped twin — one join + map-side-combinable
-  ``groupBy(id, register).max(rho)`` per round. Fine at contract
-  scale but its fan-out saturates at 256 rows PER EDGE once balls
-  fill, which is why ``packed`` is the big-graph default.
 
 Rounds rotate state through ``local_ckpt`` (CLAUDE.md lineage
 invariant).
@@ -80,17 +75,6 @@ BROADCAST_MAX_EDGES = 50_000_000
 LC_TABLE = [float(M) * math.log(M / z) for z in range(1, M + 1)]
 # raw-estimate threshold below which linear counting applies (HLL paper)
 LC_THRESHOLD = 2.5 * M
-
-
-def _estimate_cols():
-    """(s_present, n_present) -> corrected estimate Column. Shared shape
-    with the DuckDB replay in ``anf_oracle_sql`` — identical constants,
-    identical branch condition, one division / one table lookup."""
-    s = F.col("s_present") + (F.lit(M) - F.col("n_present")).cast("double")
-    raw = F.lit(float(ALPHA_M2)) / s
-    n_zero = (F.lit(M) - F.col("n_present")).cast("int")
-    lc = F.element_at(F.array(*[F.lit(v) for v in LC_TABLE]), n_zero)
-    return F.when((raw <= F.lit(LC_THRESHOLD)) & (n_zero > 0), lc).otherwise(raw)
 
 
 @dataclass
@@ -211,14 +195,14 @@ def anf_numpy(
 
 
 # ------------------------------------------------------------- packed path
-# The sparse (id, register, rho) relation is oracle-shaped but its join
-# fan-out saturates at 256 rows PER EDGE once balls fill up — fine for
-# the small contract graphs, wrong at 10^8 edges. The cluster-scale
-# representation is the classic HyperBall-on-MapReduce one: the whole
-# 256-register sketch as ONE 256-byte binary column, merged by an
-# Arrow-native segment max. Shuffle volume per round is then exactly
-# (|E| + |V|) rows x 256 B — the algorithm's true communication cost —
-# and the merge is one vectorized np.maximum.reduceat per partition.
+# A sparse (id, register, rho) relation would mirror the oracle, but its
+# join fan-out saturates at 256 rows PER EDGE once balls fill up. The
+# cluster-scale representation is the classic HyperBall-on-MapReduce
+# one: the whole 256-register sketch as ONE 256-byte binary column,
+# merged by an Arrow-native segment max. Shuffle volume per round is
+# then exactly (|E| + |V|) rows x 256 B — the algorithm's true
+# communication cost — and the merge is one vectorized
+# np.maximum.reduceat per partition.
 
 
 def _bin_to_mat(arr) -> np.ndarray:
@@ -608,57 +592,6 @@ def _anf_blocks(g: Graph, rounds: int) -> list[int]:
         store.cleanup()
 
 
-# --------------------------------------------------------- distributed path
-def _init_state(g: Graph) -> DataFrame:
-    h = F.conv(
-        F.substring(F.md5(F.col("id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    w = F.shiftright(h, 8).bitwiseAND(F.lit(4294967295))
-    return g.vertices.select(
-        "id",
-        F.pmod(h, F.lit(M)).cast("int").alias("register"),
-        F.when(w == 0, F.lit(33))
-        .otherwise(F.lit(33) - F.length(F.bin(w)))
-        .cast("int")
-        .alias("rho"),
-    )
-
-
-def _nf_micro_scalar(state: DataFrame) -> int:
-    term = F.expr("1.0 / CAST(shiftleft(CAST(1 AS BIGINT), rho) AS DOUBLE)")
-    per_v = state.groupBy("id").agg(
-        F.sum(term).alias("s_present"), F.count("*").alias("n_present")
-    )
-    ball = F.floor(_estimate_cols() * F.lit(1e6)).cast("long")
-    row = per_v.select(ball.alias("b")).agg(F.sum("b").alias("nf")).collect()[0]
-    return int(row["nf"])
-
-
-def _anf_distributed(g: Graph, rounds: int) -> list[int]:
-    spark = g.spark
-    edges = g.edges.select("src", "dst")
-    state, ids = local_ckpt(_init_state(g))
-    out = [_nf_micro_scalar(state)]
-    for _ in range(rounds):
-        msgs = (
-            edges.alias("e")
-            .join(state.alias("s"), F.col("s.id") == F.col("e.dst"))
-            .select(
-                F.col("e.src").alias("id"), F.col("s.register"), F.col("s.rho")
-            )
-        )
-        nxt = (
-            state.unionByName(msgs)
-            .groupBy("id", "register")
-            .agg(F.max("rho").alias("rho"))
-        )
-        nxt, nxt_ids = local_ckpt(nxt)
-        free_local_ckpt(spark, ids)
-        state, ids = nxt, nxt_ids
-        out.append(_nf_micro_scalar(state))
-    return out
-
-
 def anf_hyperball(g: Graph, rounds: int = 4, mode: str = "auto") -> ANFResult:
     """Neighborhood function NF(0..rounds) over OUT-balls as exact
     micro-unit integers (``nf_micro = Σ_v floor(est_v · 1e6)`` — the
@@ -683,10 +616,6 @@ def anf_hyperball(g: Graph, rounds: int = 4, mode: str = "auto") -> ANFResult:
         nf = _anf_blocks(g, rounds)
     elif mode == "packed":
         nf = _anf_packed(g, rounds)
-    elif mode == "distributed":
-        # oracle-shaped sparse-relation twin; saturates at 256 rows/edge
-        # once balls fill — use 'packed' beyond contract scale
-        nf = _anf_distributed(g, rounds)
     else:
         raise ValueError(f"unknown mode {mode!r}")
     import pandas as pd

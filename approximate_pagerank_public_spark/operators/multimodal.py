@@ -449,18 +449,6 @@ def extract_features(
     return media.select("media_id", "kind", "payload").mapInPandas(fn, FEATURE_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Expand each video into per-frame sampling rows (timestamps only —
-    the decode itself is the stubbed stage). Pure expressions."""
-    v = media.where(F.col("kind") == "video")
-    return v.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-        ).alias("frame_ms"),
-    )
-
-
 FRAME_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

@@ -16,18 +16,18 @@ Semantics match the reference goldens exactly (see
   block, so the edge stream is read once per iteration regardless of S,
   exactly how the FPGA amortizes its memory streams across 8 queries.
 
-Execution modes:
+All three are the same (S, N) loop (global PageRank and single-source
+PPR are its S=1 cases) behind one dispatcher, with two execution paths:
 
-- ``mode='broadcast'`` — Arrow-kernel supersteps (1 Spark job each),
-  driver holds O(S·N) f64 state. Right when the vertex state fits the
-  driver (≲ 10^8 vertices).
-- ``mode='distributed'`` — pure-DataFrame supersteps (|E|-row join +
-  hash agg) with co-partitioned rank state and in-memory lineage
-  truncation every iteration; vertex state never leaves the cluster.
+- ``mode='broadcast'`` — the driver holds the O(S·N) f64 state. The
+  supersteps run as one gang-scheduled barrier job (``plans/barrier.py``)
+  and fall back to one Arrow-kernel Spark job per superstep; both are
+  bit-identical.
 - ``mode='distributed-arrow'`` — cluster-state supersteps over shared-FS
   CSR blocks with packed message shuffles and vectorized NumPy kernels
   (``plans/distblocks.py``). The recommended path at 10^12-turn scale.
-- ``mode='auto'`` picks by ``num_vertices``.
+- ``mode='auto'`` picks ``broadcast`` while the driver state
+  ``num_vertices · S`` stays within :data:`BROADCAST_MAX_VERTICES`.
 
 Every superstep appends to the iteration-metrics series
 ``(iter, l1_err, sq_l2_err, dangling_sum, wall_ms)`` — the reference's
@@ -41,13 +41,10 @@ import time
 from dataclasses import dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from approximate_pagerank_public_spark.operators.spmv import (
-    gather_contrib,
-    gather_contrib_df,
-)
+from approximate_pagerank_public_spark.operators.spmv import gather_contrib
 from approximate_pagerank_public_spark.plans.checkpoint import (
     CheckpointManager,
     free_local_ckpt,
@@ -56,16 +53,16 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
-# Mode-selection cutover, now MEASURED at the protocol-max graph
-# (BENCH_SCALING.json `distributed-twin/ppr-supersteps`, |E|=1e8):
+# Mode-selection cutover, MEASURED at the protocol-max graph
+# (BENCH_SCALING.json `distributed-twin/ppr-supersteps*` rows, |E|=1e8):
 # the single-host barrier/block path sustains ~1.1B edge-traversals/s
-# while the distributed DataFrame twin reaches ~51M on the same box —
-# the per-superstep join+agg shuffle is bandwidth-bound, so on ONE node
-# broadcast mode wins whenever driver state fits. The twin is the
-# correct mode only when vertex state exceeds a single machine
-# (> ~0.8 GB/source of f64 at this threshold) or no shm is available;
-# its shuffle then spreads across the cluster's aggregate bandwidth.
+# while the cluster-state paths reach 51-216M on the same box, so on ONE
+# node broadcast mode wins whenever driver state fits. The PageRank family
+# gates on state cells (vertices × sources, ~0.8 GB of f64 at this
+# threshold); the other families that import it gate on vertices.
 BROADCAST_MAX_VERTICES = 100_000_000
+
+MODES = ("auto", "broadcast", "distributed-arrow")
 
 try:  # job/scheduling failures surface as Py4J errors in classic PySpark
     from py4j.protocol import Py4JError
@@ -201,6 +198,13 @@ def _run_broadcast(
 
     metrics: list[dict] = []
     start_it = 0
+    config = {
+        "alpha": alpha,
+        "tol": tol,
+        "max_iter": max_iter,
+        "sources": sources,
+        "dangling_norm": dangling_norm,
+    }
     ckpt = CheckpointManager(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
     if ckpt and resume:
         loaded = ckpt.load_latest(graph.spark)
@@ -225,13 +229,6 @@ def _run_broadcast(
             metrics_b = list(metrics)
             conv_b = False
             phases: dict = {}
-            config = {
-                "alpha": alpha,
-                "tol": tol,
-                "max_iter": max_iter,
-                "sources": sources,
-                "dangling_norm": dangling_norm,
-            }
             while it_b < max_iter:
                 chunk = (
                     min(checkpoint_every, max_iter - it_b)
@@ -327,13 +324,7 @@ def _run_broadcast(
                 it,
                 pr,
                 metrics,
-                config={
-                    "alpha": alpha,
-                    "tol": tol,
-                    "max_iter": max_iter,
-                    "sources": sources,
-                    "dangling_norm": dangling_norm,
-                },
+                config=config,
                 num_partitions=graph.num_partitions,
             )
         if l1.max() <= tol:
@@ -345,242 +336,6 @@ def _run_broadcast(
         metrics=metrics,
         sources=sources,
         ranks_np=pr,
-        _graph=graph,
-    )
-
-
-def _run_distributed(
-    graph: Graph,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    source: int | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
-    resume: bool = True,
-    dangling_norm: bool = True,
-    init_ranks: DataFrame | None = None,
-) -> PageRankResult:
-    """Pure-DataFrame supersteps; vertex state stays on the cluster.
-
-    Per iteration: dangling-dot scalar agg, gather join + partial/final
-    hash agg, axpb projection, L1 scalar agg; rank state is re-hashed to
-    the loop's partitioning and lineage-truncated (``localCheckpoint``).
-    """
-    spark = graph.spark
-    n = graph.num_vertices
-    p = graph.num_partitions
-    verts = graph.vertices
-    if source is None and init_ranks is not None:
-        ranks = verts.join(
-            init_ranks.select("id", F.col("rank").alias("_ir")), "id", "left"
-        ).select("id", F.coalesce("_ir", F.lit(1.0 / n)).alias("rank"))
-    elif source is None:
-        ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    else:
-        ranks = verts.withColumn(
-            "rank", F.when(F.col("id") == source, 1.0).otherwise(0.0)
-        )
-    ranks, rank_ids = local_ckpt(ranks.repartition(p, "id"))
-    dangling = graph.dangling_vertices().repartition(p, "id").persist()
-    dangling.count()
-
-    metrics: list[dict] = []
-    start_it = 0
-    ckpt = CheckpointManager(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    if ckpt and resume:
-        loaded = ckpt.load_latest_df(graph.spark)
-        if loaded is not None:
-            start_it, ranks_df, metrics = loaded
-            new, new_ids = local_ckpt(ranks_df.repartition(p, "id"))
-            free_local_ckpt(spark, rank_ids)
-            ranks, rank_ids = new, new_ids
-    converged = False
-    it = start_it
-    for it in range(start_it + 1, max_iter + 1):
-        t0 = time.perf_counter()
-        d = (
-            ranks.join(dangling, "id", "left_semi").agg(F.sum("rank")).first()[0]
-            or 0.0
-            if dangling_norm
-            else 0.0
-        )
-        contribs = gather_contrib_df(graph, ranks)
-        shift = (alpha / n) * d + ((1.0 - alpha) / n if source is None else 0.0)
-        new_rank = F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(shift)
-        if source is not None:
-            new_rank = new_rank + F.when(F.col("id") == source, 1.0 - alpha).otherwise(0.0)
-        new, new_ids = local_ckpt(
-            verts.join(contribs, verts.id == contribs.dst, "left")
-            .select("id", new_rank.alias("rank"))
-            .repartition(p, "id")
-        )
-        err_row = (
-            new.join(ranks.withColumnRenamed("rank", "_old"), "id")
-            .agg(
-                F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("l1"),
-                F.sum(F.pow(F.col("rank") - F.col("_old"), 2)).alias("sq"),
-            )
-            .first()
-        )
-        free_local_ckpt(spark, rank_ids)
-        ranks, rank_ids = new, new_ids
-        metrics.append(
-            {
-                "iter": it,
-                "l1_err": float(err_row["l1"]),
-                "sq_l2_err": float(err_row["sq"]),
-                "dangling_sum": float(d),
-                "wall_ms": (time.perf_counter() - t0) * 1e3,
-            }
-        )
-        if ckpt:
-            ckpt.save_df(
-                ranks,
-                it,
-                metrics,
-                config={"alpha": alpha, "tol": tol, "max_iter": max_iter, "source": source},
-            )
-        if err_row["l1"] <= tol:
-            converged = True
-            break
-    dangling.unpersist()
-    return PageRankResult(
-        iterations=it,
-        converged=converged,
-        metrics=metrics,
-        sources=None if source is None else [source],
-        ranks_df=ranks.withColumnRenamed("rank", "rank_0" if source is not None else "rank"),
-        _graph=graph,
-    )
-
-
-def _run_distributed_multi(
-    graph: Graph,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    sources: list[int],
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
-    resume: bool = True,
-    dangling_norm: bool = True,
-) -> PageRankResult:
-    """Distributed 8-source PPR: the (S, N) rank block is S rank columns
-    on a co-partitioned vertex DataFrame; every superstep is ONE edge
-    join + ONE groupBy(dst) aggregating all S weighted sums — the edge
-    relation is read once per superstep regardless of S, exactly the
-    FPGA's multi-query amortization, but with vertex state that never
-    leaves the cluster. Durable checkpoints use the same
-    ``save_df``/``load_latest_df`` protocol as ``_run_distributed``, so
-    a killed 10^12-scale multi-query run resumes mid-computation."""
-    spark = graph.spark
-    n = graph.num_vertices
-    p = graph.num_partitions
-    s = len(sources)
-    cols = [f"r{i}" for i in range(s)]
-    verts = graph.vertices
-    init = [
-        F.when(F.col("id") == src, 1.0).otherwise(0.0).alias(c)
-        for c, src in zip(cols, sources)
-    ]
-    ranks, rank_ids = local_ckpt(verts.select("id", *init).repartition(p, "id"))
-    dangling = graph.dangling_vertices().repartition(p, "id").persist()
-    dangling.count()
-
-    metrics: list[dict] = []
-    start_it = 0
-    ckpt = CheckpointManager(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    if ckpt and resume:
-        loaded = ckpt.load_latest_df(graph.spark)
-        if loaded is not None:
-            start_it, ranks_df, metrics = loaded
-            new, new_ids = local_ckpt(
-                ranks_df.select("id", *cols).repartition(p, "id")
-            )
-            free_local_ckpt(spark, rank_ids)
-            ranks, rank_ids = new, new_ids
-    converged = False
-    it = start_it
-    for it in range(start_it + 1, max_iter + 1):
-        t0 = time.perf_counter()
-        if dangling_norm:
-            drow = (
-                ranks.join(dangling, "id", "left_semi")
-                .agg(*[F.sum(c).alias(c) for c in cols])
-                .first()
-            )
-            d = [float(drow[c] or 0.0) for c in cols]
-        else:
-            d = [0.0] * s
-        r = ranks.withColumnRenamed("id", "src")
-        contribs = (
-            graph.edges.join(r, "src")
-            .groupBy("dst")
-            .agg(*[F.sum(F.col("weight") * F.col(c)).alias(c) for c in cols])
-        )
-        new_cols = []
-        for i, (c, src) in enumerate(zip(cols, sources)):
-            expr = (
-                F.lit(alpha) * F.coalesce(contribs[c], F.lit(0.0))
-                + F.lit(alpha / n * d[i])
-                + F.when(F.col("id") == src, 1.0 - alpha).otherwise(0.0)
-            )
-            new_cols.append(expr.alias(c))
-        new, new_ids = local_ckpt(
-            verts.join(contribs, verts.id == contribs.dst, "left")
-            .select("id", *new_cols)
-            .repartition(p, "id")
-        )
-        old = ranks.select("id", *[F.col(c).alias(f"_o{i}") for i, c in enumerate(cols)])
-        err_row = (
-            new.join(old, "id")
-            .agg(
-                *[
-                    F.sum(F.abs(F.col(c) - F.col(f"_o{i}"))).alias(c)
-                    for i, c in enumerate(cols)
-                ]
-            )
-            .first()
-        )
-        l1 = max(float(err_row[c]) for c in cols)
-        free_local_ckpt(spark, rank_ids)
-        ranks, rank_ids = new, new_ids
-        metrics.append(
-            {
-                "iter": it,
-                "l1_err": l1,
-                "sq_l2_err": None,
-                "dangling_sum": max(d),
-                "wall_ms": (time.perf_counter() - t0) * 1e3,
-            }
-        )
-        if ckpt:
-            ckpt.save_df(
-                ranks,
-                it,
-                metrics,
-                config={
-                    "alpha": alpha,
-                    "tol": tol,
-                    "max_iter": max_iter,
-                    "sources": sources,
-                    "dangling_norm": dangling_norm,
-                },
-            )
-        if l1 <= tol:
-            converged = True
-            break
-    dangling.unpersist()
-    out = ranks.select(
-        "id", *[F.col(c).alias(f"rank_{i}") for i, c in enumerate(cols)]
-    )
-    return PageRankResult(
-        iterations=it,
-        converged=converged,
-        metrics=metrics,
-        sources=sources,
-        ranks_df=out,
         _graph=graph,
     )
 
@@ -597,94 +352,34 @@ def _run_distributed_arrow(
     dangling_norm: bool = True,
     init_ranks: DataFrame | None = None,
 ) -> PageRankResult:
-    """Pin the loop's partition layout, then run the superstep loop.
-
-    The checkpointed state must stay hash(id, p) across supersteps (the
-    shuffle-hash join streams it in place only then); AQE partition
-    coalescing re-plans the contribs exchange to fewer partitions and
-    the layout drifts superstep over superstep (measured: escalating
-    5→29 s supersteps at |E|=10⁸ / 32 cores). See
-    :func:`~approximate_pagerank_public_spark.plans.checkpoint.pinned_confs`.
-    """
-    with pinned_confs(
-        graph.spark,
-        {
-            "spark.sql.adaptive.coalescePartitions.enabled": "false",
-            "spark.sql.shuffle.partitions": str(graph.num_partitions),
-        },
-    ):
-        return _run_distributed_arrow_impl(
-            graph,
-            alpha,
-            tol,
-            max_iter,
-            sources,
-            checkpoint_dir,
-            checkpoint_every,
-            resume,
-            dangling_norm,
-            init_ranks,
-        )
-
-
-def _run_distributed_arrow_impl(
-    graph: Graph,
-    alpha: float,
-    tol: float,
-    max_iter: int,
-    sources: list[int] | None,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
-    resume: bool = True,
-    dangling_norm: bool = True,
-    init_ranks: DataFrame | None = None,
-) -> PageRankResult:
     """Message-shuffle supersteps over shared-FS CSR blocks — the
     cluster-scale path (``plans/distblocks.py``; single source, plain
     PageRank, and the (S, N) multi-PPR block all share it).
 
-    Per superstep (vs ``_run_distributed``'s |E|-row join + |E|-row hash
-    agg): one job whose only all-to-all is packed per-(state partition,
-    block) binary messages feeding the L2-tiled NumPy SpMV against
-    mmap-cached blocks, then one narrow scan for the stop scalars
-    (carried as diff columns on the checkpointed state, so no second
-    join) which ALSO computes the next iteration's dangling dot
-    (dangling ⇔ empty routing column) — so the dangling term costs no
-    job of its own. Vertex state never leaves the cluster.
+    Per superstep: one job whose only all-to-all is packed per-(state
+    partition, block) binary messages feeding the L2-tiled NumPy SpMV
+    against mmap-cached blocks. The stop scalars and the next
+    iteration's dangling dot (dangling ⇔ empty routing column) are
+    observed on the job that checkpoints the new state, so neither
+    costs a job of its own. Vertex state never leaves the cluster.
+
+    The loop runs with the partition layout pinned: the checkpointed
+    state must stay hash(id, p) across supersteps (the shuffle-hash join
+    streams it in place only then); AQE partition coalescing re-plans
+    the contribs exchange to fewer partitions and the layout drifts
+    superstep over superstep (measured: escalating 5→29 s supersteps at
+    |E|=10⁸ / 32 cores). See
+    :func:`~approximate_pagerank_public_spark.plans.checkpoint.pinned_confs`.
+
+    On exit the pinned routing checkpoint and the last superstep's
+    spilled messages are released; on an error exit the current state
+    checkpoint is freed too (on success it backs the returned ranks).
     """
     spark = graph.spark
     n = graph.num_vertices
     p = graph.num_partitions
-    store = graph.dist_blocks()
     s = 1 if sources is None else len(sources)
     cols = [f"r{i}" for i in range(s)]
-    # the routing column is STATIC — pin it once as its own hash(id, p)
-    # checkpoint and join it to the loop state per superstep (an
-    # exchange-free shuffle-hash join: both sides keep the same
-    # partitioning). The checkpointed loop state carries only a 1-byte
-    # `dang` flag instead of the ~P-entry pids array, cutting the
-    # per-superstep checkpoint write and the two state reads by ~2×
-    # (measured 3.5 → ~3 s superstep at |E|=10⁸/32c).
-    rt, rt_ids = local_ckpt(
-        store.attach_routing(graph.vertices).repartition(p, "id")
-    )
-    routed = rt.select("id", F.size("pids").eqNullSafe(0).alias("dang"))
-    if sources is None and init_ranks is not None:
-        routed = routed.join(
-            init_ranks.select("id", F.col("rank").alias("_ir")), "id", "left"
-        )
-        init = [F.coalesce(F.col("_ir"), F.lit(1.0 / n)).alias("r0")]
-    elif sources is None:
-        init = [F.lit(1.0 / n).alias("r0")]
-    else:
-        init = [
-            F.when(F.col("id") == src, 1.0).otherwise(0.0).alias(c)
-            for c, src in zip(cols, sources)
-        ]
-    state, state_ids = local_ckpt(
-        routed.select("id", "dang", *init).repartition(p, "id")
-    )
-
     metrics: list[dict] = []
     start_it = 0
     config = {
@@ -695,116 +390,151 @@ def _run_distributed_arrow_impl(
         "dangling_norm": dangling_norm,
     }
     ckpt = CheckpointManager(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    if ckpt and resume:
-        loaded = ckpt.load_latest_df(graph.spark)
-        if loaded is not None:
-            start_it, ranks_df, metrics = loaded
-            new, new_ids = local_ckpt(
-                rt.select("id", F.size("pids").eqNullSafe(0).alias("dang"))
-                .join(ranks_df.select("id", *cols), "id")
-                .select("id", "dang", *cols)
-                .repartition(p, "id")
+    with pinned_confs(
+        spark,
+        {
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.shuffle.partitions": str(p),
+        },
+    ):
+        store = graph.dist_blocks()
+        # the routing column is STATIC — pin it once as its own hash(id, p)
+        # checkpoint and join it to the loop state per superstep (an
+        # exchange-free shuffle-hash join: both sides keep the same
+        # partitioning). The checkpointed loop state carries only a 1-byte
+        # `dang` flag instead of the ~P-entry pids array, cutting the
+        # per-superstep checkpoint write and the two state reads by ~2×
+        # (measured 3.5 → ~3 s superstep at |E|=10⁸/32c).
+        rt, rt_ids = local_ckpt(
+            store.attach_routing(graph.vertices).repartition(p, "id")
+        )
+        state_ids: set[int] = set()
+        try:
+            dang = rt.select("id", F.size("pids").eqNullSafe(0).alias("dang"))
+            routed = dang
+            if sources is None and init_ranks is not None:
+                routed = dang.join(
+                    init_ranks.select("id", F.col("rank").alias("_ir")), "id", "left"
+                )
+                init = [F.coalesce(F.col("_ir"), F.lit(1.0 / n)).alias("r0")]
+            elif sources is None:
+                init = [F.lit(1.0 / n).alias("r0")]
+            else:
+                init = [
+                    F.when(F.col("id") == src, 1.0).otherwise(0.0).alias(c)
+                    for c, src in zip(cols, sources)
+                ]
+            state, state_ids = local_ckpt(
+                routed.select("id", "dang", *init).repartition(p, "id")
             )
+            if ckpt and resume:
+                loaded = ckpt.load_latest_df(spark)
+                if loaded is not None:
+                    start_it, ranks_df, metrics = loaded
+                    new, new_ids = local_ckpt(
+                        dang.join(ranks_df.select("id", *cols), "id")
+                        .select("id", "dang", *cols)
+                        .repartition(p, "id")
+                    )
+                    free_local_ckpt(spark, state_ids)
+                    state, state_ids = new, new_ids
+            converged = False
+            it = start_it
+            # dangling dot of the CURRENT state, one scan before the loop;
+            # every later iteration piggybacks it on the stop-scalar agg of
+            # the state it just materialized — no separate per-superstep job
+            if dangling_norm:
+                drow = (
+                    state.where(F.col("dang"))
+                    .agg(*[F.sum(c).alias(c) for c in cols])
+                    .first()
+                )
+                d = [float(drow[c] or 0.0) for c in cols]
+            else:
+                d = [0.0] * s
+            for it in range(start_it + 1, max_iter + 1):
+                t0 = time.perf_counter()
+                # exchange-free SHJ: rt and state share hash(id, p)
+                contribs = store.contribs(
+                    rt.join(state.select("id", *cols), "id"), s, p
+                )
+                new_cols, diff_cols = [], []
+                for i, c in enumerate(cols):
+                    expr = F.lit(alpha) * F.coalesce(
+                        F.col(f"c{i}"), F.lit(0.0)
+                    ) + F.lit(
+                        alpha / n * d[i]
+                        + ((1.0 - alpha) / n if sources is None else 0.0)
+                    )
+                    if sources is not None:
+                        expr = expr + F.when(
+                            F.col("id") == sources[i], 1.0 - alpha
+                        ).otherwise(0.0)
+                    new_cols.append(expr.alias(c))
+                    diff_cols.append(F.abs(expr - F.col(c)).alias(f"_d{i}"))
+                gaggs = (
+                    [
+                        F.sum(F.when(F.col("dang"), F.col(c))).alias(f"_g{i}")
+                        for i, c in enumerate(cols)
+                    ]
+                    if dangling_norm
+                    else []
+                )
+                # stop scalars + next dangling dot ride the SAME job as the
+                # state checkpoint (CollectMetrics/observe accumulates them
+                # while rows stream past), so no second O(V·S) scan job per
+                # superstep; the checkpoint holds only (id, dang, r*).
+                #
+                # Join shape: localCheckpoint preserves the state's
+                # hash(id, p) outputPartitioning, so with shuffle partitions
+                # == p the ONLY exchange here is contribs→hash(id, p); the
+                # shuffle_hash hint builds the hash map on the contribs side
+                # and streams state in-place (a sort-merge join would add
+                # two O(V·S) sorts per superstep), and the join output is
+                # already hash(id, p), so no trailing repartition.
+                obs = Observation()
+                new, new_ids = local_ckpt(
+                    state.join(contribs.hint("shuffle_hash"), "id", "left")
+                    .select("id", "dang", *new_cols, *diff_cols)
+                    .observe(
+                        obs,
+                        *[F.sum(f"_d{i}").alias(f"_d{i}") for i in range(s)],
+                        *[F.sum(F.pow(f"_d{i}", 2)).alias(f"_q{i}") for i in range(s)],
+                        *gaggs,
+                    )
+                    .select("id", "dang", *cols)
+                )
+                err_row = obs.get
+                l1 = max(float(err_row[f"_d{i}"]) for i in range(s))
+                sq = max(float(err_row[f"_q{i}"]) for i in range(s))
+                d_used = max(d)
+                if dangling_norm:
+                    d = [float(err_row[f"_g{i}"] or 0.0) for i in range(s)]
+                # the new state is materialized — actually free the
+                # superseded checkpoint blocks (DataFrame.unpersist would be
+                # a no-op)
+                free_local_ckpt(spark, state_ids)
+                state, state_ids = new, new_ids  # already (id, dang, r*)
+                metrics.append(
+                    {
+                        "iter": it,
+                        "l1_err": l1,
+                        "sq_l2_err": sq,
+                        "dangling_sum": d_used,
+                        "wall_ms": (time.perf_counter() - t0) * 1e3,
+                    }
+                )
+                if ckpt:
+                    ckpt.save_df(state.select("id", *cols), it, metrics, config=config)
+                if l1 <= tol:
+                    converged = True
+                    break
+        except BaseException:
             free_local_ckpt(spark, state_ids)
-            state, state_ids = new, new_ids
-    converged = False
-    it = start_it
-    # dangling dot of the CURRENT state, one scan before the loop; every
-    # later iteration piggybacks it on the stop-scalar agg of the state
-    # it just materialized — no separate per-superstep job
-    if dangling_norm:
-        drow = (
-            state.where(F.col("dang"))
-            .agg(*[F.sum(c).alias(c) for c in cols])
-            .first()
-        )
-        d = [float(drow[c] or 0.0) for c in cols]
-    else:
-        d = [0.0] * s
-    for it in range(start_it + 1, max_iter + 1):
-        t0 = time.perf_counter()
-        # exchange-free SHJ: rt and state share hash(id, p) partitioning
-        contribs = store.contribs(
-            rt.join(state.select("id", *cols), "id"), s, p
-        )
-        new_cols, diff_cols = [], []
-        for i, c in enumerate(cols):
-            expr = F.lit(alpha) * F.coalesce(F.col(f"c{i}"), F.lit(0.0)) + F.lit(
-                alpha / n * d[i] + ((1.0 - alpha) / n if sources is None else 0.0)
-            )
-            if sources is not None:
-                expr = expr + F.when(
-                    F.col("id") == sources[i], 1.0 - alpha
-                ).otherwise(0.0)
-            new_cols.append(expr.alias(c))
-            diff_cols.append(F.abs(expr - F.col(c)).alias(f"_d{i}"))
-        gaggs = (
-            [
-                F.sum(F.when(F.col("dang"), F.col(c))).alias(f"_g{i}")
-                for i, c in enumerate(cols)
-            ]
-            if dangling_norm
-            else []
-        )
-        # stop scalars + next dangling dot ride the SAME job as the state
-        # checkpoint (CollectMetrics/observe accumulates them while rows
-        # stream past) — the r3 path paid a second O(V·S) scan job per
-        # superstep for them, a fixed ~1 s of the ~4.9 s superstep at
-        # |E|=10⁸, and carried the diff columns inside the checkpointed
-        # state; now the checkpoint holds only (id, dang, r*) — the
-        # static pids routing lives in the pinned `rt` checkpoint.
-        #
-        # Join shape: localCheckpoint preserves the state's hash(id, p)
-        # outputPartitioning, so with shuffle partitions == p the ONLY
-        # exchange here is contribs→hash(id, p); the shuffle_hash hint
-        # builds the hash map on the contribs side and streams state
-        # in-place (a sort-merge join would add two O(V·S) sorts per
-        # superstep), and the join output is already hash(id, p) — the
-        # explicit trailing repartition the r3 path paid (a second full
-        # O(V·S) exchange per superstep) is gone.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new, new_ids = local_ckpt(
-            state.join(contribs.hint("shuffle_hash"), "id", "left")
-            .select("id", "dang", *new_cols, *diff_cols)
-            .observe(
-                obs,
-                *[F.sum(f"_d{i}").alias(f"_d{i}") for i in range(s)],
-                *[F.sum(F.pow(f"_d{i}", 2)).alias(f"_q{i}") for i in range(s)],
-                *gaggs,
-            )
-            .select("id", "dang", *cols)
-        )
-        err_row = obs.get
-        l1 = max(float(err_row[f"_d{i}"]) for i in range(s))
-        sq = max(float(err_row[f"_q{i}"]) for i in range(s))
-        d_used = max(d)
-        if dangling_norm:
-            d = [float(err_row[f"_g{i}"] or 0.0) for i in range(s)]
-        # the new state is materialized — actually free the superseded
-        # checkpoint blocks (DataFrame.unpersist would be a no-op)
-        free_local_ckpt(spark, state_ids)
-        state, state_ids = new, new_ids  # already (id, dang, r*)
-        metrics.append(
-            {
-                "iter": it,
-                "l1_err": l1,
-                "sq_l2_err": sq,
-                "dangling_sum": d_used,
-                "wall_ms": (time.perf_counter() - t0) * 1e3,
-            }
-        )
-        if ckpt:
-            ckpt.save_df(state.select("id", *cols), it, metrics, config=config)
-        if l1 <= tol:
-            converged = True
-            break
-    # the final state is materialized — reclaim the last superstep's
-    # spilled message files and the pinned routing checkpoint (the
-    # returned ranks depend only on the final state's own blocks)
-    store.clear_messages()
-    free_local_ckpt(spark, rt_ids)
+            raise
+        finally:
+            store.clear_messages()
+            free_local_ckpt(spark, rt_ids)
     if sources is None:
         out = state.select("id", F.col("r0").alias("rank"))
     else:
@@ -821,16 +551,41 @@ def _run_distributed_arrow_impl(
     )
 
 
-def _pick_mode(graph: Graph, mode: str) -> str:
+def _pick_mode(graph: Graph, mode: str, num_sources: int) -> str:
+    """Resolve ``mode`` for an S-source run; unknown modes raise."""
+    if mode not in MODES:
+        raise ValueError(f"unknown mode {mode!r}; expected one of {MODES}")
     if mode != "auto":
         return mode
-    # beyond driver-resident state, the message-shuffle block path is the
-    # measured winner over the join-based twin (BENCH_SCALING.json
-    # `distributed-twin` rows) — the join twin stays reachable explicitly
-    return (
-        "broadcast"
-        if graph.num_vertices <= BROADCAST_MAX_VERTICES
-        else "distributed-arrow"
+    # the broadcast path holds S×N f64 on the driver
+    if graph.num_vertices * num_sources <= BROADCAST_MAX_VERTICES:
+        return "broadcast"
+    return "distributed-arrow"
+
+
+def _run(
+    graph: Graph,
+    sources: list[int] | None,
+    alpha: float,
+    tol: float,
+    max_iter: int,
+    mode: str,
+    checkpoint_dir: str | None,
+    checkpoint_every: int,
+    resume: bool,
+    dangling_norm: bool,
+    init_ranks: DataFrame | None,
+) -> PageRankResult:
+    """The one PageRank-family dispatcher; ``sources=None`` is global
+    PageRank (S=1, uniform teleport)."""
+    num_sources = 1 if sources is None else len(sources)
+    if _pick_mode(graph, mode, num_sources) == "broadcast":
+        run = _run_broadcast
+    else:
+        run = _run_distributed_arrow
+    return run(
+        graph, alpha, tol, max_iter, sources, checkpoint_dir, checkpoint_every,
+        resume, dangling_norm=dangling_norm, init_ranks=init_ranks,
     )
 
 
@@ -855,20 +610,9 @@ def pagerank(
     iteration's fixed point is independent of starting mass). Works on
     all three execution paths; ``max_iter=0`` returns the filled init
     state itself (useful to inspect the fill rule)."""
-    mode = _pick_mode(graph, mode)
-    if mode == "broadcast":
-        return _run_broadcast(
-            graph, alpha, tol, max_iter, None, checkpoint_dir, checkpoint_every,
-            resume, init_ranks=init_ranks,
-        )
-    if mode == "distributed-arrow":
-        return _run_distributed_arrow(
-            graph, alpha, tol, max_iter, None, checkpoint_dir, checkpoint_every,
-            resume, init_ranks=init_ranks,
-        )
-    return _run_distributed(
-        graph, alpha, tol, max_iter, None, checkpoint_dir, checkpoint_every,
-        resume, init_ranks=init_ranks,
+    return _run(
+        graph, None, alpha, tol, max_iter, mode, checkpoint_dir,
+        checkpoint_every, resume, True, init_ranks,
     )
 
 
@@ -887,20 +631,9 @@ def personalized_pagerank(
     """``dangling_norm=False`` reproduces the reference's ``norm=false``
     PGX runs (``ppr.gm:14-16``): the dangling-mass redistribution term
     is skipped entirely, in all three execution paths."""
-    mode = _pick_mode(graph, mode)
-    if mode == "broadcast":
-        return _run_broadcast(
-            graph, alpha, tol, max_iter, [source], checkpoint_dir, checkpoint_every,
-            resume, dangling_norm=dangling_norm,
-        )
-    if mode == "distributed-arrow":
-        return _run_distributed_arrow(
-            graph, alpha, tol, max_iter, [source], checkpoint_dir, checkpoint_every,
-            resume, dangling_norm=dangling_norm,
-        )
-    return _run_distributed(
-        graph, alpha, tol, max_iter, source, checkpoint_dir, checkpoint_every,
-        resume, dangling_norm=dangling_norm,
+    return _run(
+        graph, [source], alpha, tol, max_iter, mode, checkpoint_dir,
+        checkpoint_every, resume, dangling_norm, None,
     )
 
 
@@ -921,18 +654,7 @@ def multi_ppr(
     kernel instead runs a fixed budget — pass ``tol=0`` +
     ``max_iter=m`` to reproduce that exactly). ``dangling_norm=False``
     drops the dangling term (``ppr.gm:14-16``)."""
-    mode = _pick_mode(graph, mode)
-    if mode == "broadcast":
-        return _run_broadcast(
-            graph, alpha, tol, max_iter, list(sources), checkpoint_dir,
-            checkpoint_every, resume, dangling_norm=dangling_norm,
-        )
-    if mode == "distributed-arrow":
-        return _run_distributed_arrow(
-            graph, alpha, tol, max_iter, list(sources), checkpoint_dir,
-            checkpoint_every, resume, dangling_norm=dangling_norm,
-        )
-    return _run_distributed_multi(
-        graph, alpha, tol, max_iter, list(sources), checkpoint_dir,
-        checkpoint_every, resume, dangling_norm=dangling_norm,
+    return _run(
+        graph, list(sources), alpha, tol, max_iter, mode, checkpoint_dir,
+        checkpoint_every, resume, dangling_norm, None,
     )

@@ -4,36 +4,31 @@ Semantics (reference ``spmv_gold``, ``src/fpga/src/gold_algorithms.hpp:3-16``):
 ``contrib[v] = Σ_{(u,v)∈E} weight(u,v) · rank[u]`` — i.e.
 ``SELECT dst, SUM(weight * rank[src]) GROUP BY dst`` in pull orientation.
 
-Two physical strategies, selected by vertex-state size:
+The broadcast-state kernel (:func:`gather_contrib`) — the north-star
+path. The rank vector (or an (S,N) block for S simultaneous sources,
+mirroring the FPGA's 8-query batching,
+``src/fpga/src/ip_cores/multi_personalized_pagerank.cpp:157-166``) is
+shipped to executors; a ``mapInArrow`` kernel streams each edge
+partition's dst-sorted Arrow batches through vectorized NumPy:
+fancy-index gather (the reference's ``scatter_vec``,
+``spmv_coo.hpp:10-41``) + ``np.add.reduceat`` segmented reduction
+(the reference's streaming write-back FSM,
+``spmv_coo_multi_stream.hpp:178-232``). Each partition emits exactly
+one partial sum per distinct dst. Because the edge layout is hash
+partitioned **by dst**, partials are (nearly) disjoint across
+partitions, so no shuffle is needed at all: the driver merges the
+collected partials with ``np.add.at`` (exact even when skew salting
+spreads one dst over several partitions). Shuffle count per
+superstep: zero.
 
-1. **Arrow broadcast kernel** (:func:`gather_contrib`) — the north-star
-   path. The rank vector (or an (S,N) block for S simultaneous sources,
-   mirroring the FPGA's 8-query batching,
-   ``src/fpga/src/ip_cores/multi_personalized_pagerank.cpp:157-166``) is
-   shipped to executors; a ``mapInArrow`` kernel streams each edge
-   partition's dst-sorted Arrow batches through vectorized NumPy:
-   fancy-index gather (the reference's ``scatter_vec``,
-   ``spmv_coo.hpp:10-41``) + ``np.add.reduceat`` segmented reduction
-   (the reference's streaming write-back FSM,
-   ``spmv_coo_multi_stream.hpp:178-232``). Each partition emits exactly
-   one partial sum per distinct dst. Because the edge layout is hash
-   partitioned **by dst**, partials are (nearly) disjoint across
-   partitions, so no shuffle is needed at all: the driver merges the
-   collected partials with ``np.add.at`` (exact even when skew salting
-   spreads one dst over several partitions). Shuffle count per
-   superstep: zero.
+Rank shipping: on ``local[*]`` masters the (S,N) f64 block is written
+once per superstep to ``/dev/shm`` and ``np.load(mmap_mode='r')``-ed
+by every Python worker — zero-copy shared pages, no pickling. On a
+real cluster the same code path falls back to a Spark broadcast
+(torrent distribution, one fetch per executor).
 
-   Rank shipping: on ``local[*]`` masters the (S,N) f64 block is written
-   once per superstep to ``/dev/shm`` and ``np.load(mmap_mode='r')``-ed
-   by every Python worker — zero-copy shared pages, no pickling. On a
-   real cluster the same code path falls back to a Spark broadcast
-   (torrent distribution, one fetch per executor).
-
-2. **Distributed DataFrame gather** (:func:`gather_contrib_df`) — for
-   vertex states too large to broadcast (the 10^12-turn regime): an
-   equi-join of edges with a co-partitioned rank DataFrame followed by
-   partial+final hash aggregation; AQE skew-join splitting handles hot
-   join keys, and Spark's partial aggregation handles hot dst groups.
+Vertex states too large for the driver take the cluster-state SpMV of
+``plans/distblocks.py`` instead (``mode='distributed-arrow'``).
 """
 
 from __future__ import annotations
@@ -45,7 +40,6 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from approximate_pagerank_public_spark.plans.graph import Graph
@@ -167,19 +161,3 @@ def gather_contrib(graph: Graph, rank: np.ndarray) -> np.ndarray:
         for i in range(n_sources):
             np.add.at(contrib[i], idx, pdf[f"c{i}"].to_numpy(np.float64))
     return contrib
-
-
-def gather_contrib_df(graph: Graph, ranks: DataFrame, rank_col: str = "rank") -> DataFrame:
-    """Distributed gather: ``(dst, contrib)`` DataFrame.
-
-    ``ranks`` must be ``(id, <rank_col>)``. The join shuffles edges by
-    ``src`` (or broadcasts ranks when small — Catalyst/AQE decides from
-    stats); the aggregation does map-side partial sums before the final
-    ``dst`` shuffle.
-    """
-    r = ranks.select(F.col("id").alias("src"), F.col(rank_col).alias("_r"))
-    return (
-        graph.edges.join(r, "src")
-        .groupBy("dst")
-        .agg(F.sum(F.col("weight") * F.col("_r")).alias("contrib"))
-    )

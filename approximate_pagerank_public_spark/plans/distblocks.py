@@ -73,9 +73,9 @@ independent of which columns share a kernel call, and with
 dst-disjoint blocks each (id, column) has exactly ONE non-null
 contribution row, so the merging ``F.sum`` returns that value
 verbatim. The state side never re-shuffles because
-``localCheckpoint`` preserves its hash(id, p) partitioning. Compare
-``operators/pagerank.py::_run_distributed``: an |E|-row join +
-|E|-row hash agg per superstep.
+``localCheckpoint`` preserves its hash(id, p) partitioning. A
+DataFrame join formulation would instead pay an |E|-row join + |E|-row
+hash agg per superstep.
 
 Reference: the message packing mirrors the FPGA's block-local
 accumulation + burst write-back (``spmv_coo_multi_stream.hpp:178-232``);

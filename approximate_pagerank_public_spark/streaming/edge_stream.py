@@ -5,32 +5,28 @@ hardware FIFO — ``spmv_coo_multi_stream.hpp:89-104``), so streaming is
 *additive* capability: a 10^12-turn transcript table is append-only in
 practice, and the graph should absorb new turns without full rebuilds.
 
-``stream_edges`` consumes a transcripts stream (file source in tests;
-Kafka/Iceberg CDC in production), derives the same three edge rules as
-the batch ETL (consecutive-turn linking uses
-``applyInPandasWithState``-free logic: the per-conversation previous
-entity is recovered by re-reading the *within-batch* window — late turns
-beyond the watermark are dropped), and maintains incremental edge
-counts per (src_entity, dst_entity) in the sink, from which weights are
-re-derivable. Batch and stream share the entity derivation code.
+``stream_edge_updates`` consumes a transcripts stream (file source in
+tests; Kafka/Iceberg CDC in production) and derives the batch ETL's
+stateless edge rules (late turns beyond the watermark are dropped);
+``stateful_consecutive_edges`` adds consecutive-turn linking with the
+per-conversation previous entity kept in ``applyInPandasWithState``
+state. ``edge_count_query`` maintains incremental edge counts per
+(src_entity, dst_entity) in the sink, from which weights are
+re-derivable.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from approximate_pagerank_public_spark.operators.etl import turn_entity
 
 
 def stream_edge_updates(transcripts_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming DataFrame of edge observations (src_entity, dst_entity).
 
-    ``foreachBatch``-style consecutive-turn linking happens per
-    micro-batch (turn pairs arriving in the same batch); conv→tool and
-    role→conv rules are stateless projections. Returns the *union*
-    stream ready for a counting sink:
+    The conv→tool and role→conv rules are stateless projections
+    (consecutive-turn linking is :func:`stateful_consecutive_edges`).
+    Returns the *union* stream ready for a counting sink:
     ``writeStream.outputMode("update")`` over
     ``groupBy(src_entity, dst_entity).count()``.
     """
@@ -62,21 +58,10 @@ def edge_count_query(edge_updates: DataFrame, checkpoint_dir: str, sink_path: st
     )
 
 
-def consecutive_turn_edges_microbatch(batch_df: DataFrame) -> DataFrame:
-    """Per-micro-batch consecutive-turn linking (use via ``foreachBatch``):
-    identical window logic to the batch ETL, applied to the batch's rows."""
-    turns = batch_df.select("conv_id", "turn_idx", turn_entity().alias("entity"))
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return turns.select(
-        F.lag("entity").over(w).alias("src_entity"),
-        F.col("entity").alias("dst_entity"),
-    ).where(F.col("src_entity").isNotNull())
-
-
 def stateful_consecutive_edges(transcripts_stream: DataFrame) -> DataFrame:
     """Cross-micro-batch consecutive-turn linking via
-    ``applyInPandasWithState`` — the custom stateful operator the
-    plain window version cannot express: per ``conv_id`` the state
+    ``applyInPandasWithState`` — the custom stateful operator a plain
+    window cannot express: per ``conv_id`` the state
     carries ``(last_turn, last_entity)``, so a conversation's first
     turn in batch N links back to its last turn from batch N-1 (and a
     restart from the checkpoint restores the state). Rows are

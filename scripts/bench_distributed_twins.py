@@ -7,9 +7,9 @@ real multi-executor 100-TB cluster would run — had no measurement above
 G(n,m) input the barrier campaign used (|V|=1e6, |E|=1e8, seed 42,
 skew 0.1):
 
-- multi-PPR supersteps in ``mode='distributed'`` (join + hash agg,
-  state never leaves the cluster) at two parallelism levels -> the
-  twin's own N->4N scaling efficiency;
+- multi-PPR supersteps in ``mode='distributed-arrow'`` (message-shuffle
+  block path, state never leaves the cluster) at two parallelism levels
+  -> the path's own N->4N scaling efficiency;
 - connected components, distributed min-prop and star modes;
 - 50-source BFS through the DataFrame twin (``multi_source_bfs``);
 - warm single-source block BFS (the missing PGX head-to-head point).
@@ -17,7 +17,10 @@ skew 0.1):
 Each workload runs in its own subprocess (fresh JVM, honest
 parallelism). Results append to BENCH_SCALING.json with
 ``workload: distributed-twin/...`` labels; BASELINE.md summarizes and
-states the measured barrier/distributed crossover.
+states the measured barrier/distributed crossover. The
+``distributed-twin/ppr-supersteps`` rows already there measured the
+PageRank join+agg DataFrame path, which the engine no longer has; they
+stay as the record behind the arrow path's selection.
 
 Usage: python scripts/bench_distributed_twins.py [--quick]
 (--quick = 2*10^7 edges, for smoke-testing the harness itself)
@@ -55,9 +58,8 @@ kind = {kind!r}
 
 if kind == "ppr":
     from approximate_pagerank_public_spark.operators.pagerank import multi_ppr
-    # distributed twins: state stays on-cluster. mode='distributed' is the
-    # join+agg twin; 'distributed-arrow' the message-shuffle block path
-    # (its one-time store build is reported separately).
+    # state stays on-cluster on the message-shuffle block path (its
+    # one-time store build is reported separately)
     mode = {prmode!r}
     if mode == "distributed-arrow":
         t0 = time.perf_counter()
@@ -109,7 +111,7 @@ def run_worker(kind: str, cpus: int, v: int, e: int, timeout: int, **kw) -> dict
         e=e,
         kind=kind,
         iters=kw.get("iters", 5),
-        prmode=kw.get("prmode", "distributed"),
+        prmode=kw.get("prmode", "distributed-arrow"),
         ccmode=kw.get("ccmode", "distributed"),
         n_sources=kw.get("n_sources", 50),
     )
@@ -181,8 +183,8 @@ def main() -> None:
         # once per-superstep work dominates the floor - the honest
         # cluster-scale claim.
         vL, eL = 2_000_000, 400_000_000
-        lo_l = run_worker("ppr", 8, vL, eL, 7200, iters=5, prmode="distributed-arrow")
-        hi_l = run_worker("ppr", 32, vL, eL, 7200, iters=5, prmode="distributed-arrow")
+        lo_l = run_worker("ppr", 8, vL, eL, 7200, iters=5)
+        hi_l = run_worker("ppr", 32, vL, eL, 7200, iters=5)
         eff_l = None
         if "et_per_sec" in lo_l and "et_per_sec" in hi_l:
             eff_l = round(hi_l["et_per_sec"] / (4 * lo_l["et_per_sec"]), 3)
@@ -204,11 +206,11 @@ def main() -> None:
         # Fixed-block runs (the default section 0) hold communication
         # constant but cap SpMV parallelism at the block count.
         lo_m = run_worker(
-            "ppr", 8, v, e, to, iters=5, prmode="distributed-arrow",
+            "ppr", 8, v, e, to, iters=5,
             env_extra={"SPARK_GRAFT_DIST_EDGES_PER_BLOCK": str(-(-e // 16))},
         )
         hi_m = run_worker(
-            "ppr", 32, v, e, to, iters=5, prmode="distributed-arrow",
+            "ppr", 32, v, e, to, iters=5,
             env_extra={"SPARK_GRAFT_DIST_EDGES_PER_BLOCK": str(-(-e // 64))},
         )
         eff_m = None
@@ -230,8 +232,8 @@ def main() -> None:
     if not rest_only:
         # 0. message-shuffle block path (mode='distributed-arrow') at 8
         # and 32 cores — the cluster-scale path's own scaling efficiency
-        lo_a = run_worker("ppr", 8, v, e, to, iters=5, prmode="distributed-arrow")
-        hi_a = run_worker("ppr", 32, v, e, to, iters=5, prmode="distributed-arrow")
+        lo_a = run_worker("ppr", 8, v, e, to, iters=5)
+        hi_a = run_worker("ppr", 32, v, e, to, iters=5)
         eff_a = None
         if "et_per_sec" in lo_a and "et_per_sec" in hi_a:
             eff_a = round(hi_a["et_per_sec"] / (4 * lo_a["et_per_sec"]), 3)
@@ -242,22 +244,6 @@ def main() -> None:
             {"lo": lo_a, "hi": hi_a, "scaling_efficiency": eff_a},
         )
         if arrow_only:
-            flush()
-            return
-
-        # 1. distributed multi-PPR supersteps at 8/32 cores -> twin efficiency
-        lo = run_worker("ppr", 8, v, e, to, iters=5)
-        hi = run_worker("ppr", 32, v, e, to, iters=5)
-        eff = None
-        if "et_per_sec" in lo and "et_per_sec" in hi:
-            eff = round(hi["et_per_sec"] / (4 * lo["et_per_sec"]), 3)
-        rec(
-            "ppr-supersteps",
-            "pure-DataFrame twin (join + hash agg per superstep, state "
-            "on-cluster); compare to barrier-path 1039-1134M ET/s at 32 cores",
-            {"lo": lo, "hi": hi, "scaling_efficiency": eff},
-        )
-        if "--ppr-only" in sys.argv:
             flush()
             return
 

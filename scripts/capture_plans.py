@@ -109,14 +109,6 @@ def main() -> None:
     )
     sections.append(
         (
-            "Distributed SpMV superstep (gather join + partial agg)",
-            "The beyond-driver-memory mode: edges ⋈ ranks on src, then "
-            "partial+final hash aggregation on dst.",
-            _spmv_plan(spark),
-        )
-    )
-    sections.append(
-        (
             "Exact dedup",
             "Hash-groupBy on normalized text; one exchange for the group, "
             "broadcast of the (tiny) collided-group set back onto docs.",
@@ -540,15 +532,6 @@ def _louvain_round_plan(spark) -> str:
         return cap(LP.louvain_rounds(g, rounds=1))
     finally:
         LP.local_ckpt, LP.free_local_ckpt = real_ckpt, real_free
-
-
-def _spmv_plan(spark) -> str:
-    from approximate_pagerank_public_spark.operators.spmv import gather_contrib_df
-    from approximate_pagerank_public_spark.plans.graph import Graph
-
-    g = Graph(E._edges(spark, SF), num_partitions=8)
-    ranks = g.vertices.withColumn("rank", F.lit(1.0))
-    return cap(gather_contrib_df(g, ranks))
 
 
 def _star_round_plan(spark) -> str:

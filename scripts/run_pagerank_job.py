@@ -9,7 +9,7 @@ Ship as:
         --transcripts <parquet-or-iceberg-path> \\
         --algorithm pagerank --alpha 0.8 --tol 1e-6 --max-iter 100 \\
         --checkpoint-dir /path/ckpt --output /path/out \\
-        [--sources 0,5,9] [--mode auto|broadcast|distributed|distributed-arrow]
+        [--sources 0,5,9] [--mode auto|broadcast|distributed-arrow]
 
 On a cluster the SparkSession comes from spark-submit's conf (master,
 executor counts); locally it falls back to local[*]. A killed job rerun
@@ -58,7 +58,8 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--mode",
         default="auto",
-        help="auto|broadcast|distributed|distributed-arrow (pagerank family); cc also: star",
+        help="pagerank family: auto|broadcast|distributed-arrow; "
+        "others (cc, scc, sssp, ...): auto|broadcast|distributed; cc also: star",
     )
     p.add_argument(
         "--no-dangling-norm",

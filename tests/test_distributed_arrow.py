@@ -164,3 +164,31 @@ def test_arrow_convergence_stops_early(g_rand):
     assert res.converged and res.iterations < 100
     ref = pagerank(g_rand, mode="broadcast", tol=1e-6, max_iter=100)
     assert np.allclose(res.rank_vector(0), ref.rank_vector(0), atol=1e-9)
+
+
+def test_arrow_error_exit_releases_cached_state(g_rand, monkeypatch):
+    """A superstep that raises propagates, and the call leaves no pinned
+    checkpoint (routing or loop state) and no spilled message dir."""
+    import glob
+    import os
+
+    from approximate_pagerank_public_spark.plans.distblocks import DistBlockStore
+
+    jsc = g_rand.spark.sparkContext._jsc
+    store = g_rand.dist_blocks()
+    real = DistBlockStore.contribs
+    calls = []
+
+    def failing(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected superstep-2 failure")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DistBlockStore, "contribs", failing)
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="injected"):
+        pagerank(g_rand, mode="distributed-arrow", max_iter=4, tol=0.0)
+    assert len(calls) == 2
+    assert jsc.getPersistentRDDs().size() == before
+    assert not glob.glob(os.path.join(store.dir, "msgs_*"))

@@ -197,12 +197,6 @@ def test_sample_frames_real_y4m(spark):
     assert len(stub) == 4
 
 
-def test_frame_sample_plan(media):
-    plan = multimodal.frame_sample_plan(media, every_ms=500).toPandas()
-    assert (plan["frame_ms"] % 500 == 0).all()
-    assert plan.groupby("media_id").size().min() >= 2
-
-
 def test_streaming_edge_counts(spark, transcripts_t1, tmp_path):
     """File-source stream of transcripts → incremental edge-observation
     counts; totals must match the batch derivation's raw counts."""

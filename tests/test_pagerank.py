@@ -78,32 +78,35 @@ def test_multi_ppr_matches_golden(g_rand):
     assert np.allclose(res.ranks_np, gold, atol=1e-6)
 
 
-def test_distributed_mode_parity(g5):
-    src, dst, w = g5.edges_numpy()
-    gold, _ = golden.golden_pagerank(src, dst, w, 5, tol=0.0, max_iter=8)
-    res = pagerank(g5, mode="distributed", max_iter=8, tol=0.0)
-    pdf = res.ranks().toPandas().sort_values("id")
-    assert np.allclose(pdf["rank"].to_numpy(), gold, atol=1e-12)
+@pytest.mark.parametrize("mode", ["distributed", "brodcast"])
+def test_unknown_mode_raises(g5, mode):
+    """Removed or misspelled modes fail loudly instead of silently
+    running some other path."""
+    calls = [
+        lambda: pagerank(g5, mode=mode),
+        lambda: personalized_pagerank(g5, 2, mode=mode),
+        lambda: multi_ppr(g5, [0, 2], mode=mode),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="distributed-arrow"):
+            call()
 
 
-def test_distributed_ppr_parity(g5):
-    src, dst, w = g5.edges_numpy()
-    gold, _ = golden.golden_ppr(2, src, dst, w, 5, tol=0.0, max_iter=8)
-    res = personalized_pagerank(g5, 2, mode="distributed", max_iter=8, tol=0.0)
-    pdf = res.ranks().toPandas().sort_values("id")
-    assert np.allclose(pdf["rank_0"].to_numpy(), gold, atol=1e-12)
+def test_auto_mode_gates_broadcast_on_vertices_times_sources():
+    """The broadcast path holds S×N f64 on the driver, so `auto` gates on
+    N·S: 1.25e7 vertices × 8 sources sit exactly on the cutover."""
+    from types import SimpleNamespace
 
+    from approximate_pagerank_public_spark.operators.pagerank import _pick_mode
 
-def test_distributed_multi_ppr_parity(g5):
-    from approximate_pagerank_public_spark.functions import golden as G
+    def pick(n, s):
+        return _pick_mode(SimpleNamespace(num_vertices=n), "auto", s)
 
-    src, dst, w = g5.edges_numpy()
-    sources = [0, 2, 4]
-    gold = G.golden_multi_ppr(sources, src, dst, w, 5, tol=0.0, max_iter=8)
-    res = multi_ppr(g5, sources, mode="distributed", max_iter=8, tol=0.0)
-    pdf = res.ranks().toPandas().sort_values("id")
-    for i in range(3):
-        assert np.allclose(pdf[f"rank_{i}"].to_numpy(), gold[i], atol=1e-12), f"src {sources[i]}"
+    assert pick(12_500_000, 8) == "broadcast"
+    assert pick(12_500_001, 8) == "distributed-arrow"
+    assert pick(12_500_001, 1) == "broadcast"
+    assert pick(100_000_000, 1) == "broadcast"
+    assert pick(100_000_001, 1) == "distributed-arrow"
 
 
 def test_barrier_mode_bit_parity_with_per_superstep(g_rand, monkeypatch):
@@ -164,12 +167,12 @@ def test_ppr_dangling_norm_off_all_paths_agree(g_rand, monkeypatch):
     fb = personalized_pagerank(g_rand, 3, tol=0.0, max_iter=8, dangling_norm=False)
     assert np.array_equal(gold.ranks_np, fb.ranks_np)
     dist = personalized_pagerank(
-        g_rand, 3, tol=0.0, max_iter=8, mode="distributed", dangling_norm=False
+        g_rand, 3, tol=0.0, max_iter=8, mode="distributed-arrow", dangling_norm=False
     )
     pdf = dist.ranks().toPandas().sort_values("id")
     assert np.allclose(pdf["rank_0"].to_numpy(), gold.ranks_np[0], atol=1e-12)
     multi = multi_ppr(
-        g_rand, [3, 5], tol=0.0, max_iter=8, mode="distributed", dangling_norm=False
+        g_rand, [3, 5], tol=0.0, max_iter=8, mode="distributed-arrow", dangling_norm=False
     )
     mdf = multi.ranks().toPandas().sort_values("id")
     assert np.allclose(mdf["rank_0"].to_numpy(), gold.ranks_np[0], atol=1e-12)
@@ -207,13 +210,13 @@ def test_warm_start_fill_rule_and_max_iter_zero(g_rand):
 
 def test_warm_start_paths_agree_bitwise(g_rand):
     """Fixed-budget warm continuation from a partial init matches
-    across broadcast, distributed, and distributed-arrow paths."""
+    across the broadcast and distributed-arrow paths."""
     import pyspark.sql.functions as F
 
     cold = pagerank(g_rand, mode="broadcast", tol=0.0, max_iter=5)
     part = cold.ranks().where(F.col("id") % 3 != 0)
     outs = {}
-    for mode in ("broadcast", "distributed", "distributed-arrow"):
+    for mode in ("broadcast", "distributed-arrow"):
         outs[mode] = (
             pagerank(g_rand, mode=mode, tol=0.0, max_iter=3, init_ranks=part)
             .ranks()
@@ -221,7 +224,6 @@ def test_warm_start_paths_agree_bitwise(g_rand):
             .sort_values("id")["rank"]
             .to_numpy()
         )
-    assert np.allclose(outs["broadcast"], outs["distributed"], atol=1e-12)
     assert np.allclose(outs["broadcast"], outs["distributed-arrow"], atol=1e-12)
 
 
