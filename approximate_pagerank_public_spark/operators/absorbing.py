@@ -24,7 +24,7 @@ Scale shape: per iteration ONE dst-co-partitioned join of the edge
 relation with the O(V) state (the edges stay in the Graph's dst-hash
 layout, the state is repartitioned to match) and ONE
 map-side-combinable ``groupBy(src).sum`` exchange; state rotates
-through ``local_ckpt`` (the leak invariant).  No driver-side state,
+through a ``ckpt_scope`` (the leak invariant).  No driver-side state,
 works at any |V|.
 """
 
@@ -34,8 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -53,34 +52,35 @@ def hitting_probability(
     if not tset:
         raise ValueError("hitting_probability needs >= 1 target id")
     verts = graph.vertices
-    state, state_ids = local_ckpt(
-        verts.select(
-            "id",
-            F.when(F.col("id").isin(tset), F.lit(1.0))
-            .otherwise(F.lit(0.0))
-            .alias("p"),
-        ).repartition(p, "id")
-    )
-    for _ in range(int(iters)):
-        gathered = (
-            graph.edges.join(
-                state.select(F.col("id").alias("dst"), "p"), "dst"
-            )
-            .groupBy("src")
-            .agg(F.sum(F.col("weight") * F.col("p")).alias("s"))
-            .select(F.col("src").alias("id"), "s")
-        )
-        new, new_ids = local_ckpt(
-            verts.join(gathered, "id", "left")
-            .select(
+    with ckpt_scope(spark) as cs:
+        state = cs.ckpt(
+            verts.select(
                 "id",
                 F.when(F.col("id").isin(tset), F.lit(1.0))
-                .when(F.col("id").isin(aset), F.lit(0.0))
-                .otherwise(F.coalesce("s", F.lit(0.0)))
+                .otherwise(F.lit(0.0))
                 .alias("p"),
-            )
-            .repartition(p, "id")
+            ).repartition(p, "id")
         )
-        free_local_ckpt(spark, state_ids)
-        state, state_ids = new, new_ids
-    return state
+        for _ in range(int(iters)):
+            gathered = (
+                graph.edges.join(
+                    state.select(F.col("id").alias("dst"), "p"), "dst"
+                )
+                .groupBy("src")
+                .agg(F.sum(F.col("weight") * F.col("p")).alias("s"))
+                .select(F.col("src").alias("id"), "s")
+            )
+            new = cs.ckpt(
+                verts.join(gathered, "id", "left")
+                .select(
+                    "id",
+                    F.when(F.col("id").isin(tset), F.lit(1.0))
+                    .when(F.col("id").isin(aset), F.lit(0.0))
+                    .otherwise(F.coalesce("s", F.lit(0.0)))
+                    .alias("p"),
+                )
+                .repartition(p, "id")
+            )
+            cs.free(state)
+            state = new
+        return cs.keep(state)

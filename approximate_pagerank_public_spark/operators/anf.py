@@ -39,7 +39,7 @@ Scale shape — three paths, all bit-identical (parity-tested):
   communication cost — independent of how full the balls are. No
   per-vertex set ever materializes.
 
-Rounds rotate state through ``local_ckpt`` (CLAUDE.md lineage
+Rounds rotate state through a ``ckpt_scope`` (CLAUDE.md lineage
 invariant).
 
 Reference scope note: the reference engine (approximate-pagerank-public)
@@ -62,8 +62,7 @@ from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.functions.sketch import ALPHA_M2, M
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -350,24 +349,22 @@ def _nf_from_packed(state: DataFrame) -> int:
 
 
 def _anf_packed(g: Graph, rounds: int) -> list[int]:
-    spark = g.spark
     parts = g.num_partitions
     edges = g.edges.select("src", "dst")
-    state, ids = local_ckpt(_packed_merge(_packed_init(g), parts))
-    out = [_nf_from_packed(state)]
-    for _ in range(rounds):
-        msgs = (
-            edges.alias("e")
-            .join(state.alias("s"), F.col("s.id") == F.col("e.dst"))
-            .select(F.col("e.src").alias("id"), F.col("s.sk"))
-        )
-        nxt, nxt_ids = local_ckpt(
-            _packed_merge(state.unionByName(msgs), parts)
-        )
-        free_local_ckpt(spark, ids)
-        state, ids = nxt, nxt_ids
-        out.append(_nf_from_packed(state))
-    return out
+    with ckpt_scope(g.spark) as cs:
+        state = cs.ckpt(_packed_merge(_packed_init(g), parts))
+        out = [_nf_from_packed(state)]
+        for _ in range(rounds):
+            msgs = (
+                edges.alias("e")
+                .join(state.alias("s"), F.col("s.id") == F.col("e.dst"))
+                .select(F.col("e.src").alias("id"), F.col("s.sk"))
+            )
+            nxt = cs.ckpt(_packed_merge(state.unionByName(msgs), parts))
+            cs.free(state)
+            state = nxt
+            out.append(_nf_from_packed(state))
+        return out
 
 
 # -------------------------------------------------------------- blocks path
@@ -571,9 +568,10 @@ def _anf_blocks(g: Graph, rounds: int) -> list[int]:
     epb = int(os.environ.get("SPARK_GRAFT_ANF_EDGES_PER_BLOCK", 1_000_000))
     nb = max(4, min(p, -(-n_edges // epb)))
     store = DistBlockStore(spark, store_edges, num_blocks=nb, num_edges=n_edges)
-    try:
+    with ckpt_scope(spark) as cs:
+        cs.callback(store.cleanup)
         routing = store.attach_routing(g.vertices)
-        state, ids = local_ckpt(
+        state = cs.ckpt(
             routing.join(_packed_merge(_packed_init(g), p), "id").select(
                 "id", "pids", "sk"
             )
@@ -581,15 +579,11 @@ def _anf_blocks(g: Graph, rounds: int) -> list[int]:
         out = [_nf_from_packed(state.select("id", "sk"))]
         for _ in range(rounds):
             contribs = _sketch_contribs(store, state, p)
-            nxt, nxt_ids = local_ckpt(
-                routing.join(contribs, "id").select("id", "pids", "sk")
-            )
-            free_local_ckpt(spark, ids)
-            state, ids = nxt, nxt_ids
+            nxt = cs.ckpt(routing.join(contribs, "id").select("id", "pids", "sk"))
+            cs.free(state)
+            state = nxt
             out.append(_nf_from_packed(state.select("id", "sk")))
         return out
-    finally:
-        store.cleanup()
 
 
 def anf_hyperball(g: Graph, rounds: int = 4, mode: str = "auto") -> ANFResult:
@@ -715,38 +709,39 @@ def hyperball_harmonic(
 
         return state.select("id", "sk").mapInArrow(est, "id long, ball long")
 
-    state, ids = local_ckpt(_packed_merge(_packed_init(g), parts))
-    acc, acc_ids = local_ckpt(
-        est_col(state).select(
-            "id",
-            F.col("ball").alias("prev"),
-            F.lit(0).cast("long").alias("h"),
-        )
-    )
-    for r in range(1, rounds + 1):
-        msgs = (
-            edges.alias("e")
-            .join(state.alias("s"), F.col("s.id") == F.col("e.dst"))
-            .select(F.col("e.src").alias("id"), F.col("s.sk"))
-        )
-        nxt, nxt_ids = local_ckpt(_packed_merge(state.unionByName(msgs), parts))
-        free_local_ckpt(spark, ids)
-        state, ids = nxt, nxt_ids
-        cur = est_col(state)
-        nacc, nacc_ids = local_ckpt(
-            acc.join(cur, "id").select(
+    with ckpt_scope(spark) as cs:
+        state = cs.ckpt(_packed_merge(_packed_init(g), parts))
+        acc = cs.ckpt(
+            est_col(state).select(
                 "id",
                 F.col("ball").alias("prev"),
-                (
-                    F.col("h")
-                    + F.lit(lcm // r)
-                    * F.greatest(F.col("ball") - F.col("prev"), F.lit(0).cast("long"))
-                ).alias("h"),
+                F.lit(0).cast("long").alias("h"),
             )
         )
-        free_local_ckpt(spark, acc_ids)
-        acc, acc_ids = nacc, nacc_ids
-    return acc.select("id", F.col("h").alias("h_micro_lcm"))
+        for r in range(1, rounds + 1):
+            msgs = (
+                edges.alias("e")
+                .join(state.alias("s"), F.col("s.id") == F.col("e.dst"))
+                .select(F.col("e.src").alias("id"), F.col("s.sk"))
+            )
+            nxt = cs.ckpt(_packed_merge(state.unionByName(msgs), parts))
+            cs.free(state)
+            state = nxt
+            cur = est_col(state)
+            nacc = cs.ckpt(
+                acc.join(cur, "id").select(
+                    "id",
+                    F.col("ball").alias("prev"),
+                    (
+                        F.col("h")
+                        + F.lit(lcm // r)
+                        * F.greatest(F.col("ball") - F.col("prev"), F.lit(0).cast("long"))
+                    ).alias("h"),
+                )
+            )
+            cs.free(acc)
+            acc = nacc
+        return cs.keep(acc.select("id", F.col("h").alias("h_micro_lcm")))
 
 
 # ------------------------------------------------------------------- oracle

@@ -34,7 +34,7 @@ BFS levels bottom-up (depth rounds; depth ~ diameter on the web-scale
 graphs this engine targets).  Modes mirror ``connected_components``:
 ``broadcast`` keeps the O(V) level/parent/signature vectors on the
 driver (gated by ``BROADCAST_MAX_VERTICES``); ``distributed`` keeps
-all state in DataFrames with ``local_ckpt`` loop hygiene.
+all state in DataFrames, checkpointed in one ``ckpt_scope`` per call.
 
 2-edge-connected components follow for free: drop the bridges and run
 the large-star/small-star CC over the surviving pair list
@@ -54,8 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    CkptScope,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -113,25 +113,24 @@ def _forest_levels_broadcast(und: Graph, max_iter: int) -> np.ndarray:
 
 
 def _forest_levels_distributed(
-    und: Graph, max_iter: int
-) -> tuple[DataFrame, list]:
+    cs: CkptScope, und: Graph, max_iter: int
+) -> DataFrame:
     """Distributed twin: star-CC roots + level-synchronous frontier
-    joins; ``((id, lvl) ckpt'd + its ckpt ids)``, all vertices (state
-    never leaves the cluster, ``local_ckpt`` loop hygiene — the caller
-    owns freeing the returned ids)."""
+    joins; ``(id, lvl)`` checkpointed in the caller's scope, all
+    vertices (state never leaves the cluster)."""
     from approximate_pagerank_public_spark.operators.components import (
         _cc_star_distributed,
     )
 
-    spark, p = und.spark, und.num_partitions
-    comp, _ = _cc_star_distributed(und)
+    p = und.num_partitions
+    comp, _ = _cc_star_distributed(cs, und)
     state = comp.select(
         "id",
         F.when(F.col("id") == F.col("component"), F.lit(0))
         .cast("long")
         .alias("lvl"),
     )
-    state, state_ids = local_ckpt(state.repartition(p, "id"))
+    state = cs.ckpt(state.repartition(p, "id"))
     for _ in range(max_iter):
         frontier = state.where(F.col("lvl").isNotNull())
         cand = (
@@ -142,7 +141,7 @@ def _forest_levels_distributed(
             .agg((F.min("lvl") + 1).alias("nl"))
             .select(F.col("dst").alias("id"), "nl")
         )
-        new, new_ids = local_ckpt(
+        new = cs.ckpt(
             state.join(cand, "id", "left")
             .select("id", F.least("lvl", "nl").alias("lvl"))
             .repartition(p, "id")
@@ -152,12 +151,10 @@ def _forest_levels_distributed(
             .where(F.col("_old").isNull() & F.col("lvl").isNotNull())
             .count()
         )
-        free_local_ckpt(spark, state_ids)
-        state, state_ids = new, new_ids
+        cs.free(state)
+        state = new
         if improved == 0:
-            return state, state_ids
-    # error path must not leak the rotated localCheckpoint state
-    free_local_ckpt(spark, state_ids)
+            return state
     raise RuntimeError(  # pragma: no cover — max_iter default is huge
         f"forest-level BFS did not converge in {max_iter} rounds"
     )
@@ -167,13 +164,12 @@ def _forest_levels_distributed(
 
 
 def _subtree_xor_distributed(
-    spark, lv_df: DataFrame, tree: DataFrame, w_df: DataFrame, p: int
-) -> tuple[DataFrame, list]:
+    cs: CkptScope, lv_df: DataFrame, tree: DataFrame, w_df: DataFrame, p: int
+) -> DataFrame:
     """Bottom-up leaf peel on DataFrames: level L's signatures fold
     into level L-1 parents via one map-side-combinable ``bit_xor``
-    groupBy per level.  Returns ``((id, parent, sig) ckpt'd + its ckpt
-    ids)`` for every vertex — the caller frees the ids once it has
-    materialized what it needs."""
+    groupBy per level.  Returns ``(id, parent, sig)`` for every vertex,
+    checkpointed in the caller's scope."""
     depth_row = lv_df.agg(F.max("lvl").alias("d")).first()
     depth = int(depth_row["d"] or 0)
     s = (
@@ -181,7 +177,7 @@ def _subtree_xor_distributed(
         .join(w_df, "id", "left")
         .select("id", "lvl", "parent", F.coalesce("wv", F.lit(0)).alias("sig"))
     )
-    s, s_ids = local_ckpt(s.repartition(p, "id"))
+    s = cs.ckpt(s.repartition(p, "id"))
     for level in range(depth, 0, -1):
         contrib = (
             s.where((F.col("lvl") == level) & F.col("parent").isNotNull())
@@ -189,7 +185,7 @@ def _subtree_xor_distributed(
             .agg(F.expr("bit_xor(sig)").alias("c"))
             .select(F.col("parent").alias("id"), "c")
         )
-        new, new_ids = local_ckpt(
+        new = cs.ckpt(
             s.join(contrib, "id", "left")
             .select(
                 "id",
@@ -201,9 +197,9 @@ def _subtree_xor_distributed(
             )
             .repartition(p, "id")
         )
-        free_local_ckpt(spark, s_ids)
-        s, s_ids = new, new_ids
-    return s, s_ids
+        cs.free(s)
+        s = new
+    return s
 
 
 def _subtree_xor_broadcast(
@@ -227,14 +223,14 @@ def _subtree_xor_broadcast(
 
 
 def _bridge_parts(
-    graph: Graph, mode: str, max_iter: int
-) -> tuple[DataFrame, DataFrame, Graph]:
-    """Shared core → ``(bridges, pairs, und)``.  ``bridges`` is
-    localCheckpoint-materialized (safe after ``und.unpersist``);
-    ``pairs`` is the canonical ``a<b`` undirected pair list, still
-    lineage-bound to ``und`` — callers that keep it must materialize
-    before unpersisting ``und``."""
+    cs: CkptScope, graph: Graph, mode: str, max_iter: int
+) -> tuple[DataFrame, DataFrame, int]:
+    """Shared core → ``(bridges, pairs, partitions)``.  ``bridges`` is
+    checkpointed in ``cs``; ``pairs`` is the canonical ``a<b``
+    undirected pair list, lineage-bound to the symmetrized graph, which
+    ``cs`` unpersists on exit."""
     und = graph.undirected()
+    cs.callback(und.unpersist)
     n = und.num_vertices
     spark, p = graph.spark, und.num_partitions
     if mode == "auto":
@@ -246,7 +242,7 @@ def _bridge_parts(
 
     if mode == "broadcast":
         lvl = _forest_levels_broadcast(und, max_iter)
-        lv_df, lv_ids = local_ckpt(
+        lv_df = cs.ckpt(
             spark.createDataFrame(
                 pd.DataFrame(
                     {"id": np.arange(n, dtype=np.int64), "lvl": lvl}
@@ -255,7 +251,7 @@ def _bridge_parts(
         )
     else:
         # already ckpt'd and (p, id)-partitioned by the level loop
-        lv_df, lv_ids = _forest_levels_distributed(und, max_iter)
+        lv_df = _forest_levels_distributed(cs, und, max_iter)
 
     e = und.edges.select("src", "dst")
     # parent = min same-component neighbor one level up; deterministic,
@@ -316,27 +312,24 @@ def _bridge_parts(
             else spark.createDataFrame([], schema=schema)
         )
     else:
-        sig_df, sig_ids = _subtree_xor_distributed(spark, lv_df, tree, w_df, p)
-        bridges_df = (
+        sig_df = _subtree_xor_distributed(cs, lv_df, tree, w_df, p)
+        bridges_df = cs.ckpt(
             sig_df.where(F.col("parent").isNotNull() & (F.col("sig") == 0))
             .select(
                 F.least("id", "parent").alias("a"),
                 F.greatest("id", "parent").alias("b"),
             )
-            .localCheckpoint()  # eager — safe to free sig below
         )
-        free_local_ckpt(spark, sig_ids)
-    free_local_ckpt(spark, lv_ids)
-    return bridges_df, pairs, und
+    return bridges_df, pairs, p
 
 
 def bridges(graph: Graph, mode: str = "auto", max_iter: int = 10_000) -> DataFrame:
     """``(a, b)`` canonical (``a < b``) bridge edges of the
     symmetrized graph.  See the module docstring for the algorithm and
     the md5-collision caveat."""
-    bridges_df, _pairs, und = _bridge_parts(graph, mode, max_iter)
-    und.unpersist()
-    return bridges_df
+    with ckpt_scope(graph.spark) as cs:
+        bridges_df, _pairs, _p = _bridge_parts(cs, graph, mode, max_iter)
+        return cs.keep(bridges_df)
 
 
 def two_edge_components(
@@ -350,13 +343,14 @@ def two_edge_components(
         star_components_edges,
     )
 
-    bridges_df, pairs, und = _bridge_parts(graph, mode, max_iter)
-    spark, p = graph.spark, und.num_partitions
-    surviving = pairs.join(bridges_df, ["a", "b"], "left_anti").localCheckpoint()
-    und.unpersist()
-    roots, _rounds = star_components_edges(spark, surviving, p)
-    verts = graph.vertices
-    return verts.join(roots, verts["id"] == roots["a"], "left").select(
-        "id",
-        F.least(F.col("id"), F.coalesce("r", F.col("id"))).alias("component"),
-    )
+    with ckpt_scope(graph.spark) as cs:
+        bridges_df, pairs, p = _bridge_parts(cs, graph, mode, max_iter)
+        surviving = cs.ckpt(pairs.join(bridges_df, ["a", "b"], "left_anti"))
+        roots, _rounds = star_components_edges(cs, surviving, p)
+        verts = graph.vertices
+        return cs.keep(
+            verts.join(roots, verts["id"] == roots["a"], "left").select(
+                "id",
+                F.least(F.col("id"), F.coalesce("r", F.col("id"))).alias("component"),
+            )
+        )

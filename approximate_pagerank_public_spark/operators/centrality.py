@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 from approximate_pagerank_public_spark.plans.graph import Graph
 
 _UNSET = np.int64(-1)
@@ -260,90 +261,79 @@ def stress_centrality_distributed(
     """DataFrame twin of :func:`stress_centrality` — state on-cluster,
     batched over sources via a ``source`` column; integer arithmetic
     end-to-end so it is value-identical to the broadcast path."""
-    from approximate_pagerank_public_spark.plans.checkpoint import (
-        free_local_ckpt,
-        local_ckpt,
-    )
-
     spark = graph.spark
     p = graph.num_partitions
     e = graph.edges.select("src", "dst")
-    state = spark.createDataFrame(
-        [(int(s), int(s), 0, 1) for s in sources],
-        "source long, id long, dist long, sigma long",
-    )
-    state, state_ids = local_ckpt(state.repartition(p, "id"))
-    frontier = state
-    frontier_ids: set | None = None  # initial frontier shares state's blocks
-    lvl = 0
-    for lvl in range(max_levels):
-        nxt = (
-            e.join(
-                frontier.where(F.col("dist") == lvl).select(
-                    "source", F.col("id").alias("src"), "sigma"
-                ),
-                "src",
-            )
-            .groupBy("source", "dst")
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(
-                state.select("source", F.col("id").alias("dst")),
-                ["source", "dst"],
-                "left_anti",
-            )
-            .select("source", F.col("dst").alias("id"), F.lit(lvl + 1).alias("dist"), "sigma")
+    with ckpt_scope(spark) as cs:
+        state = spark.createDataFrame(
+            [(int(s), int(s), 0, 1) for s in sources],
+            "source long, id long, dist long, sigma long",
         )
-        nxt, nxt_ids = local_ckpt(nxt.repartition(p, "id"))
-        if nxt.limit(1).count() == 0:
-            free_local_ckpt(spark, nxt_ids)
-            break
-        merged, m_ids = local_ckpt(state.unionAll(nxt).repartition(p, "id"))
-        free_local_ckpt(spark, state_ids)
-        if frontier_ids is not None:
-            free_local_ckpt(spark, frontier_ids)
-        state, state_ids = merged, m_ids
-        frontier, frontier_ids = nxt, nxt_ids
-    if frontier_ids is not None:
-        free_local_ckpt(spark, frontier_ids)
-    levels = lvl
-    cont = state.select("source", "id", F.lit(0).cast("long").alias("cont"))
-    cont, cont_ids = local_ckpt(cont.repartition(p, "id"))
-    dists = state.select("source", "id", "dist")
-    for back_lvl in range(levels - 1, -1, -1):
-        upper = (
-            cont.join(dists, ["source", "id"])
-            .where(F.col("dist") == back_lvl + 1)
-            .select("source", F.col("id").alias("dst"), (F.col("cont") + 1).alias("y"))
-        )
-        sums = (
-            e.join(upper, "dst")
-            .groupBy("source", F.col("src").alias("id"))
-            .agg(F.sum("y").alias("back"))
-        )
-        new_cont = (
-            cont.join(dists, ["source", "id"])
-            .join(sums, ["source", "id"], "left")
-            .select(
-                "source",
-                "id",
-                F.when(
-                    F.col("dist") == back_lvl, F.coalesce("back", F.lit(0))
+        state = cs.ckpt(state.repartition(p, "id"))
+        frontier = state
+        lvl = 0
+        for lvl in range(max_levels):
+            nxt = (
+                e.join(
+                    frontier.where(F.col("dist") == lvl).select(
+                        "source", F.col("id").alias("src"), "sigma"
+                    ),
+                    "src",
                 )
-                .otherwise(F.col("cont"))
-                .alias("cont"),
+                .groupBy("source", "dst")
+                .agg(F.sum("sigma").alias("sigma"))
+                .join(
+                    state.select("source", F.col("id").alias("dst")),
+                    ["source", "dst"],
+                    "left_anti",
+                )
+                .select("source", F.col("dst").alias("id"), F.lit(lvl + 1).alias("dist"), "sigma")
             )
+            nxt = cs.ckpt(nxt.repartition(p, "id"))
+            if nxt.limit(1).count() == 0:
+                break
+            merged = cs.ckpt(state.unionAll(nxt).repartition(p, "id"))
+            cs.free(state, frontier)
+            state, frontier = merged, nxt
+        levels = lvl
+        cont = state.select("source", "id", F.lit(0).cast("long").alias("cont"))
+        cont = cs.ckpt(cont.repartition(p, "id"))
+        dists = state.select("source", "id", "dist")
+        for back_lvl in range(levels - 1, -1, -1):
+            upper = (
+                cont.join(dists, ["source", "id"])
+                .where(F.col("dist") == back_lvl + 1)
+                .select("source", F.col("id").alias("dst"), (F.col("cont") + 1).alias("y"))
+            )
+            sums = (
+                e.join(upper, "dst")
+                .groupBy("source", F.col("src").alias("id"))
+                .agg(F.sum("y").alias("back"))
+            )
+            new_cont = (
+                cont.join(dists, ["source", "id"])
+                .join(sums, ["source", "id"], "left")
+                .select(
+                    "source",
+                    "id",
+                    F.when(
+                        F.col("dist") == back_lvl, F.coalesce("back", F.lit(0))
+                    )
+                    .otherwise(F.col("cont"))
+                    .alias("cont"),
+                )
+            )
+            new_cont = cs.ckpt(new_cont.repartition(p, "id"))
+            cs.free(cont)
+            cont = new_cont
+        per_source = (
+            state.join(cont, ["source", "id"])
+            .where(F.col("source") != F.col("id"))
+            .select("id", (F.col("sigma") * F.col("cont")).alias("contrib"))
         )
-        new_cont, nc_ids = local_ckpt(new_cont.repartition(p, "id"))
-        free_local_ckpt(spark, cont_ids)
-        cont, cont_ids = new_cont, nc_ids
-    per_source = (
-        state.join(cont, ["source", "id"])
-        .where(F.col("source") != F.col("id"))
-        .select("id", (F.col("sigma") * F.col("cont")).alias("contrib"))
-    )
-    out = (
-        graph.vertices.select("id")
-        .join(per_source.groupBy("id").agg(F.sum("contrib").alias("s")), "id", "left")
-        .select("id", F.coalesce("s", F.lit(0)).cast("long").alias("stress"))
-    )
-    return out
+        out = (
+            graph.vertices.select("id")
+            .join(per_source.groupBy("id").agg(F.sum("contrib").alias("s")), "id", "left")
+            .select("id", F.coalesce("s", F.lit(0)).cast("long").alias("stress"))
+        )
+        return cs.keep(out)

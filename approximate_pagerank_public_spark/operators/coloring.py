@@ -24,7 +24,7 @@ O(|E|) over the whole run — the full edge set and the full colored set
 are never rejoined after round 1. Per round: one map-side-combined min
 per vertex, one bounded collect_set over the incrementally-accumulated
 forbidden-color pairs, anti-join shrinks, state rotated through
-``plans/checkpoint.py::local_ckpt``.
+a ``plans/checkpoint.py::ckpt_scope``.
 """
 
 from __future__ import annotations
@@ -33,8 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -148,94 +147,85 @@ def greedy_coloring(
     #            a neighbor colors (accumulated incrementally — the
     #            full colored set is never rejoined);
     #   colored — the output accumulator.
-    esub, esub_ids = local_ckpt(sym.repartition(p, "src"))
-    active, act_ids = local_ckpt(
-        graph.vertices.select("id").repartition(p, "id")
-    )
-    n_active = active.count()
-    forbid: DataFrame | None = None
-    forbid_ids: set[int] = set()
-    colored: DataFrame | None = None
-    col_ids: set[int] = set()
-    rounds = 0
-    while n_active > 0:
-        rounds += 1
-        if rounds > max_rounds:  # pragma: no cover
-            raise RuntimeError(f"JP coloring did not finish in {max_rounds} rounds")
-        nbr_min = (
-            esub.groupBy("src")
-            .agg(F.min(_prio_of(seed, F.col("dst"))).alias("npr"))
-            .select(F.col("src").alias("id"), "npr")
-        )
-        winners = (
-            active.join(nbr_min, "id", "left")
-            .where(
-                _prio_of(seed, F.col("id"))
-                < F.coalesce("npr", F.lit(_NO_NEIGHBOR))
-            )
-            .select("id")
-        )
-        if forbid is None:
-            arrs = winners.select(
-                "id", F.array().cast("array<int>").alias("arr")
-            )
-        else:
-            arrs = winners.join(
-                forbid.groupBy("id").agg(
-                    F.array_sort(F.collect_set("color")).alias("arr")
-                ),
-                "id",
-                "left",
-            ).select(
-                "id",
-                F.coalesce("arr", F.array().cast("array<int>")).alias("arr"),
-            )
-        newly = arrs.select(
-            "id",
-            F.expr(
-                "aggregate(arr, 0, (acc, c) -> IF(c = acc, acc + 1, acc))"
-            ).alias("color"),
-        )
-        newly, new_ids = local_ckpt(newly.repartition(p, "id"))
-
-        nxt_colored = newly if colored is None else colored.unionAll(newly)
-        nxt_colored, new_col_ids = local_ckpt(nxt_colored)
-        if col_ids:
-            free_local_ckpt(spark, col_ids)
-        colored, col_ids = nxt_colored, new_col_ids
-
-        # push the fresh colors to still-active neighbors, retire the
-        # forbid rows of vertices that just colored
-        win_ids_df = newly.select("id")
-        fpairs = esub.join(
-            newly.select(F.col("id").alias("dst"), "color"), "dst"
-        ).select(F.col("src").alias("id"), "color")
-        nxt_forbid = fpairs if forbid is None else forbid.unionAll(fpairs)
-        nxt_forbid = nxt_forbid.join(win_ids_df, "id", "left_anti")
-        nxt_forbid, new_forbid_ids = local_ckpt(
-            nxt_forbid.repartition(p, "id")
-        )
-        if forbid_ids:
-            free_local_ckpt(spark, forbid_ids)
-        forbid, forbid_ids = nxt_forbid, new_forbid_ids
-
-        nxt_active = active.join(win_ids_df, "id", "left_anti")
-        nxt_active, new_act_ids = local_ckpt(nxt_active.repartition(p, "id"))
-        free_local_ckpt(spark, act_ids)
-        active, act_ids = nxt_active, new_act_ids
+    with ckpt_scope(spark) as cs:
+        esub = cs.ckpt(sym.repartition(p, "src"))
+        active = cs.ckpt(graph.vertices.select("id").repartition(p, "id"))
         n_active = active.count()
+        forbid: DataFrame | None = None
+        colored: DataFrame | None = None
+        rounds = 0
+        while n_active > 0:
+            rounds += 1
+            if rounds > max_rounds:  # pragma: no cover
+                raise RuntimeError(f"JP coloring did not finish in {max_rounds} rounds")
+            nbr_min = (
+                esub.groupBy("src")
+                .agg(F.min(_prio_of(seed, F.col("dst"))).alias("npr"))
+                .select(F.col("src").alias("id"), "npr")
+            )
+            winners = (
+                active.join(nbr_min, "id", "left")
+                .where(
+                    _prio_of(seed, F.col("id"))
+                    < F.coalesce("npr", F.lit(_NO_NEIGHBOR))
+                )
+                .select("id")
+            )
+            if forbid is None:
+                arrs = winners.select(
+                    "id", F.array().cast("array<int>").alias("arr")
+                )
+            else:
+                arrs = winners.join(
+                    forbid.groupBy("id").agg(
+                        F.array_sort(F.collect_set("color")).alias("arr")
+                    ),
+                    "id",
+                    "left",
+                ).select(
+                    "id",
+                    F.coalesce("arr", F.array().cast("array<int>")).alias("arr"),
+                )
+            newly = arrs.select(
+                "id",
+                F.expr(
+                    "aggregate(arr, 0, (acc, c) -> IF(c = acc, acc + 1, acc))"
+                ).alias("color"),
+            )
+            newly = cs.ckpt(newly.repartition(p, "id"))
 
-        nxt_esub = esub.join(
-            win_ids_df.select(F.col("id").alias("src")), "src", "left_anti"
-        ).join(win_ids_df.select(F.col("id").alias("dst")), "dst", "left_anti")
-        nxt_esub, new_esub_ids = local_ckpt(nxt_esub)
-        free_local_ckpt(spark, esub_ids)
-        free_local_ckpt(spark, new_ids)
-        esub, esub_ids = nxt_esub, new_esub_ids
+            nxt_colored = newly if colored is None else colored.unionAll(newly)
+            nxt_colored = cs.ckpt(nxt_colored)
+            cs.free(colored)
+            colored = nxt_colored
 
-    free_local_ckpt(spark, esub_ids)
-    free_local_ckpt(spark, act_ids)
-    if forbid_ids:
-        free_local_ckpt(spark, forbid_ids)
-    assert colored is not None
-    return colored.select("id", F.col("color").cast("int").alias("color")), rounds
+            # push the fresh colors to still-active neighbors, retire the
+            # forbid rows of vertices that just colored
+            win_ids_df = newly.select("id")
+            fpairs = esub.join(
+                newly.select(F.col("id").alias("dst"), "color"), "dst"
+            ).select(F.col("src").alias("id"), "color")
+            nxt_forbid = fpairs if forbid is None else forbid.unionAll(fpairs)
+            nxt_forbid = nxt_forbid.join(win_ids_df, "id", "left_anti")
+            nxt_forbid = cs.ckpt(nxt_forbid.repartition(p, "id"))
+            cs.free(forbid)
+            forbid = nxt_forbid
+
+            nxt_active = active.join(win_ids_df, "id", "left_anti")
+            nxt_active = cs.ckpt(nxt_active.repartition(p, "id"))
+            cs.free(active)
+            active = nxt_active
+            n_active = active.count()
+
+            nxt_esub = esub.join(
+                win_ids_df.select(F.col("id").alias("src")), "src", "left_anti"
+            ).join(win_ids_df.select(F.col("id").alias("dst")), "dst", "left_anti")
+            nxt_esub = cs.ckpt(nxt_esub)
+            cs.free(esub, newly)
+            esub = nxt_esub
+
+        assert colored is not None
+        return (
+            cs.keep(colored.select("id", F.col("color").cast("int").alias("color"))),
+            rounds,
+        )

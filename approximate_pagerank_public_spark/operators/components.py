@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    CkptScope,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -118,11 +118,12 @@ def _cc_broadcast(graph: Graph, max_iter: int) -> tuple[np.ndarray, int]:
     return labels, max_iter
 
 
-def _cc_distributed(graph: Graph, max_iter: int) -> tuple[DataFrame, int]:
-    spark = graph.spark
+def _cc_distributed(
+    cs: CkptScope, graph: Graph, max_iter: int
+) -> tuple[DataFrame, int]:
     p = graph.num_partitions
     labels = graph.vertices.withColumn("label", F.col("id"))
-    labels, label_ids = local_ckpt(labels.repartition(p, "id"))
+    labels = cs.ckpt(labels.repartition(p, "id"))
     for it in range(1, max_iter + 1):
         incoming = (
             graph.edges.join(
@@ -131,7 +132,7 @@ def _cc_distributed(graph: Graph, max_iter: int) -> tuple[DataFrame, int]:
             .groupBy("dst")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new, new_ids = local_ckpt(
+        new = cs.ckpt(
             labels.join(incoming, labels.id == incoming.dst, "left")
             .select(
                 "id",
@@ -144,14 +145,16 @@ def _cc_distributed(graph: Graph, max_iter: int) -> tuple[DataFrame, int]:
             .where(F.col("label") != F.col("_old"))
             .count()
         )
-        free_local_ckpt(spark, label_ids)
-        labels, label_ids = new, new_ids
+        cs.free(labels)
+        labels = new
         if changed == 0:
             return labels, it
     return labels, max_iter
 
 
-def _cc_star_distributed(graph: Graph, max_rounds: int = 60) -> tuple[DataFrame, int]:
+def _cc_star_distributed(
+    cs: CkptScope, graph: Graph, max_rounds: int = 60
+) -> tuple[DataFrame, int]:
     """Large-star/small-star alternation (Kiveris et al., "Connected
     Components in MapReduce and Beyond") — converges in O(log n) rounds
     regardless of diameter, where min-label propagation needs
@@ -170,10 +173,9 @@ def _cc_star_distributed(graph: Graph, max_rounds: int = 60) -> tuple[DataFrame,
     xxhash aggregate) leaves star edges ``(v, root)``; labels read off
     directly. ``graph`` must already be symmetrized (undirected()).
     """
-    spark = graph.spark
     p = graph.num_partitions
     e = graph.edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    roots, rounds = star_components_edges(spark, e, p, max_rounds)
+    roots, rounds = star_components_edges(cs, e, p, max_rounds)
     verts = graph.vertices
     labels = verts.join(roots, verts["id"] == roots["a"], "left").select(
         "id",
@@ -183,12 +185,16 @@ def _cc_star_distributed(graph: Graph, max_rounds: int = 60) -> tuple[DataFrame,
 
 
 def star_components_edges(
-    spark, pair_edges: DataFrame, num_partitions: int, max_rounds: int = 60
+    cs: CkptScope, pair_edges: DataFrame, num_partitions: int, max_rounds: int = 60
 ) -> tuple[DataFrame, int]:
     """Large-star/small-star alternation over an arbitrary undirected
     pair list ``(a, b)`` — the :func:`_cc_star_distributed` core, shared
     with non-graph callers (duplicate-cluster resolution runs it over
     near-dup DOC pairs, ``operators/dedup.py::duplicate_clusters``).
+
+    Round state is checkpointed in the caller's scope ``cs``; the final
+    round's checkpoint is what ``roots`` reads, so the caller keeps it
+    if its result reads ``roots``.
 
     Returns ``(roots, rounds)``: ``roots`` maps every NON-ROOT member to
     its component minimum; component minima and ids absent from the
@@ -198,7 +204,7 @@ def star_components_edges(
     (``a < b`` canonical pairs are fine)."""
     p = num_partitions
     e = pair_edges.select(F.col("a").cast("long"), F.col("b").cast("long"))
-    e, e_ids = local_ckpt(e.repartition(p, "a"))
+    e = cs.ckpt(e.repartition(p, "a"))
 
     def _sig(df: DataFrame) -> tuple[int, int]:
         # bit_xor: order-independent AND overflow-free (a sum of
@@ -231,7 +237,7 @@ def star_components_edges(
             F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
         ).distinct()
         mins2 = ori.groupBy("a").agg(F.min("b").alias("m"))
-        ss, ss_ids = local_ckpt(
+        ss = cs.ckpt(
             ori.join(mins2, "a")
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .unionAll(mins2.select(F.col("a"), F.col("m").alias("b")))
@@ -240,8 +246,8 @@ def star_components_edges(
             .repartition(p, "a")
         )
         new_sig = _sig(ss)
-        free_local_ckpt(spark, e_ids)
-        e, e_ids = ss, ss_ids
+        cs.free(e)
+        e = ss
         if new_sig == sig:
             break
         sig = new_sig
@@ -271,10 +277,11 @@ def connected_components(
     und = graph.undirected()
     if mode == "auto":
         mode = "broadcast" if graph.num_vertices <= 100_000_000 else "distributed"
-    try:
+    with ckpt_scope(graph.spark) as cs:
+        cs.callback(und.unpersist)
         if mode == "star":
-            labels_df, _ = _cc_star_distributed(und)
-            return labels_df
+            labels_df, _ = _cc_star_distributed(cs, und)
+            return cs.keep(labels_df)
         if mode == "broadcast":
             labels, _ = _cc_broadcast(und, max_iter)
             import pandas as pd
@@ -283,10 +290,8 @@ def connected_components(
                 {"id": np.arange(len(labels), dtype=np.int64), "component": labels}
             )
             return graph.spark.createDataFrame(pdf)
-        labels_df, _ = _cc_distributed(und, max_iter)
-        return labels_df.withColumnRenamed("label", "component")
-    finally:
-        und.unpersist()
+        labels_df, _ = _cc_distributed(cs, und, max_iter)
+        return cs.keep(labels_df.withColumnRenamed("label", "component"))
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

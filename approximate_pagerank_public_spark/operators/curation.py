@@ -622,39 +622,36 @@ def max_coverage_docs(
     the ``k`` rounds is one map-side-combinable count, a top-1
     orderBy (takeOrdered), and one anti-join that only SHRINKS the
     remaining relation — no pairwise anything, state is the remaining
-    (doc, shingle) table rotated through ``local_ckpt``.  Stops early
+    (doc, shingle) table rotated through a checkpoint scope.  Stops early
     when coverage is exhausted."""
     from approximate_pagerank_public_spark.operators.dedup import shingles
-    from approximate_pagerank_public_spark.plans.checkpoint import (
-        free_local_ckpt,
-        local_ckpt,
-    )
+    from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 
     spark = docs.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    remaining, r_ids = local_ckpt(
-        shingles(docs, id_col, text_col, n).repartition(p, "shingle")
-    )
-    picks: list[tuple[int, int, int]] = []
-    for pos in range(1, int(k) + 1):
-        top = (
-            remaining.groupBy("doc_id")
-            .agg(F.count("*").alias("gain"))
-            .orderBy(F.col("gain").desc(), F.col("doc_id").asc())
-            .first()
+    with ckpt_scope(spark) as cs:
+        remaining = cs.ckpt(
+            shingles(docs, id_col, text_col, n).repartition(p, "shingle")
         )
-        if top is None or int(top["gain"]) == 0:
-            break
-        picks.append((pos, int(top["doc_id"]), int(top["gain"])))
-        won = remaining.where(F.col("doc_id") == int(top["doc_id"])).select(
-            "shingle"
-        )
-        new, n_ids = local_ckpt(
-            remaining.join(won, "shingle", "left_anti").repartition(p, "shingle")
-        )
-        free_local_ckpt(spark, r_ids)
-        remaining, r_ids = new, n_ids
-    free_local_ckpt(spark, r_ids)
+        picks: list[tuple[int, int, int]] = []
+        for pos in range(1, int(k) + 1):
+            top = (
+                remaining.groupBy("doc_id")
+                .agg(F.count("*").alias("gain"))
+                .orderBy(F.col("gain").desc(), F.col("doc_id").asc())
+                .first()
+            )
+            if top is None or int(top["gain"]) == 0:
+                break
+            picks.append((pos, int(top["doc_id"]), int(top["gain"])))
+            won = remaining.where(F.col("doc_id") == int(top["doc_id"])).select(
+                "shingle"
+            )
+            new = cs.ckpt(
+                remaining.join(won, "shingle", "left_anti").repartition(p, "shingle")
+            )
+            cs.free(remaining)
+            remaining = new
     import pandas as pd
 
     out = pd.DataFrame(picks, columns=["pos", "doc_id", "new_shingles"])

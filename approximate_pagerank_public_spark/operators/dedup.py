@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
+
 logger = logging.getLogger(__name__)
 
 
@@ -525,52 +527,53 @@ def duplicate_clusters(
         pairs = pairs.persist()
         persisted = True
         mode = "broadcast" if pairs.count() <= broadcast_max_pairs else "star"
-    if mode == "broadcast":
-        parent: dict[int, int] = {}
+    with ckpt_scope(spark) as cs:
+        if mode == "broadcast":
+            parent: dict[int, int] = {}
 
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
+            def find(x: int) -> int:
+                while parent[x] != x:
+                    parent[x] = parent[parent[x]]  # path halving
+                    x = parent[x]
+                return x
 
-        for row in pairs.select("a", "b").toLocalIterator():
-            a, b = int(row["a"]), int(row["b"])
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN id so the representative is the cluster min
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rep_rows = [(x, find(x)) for x in parent]
-        if persisted:
-            pairs.unpersist()
-        if rep_rows:
-            roots = F.broadcast(
-                spark.createDataFrame(rep_rows, "a long, r long")
+            for row in pairs.select("a", "b").toLocalIterator():
+                a, b = int(row["a"]), int(row["b"])
+                parent.setdefault(a, a)
+                parent.setdefault(b, b)
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    # union by MIN id so the representative is the cluster min
+                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                    parent[hi] = lo
+            rep_rows = [(x, find(x)) for x in parent]
+            if persisted:
+                pairs.unpersist()
+            if rep_rows:
+                roots = F.broadcast(
+                    spark.createDataFrame(rep_rows, "a long, r long")
+                )
+            else:
+                roots = spark.createDataFrame([], "a long, r long")
+        elif mode == "star":
+            p = num_partitions or spark.sparkContext.defaultParallelism
+            from approximate_pagerank_public_spark.operators.components import (
+                star_components_edges,
             )
-        else:
-            roots = spark.createDataFrame([], "a long, r long")
-    elif mode == "star":
-        p = num_partitions or spark.sparkContext.defaultParallelism
-        from approximate_pagerank_public_spark.operators.components import (
-            star_components_edges,
-        )
 
-        roots, _rounds = star_components_edges(spark, pairs, p)
-        # the star loop has run to fixpoint (per-round signature jobs),
-        # so the cached pairs were fully consumed
-        if persisted:
-            pairs.unpersist()
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-    d = docs.select(F.col(id_col).cast("long").alias("doc_id"))
-    out = d.join(roots, d["doc_id"] == roots["a"], "left").select(
-        "doc_id",
-        F.least(F.col("doc_id"), F.coalesce("r", F.col("doc_id"))).alias("rep_id"),
-    )
-    return out.withColumn("keep", F.col("doc_id") == F.col("rep_id"))
+            roots, _rounds = star_components_edges(cs, pairs, p)
+            # the star loop has run to fixpoint (per-round signature jobs),
+            # so the cached pairs were fully consumed
+            if persisted:
+                pairs.unpersist()
+        else:
+            raise ValueError(f"unknown mode {mode!r}")
+        d = docs.select(F.col(id_col).cast("long").alias("doc_id"))
+        out = d.join(roots, d["doc_id"] == roots["a"], "left").select(
+            "doc_id",
+            F.least(F.col("doc_id"), F.coalesce("r", F.col("doc_id"))).alias("rep_id"),
+        )
+        return cs.keep(out.withColumn("keep", F.col("doc_id") == F.col("rep_id")))
 
 
 def winnow_fingerprints(

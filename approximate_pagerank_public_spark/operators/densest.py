@@ -26,8 +26,8 @@ Dual execution paths in the repo's standard idiom:
   the edge count, so v_r and e_r come from a single aggregate), then
   the removal filter and two anti-joins to shrink the edge table.
   Per-round work is O(|E_r|) shuffle on a geometrically shrinking edge
-  set; state rotates through ``local_ckpt`` (the per-round removed sets
-  are the final output, so their checkpoint blocks are never freed).
+  set; state rotates through a checkpoint scope (the output unions the
+  per-round removed sets, so the scope keeps their checkpoints).
 
 At 100 TB the plan is the published MapReduce algorithm itself:
 O(log n) rounds of degree-count + filter, no per-vertex driver state
@@ -49,8 +49,7 @@ from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.operators.triangles import canonical_edges
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -139,86 +138,75 @@ def _densest_broadcast(g: Graph) -> DensestResult:
 
 
 def _densest_distributed(g: Graph) -> DensestResult:
-    spark = g.spark
-    edges, e_ids = local_ckpt(canonical_edges(g).select("u", "v"))
-    removed: list[tuple[DataFrame, int, list]] = []
-    r = 0
-    best_r, best_v, best_e = -1, 0, 0
-    alive_ids: list = []
-    alive: DataFrame | None = None
-    while True:
-        deg = (
-            edges.select(F.col("u").alias("id"))
-            .unionAll(edges.select(F.col("v").alias("id")))
-            .groupBy("id")
-            .agg(F.count("*").alias("c"))
-        )
-        if alive is None:  # round 0: the peel domain is deg's key set
-            ad = deg
+    with ckpt_scope(g.spark) as cs:
+        edges = cs.ckpt(canonical_edges(g).select("u", "v"))
+        removed: list[tuple[DataFrame, int]] = []
+        r = 0
+        best_r, best_v, best_e = -1, 0, 0
+        alive: DataFrame | None = None
+        while True:
+            deg = (
+                edges.select(F.col("u").alias("id"))
+                .unionAll(edges.select(F.col("v").alias("id")))
+                .groupBy("id")
+                .agg(F.count("*").alias("c"))
+            )
+            if alive is None:  # round 0: the peel domain is deg's key set
+                ad = deg
+            else:
+                ad = alive.join(deg, "id", "left").select(
+                    "id", F.coalesce(F.col("c"), F.lit(0)).alias("c")
+                )
+            ad = cs.ckpt(ad)
+            row = ad.agg(
+                F.count("*").alias("vr"), F.sum("c").alias("sc")
+            ).collect()[0]
+            v_r = int(row["vr"])
+            if v_r == 0:
+                break
+            e_r = int(row["sc"] or 0) // 2
+            if best_r < 0 or e_r * best_v > best_e * v_r:
+                best_r, best_v, best_e = r, v_r, e_r
+            bad = ad.where(
+                F.lit(_DEN) * F.col("c") * F.lit(v_r) <= F.lit(_NUM) * F.lit(e_r)
+            ).select("id")
+            bad = cs.ckpt(bad)
+            removed.append((bad, r))
+            nxt_alive = ad.select("id").join(bad, "id", "left_anti")
+            nxt_edges = edges.join(
+                bad.withColumnRenamed("id", "u"), "u", "left_anti"
+            ).join(bad.withColumnRenamed("id", "v"), "v", "left_anti")
+            nxt_alive = cs.ckpt(nxt_alive)
+            nxt_edges = cs.ckpt(nxt_edges)
+            cs.free(alive, edges, ad)
+            alive, edges = nxt_alive, nxt_edges
+            r += 1
+        if not removed:
+            out = g.spark.createDataFrame(
+                [], "id long, round_removed long, in_densest int"
+            )
         else:
-            ad = alive.join(deg, "id", "left").select(
-                "id", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-            )
-        ad, ad_ids = local_ckpt(ad)
-        row = ad.agg(
-            F.count("*").alias("vr"), F.sum("c").alias("sc")
-        ).collect()[0]
-        v_r = int(row["vr"])
-        if v_r == 0:
-            free_local_ckpt(spark, ad_ids)
-            break
-        e_r = int(row["sc"] or 0) // 2
-        if best_r < 0 or e_r * best_v > best_e * v_r:
-            best_r, best_v, best_e = r, v_r, e_r
-        bad = ad.where(
-            F.lit(_DEN) * F.col("c") * F.lit(v_r) <= F.lit(_NUM) * F.lit(e_r)
-        ).select("id")
-        bad, b_ids = local_ckpt(bad)
-        removed.append((bad, r, b_ids))
-        nxt_alive = ad.select("id").join(bad, "id", "left_anti")
-        nxt_edges = edges.join(
-            bad.withColumnRenamed("id", "u"), "u", "left_anti"
-        ).join(bad.withColumnRenamed("id", "v"), "v", "left_anti")
-        nxt_alive, na_ids = local_ckpt(nxt_alive)
-        nxt_edges, ne_ids = local_ckpt(nxt_edges)
-        if alive is not None:
-            free_local_ckpt(spark, alive_ids)
-        free_local_ckpt(spark, e_ids)
-        free_local_ckpt(spark, ad_ids)
-        alive, alive_ids = nxt_alive, na_ids
-        edges, e_ids = nxt_edges, ne_ids
-        r += 1
-    if not removed:
-        out = spark.createDataFrame(
-            [], "id long, round_removed long, in_densest int"
+            parts = [
+                b.select(
+                    "id",
+                    F.lit(rk).cast("long").alias("round_removed"),
+                    F.lit(1 if rk >= best_r else 0).cast("int").alias(
+                        "in_densest"
+                    ),
+                )
+                for b, rk in removed
+            ]
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionAll(p)
+            out = cs.ckpt(out)
+        return DensestResult(
+            rounds=r,
+            best_round=best_r,
+            best_vertices=best_v,
+            best_edges=best_e,
+            _df=cs.keep(out),
         )
-    else:
-        parts = [
-            b.select(
-                "id",
-                F.lit(rk).cast("long").alias("round_removed"),
-                F.lit(1 if rk >= best_r else 0).cast("int").alias(
-                    "in_densest"
-                ),
-            )
-            for b, rk, _ in removed
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        out, _ = local_ckpt(out)  # final state: never freed
-        for _, _, b_ids in removed:
-            free_local_ckpt(spark, b_ids)
-    if alive is not None:
-        free_local_ckpt(spark, alive_ids)
-    free_local_ckpt(spark, e_ids)
-    return DensestResult(
-        rounds=r,
-        best_round=best_r,
-        best_vertices=best_v,
-        best_edges=best_e,
-        _df=out,
-    )
 
 
 def densest_subgraph(g: Graph, mode: str = "auto") -> DensestResult:

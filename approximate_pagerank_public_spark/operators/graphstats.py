@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 from approximate_pagerank_public_spark.plans.graph import Graph
 
 
@@ -544,7 +545,7 @@ def euler_check(graph: Graph) -> DataFrame:
 
 
 def _incremental_giant_curve(
-    spark, deltas, num_partitions: int
+    cs, spark, deltas, num_partitions: int
 ) -> dict:
     """Shared warm-start core for the robustness curves: process the
     points SMALLEST edge set first; each later point contributes only
@@ -563,17 +564,15 @@ def _incremental_giant_curve(
     unchanged, only the work is incremental.
 
     ``deltas``: ordered ``[(key, delta_df(a, b)), ...]``; returns
-    ``{key: giant_size}``. Label/size state rotates ``local_ckpt``
-    (the checkpoint-leak rule); the final state is freed too — only
-    the scalar curve leaves this function.
+    ``{key: giant_size}``. Label/size state rotates through the
+    caller's checkpoint scope ``cs``; only the scalar curve leaves this
+    function, so nothing it checkpoints is kept.
     """
     from approximate_pagerank_public_spark.operators.components import (
         star_components_edges,
     )
-    from ..plans.checkpoint import free_local_ckpt, local_ckpt
 
     lab = units = None
-    lab_ids = units_ids = None
     out: dict = {}
     for key, delta in deltas:
         d = delta.select("a", "b")
@@ -606,7 +605,7 @@ def _incremental_giant_curve(
             new_ids = new_ids.join(lab, "id", "left_anti")
         roots = None
         if con.limit(1).count() > 0:
-            roots, _rounds = star_components_edges(spark, con, num_partitions)
+            roots, _rounds = star_components_edges(cs, con, num_partitions)
 
         def _merge(df: DataFrame, col: str) -> DataFrame:
             if roots is None:
@@ -638,18 +637,12 @@ def _incremental_giant_curve(
             base_lab.unionAll(new_ids.select("id", F.col("id").alias("comp"))),
             "comp",
         )
-        new_units, nu_ids = local_ckpt(new_units)
-        new_lab, nl_ids = local_ckpt(new_lab)
+        new_units = cs.ckpt(new_units)
+        new_lab = cs.ckpt(new_lab)
         giant = new_units.agg(F.max("n").alias("g")).first()["g"]
         out[key] = int(giant) if giant is not None else 0
-        if units_ids is not None:
-            free_local_ckpt(spark, units_ids)
-            free_local_ckpt(spark, lab_ids)
-        units, units_ids = new_units, nu_ids
-        lab, lab_ids = new_lab, nl_ids
-    if units_ids is not None:
-        free_local_ckpt(spark, units_ids)
-        free_local_ckpt(spark, lab_ids)
+        cs.free(units, lab, roots)
+        units, lab = new_units, new_lab
     return out
 
 
@@ -669,63 +662,63 @@ def attack_tolerance(graph: Graph, ks=(0, 1, 4, 16)) -> DataFrame:
     edges only merges components, so the values are exactly the
     from-scratch CC). ``removed`` echoes how many hit-list vertices
     actually exist (k may exceed |V|)."""
-    e = graph.edges.select("src", "dst")
-    pairs = (
-        e.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        pairs.select(F.col("a").alias("id"))
-        .unionAll(pairs.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("deg"))
-    )
-    kmax = max(int(x) for x in ks)
-    hits = [
-        int(r["id"])
-        for r in deg.orderBy(F.col("deg").desc(), F.col("id").asc())
-        .limit(kmax)
-        .collect()
-    ]
-    # smallest survivor set first (largest k); each later point adds
-    # back exactly the edges incident to its restored hubs
-    ks_desc = sorted({int(x) for x in ks}, reverse=True)
-    deltas = []
-    prev_k = None
-    for k in ks_desc:
-        keep_out = hits[:k]
-        alive = (
-            ~F.col("a").isin(keep_out) & ~F.col("b").isin(keep_out)
-            if keep_out
-            else F.lit(True)
-        )
-        if prev_k is None:
-            delta = pairs.where(alive)
-        else:
-            back = hits[k:prev_k]  # hubs restored at this point
-            delta = pairs.where(
-                (F.col("a").isin(back) | F.col("b").isin(back)) & alive
+    with ckpt_scope(graph.spark) as cs:
+        e = graph.edges.select("src", "dst")
+        pairs = cs.ckpt(
+            e.select(
+                F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
             )
-        deltas.append((k, delta))
-        prev_k = k
-    giants = _incremental_giant_curve(
-        graph.spark, deltas, graph.num_partitions
-    )
-    rows = [
-        (k, len(hits[:k]), giants[k]) for k in sorted(int(x) for x in ks)
-    ]
-    import pandas as pd
+            .where(F.col("a") != F.col("b"))
+            .distinct()
+        )
+        deg = (
+            pairs.select(F.col("a").alias("id"))
+            .unionAll(pairs.select(F.col("b").alias("id")))
+            .groupBy("id")
+            .agg(F.count("*").alias("deg"))
+        )
+        kmax = max(int(x) for x in ks)
+        hits = [
+            int(r["id"])
+            for r in deg.orderBy(F.col("deg").desc(), F.col("id").asc())
+            .limit(kmax)
+            .collect()
+        ]
+        # smallest survivor set first (largest k); each later point adds
+        # back exactly the edges incident to its restored hubs
+        ks_desc = sorted({int(x) for x in ks}, reverse=True)
+        deltas = []
+        prev_k = None
+        for k in ks_desc:
+            keep_out = hits[:k]
+            alive = (
+                ~F.col("a").isin(keep_out) & ~F.col("b").isin(keep_out)
+                if keep_out
+                else F.lit(True)
+            )
+            if prev_k is None:
+                delta = pairs.where(alive)
+            else:
+                back = hits[k:prev_k]  # hubs restored at this point
+                delta = pairs.where(
+                    (F.col("a").isin(back) | F.col("b").isin(back)) & alive
+                )
+            deltas.append((k, delta))
+            prev_k = k
+        giants = _incremental_giant_curve(
+            cs, graph.spark, deltas, graph.num_partitions
+        )
+        rows = [
+            (k, len(hits[:k]), giants[k]) for k in sorted(int(x) for x in ks)
+        ]
+        import pandas as pd
 
-    return graph.spark.createDataFrame(
-        pd.DataFrame(rows, columns=["k", "removed", "giant_size"]).astype(
-            "int64"
-        ),
-        "k long, removed long, giant_size long",
-    )
+        return graph.spark.createDataFrame(
+            pd.DataFrame(rows, columns=["k", "removed", "giant_size"]).astype(
+                "int64"
+            ),
+            "k long, removed long, giant_size long",
+        )
 
 
 def random_failure_curve(graph: Graph, keep_pcts=(100, 75, 50, 25)) -> DataFrame:
@@ -742,57 +735,57 @@ def random_failure_curve(graph: Graph, keep_pcts=(100, 75, 50, 25)) -> DataFrame
     sparsest point up via :func:`_incremental_giant_curve` — each point
     merges only its ``pct ∈ [prev, keep)`` delta into the previous
     labels; values are exactly the from-scratch CC."""
-    e = graph.edges.select("src", "dst")
-    pairs = (
-        e.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    with ckpt_scope(graph.spark) as cs:
+        e = graph.edges.select("src", "dst")
+        pairs = cs.ckpt(
+            e.select(
+                F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+            )
+            .where(F.col("a") != F.col("b"))
+            .distinct()
+            .select(
+                "a",
+                "b",
+                F.pmod(
+                    F.conv(
+                        F.substring(
+                            F.md5(F.concat_ws(":", F.lit("rf"), F.col("a"), F.col("b"))),
+                            1,
+                            15,
+                        ),
+                        16,
+                        10,
+                    ).cast("long"),
+                    F.lit(100),
+                ).alias("pct"),
+            )
         )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .select(
-            "a",
-            "b",
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws(":", F.lit("rf"), F.col("a"), F.col("b"))),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(100),
-            ).alias("pct"),
+        keeps_asc = sorted({int(x) for x in keep_pcts})
+        deltas = []
+        prev = None
+        for keep in keeps_asc:
+            cond = F.col("pct") < keep
+            if prev is not None:
+                cond = cond & (F.col("pct") >= prev)
+            deltas.append((keep, pairs.where(cond).select("a", "b")))
+            prev = keep
+        giants = _incremental_giant_curve(
+            cs, graph.spark, deltas, graph.num_partitions
         )
-        .localCheckpoint()
-    )
-    keeps_asc = sorted({int(x) for x in keep_pcts})
-    deltas = []
-    prev = None
-    for keep in keeps_asc:
-        cond = F.col("pct") < keep
-        if prev is not None:
-            cond = cond & (F.col("pct") >= prev)
-        deltas.append((keep, pairs.where(cond).select("a", "b")))
-        prev = keep
-    giants = _incremental_giant_curve(
-        graph.spark, deltas, graph.num_partitions
-    )
-    kept_counts: dict[int, int] = {}
-    run = 0
-    for keep, delta in deltas:
-        run += delta.count()
-        kept_counts[keep] = run
-    rows = [
-        (keep, kept_counts[keep], giants[keep])
-        for keep in sorted((int(x) for x in keep_pcts), reverse=True)
-    ]
-    import pandas as pd
+        kept_counts: dict[int, int] = {}
+        run = 0
+        for keep, delta in deltas:
+            run += delta.count()
+            kept_counts[keep] = run
+        rows = [
+            (keep, kept_counts[keep], giants[keep])
+            for keep in sorted((int(x) for x in keep_pcts), reverse=True)
+        ]
+        import pandas as pd
 
-    return graph.spark.createDataFrame(
-        pd.DataFrame(rows, columns=["keep_pct", "kept_pairs", "giant_size"]).astype(
-            "int64"
-        ),
-        "keep_pct long, kept_pairs long, giant_size long",
-    )
+        return graph.spark.createDataFrame(
+            pd.DataFrame(rows, columns=["keep_pct", "kept_pairs", "giant_size"]).astype(
+                "int64"
+            ),
+            "keep_pct long, kept_pairs long, giant_size long",
+        )

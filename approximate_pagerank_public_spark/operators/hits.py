@@ -18,7 +18,7 @@ Execution paths (same cutover idiom as ``operators/pagerank.py``):
   (Arrow collect), per-iteration ``np.add.at`` scatter over COO; O(E)
   driver memory, the single-host fast path.
 - ``mode='distributed'`` — per-half-step |E|-row join + hash agg with
-  ``local_ckpt`` lineage truncation; vertex state and edges never leave
+  checkpoint-scope lineage truncation; vertex state and edges never leave
   the cluster. This is the 100-TB path: both half-steps shuffle on the
   grouping key only (partial aggregation is map-side), and the L2 norm
   is a scalar agg, not a collect of state.
@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -109,30 +108,23 @@ def _half_step(
 
 
 def _hits_distributed(g: Graph, max_iter: int) -> DataFrame:
-    spark = g.spark
     edges = g.edges.select("src", "dst")
     verts = g.vertices
-    h = verts.select("id", F.lit(1.0).alias("s"))
-    h, h_ids = local_ckpt(h)
-    a = None
-    a_ids: set[int] = set()
-    for _ in range(max_iter):
-        a_new = _half_step(edges, verts, h, "src", "dst")
-        a_new, new_a_ids = local_ckpt(a_new)
-        if a is not None:
-            free_local_ckpt(spark, a_ids)
-        a, a_ids = a_new, new_a_ids
-        h_new = _half_step(edges, verts, a, "dst", "src")
-        h_new, new_h_ids = local_ckpt(h_new)
-        free_local_ckpt(spark, h_ids)
-        h, h_ids = h_new, new_h_ids
-    # final states stay checkpointed: lineage is truncated, the blocks
-    # are the only copy (plans/checkpoint.py contract)
-    return (
-        h.select("id", F.col("s").alias("hub"))
-        .join(a.select("id", F.col("s").alias("authority")), "id")
-        .select("id", "hub", "authority")
-    )
+    with ckpt_scope(g.spark) as cs:
+        h = cs.ckpt(verts.select("id", F.lit(1.0).alias("s")))
+        a = None
+        for _ in range(max_iter):
+            a_new = cs.ckpt(_half_step(edges, verts, h, "src", "dst"))
+            cs.free(a)
+            a = a_new
+            h_new = cs.ckpt(_half_step(edges, verts, a, "dst", "src"))
+            cs.free(h)
+            h = h_new
+        return cs.keep(
+            h.select("id", F.col("s").alias("hub"))
+            .join(a.select("id", F.col("s").alias("authority")), "id")
+            .select("id", "hub", "authority")
+        )
 
 
 def hits(g: Graph, max_iter: int = 8, mode: str = "auto") -> HitsResult:
@@ -165,7 +157,7 @@ def eigenvector_centrality(
 
     ``broadcast`` = driver NumPy COO loop below ``BROADCAST_MAX_EDGES``;
     ``distributed`` = the per-iteration join + hash-agg twin
-    (``_half_step``) with ``local_ckpt`` rotation — state never leaves
+    (``_half_step``) with checkpoint-scope rotation — state never leaves
     the cluster, both half-step shuffles are map-side-combinable.
     """
     spark = g.spark
@@ -190,15 +182,13 @@ def eigenvector_centrality(
         raise ValueError(f"unknown mode {mode!r}")
     edges = g.edges.select("src", "dst")
     verts = g.vertices
-    x = verts.select("id", F.lit(1.0).alias("s"))
-    x, ckpt_ids = local_ckpt(x)
-    for _ in range(max_iter):
-        nxt = _half_step(edges, verts, x, "src", "dst")
-        nxt, new_ids = local_ckpt(nxt)
-        free_local_ckpt(spark, ckpt_ids)
-        x, ckpt_ids = nxt, new_ids
-    # final state stays checkpointed (plans/checkpoint.py contract)
-    return x.select("id", F.col("s").alias("eig"))
+    with ckpt_scope(spark) as cs:
+        x = cs.ckpt(verts.select("id", F.lit(1.0).alias("s")))
+        for _ in range(max_iter):
+            nxt = cs.ckpt(_half_step(edges, verts, x, "src", "dst"))
+            cs.free(x)
+            x = nxt
+        return cs.keep(x.select("id", F.col("s").alias("eig")))
 
 
 def katz_centrality(
@@ -215,16 +205,12 @@ def katz_centrality(
 
     ``broadcast`` runs the NumPy COO loop on the driver below
     ``BROADCAST_MAX_VERTICES``; ``distributed`` is the per-iteration
-    join + hash-agg twin with ``local_ckpt`` rotation (bit-parity
+    join + hash-agg twin with checkpoint-scope rotation (bit-parity
     tested). β must stay below 1/λ_max for the series to mean anything;
     the truncated iteration is defined (and replayable) for any β.
     """
     from approximate_pagerank_public_spark.operators.pagerank import (
         BROADCAST_MAX_VERTICES,
-    )
-    from approximate_pagerank_public_spark.plans.checkpoint import (
-        free_local_ckpt,
-        local_ckpt,
     )
 
     spark = g.spark
@@ -251,24 +237,22 @@ def katz_centrality(
         raise ValueError(f"unknown mode {mode!r}")
     verts = g.vertices.select("id")
     x = verts.select("id", F.lit(1.0).alias("x"))
-    ckpt_ids: set[int] = set()
-    for t in range(max_iter):
-        contrib = (
-            g.edges.select("src", "dst")
-            .join(x.select(F.col("id").alias("src"), "x"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("x").alias("s"))
-        )
-        nxt = verts.join(contrib, "id", "left").select(
-            "id",
-            (F.lit(1.0) + F.lit(float(beta)) * F.coalesce("s", F.lit(0.0))).alias("x"),
-        )
-        nxt, new_ids = local_ckpt(nxt)
-        if ckpt_ids:
-            free_local_ckpt(spark, ckpt_ids)
-        ckpt_ids = new_ids
-        x = nxt
-    return x.select("id", F.col("x").alias("katz"))
+    with ckpt_scope(spark) as cs:
+        for t in range(max_iter):
+            contrib = (
+                g.edges.select("src", "dst")
+                .join(x.select(F.col("id").alias("src"), "x"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("x").alias("s"))
+            )
+            nxt = verts.join(contrib, "id", "left").select(
+                "id",
+                (F.lit(1.0) + F.lit(float(beta)) * F.coalesce("s", F.lit(0.0))).alias("x"),
+            )
+            nxt = cs.ckpt(nxt)
+            cs.free(x)
+            x = nxt
+        return cs.keep(x.select("id", F.col("x").alias("katz")))
 
 
 def salsa(g: Graph, max_iter: int = 8, mode: str = "auto") -> DataFrame:
@@ -296,7 +280,7 @@ def salsa(g: Graph, max_iter: int = 8, mode: str = "auto") -> DataFrame:
 
     ``broadcast`` = driver NumPy COO loop below ``BROADCAST_MAX_EDGES``;
     ``distributed`` = per-half-step |E|-row join + map-side-combinable
-    hash agg with ``local_ckpt`` rotation — state never leaves the
+    hash agg with checkpoint-scope rotation — state never leaves the
     cluster, and both degree tables are O(V) side inputs computed once.
     """
     spark = g.spark
@@ -335,42 +319,39 @@ def salsa(g: Graph, max_iter: int = 8, mode: str = "auto") -> DataFrame:
         F.count("*").alias("d")
     )
     indeg = edges.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("d"))
-    h = outdeg.select("id", F.lit(1.0).alias("s"))
-    h, h_ids = local_ckpt(h)
-    a = None
-    a_ids: set[int] = set()
-    for _ in range(max_iter):
-        hc = h.join(outdeg, "id").select(
-            "id", (F.col("s") / F.col("d").cast("double")).alias("c")
+    with ckpt_scope(spark) as cs:
+        h = cs.ckpt(outdeg.select("id", F.lit(1.0).alias("s")))
+        a = None
+        for _ in range(max_iter):
+            hc = h.join(outdeg, "id").select(
+                "id", (F.col("s") / F.col("d").cast("double")).alias("c")
+            )
+            a_new = (
+                edges.join(hc.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("c").alias("s"))
+            )
+            a_new = cs.ckpt(a_new)
+            cs.free(a)
+            a = a_new
+            ac = a.join(indeg, "id").select(
+                "id", (F.col("s") / F.col("d").cast("double")).alias("c")
+            )
+            h_new = (
+                edges.join(ac.withColumnRenamed("id", "dst"), "dst")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.sum("c").alias("s"))
+            )
+            h_new = cs.ckpt(h_new)
+            cs.free(h)
+            h = h_new
+        verts = g.vertices.select("id")
+        return cs.keep(
+            verts.join(h.withColumnRenamed("s", "hub"), "id", "left")
+            .join(a.withColumnRenamed("s", "authority"), "id", "left")
+            .select(
+                "id",
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+            )
         )
-        a_new = (
-            edges.join(hc.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("c").alias("s"))
-        )
-        a_new, new_a_ids = local_ckpt(a_new)
-        if a is not None:
-            free_local_ckpt(spark, a_ids)
-        a, a_ids = a_new, new_a_ids
-        ac = a.join(indeg, "id").select(
-            "id", (F.col("s") / F.col("d").cast("double")).alias("c")
-        )
-        h_new = (
-            edges.join(ac.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("c").alias("s"))
-        )
-        h_new, new_h_ids = local_ckpt(h_new)
-        free_local_ckpt(spark, h_ids)
-        h, h_ids = h_new, new_h_ids
-    # final states stay checkpointed (plans/checkpoint.py contract)
-    verts = g.vertices.select("id")
-    return (
-        verts.join(h.withColumnRenamed("s", "hub"), "id", "left")
-        .join(a.withColumnRenamed("s", "authority"), "id", "left")
-        .select(
-            "id",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
-        )
-    )

@@ -23,7 +23,7 @@ Both have the repo's standard dual execution paths:
   ``row_number`` window over descending neighbor value, then
   ``max(least(rn, c))`` (the textbook "sorted-prefix" H-index), which
   shuffles only on ``dst`` and keeps Catalyst in charge. Lineage is
-  truncated per round via ``local_ckpt``.
+  truncated per round by a checkpoint scope.
 
 The window in the H-index round partitions by dst — a web hub's
 in-degree can be huge, but the window computes a running row_number
@@ -48,8 +48,7 @@ from pyspark.sql.window import Window
 
 from approximate_pagerank_public_spark.operators.triangles import canonical_edges
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -125,24 +124,22 @@ def _kcore_broadcast(g: Graph, k: int) -> tuple[np.ndarray, np.ndarray, int]:
 
 
 def _kcore_distributed(g: Graph, k: int) -> tuple[DataFrame, int]:
-    spark = g.spark
-    edges, ckpt_ids = local_ckpt(_sym_edges_df(g))
-    rounds = 0
-    while True:
-        deg = edges.groupBy("src").agg(F.count("*").alias("core_deg"))
-        bad = deg.where(F.col("core_deg") < k).select("src")
-        if bad.isEmpty():
-            survivors = deg.select(F.col("src").alias("id"), "core_deg")
-            survivors, _ = local_ckpt(survivors)
-            free_local_ckpt(spark, ckpt_ids)
-            return survivors, rounds
-        nxt = edges.join(bad, "src", "left_anti").join(
-            bad.select(F.col("src").alias("dst")), "dst", "left_anti"
-        ).select("src", "dst")
-        nxt, new_ids = local_ckpt(nxt)
-        free_local_ckpt(spark, ckpt_ids)
-        edges, ckpt_ids = nxt, new_ids
-        rounds += 1
+    with ckpt_scope(g.spark) as cs:
+        edges = cs.ckpt(_sym_edges_df(g))
+        rounds = 0
+        while True:
+            deg = edges.groupBy("src").agg(F.count("*").alias("core_deg"))
+            bad = deg.where(F.col("core_deg") < k).select("src")
+            if bad.isEmpty():
+                survivors = deg.select(F.col("src").alias("id"), "core_deg")
+                return cs.keep(cs.ckpt(survivors)), rounds
+            nxt = edges.join(bad, "src", "left_anti").join(
+                bad.select(F.col("src").alias("dst")), "dst", "left_anti"
+            ).select("src", "dst")
+            nxt = cs.ckpt(nxt)
+            cs.free(edges)
+            edges = nxt
+            rounds += 1
 
 
 def k_core(g: Graph, k: int, mode: str = "auto") -> KCoreResult:
@@ -198,56 +195,44 @@ def peel_layers_numpy(
 
 def _peel_layers_distributed(g: Graph, k: int) -> tuple[DataFrame, int]:
     # Rotates THREE checkpointed tables (edges / alive set / removed
-    # accumulator); every new round's state is materialized via
-    # local_ckpt BEFORE the superseded blocks are freed (a freed
-    # localCheckpoint is unrecoverable — see plans/checkpoint.py).
-    spark = g.spark
-    edges, edge_ids = local_ckpt(_sym_edges_df(g))
-    alive, alive_ids = local_ckpt(edges.select("src").distinct())
-    removed: DataFrame | None = None
-    removed_ids: set[int] = set()
-    rounds = 0
-    while True:
-        good = (
-            edges.groupBy("src")
-            .agg(F.count("*").alias("d"))
-            .where(F.col("d") >= k)
-            .select("src")
-        )
-        bad = alive.join(good, "src", "left_anti")
-        if bad.isEmpty():
-            out = alive.select(
-                F.col("src").alias("id"), F.lit(0).cast("long").alias("layer")
+    # accumulator); every new round's state is checkpointed BEFORE the
+    # superseded blocks are freed (a freed localCheckpoint is
+    # unrecoverable — see plans/checkpoint.py).
+    with ckpt_scope(g.spark) as cs:
+        edges = cs.ckpt(_sym_edges_df(g))
+        alive = cs.ckpt(edges.select("src").distinct())
+        removed: DataFrame | None = None
+        rounds = 0
+        while True:
+            good = (
+                edges.groupBy("src")
+                .agg(F.count("*").alias("d"))
+                .where(F.col("d") >= k)
+                .select("src")
             )
-            if removed is not None:
-                out = removed.unionAll(out)
-            out, _ = local_ckpt(out)
-            free_local_ckpt(spark, edge_ids)
-            free_local_ckpt(spark, alive_ids)
-            if removed_ids:
-                free_local_ckpt(spark, removed_ids)
-            return out, rounds
-        rounds += 1
-        step = bad.select(
-            F.col("src").alias("id"),
-            F.lit(rounds).cast("long").alias("layer"),
-        )
-        new_removed = step if removed is None else removed.unionAll(step)
-        new_removed, new_removed_ids = local_ckpt(new_removed)
-        nxt = (
-            edges.join(good, "src", "left_semi")
-            .join(good.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .select("src", "dst")
-        )
-        nxt, new_edge_ids = local_ckpt(nxt)
-        new_alive, new_alive_ids = local_ckpt(good)
-        free_local_ckpt(spark, edge_ids)
-        free_local_ckpt(spark, alive_ids)
-        if removed_ids:
-            free_local_ckpt(spark, removed_ids)
-        edges, edge_ids = nxt, new_edge_ids
-        alive, alive_ids = new_alive, new_alive_ids
-        removed, removed_ids = new_removed, new_removed_ids
+            bad = alive.join(good, "src", "left_anti")
+            if bad.isEmpty():
+                out = alive.select(
+                    F.col("src").alias("id"), F.lit(0).cast("long").alias("layer")
+                )
+                if removed is not None:
+                    out = removed.unionAll(out)
+                return cs.keep(cs.ckpt(out)), rounds
+            rounds += 1
+            step = bad.select(
+                F.col("src").alias("id"),
+                F.lit(rounds).cast("long").alias("layer"),
+            )
+            new_removed = cs.ckpt(step if removed is None else removed.unionAll(step))
+            nxt = (
+                edges.join(good, "src", "left_semi")
+                .join(good.select(F.col("src").alias("dst")), "dst", "left_semi")
+                .select("src", "dst")
+            )
+            nxt = cs.ckpt(nxt)
+            new_alive = cs.ckpt(good)
+            cs.free(edges, alive, removed)
+            edges, alive, removed = nxt, new_alive, new_removed
 
 
 def peel_layers(g: Graph, k: int, mode: str = "auto") -> tuple[DataFrame, int]:
@@ -327,44 +312,43 @@ def _coreness_broadcast(g: Graph) -> tuple[np.ndarray, int]:
 
 
 def _coreness_distributed(g: Graph) -> tuple[DataFrame, int]:
-    spark = g.spark
-    edges, e_ids = local_ckpt(_sym_edges_df(g))
-    verts = g.vertices
-    deg = edges.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("c"))
-    c = verts.join(deg, "id", "left").select(
-        "id", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
-    c, c_ids = local_ckpt(c)
-    w = Window.partitionBy("dst").orderBy(F.col("c").desc())
-    rounds = 0
-    while True:
-        pulled = (
-            edges.alias("e")
-            .join(c.alias("s"), F.col("s.id") == F.col("e.src"))
-            .select(F.col("e.dst").alias("dst"), F.col("s.c").alias("c"))
+    with ckpt_scope(g.spark) as cs:
+        edges = cs.ckpt(_sym_edges_df(g))
+        verts = g.vertices
+        deg = edges.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("c"))
+        c = verts.join(deg, "id", "left").select(
+            "id", F.coalesce(F.col("c"), F.lit(0)).alias("c")
         )
-        h = (
-            pulled.withColumn("rn", F.row_number().over(w))
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.max(F.least(F.col("rn"), F.col("c"))).alias("h"))
-        )
-        nc = verts.join(h, "id", "left").select(
-            "id", F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("c")
-        )
-        nc, nc_ids = local_ckpt(nc)
-        rounds += 1
-        changed = (
-            nc.alias("n")
-            .join(c.alias("o"), F.col("n.id") == F.col("o.id"))
-            .where(F.col("n.c") != F.col("o.c"))
-            .isEmpty()
-        )
-        free_local_ckpt(spark, c_ids)
-        c, c_ids = nc, nc_ids
-        if changed:
-            break
-    free_local_ckpt(spark, e_ids)
-    return c.select("id", F.col("c").alias("core")), rounds
+        c = cs.ckpt(c)
+        w = Window.partitionBy("dst").orderBy(F.col("c").desc())
+        rounds = 0
+        while True:
+            pulled = (
+                edges.alias("e")
+                .join(c.alias("s"), F.col("s.id") == F.col("e.src"))
+                .select(F.col("e.dst").alias("dst"), F.col("s.c").alias("c"))
+            )
+            h = (
+                pulled.withColumn("rn", F.row_number().over(w))
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.max(F.least(F.col("rn"), F.col("c"))).alias("h"))
+            )
+            nc = verts.join(h, "id", "left").select(
+                "id", F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("c")
+            )
+            nc = cs.ckpt(nc)
+            rounds += 1
+            changed = (
+                nc.alias("n")
+                .join(c.alias("o"), F.col("n.id") == F.col("o.id"))
+                .where(F.col("n.c") != F.col("o.c"))
+                .isEmpty()
+            )
+            cs.free(c)
+            c = nc
+            if changed:
+                break
+        return cs.keep(c.select("id", F.col("c").alias("core"))), rounds
 
 
 def core_numbers(g: Graph, mode: str = "auto") -> CorenessResult:

@@ -29,8 +29,8 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    CkptScope,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -137,8 +137,9 @@ def label_propagation(graph: Graph, max_iter: int = 10, mode: str = "auto") -> D
         mode = (
             "broadcast" if graph.num_vertices <= BROADCAST_MAX_VERTICES else "dataframe"
         )
-    if mode == "broadcast":
-        try:
+    with ckpt_scope(graph.spark) as cs:
+        cs.callback(und.unpersist)
+        if mode == "broadcast":
             import pandas as pd
 
             labels = _lpa_broadcast(graph, und, max_iter)
@@ -147,13 +148,9 @@ def label_propagation(graph: Graph, max_iter: int = 10, mode: str = "auto") -> D
                     {"id": np.arange(len(labels), dtype=np.int64), "label": labels}
                 )
             )
-        finally:
-            und.unpersist()
-    spark = graph.spark
-    p = graph.num_partitions
-    labels = und.vertices.withColumn("label", F.col("id"))
-    labels, label_ids = local_ckpt(labels.repartition(p, "id"))
-    try:
+        p = graph.num_partitions
+        labels = und.vertices.withColumn("label", F.col("id"))
+        labels = cs.ckpt(labels.repartition(p, "id"))
         for _ in range(max_iter):
             votes = (
                 und.edges.join(
@@ -168,7 +165,7 @@ def label_propagation(graph: Graph, max_iter: int = 10, mode: str = "auto") -> D
                 .where(F.col("_rn") == 1)
                 .select(F.col("dst").alias("id"), F.col("label").alias("new_label"))
             )
-            new, new_ids = local_ckpt(
+            new = cs.ckpt(
                 labels.join(best, "id", "left")
                 .select("id", F.coalesce("new_label", "label").alias("label"))
                 .repartition(p, "id")
@@ -178,13 +175,11 @@ def label_propagation(graph: Graph, max_iter: int = 10, mode: str = "auto") -> D
                 .where(F.col("label") != F.col("_old"))
                 .count()
             )
-            free_local_ckpt(spark, label_ids)
-            labels, label_ids = new, new_ids
+            cs.free(labels)
+            labels = new
             if changed == 0:
                 break
-        return labels
-    finally:
-        und.unpersist()
+        return cs.keep(labels)
 
 
 def golden_label_propagation(
@@ -269,19 +264,19 @@ def louvain_rounds(graph: Graph, rounds: int = 4) -> DataFrame:
     vertex set), one per-vertex window argmax. Degrees and ``2m`` are
     computed once outside the loop.
     """
-    spark = graph.spark
     p = graph.num_partitions
     symd = _symd_weighted(graph).cache()
-    try:
+    with ckpt_scope(graph.spark) as cs:
+        cs.callback(symd.unpersist)
         moved = _local_move_rounds(
-            spark, symd, rounds, p, _small_enough(graph.num_vertices)
+            cs, symd, rounds, p, _small_enough(graph.num_vertices)
         )
         # isolated vertices never appear in symd: they keep their own id
-        return graph.vertices.join(moved, "id", "left").select(
-            "id", F.coalesce("label", "id").alias("label")
+        return cs.keep(
+            graph.vertices.join(moved, "id", "left").select(
+                "id", F.coalesce("label", "id").alias("label")
+            )
         )
-    finally:
-        symd.unpersist()
 
 
 def _small_enough(num_vertices: int) -> bool:
@@ -375,7 +370,7 @@ def _local_move_rounds_np(src, dst, w, rounds: int):
 
 
 def _local_move_rounds_driver(
-    spark, wrows: DataFrame, rounds: int, p: int
+    cs: CkptScope, wrows: DataFrame, rounds: int, p: int
 ) -> DataFrame:
     import pandas as pd
 
@@ -383,17 +378,15 @@ def _local_move_rounds_driver(
     ids, labs = _local_move_rounds_np(
         pdf["src"].to_numpy(), pdf["dst"].to_numpy(), pdf["w"].to_numpy(), rounds
     )
-    out = spark.createDataFrame(
+    out = wrows.sparkSession.createDataFrame(
         pd.DataFrame({"id": ids, "label": labs}), "id long, label long"
     )
-    # final state: checkpointed like the distributed rounds' result and
-    # deliberately not freed (the blocks are the only copy)
-    labels, _ids = local_ckpt(out.repartition(p, "id"))
-    return labels
+    # checkpointed like the distributed rounds' result
+    return cs.ckpt(out.repartition(p, "id"))
 
 
 def _local_move_rounds(
-    spark, wrows: DataFrame, rounds: int, p: int, small: bool
+    cs: CkptScope, wrows: DataFrame, rounds: int, p: int, small: bool
 ) -> DataFrame:
     """``rounds`` synchronous integer-gain local moves over a SYMMETRIC
     integer-weighted row set ``(src, dst, w)`` (off-diagonal rows appear
@@ -401,7 +394,8 @@ def _local_move_rounds(
     to the degree once — so a contracted community's diagonal row, which
     counts each internal undirected edge twice, adds exactly the
     internal degree mass and the fine/coarse modularity invariant
-    holds). Returns ``(id, label)`` for every id appearing as src.
+    holds). Returns ``(id, label)`` for every id appearing as src,
+    checkpointed in the caller's scope ``cs``.
 
     Convention (W the symmetric adjacency, diagonal allowed):
     ``k_i = Σ_j W_ij``, ``m2 = Σ_ij W_ij``, ``kin(i,C) = Σ_{j∈C, j≠i}
@@ -416,12 +410,12 @@ def _local_move_rounds(
     task #9)."""
     if small and LOUVAIN_DRIVER_MAX_ROWS > 0:
         if wrows.count() <= LOUVAIN_DRIVER_MAX_ROWS:
-            return _local_move_rounds_driver(spark, wrows, rounds, p)
+            return _local_move_rounds_driver(cs, wrows, rounds, p)
     deg = wrows.groupBy("src").agg(F.sum("w").alias("k")).cache()
     try:
         m2 = int(wrows.agg(F.sum("w")).first()[0])
         labels = deg.select(F.col("src").alias("id"), F.col("src").alias("label"))
-        labels, label_ids = local_ckpt(labels.repartition(p, "id"))
+        labels = cs.ckpt(labels.repartition(p, "id"))
         # kin excludes j == i: a vertex's (or contracted community's)
         # self-loop moves with it and cancels from every gain comparison
         offdiag = wrows.where(F.col("src") != F.col("dst"))
@@ -474,13 +468,13 @@ def _local_move_rounds(
             best = cand.groupBy("id").agg(pick).select(
                 "id", (-F.col("_m._negl")).alias("new_label")
             )
-            new, new_ids = local_ckpt(
+            new = cs.ckpt(
                 labels.join(best, "id", "left")
                 .select("id", F.coalesce("new_label", "label").alias("label"))
                 .repartition(p, "id")
             )
-            free_local_ckpt(spark, label_ids)
-            labels, label_ids = new, new_ids
+            cs.free(labels)
+            labels = new
         return labels
     finally:
         deg.unpersist()
@@ -506,12 +500,12 @@ def louvain_multilevel(
     contraction is one |2m|-row double label join + hash agg; the
     coarse phase runs on |communities| vertices — strictly cheaper per
     round than the fine phase."""
-    spark = graph.spark
     p = graph.num_partitions
     symd = _symd_weighted(graph).cache()
     small = _small_enough(graph.num_vertices)
-    try:
-        fine = _local_move_rounds(spark, symd, fine_rounds, p, small)
+    with ckpt_scope(graph.spark) as cs:
+        cs.callback(symd.unpersist)
+        fine = _local_move_rounds(cs, symd, fine_rounds, p, small)
         ls = fine.select(F.col("id").alias("src"), F.col("label").alias("_cs"))
         ld = fine.select(F.col("id").alias("dst"), F.col("label").alias("_cd"))
         if small:
@@ -526,7 +520,7 @@ def louvain_multilevel(
         )
         try:
             coarse = _local_move_rounds(
-                spark, coarse_rows, coarse_rounds, p, small
+                cs, coarse_rows, coarse_rounds, p, small
             )
         finally:
             coarse_rows.unpersist()
@@ -535,11 +529,11 @@ def louvain_multilevel(
             "label",
         ).select("id", F.col("_sl").alias("label"))
         # isolated vertices never enter the fine phase: keep their own id
-        return graph.vertices.join(out, "id", "left").select(
-            "id", F.coalesce("label", "id").alias("label")
+        return cs.keep(
+            graph.vertices.join(out, "id", "left").select(
+                "id", F.coalesce("label", "id").alias("label")
+            )
         )
-    finally:
-        symd.unpersist()
 
 
 def _golden_sym_rows(src: np.ndarray, dst: np.ndarray) -> dict[tuple[int, int], int]:
@@ -651,14 +645,14 @@ def seeded_label_propagation(
 
     Scale shape per round: one edge-pass join against the labeled set
     (grows toward |V|), one map-side-combined (dst, label) weight sum,
-    one per-dst window argmax, `local_ckpt` rotation.
+    one per-dst window argmax, checkpoint-scope rotation.
     """
-    spark = graph.spark
     p = graph.num_partitions
     und = graph.undirected()
     seeds = seeds.select("id", "label")
-    try:
-        labels, label_ids = local_ckpt(seeds.repartition(p, "id"))
+    with ckpt_scope(graph.spark) as cs:
+        cs.callback(und.unpersist)
+        labels = cs.ckpt(seeds.repartition(p, "id"))
         for _ in range(rounds):
             votes = (
                 und.edges.join(
@@ -678,9 +672,7 @@ def seeded_label_propagation(
             nxt = seeds.unionAll(
                 best.join(seeds.select("id"), "id", "left_anti")
             )
-            nxt, new_ids = local_ckpt(nxt.repartition(p, "id"))
-            free_local_ckpt(spark, label_ids)
-            labels, label_ids = nxt, new_ids
-        return labels
-    finally:
-        und.unpersist()
+            nxt = cs.ckpt(nxt.repartition(p, "id"))
+            cs.free(labels)
+            labels = nxt
+        return cs.keep(labels)

@@ -13,7 +13,7 @@ join the matching; all edges incident to a newly matched vertex
 deactivate. At least the globally-minimum active edge is selected
 every round ⇒ termination; expected O(log E) rounds under the md5
 order. Matched-vertex maximality is tested, and the SHRINKING
-active-edge table rotates through ``local_ckpt`` (the coloring loop's
+active-edge table rotates through a checkpoint scope (the coloring loop's
 work-proportionality pattern — total edge work O(|E|·rounds) with the
 table shrinking geometrically).
 
@@ -31,8 +31,7 @@ from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.operators.triangles import canonical_edges
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -89,49 +88,46 @@ def matching_numpy(
 
 # --------------------------------------------------------------- distributed
 def _matching_distributed(g: Graph, max_rounds: int = 200) -> DataFrame:
-    spark = g.spark
-    p = g.num_partitions
-    e = canonical_edges(g).select("u", "v", _prio_col().alias("h"))
-    active, a_ids = local_ckpt(e.repartition(p, "u"))
-    matched: DataFrame | None = None
-    m_ids: list = []
-    for _ in range(max_rounds):
-        if active.isEmpty():
-            break
-        sym = active.select(F.col("u").alias("x"), "h").unionByName(
-            active.select(F.col("v").alias("x"), "h")
-        )
-        mins = sym.groupBy("x").agg(F.min("h").alias("mn"))
-        sel = (
-            active.join(
-                mins.select(F.col("x").alias("u"), F.col("mn").alias("mu")), "u"
+    with ckpt_scope(g.spark) as cs:
+        p = g.num_partitions
+        e = canonical_edges(g).select("u", "v", _prio_col().alias("h"))
+        active = cs.ckpt(e.repartition(p, "u"))
+        matched: DataFrame | None = None
+        for _ in range(max_rounds):
+            if active.isEmpty():
+                break
+            sym = active.select(F.col("u").alias("x"), "h").unionByName(
+                active.select(F.col("v").alias("x"), "h")
             )
-            .join(
-                mins.select(F.col("x").alias("v"), F.col("mn").alias("mv")), "v"
+            mins = sym.groupBy("x").agg(F.min("h").alias("mn"))
+            sel = (
+                active.join(
+                    mins.select(F.col("x").alias("u"), F.col("mn").alias("mu")), "u"
+                )
+                .join(
+                    mins.select(F.col("x").alias("v"), F.col("mn").alias("mv")), "v"
+                )
+                .where((F.col("h") == F.col("mu")) & (F.col("h") == F.col("mv")))
+                .select("u", "v")
             )
-            .where((F.col("h") == F.col("mu")) & (F.col("h") == F.col("mv")))
-            .select("u", "v")
-        )
-        nm = sel if matched is None else matched.unionByName(sel)
-        nm, nm_ids = local_ckpt(nm)
-        if matched is not None:
-            free_local_ckpt(spark, m_ids)
-        matched, m_ids = nm, nm_ids
-        mv = sel.select(F.col("u").alias("x")).unionByName(
-            sel.select(F.col("v").alias("x"))
-        )
-        nxt, nxt_ids = local_ckpt(
-            active.join(mv.withColumnRenamed("x", "u"), "u", "left_anti")
-            .join(mv.withColumnRenamed("x", "v"), "v", "left_anti")
-            .select("u", "v", "h")
-            .repartition(p, "u")
-        )
-        free_local_ckpt(spark, a_ids)
-        active, a_ids = nxt, nxt_ids
-    free_local_ckpt(spark, a_ids)
-    if matched is None:
-        return g.spark.createDataFrame([], "u long, v long")
-    return matched.select("u", "v")
+            nm = sel if matched is None else matched.unionByName(sel)
+            nm = cs.ckpt(nm)
+            cs.free(matched)
+            matched = nm
+            mv = sel.select(F.col("u").alias("x")).unionByName(
+                sel.select(F.col("v").alias("x"))
+            )
+            nxt = cs.ckpt(
+                active.join(mv.withColumnRenamed("x", "u"), "u", "left_anti")
+                .join(mv.withColumnRenamed("x", "v"), "v", "left_anti")
+                .select("u", "v", "h")
+                .repartition(p, "u")
+            )
+            cs.free(active)
+            active = nxt
+        if matched is None:
+            return g.spark.createDataFrame([], "u long, v long")
+        return cs.keep(matched.select("u", "v"))
 
 
 def maximal_matching(g: Graph, mode: str = "auto") -> DataFrame:

@@ -19,7 +19,7 @@ result is hash-exact. Fresh salt per round keeps rounds independent
 Scale shape: each round is two hash joins (restrict edges to active
 endpoints), one groupBy-min (neighbor priority), an anti-join
 (deactivate) — all map-side-combinable, no driver state beyond the
-empty-check scalar, lineage truncated with ``local_ckpt``. Active
+empty-check scalar, lineage truncated by a checkpoint scope. Active
 vertices drop by a constant fraction per round in expectation, so the
 edge volume shrinks geometrically.
 """
@@ -32,8 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -61,68 +60,66 @@ def maximal_independent_set(
 
     Raises if ``max_rounds`` is hit with vertices still active (never
     observed — expected rounds are O(log n))."""
-    spark = graph.spark
     p = graph.num_partitions
-    sym = (
-        graph.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .unionAll(
-            graph.edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            ).where(F.col("src") != F.col("dst"))
+    with ckpt_scope(graph.spark) as cs:
+        sym = (
+            graph.edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .unionAll(
+                graph.edges.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                ).where(F.col("src") != F.col("dst"))
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    sym, sym_ids = local_ckpt(sym.repartition(p, "src"))
+        sym = cs.ckpt(sym.repartition(p, "src"))
 
-    active = graph.vertices.select("id")
-    active, act_ids = local_ckpt(active.repartition(p, "id"))
-    mis_parts: list[DataFrame] = []
-    rounds = 0
-    while True:
-        if active.limit(1).count() == 0:
-            break
-        rounds += 1
-        if rounds > max_rounds:  # pragma: no cover
-            raise RuntimeError(f"Luby MIS did not finish in {max_rounds} rounds")
-        pri = active.select("id", _prio(seed, rounds).alias("pr"))
-        act_e = (
-            sym.join(active.select(F.col("id").alias("src")), "src")
-            .join(active.select(F.col("id").alias("dst")), "dst")
-            .select("src", "dst")
-        )
-        nbr_min = (
-            act_e.join(pri.select(F.col("id").alias("dst"), F.col("pr").alias("np")), "dst")
-            .groupBy("src")
-            .agg(F.min("np").alias("npr"))
-            .select(F.col("src").alias("id"), "npr")
-        )
-        sel = (
-            pri.join(nbr_min, "id", "left")
-            .where(F.col("pr") < F.coalesce("npr", F.lit(_NO_NEIGHBOR)))
-            .select("id")
-        )
-        sel, sel_ids = local_ckpt(sel.repartition(p, "id"))
-        mis_parts.append(sel)
-        rm = sel.unionAll(
-            act_e.join(sel.select(F.col("id").alias("src")), "src")
-            .select(F.col("dst").alias("id"))
-        ).distinct()
-        nxt, nxt_ids = local_ckpt(active.join(rm, "id", "left_anti").repartition(p, "id"))
-        free_local_ckpt(spark, act_ids)
-        active, act_ids = nxt, nxt_ids
-        # sel_ids stay live — the per-round MIS slices ARE the result
-        _ = sel_ids
+        active = graph.vertices.select("id")
+        active = cs.ckpt(active.repartition(p, "id"))
+        mis_parts: list[DataFrame] = []
+        rounds = 0
+        while True:
+            if active.limit(1).count() == 0:
+                break
+            rounds += 1
+            if rounds > max_rounds:  # pragma: no cover
+                raise RuntimeError(f"Luby MIS did not finish in {max_rounds} rounds")
+            pri = active.select("id", _prio(seed, rounds).alias("pr"))
+            act_e = (
+                sym.join(active.select(F.col("id").alias("src")), "src")
+                .join(active.select(F.col("id").alias("dst")), "dst")
+                .select("src", "dst")
+            )
+            nbr_min = (
+                act_e.join(pri.select(F.col("id").alias("dst"), F.col("pr").alias("np")), "dst")
+                .groupBy("src")
+                .agg(F.min("np").alias("npr"))
+                .select(F.col("src").alias("id"), "npr")
+            )
+            sel = (
+                pri.join(nbr_min, "id", "left")
+                .where(F.col("pr") < F.coalesce("npr", F.lit(_NO_NEIGHBOR)))
+                .select("id")
+            )
+            sel = cs.ckpt(sel.repartition(p, "id"))
+            mis_parts.append(sel)
+            rm = sel.unionAll(
+                act_e.join(sel.select(F.col("id").alias("src")), "src")
+                .select(F.col("dst").alias("id"))
+            ).distinct()
+            nxt = cs.ckpt(active.join(rm, "id", "left_anti").repartition(p, "id"))
+            cs.free(active)
+            active = nxt
 
-    verts = graph.vertices.select("id")
-    if mis_parts:
-        mis = mis_parts[0]
-        for m in mis_parts[1:]:
-            mis = mis.unionAll(m)
-        labels = verts.join(
-            mis.select(F.col("id"), F.lit(True).alias("in_mis")), "id", "left"
-        ).select("id", F.coalesce("in_mis", F.lit(False)).alias("in_mis"))
-    else:  # empty graph
-        labels = verts.select("id", F.lit(False).alias("in_mis"))
-    free_local_ckpt(spark, sym_ids)
-    return MISResult(rounds=rounds, labels=labels)
+        verts = graph.vertices.select("id")
+        if mis_parts:
+            mis = mis_parts[0]
+            for m in mis_parts[1:]:
+                mis = mis.unionAll(m)
+            labels = verts.join(
+                mis.select(F.col("id"), F.lit(True).alias("in_mis")), "id", "left"
+            ).select("id", F.coalesce("in_mis", F.lit(False)).alias("in_mis"))
+        else:  # empty graph
+            labels = verts.select("id", F.lit(False).alias("in_mis"))
+        # the per-round MIS slices ARE the result
+        return MISResult(rounds=rounds, labels=cs.keep(labels))

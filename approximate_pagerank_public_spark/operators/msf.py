@@ -23,7 +23,7 @@ Dual paths, identical edge sets (parity-tested):
   task); the merge reuses
   ``operators/components.py::star_components_edges`` over the chosen
   (label, label) pairs — O(log) rounds regardless of chain length;
-  labels and the accumulated forest rotate through ``local_ckpt``.
+  labels and the accumulated forest rotate through a checkpoint scope.
 
 Oracle (``msf_oracle_sql``): unrolled Borůvka — per round a
 row_number-over-(w,u,v) argmin and a recursive-CTE reachability merge
@@ -45,8 +45,8 @@ from approximate_pagerank_public_spark.operators.components import (
     star_components_edges,
 )
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    CkptScope,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -95,19 +95,16 @@ def kruskal_numpy(
 
 # --------------------------------------------------------------- distributed
 def _boruvka_distributed(
-    g: Graph, max_rounds: int
+    cs: CkptScope, g: Graph, max_rounds: int
 ) -> tuple[DataFrame | None, DataFrame]:
-    """Up to ``max_rounds`` Borůvka rounds; returns (forest, labels) —
-    shared by :func:`minimum_spanning_forest` (runs to convergence) and
+    """Up to ``max_rounds`` Borůvka rounds; returns (forest, labels),
+    checkpointed in the caller's scope — shared by
+    :func:`minimum_spanning_forest` (runs to convergence) and
     :func:`affinity_clusters` (runs a fixed round budget)."""
-    spark = g.spark
     p = g.num_partitions
-    edges, e_ids = local_ckpt(undirected_weighted_edges(g).repartition(p, "u"))
-    labels, l_ids = local_ckpt(
-        g.vertices.select("id", F.col("id").alias("lab"))
-    )
+    edges = cs.ckpt(undirected_weighted_edges(g).repartition(p, "u"))
+    labels = cs.ckpt(g.vertices.select("id", F.col("id").alias("lab")))
     forest: DataFrame | None = None
-    f_ids: list = []
     for _ in range(max_rounds):
         lu = labels.select(F.col("id").alias("u"), F.col("lab").alias("lu"))
         lv = labels.select(F.col("id").alias("v"), F.col("lab").alias("lv"))
@@ -121,25 +118,21 @@ def _boruvka_distributed(
                 F.struct("w", "u", "v", F.col("lu").alias("other")).alias("c"),
             )
         )
-        chosen, ch_ids = local_ckpt(
-            cand.groupBy("lab").agg(F.min("c").alias("c"))
-        )
+        chosen = cs.ckpt(cand.groupBy("lab").agg(F.min("c").alias("c")))
         if chosen.isEmpty():
-            free_local_ckpt(spark, ch_ids)
             break
         new_edges = chosen.select(
             F.col("c.u").alias("u"), F.col("c.v").alias("v"), F.col("c.w").alias("w")
         ).distinct()
         nf = new_edges if forest is None else forest.unionByName(new_edges)
-        nf, nf_ids = local_ckpt(nf)
-        if forest is not None:
-            free_local_ckpt(spark, f_ids)
-        forest, f_ids = nf, nf_ids
+        nf = cs.ckpt(nf)
+        cs.free(forest)
+        forest = nf
         pairs = chosen.select(
             F.col("lab").alias("a"), F.col("c.other").alias("b")
         )
-        roots, _rounds = star_components_edges(spark, pairs, p)
-        nl, nl_ids = local_ckpt(
+        roots, _rounds = star_components_edges(cs, pairs, p)
+        nl = cs.ckpt(
             labels.join(roots, labels["lab"] == roots["a"], "left")
             .select(
                 "id",
@@ -147,19 +140,18 @@ def _boruvka_distributed(
             )
             .repartition(p, "id")
         )
-        free_local_ckpt(spark, l_ids)
-        free_local_ckpt(spark, ch_ids)
-        labels, l_ids = nl, nl_ids
-    free_local_ckpt(spark, e_ids)
+        cs.free(labels, chosen, roots)
+        labels = nl
     return forest, labels
 
 
 def _msf_distributed(g: Graph) -> DataFrame:
     max_rounds = int(np.ceil(np.log2(max(g.num_vertices, 2)))) + 2
-    forest, _labels = _boruvka_distributed(g, max_rounds)
-    if forest is None:
-        return g.spark.createDataFrame([], "u long, v long, w double")
-    return forest.select("u", "v", "w")
+    with ckpt_scope(g.spark) as cs:
+        forest, _labels = _boruvka_distributed(cs, g, max_rounds)
+        if forest is None:
+            return g.spark.createDataFrame([], "u long, v long, w double")
+        return cs.keep(forest.select("u", "v", "w"))
 
 
 def minimum_spanning_forest(g: Graph, mode: str = "auto") -> DataFrame:
@@ -239,8 +231,9 @@ def affinity_clusters(g: Graph, rounds: int = 2, mode: str = "auto") -> DataFram
     if mode == "auto":
         mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
     if mode == "distributed":
-        _forest, labels = _boruvka_distributed(g, rounds)
-        return labels.select("id", F.col("lab").alias("cluster"))
+        with ckpt_scope(g.spark) as cs:
+            _forest, labels = _boruvka_distributed(cs, g, rounds)
+            return cs.keep(labels.select("id", F.col("lab").alias("cluster")))
     if mode != "broadcast":
         raise ValueError(f"unknown mode {mode!r}")
     pdf = undirected_weighted_edges(g).toPandas()

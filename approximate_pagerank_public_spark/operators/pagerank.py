@@ -47,8 +47,7 @@ from pyspark.sql import functions as F
 from approximate_pagerank_public_spark.operators.spmv import gather_contrib
 from approximate_pagerank_public_spark.plans.checkpoint import (
     CheckpointManager,
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
     pinned_confs,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
@@ -396,8 +395,9 @@ def _run_distributed_arrow(
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
             "spark.sql.shuffle.partitions": str(p),
         },
-    ):
+    ), ckpt_scope(spark) as cs:
         store = graph.dist_blocks()
+        cs.callback(store.clear_messages)
         # the routing column is STATIC — pin it once as its own hash(id, p)
         # checkpoint and join it to the loop state per superstep (an
         # exchange-free shuffle-hash join: both sides keep the same
@@ -405,142 +405,129 @@ def _run_distributed_arrow(
         # `dang` flag instead of the ~P-entry pids array, cutting the
         # per-superstep checkpoint write and the two state reads by ~2×
         # (measured 3.5 → ~3 s superstep at |E|=10⁸/32c).
-        rt, rt_ids = local_ckpt(
-            store.attach_routing(graph.vertices).repartition(p, "id")
-        )
-        state_ids: set[int] = set()
-        try:
-            dang = rt.select("id", F.size("pids").eqNullSafe(0).alias("dang"))
-            routed = dang
-            if sources is None and init_ranks is not None:
-                routed = dang.join(
-                    init_ranks.select("id", F.col("rank").alias("_ir")), "id", "left"
-                )
-                init = [F.coalesce(F.col("_ir"), F.lit(1.0 / n)).alias("r0")]
-            elif sources is None:
-                init = [F.lit(1.0 / n).alias("r0")]
-            else:
-                init = [
-                    F.when(F.col("id") == src, 1.0).otherwise(0.0).alias(c)
-                    for c, src in zip(cols, sources)
-                ]
-            state, state_ids = local_ckpt(
-                routed.select("id", "dang", *init).repartition(p, "id")
+        rt = cs.ckpt(store.attach_routing(graph.vertices).repartition(p, "id"))
+        dang = rt.select("id", F.size("pids").eqNullSafe(0).alias("dang"))
+        routed = dang
+        if sources is None and init_ranks is not None:
+            routed = dang.join(
+                init_ranks.select("id", F.col("rank").alias("_ir")), "id", "left"
             )
-            if ckpt and resume:
-                loaded = ckpt.load_latest_df(spark)
-                if loaded is not None:
-                    start_it, ranks_df, metrics = loaded
-                    new, new_ids = local_ckpt(
-                        dang.join(ranks_df.select("id", *cols), "id")
-                        .select("id", "dang", *cols)
-                        .repartition(p, "id")
-                    )
-                    free_local_ckpt(spark, state_ids)
-                    state, state_ids = new, new_ids
-            converged = False
-            it = start_it
-            # dangling dot of the CURRENT state, one scan before the loop;
-            # every later iteration piggybacks it on the stop-scalar agg of
-            # the state it just materialized — no separate per-superstep job
-            if dangling_norm:
-                drow = (
-                    state.where(F.col("dang"))
-                    .agg(*[F.sum(c).alias(c) for c in cols])
-                    .first()
-                )
-                d = [float(drow[c] or 0.0) for c in cols]
-            else:
-                d = [0.0] * s
-            for it in range(start_it + 1, max_iter + 1):
-                t0 = time.perf_counter()
-                # exchange-free SHJ: rt and state share hash(id, p)
-                contribs = store.contribs(
-                    rt.join(state.select("id", *cols), "id"), s, p
-                )
-                new_cols, diff_cols = [], []
-                for i, c in enumerate(cols):
-                    expr = F.lit(alpha) * F.coalesce(
-                        F.col(f"c{i}"), F.lit(0.0)
-                    ) + F.lit(
-                        alpha / n * d[i]
-                        + ((1.0 - alpha) / n if sources is None else 0.0)
-                    )
-                    if sources is not None:
-                        expr = expr + F.when(
-                            F.col("id") == sources[i], 1.0 - alpha
-                        ).otherwise(0.0)
-                    new_cols.append(expr.alias(c))
-                    diff_cols.append(F.abs(expr - F.col(c)).alias(f"_d{i}"))
-                gaggs = (
-                    [
-                        F.sum(F.when(F.col("dang"), F.col(c))).alias(f"_g{i}")
-                        for i, c in enumerate(cols)
-                    ]
-                    if dangling_norm
-                    else []
-                )
-                # stop scalars + next dangling dot ride the SAME job as the
-                # state checkpoint (CollectMetrics/observe accumulates them
-                # while rows stream past), so no second O(V·S) scan job per
-                # superstep; the checkpoint holds only (id, dang, r*).
-                #
-                # Join shape: localCheckpoint preserves the state's
-                # hash(id, p) outputPartitioning, so with shuffle partitions
-                # == p the ONLY exchange here is contribs→hash(id, p); the
-                # shuffle_hash hint builds the hash map on the contribs side
-                # and streams state in-place (a sort-merge join would add
-                # two O(V·S) sorts per superstep), and the join output is
-                # already hash(id, p), so no trailing repartition.
-                obs = Observation()
-                new, new_ids = local_ckpt(
-                    state.join(contribs.hint("shuffle_hash"), "id", "left")
-                    .select("id", "dang", *new_cols, *diff_cols)
-                    .observe(
-                        obs,
-                        *[F.sum(f"_d{i}").alias(f"_d{i}") for i in range(s)],
-                        *[F.sum(F.pow(f"_d{i}", 2)).alias(f"_q{i}") for i in range(s)],
-                        *gaggs,
-                    )
+            init = [F.coalesce(F.col("_ir"), F.lit(1.0 / n)).alias("r0")]
+        elif sources is None:
+            init = [F.lit(1.0 / n).alias("r0")]
+        else:
+            init = [
+                F.when(F.col("id") == src, 1.0).otherwise(0.0).alias(c)
+                for c, src in zip(cols, sources)
+            ]
+        state = cs.ckpt(routed.select("id", "dang", *init).repartition(p, "id"))
+        if ckpt and resume:
+            loaded = ckpt.load_latest_df(spark)
+            if loaded is not None:
+                start_it, ranks_df, metrics = loaded
+                new = cs.ckpt(
+                    dang.join(ranks_df.select("id", *cols), "id")
                     .select("id", "dang", *cols)
+                    .repartition(p, "id")
                 )
-                err_row = obs.get
-                l1 = max(float(err_row[f"_d{i}"]) for i in range(s))
-                sq = max(float(err_row[f"_q{i}"]) for i in range(s))
-                d_used = max(d)
-                if dangling_norm:
-                    d = [float(err_row[f"_g{i}"] or 0.0) for i in range(s)]
-                # the new state is materialized — actually free the
-                # superseded checkpoint blocks (DataFrame.unpersist would be
-                # a no-op)
-                free_local_ckpt(spark, state_ids)
-                state, state_ids = new, new_ids  # already (id, dang, r*)
-                metrics.append(
-                    {
-                        "iter": it,
-                        "l1_err": l1,
-                        "sq_l2_err": sq,
-                        "dangling_sum": d_used,
-                        "wall_ms": (time.perf_counter() - t0) * 1e3,
-                    }
+                cs.free(state)
+                state = new
+        converged = False
+        it = start_it
+        # dangling dot of the CURRENT state, one scan before the loop;
+        # every later iteration piggybacks it on the stop-scalar agg of
+        # the state it just materialized — no separate per-superstep job
+        if dangling_norm:
+            drow = (
+                state.where(F.col("dang"))
+                .agg(*[F.sum(c).alias(c) for c in cols])
+                .first()
+            )
+            d = [float(drow[c] or 0.0) for c in cols]
+        else:
+            d = [0.0] * s
+        for it in range(start_it + 1, max_iter + 1):
+            t0 = time.perf_counter()
+            # exchange-free SHJ: rt and state share hash(id, p)
+            contribs = store.contribs(
+                rt.join(state.select("id", *cols), "id"), s, p
+            )
+            new_cols, diff_cols = [], []
+            for i, c in enumerate(cols):
+                expr = F.lit(alpha) * F.coalesce(
+                    F.col(f"c{i}"), F.lit(0.0)
+                ) + F.lit(
+                    alpha / n * d[i]
+                    + ((1.0 - alpha) / n if sources is None else 0.0)
                 )
-                if ckpt:
-                    ckpt.save_df(state.select("id", *cols), it, metrics, config=config)
-                if l1 <= tol:
-                    converged = True
-                    break
-        except BaseException:
-            free_local_ckpt(spark, state_ids)
-            raise
-        finally:
-            store.clear_messages()
-            free_local_ckpt(spark, rt_ids)
-    if sources is None:
-        out = state.select("id", F.col("r0").alias("rank"))
-    else:
-        out = state.select(
-            "id", *[F.col(c).alias(f"rank_{i}") for i, c in enumerate(cols)]
-        )
+                if sources is not None:
+                    expr = expr + F.when(
+                        F.col("id") == sources[i], 1.0 - alpha
+                    ).otherwise(0.0)
+                new_cols.append(expr.alias(c))
+                diff_cols.append(F.abs(expr - F.col(c)).alias(f"_d{i}"))
+            gaggs = (
+                [
+                    F.sum(F.when(F.col("dang"), F.col(c))).alias(f"_g{i}")
+                    for i, c in enumerate(cols)
+                ]
+                if dangling_norm
+                else []
+            )
+            # stop scalars + next dangling dot ride the SAME job as the
+            # state checkpoint (CollectMetrics/observe accumulates them
+            # while rows stream past), so no second O(V·S) scan job per
+            # superstep; the checkpoint holds only (id, dang, r*).
+            #
+            # Join shape: localCheckpoint preserves the state's
+            # hash(id, p) outputPartitioning, so with shuffle partitions
+            # == p the ONLY exchange here is contribs→hash(id, p); the
+            # shuffle_hash hint builds the hash map on the contribs side
+            # and streams state in-place (a sort-merge join would add
+            # two O(V·S) sorts per superstep), and the join output is
+            # already hash(id, p), so no trailing repartition.
+            obs = Observation()
+            new = cs.ckpt(
+                state.join(contribs.hint("shuffle_hash"), "id", "left")
+                .select("id", "dang", *new_cols, *diff_cols)
+                .observe(
+                    obs,
+                    *[F.sum(f"_d{i}").alias(f"_d{i}") for i in range(s)],
+                    *[F.sum(F.pow(f"_d{i}", 2)).alias(f"_q{i}") for i in range(s)],
+                    *gaggs,
+                )
+                .select("id", "dang", *cols)
+            )
+            err_row = obs.get
+            l1 = max(float(err_row[f"_d{i}"]) for i in range(s))
+            sq = max(float(err_row[f"_q{i}"]) for i in range(s))
+            d_used = max(d)
+            if dangling_norm:
+                d = [float(err_row[f"_g{i}"] or 0.0) for i in range(s)]
+            # the new state is materialized — free the superseded one
+            cs.free(state)
+            state = new  # already (id, dang, r*)
+            metrics.append(
+                {
+                    "iter": it,
+                    "l1_err": l1,
+                    "sq_l2_err": sq,
+                    "dangling_sum": d_used,
+                    "wall_ms": (time.perf_counter() - t0) * 1e3,
+                }
+            )
+            if ckpt:
+                ckpt.save_df(state.select("id", *cols), it, metrics, config=config)
+            if l1 <= tol:
+                converged = True
+                break
+        if sources is None:
+            out = state.select("id", F.col("r0").alias("rank"))
+        else:
+            out = state.select(
+                "id", *[F.col(c).alias(f"rank_{i}") for i, c in enumerate(cols)]
+            )
+        cs.keep(out)
     return PageRankResult(
         iterations=it,
         converged=converged,

@@ -41,7 +41,7 @@ Execution paths (the ``operators/pagerank.py`` cutover idiom):
   single-host fast path.
 - ``mode='distributed'`` — per-round: filter active, one |active-src|
   edge join + map-side-combinable hash agg, full-vertex left join to
-  rebuild state, ``local_ckpt`` rotation. State never leaves the
+  rebuild state, checkpoint-scope rotation. State never leaves the
   cluster, and per-round shuffle volume is proportional to the moving
   mass (out-edges of ACTIVE vertices only) — exactly the property that
   makes push the 100-TB-friendly way to answer single-source PPR
@@ -57,8 +57,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -120,79 +119,77 @@ def _push_broadcast(
 def _push_distributed(
     g: Graph, source: int, alpha: float, eps: float, max_rounds: int
 ) -> tuple[DataFrame, int, bool]:
-    spark = g.spark
     verts = g.vertices
     # (id, thresh, dangling) — static per run; computed once, checkpointed
-    deg = g.out_degrees()
-    props = verts.join(deg, "id", "left").select(
-        "id",
-        (
-            F.lit(float(eps))
-            * F.greatest(F.coalesce("outdeg", F.lit(0)), F.lit(1)).cast("double")
-        ).alias("thresh"),
-        F.col("outdeg").isNull().alias("dangling"),
-    )
-    props, props_ids = local_ckpt(props)
+    with ckpt_scope(g.spark) as cs:
+        deg = g.out_degrees()
+        props = verts.join(deg, "id", "left").select(
+            "id",
+            (
+                F.lit(float(eps))
+                * F.greatest(F.coalesce("outdeg", F.lit(0)), F.lit(1)).cast("double")
+            ).alias("thresh"),
+            F.col("outdeg").isNull().alias("dangling"),
+        )
+        props = cs.ckpt(props)
 
-    state = props.select(
-        "id",
-        F.lit(0.0).alias("p"),
-        F.when(F.col("id") == source, 1.0).otherwise(0.0).alias("r"),
-        "thresh",
-        "dangling",
-    )
-    state, ckpt_ids = local_ckpt(state)
-    edges = g.edges.select("src", "dst", "weight")
-    rounds, converged = 0, False
-    for rounds in range(1, max_rounds + 1):
-        active = state.where(F.col("r") > F.col("thresh"))
-        n_active, dang_mass = active.agg(
-            F.count("*"),
-            F.coalesce(F.sum(F.when(F.col("dangling"), F.col("r"))), F.lit(0.0)),
-        ).first()
-        if n_active == 0:
-            rounds -= 1
-            converged = True
-            break
-        pushed = (
-            edges.join(
-                active.select(F.col("id").alias("src"), F.col("r").alias("ar")),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.lit(float(alpha)) * F.col("ar") * F.col("weight")).alias("m"))
+        state = props.select(
+            "id",
+            F.lit(0.0).alias("p"),
+            F.when(F.col("id") == source, 1.0).otherwise(0.0).alias("r"),
+            "thresh",
+            "dangling",
         )
-        nxt = (
-            state.join(pushed, "id", "left")
-            .select(
-                "id",
-                (
-                    F.col("p")
-                    + F.when(
-                        F.col("r") > F.col("thresh"),
-                        F.lit(1.0 - alpha) * F.col("r"),
-                    ).otherwise(0.0)
-                ).alias("p"),
-                (
-                    F.coalesce("m", F.lit(0.0))
-                    + F.when(F.col("r") > F.col("thresh"), 0.0).otherwise(F.col("r"))
-                    + F.when(
-                        F.col("id") == source,
-                        F.lit(float(alpha)) * F.lit(float(dang_mass)),
-                    ).otherwise(0.0)
-                ).alias("r"),
-                "thresh",
-                "dangling",
+        state = cs.ckpt(state)
+        edges = g.edges.select("src", "dst", "weight")
+        rounds, converged = 0, False
+        for rounds in range(1, max_rounds + 1):
+            active = state.where(F.col("r") > F.col("thresh"))
+            n_active, dang_mass = active.agg(
+                F.count("*"),
+                F.coalesce(F.sum(F.when(F.col("dangling"), F.col("r"))), F.lit(0.0)),
+            ).first()
+            if n_active == 0:
+                rounds -= 1
+                converged = True
+                break
+            pushed = (
+                edges.join(
+                    active.select(F.col("id").alias("src"), F.col("r").alias("ar")),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum(F.lit(float(alpha)) * F.col("ar") * F.col("weight")).alias("m"))
             )
-        )
-        nxt, new_ids = local_ckpt(nxt)
-        free_local_ckpt(spark, ckpt_ids)
-        state, ckpt_ids = nxt, new_ids
-    else:
-        converged = state.where(F.col("r") > F.col("thresh")).count() == 0
-    free_local_ckpt(spark, props_ids)
-    # final state stays checkpointed (plans/checkpoint.py contract)
-    return state.select("id", "p", "r"), rounds, converged
+            nxt = (
+                state.join(pushed, "id", "left")
+                .select(
+                    "id",
+                    (
+                        F.col("p")
+                        + F.when(
+                            F.col("r") > F.col("thresh"),
+                            F.lit(1.0 - alpha) * F.col("r"),
+                        ).otherwise(0.0)
+                    ).alias("p"),
+                    (
+                        F.coalesce("m", F.lit(0.0))
+                        + F.when(F.col("r") > F.col("thresh"), 0.0).otherwise(F.col("r"))
+                        + F.when(
+                            F.col("id") == source,
+                            F.lit(float(alpha)) * F.lit(float(dang_mass)),
+                        ).otherwise(0.0)
+                    ).alias("r"),
+                    "thresh",
+                    "dangling",
+                )
+            )
+            nxt = cs.ckpt(nxt)
+            cs.free(state)
+            state = nxt
+        else:
+            converged = state.where(F.col("r") > F.col("thresh")).count() == 0
+        return cs.keep(state.select("id", "p", "r")), rounds, converged
 
 
 def approx_ppr_push(

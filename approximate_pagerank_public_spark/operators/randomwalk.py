@@ -24,7 +24,7 @@ Distributed shape (the 100-TB path): walk state is a DataFrame
 ``(walk, cur, stopped)`` of W rows; each step is one equi-join against
 the ranked adjacency ``(src, rnk, dst)`` — shuffle volume O(W) per step,
 independent of |E|, and W walks spread across the cluster. Lineage is
-truncated via ``local_ckpt`` every few steps. No driver-side state at
+truncated by a checkpoint scope every few steps. No driver-side state at
 any point; the W→∞ scale axis is embarrassingly parallel.
 """
 
@@ -36,10 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
-)
+from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 from approximate_pagerank_public_spark.plans.graph import Graph
 
 _CKPT_EVERY = 4  # join-lineage truncation cadence
@@ -109,54 +106,54 @@ def random_walk_ppr(
     continue_pct = int(round(alpha * 100))
     adj = ranked_adjacency(g)
 
-    state = spark.range(num_walks).select(
-        F.col("id").alias("walk"),
-        F.lit(int(source)).cast("long").alias("cur"),
-        F.lit(False).alias("stopped"),
-    )
-    ckpt_ids: set[int] = set()
-    for t in range(walk_length):
-        s = state.withColumn("hv", _step_hash(seed, "walk", t))
-        s = s.withColumn(
-            "terminate",
-            F.col("stopped") | (F.col("hv") % 100 >= F.lit(continue_pct)),
-        ).withColumn("pick", F.expr("hv div 100"))
-        # plan-level aliases: state's `cur` lineage traces back to adj's
-        # `dst` from the previous step, so dataset-column references would
-        # be ambiguous on the re-join (Spark's failAmbiguousSelfJoin)
-        nxt = (
-            s.alias("w")
-            .join(
-                adj.alias("a"),
-                (F.col("w.cur") == F.col("a.src"))
-                & ((F.col("w.pick") % F.col("a.deg")) == F.col("a.rnk"))
-                & ~F.col("w.terminate"),
-                "left",
-            )
-            .select(
-                F.col("w.walk").alias("walk"),
-                F.coalesce(F.col("a.dst"), F.col("w.cur")).alias("cur"),
-                # dangling (no adjacency match while trying to move) stops too
-                (F.col("w.terminate") | F.col("a.dst").isNull()).alias("stopped"),
-            )
+    with ckpt_scope(spark) as cs:
+        state = spark.range(num_walks).select(
+            F.col("id").alias("walk"),
+            F.lit(int(source)).cast("long").alias("cur"),
+            F.lit(False).alias("stopped"),
         )
-        if (t + 1) % _CKPT_EVERY == 0 or t == walk_length - 1:
-            nxt, new_ids = local_ckpt(nxt)
-            if ckpt_ids:
-                free_local_ckpt(spark, ckpt_ids)
-            ckpt_ids = new_ids
-        state = nxt
+        for t in range(walk_length):
+            s = state.withColumn("hv", _step_hash(seed, "walk", t))
+            s = s.withColumn(
+                "terminate",
+                F.col("stopped") | (F.col("hv") % 100 >= F.lit(continue_pct)),
+            ).withColumn("pick", F.expr("hv div 100"))
+            # plan-level aliases: state's `cur` lineage traces back to adj's
+            # `dst` from the previous step, so dataset-column references would
+            # be ambiguous on the re-join (Spark's failAmbiguousSelfJoin)
+            nxt = (
+                s.alias("w")
+                .join(
+                    adj.alias("a"),
+                    (F.col("w.cur") == F.col("a.src"))
+                    & ((F.col("w.pick") % F.col("a.deg")) == F.col("a.rnk"))
+                    & ~F.col("w.terminate"),
+                    "left",
+                )
+                .select(
+                    F.col("w.walk").alias("walk"),
+                    F.coalesce(F.col("a.dst"), F.col("w.cur")).alias("cur"),
+                    # dangling (no adjacency match while trying to move) stops too
+                    (F.col("w.terminate") | F.col("a.dst").isNull()).alias("stopped"),
+                )
+            )
+            if (t + 1) % _CKPT_EVERY == 0 or t == walk_length - 1:
+                nxt = cs.ckpt(nxt)
+                cs.free(state)
+            state = nxt
 
-    out = (
-        state.groupBy(F.col("cur").alias("id"))
-        .agg(F.count("*").alias("endpoints"))
-        .select(
-            "id",
-            "endpoints",
-            (F.col("endpoints") / F.lit(float(num_walks))).alias("ppr_hat"),
+        out = (
+            state.groupBy(F.col("cur").alias("id"))
+            .agg(F.count("*").alias("endpoints"))
+            .select(
+                "id",
+                "endpoints",
+                (F.col("endpoints") / F.lit(float(num_walks))).alias("ppr_hat"),
+            )
         )
-    )
-    return RandomWalkResult(num_walks=num_walks, walk_length=walk_length, _df=out)
+        return RandomWalkResult(
+            num_walks=num_walks, walk_length=walk_length, _df=cs.keep(out)
+        )
 
 
 def random_walk_corpus(
@@ -174,7 +171,7 @@ def random_walk_corpus(
 
     Scale shape: state is ``(walk, cur)`` of V·K rows; each step one
     equi-join against the ranked adjacency (shuffle O(V·K), independent
-    of |E|), lineage truncated via ``local_ckpt``; the corpus is the
+    of |E|), lineage truncated by a checkpoint scope; the corpus is the
     union of the L+1 per-step snapshots. md5 derandomization makes the
     corpus bit-reproducible across engines — the DuckDB oracle replays
     every hop.
@@ -187,33 +184,33 @@ def random_walk_corpus(
         .crossJoin(spark.range(k).select(F.col("id").alias("k")))
         .select((F.col("cur") * k + F.col("k")).alias("walk"), "cur")
     )
-    steps = [state.withColumn("step", F.lit(0).cast("long"))]
-    for t in range(walk_length):
-        s = state.withColumn("hv", _step_hash(seed, "walk", t))
-        nxt = (
-            s.alias("w")
-            .join(
-                adj.alias("a"),
-                (F.col("w.cur") == F.col("a.src"))
-                & ((F.col("w.hv") % F.col("a.deg")) == F.col("a.rnk")),
-                "left",
+    with ckpt_scope(spark) as cs:
+        steps = [state.withColumn("step", F.lit(0).cast("long"))]
+        for t in range(walk_length):
+            s = state.withColumn("hv", _step_hash(seed, "walk", t))
+            nxt = (
+                s.alias("w")
+                .join(
+                    adj.alias("a"),
+                    (F.col("w.cur") == F.col("a.src"))
+                    & ((F.col("w.hv") % F.col("a.deg")) == F.col("a.rnk")),
+                    "left",
+                )
+                .select(
+                    F.col("w.walk").alias("walk"),
+                    F.coalesce(F.col("a.dst"), F.col("w.cur")).alias("cur"),
+                )
             )
-            .select(
-                F.col("w.walk").alias("walk"),
-                F.coalesce(F.col("a.dst"), F.col("w.cur")).alias("cur"),
-            )
-        )
-        # every per-step snapshot IS part of the corpus, so NO step
-        # checkpoint is ever superseded — none may be freed (the blocks
-        # are the only copy once lineage is truncated)
-        small = max(1, min(g.num_partitions, g.num_vertices * k // 65_536 + 1))
-        nxt, _ids = local_ckpt(nxt.coalesce(small))
-        state = nxt
-        steps.append(state.withColumn("step", F.lit(t + 1).cast("long")))
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionAll(s)
-    return out.select("walk", "step", F.col("cur").alias("vertex"))
+            # every per-step snapshot IS part of the corpus, so NO step
+            # checkpoint is ever superseded — none may be freed (the blocks
+            # are the only copy once lineage is truncated)
+            small = max(1, min(g.num_partitions, g.num_vertices * k // 65_536 + 1))
+            state = cs.ckpt(nxt.coalesce(small))
+            steps.append(state.withColumn("step", F.lit(t + 1).cast("long")))
+        out = steps[0]
+        for s in steps[1:]:
+            out = out.unionAll(s)
+        return cs.keep(out.select("walk", "step", F.col("cur").alias("vertex")))
 
 
 def node2vec_corpus(
@@ -276,187 +273,186 @@ def node2vec_corpus(
     # state is O(V·K), so checkpoint/snapshot partition counts scale with
     # the graph instead of pinning 32 near-empty tasks per tiny stage
     small = max(1, min(g.num_partitions, g.num_vertices // 65_536 + 1))
-    degt, _degt_ids = local_ckpt(
-        adj.groupBy("src").agg(F.max("deg").alias("deg")).coalesce(small)
-    )
-    state = g.vertices.select(
-        F.col("id").alias("walk"), F.col("id").alias("prev"), F.col("id").alias("cur")
-    )
-    steps = [state.select("walk", F.lit(0).cast("long").alias("step"), F.col("cur"))]
-    pair_w = Window.partitionBy("prev", "cur")
-    rnk_w = pair_w.orderBy("rnk")
-    for t in range(walk_length):
-        prs = (
-            state.select("prev", "cur")
-            .distinct()
-            .join(
-                degt.select(F.col("src").alias("prev"), F.col("deg").alias("dp")),
-                "prev",
-                "left",
+    with ckpt_scope(spark) as cs:
+        degt = cs.ckpt(
+            adj.groupBy("src").agg(F.max("deg").alias("deg")).coalesce(small)
+        )
+        state = g.vertices.select(
+            F.col("id").alias("walk"), F.col("id").alias("prev"), F.col("id").alias("cur")
+        )
+        steps = [state.select("walk", F.lit(0).cast("long").alias("step"), F.col("cur"))]
+        pair_w = Window.partitionBy("prev", "cur")
+        rnk_w = pair_w.orderBy("rnk")
+        for t in range(walk_length):
+            prs = (
+                state.select("prev", "cur")
+                .distinct()
+                .join(
+                    degt.select(F.col("src").alias("prev"), F.col("deg").alias("dp")),
+                    "prev",
+                    "left",
+                )
+                .join(
+                    degt.select(F.col("src").alias("cur"), F.col("deg").alias("dc")),
+                    "cur",
+                    "left",
+                )
+                .where(F.col("dc").isNotNull())  # dangling cur pads in place
             )
-            .join(
-                degt.select(F.col("src").alias("cur"), F.col("deg").alias("dc")),
-                "cur",
-                "left",
+            # prs and spec fan out into 4-5 consumers each (in-class joins,
+            # return slot, decision rows, totals) — eagerly materialize once
+            # per step: lazy persist() was tried and measured 2x WORSE (the
+            # hop's final job runs the decision subtrees as parallel stages,
+            # which race to compute the shared cache and each re-run the
+            # distinct + joins)
+            prs = cs.ckpt(prs.coalesce(small))
+            # ---- in-class slots: d in N_out(prev) ∩ N_out(cur), d != prev.
+            # Expand the smaller adjacency, equi-join the other (wedge trick).
+            live = F.col("dp").isNotNull()
+            via_prev = (
+                prs.where(live & (F.col("dp") <= F.col("dc")))
+                .join(e2, F.col("p_src") == F.col("prev"))
+                .join(
+                    adj.select(
+                        F.col("src").alias("cur"),
+                        F.col("dst").alias("p_dst"),
+                        "rnk",
+                    ),
+                    ["cur", "p_dst"],
+                )
+                .select("prev", "cur", "dc", F.col("p_dst").alias("dst"), "rnk")
             )
-            .where(F.col("dc").isNotNull())  # dangling cur pads in place
-        )
-        # prs and spec fan out into 4-5 consumers each (in-class joins,
-        # return slot, decision rows, totals) — eagerly materialize once
-        # per step: lazy persist() was tried and measured 2x WORSE (the
-        # hop's final job runs the decision subtrees as parallel stages,
-        # which race to compute the shared cache and each re-run the
-        # distinct + joins)
-        prs, prs_ids = local_ckpt(prs.coalesce(small))
-        # ---- in-class slots: d in N_out(prev) ∩ N_out(cur), d != prev.
-        # Expand the smaller adjacency, equi-join the other (wedge trick).
-        live = F.col("dp").isNotNull()
-        via_prev = (
-            prs.where(live & (F.col("dp") <= F.col("dc")))
-            .join(e2, F.col("p_src") == F.col("prev"))
-            .join(
-                adj.select(
-                    F.col("src").alias("cur"),
-                    F.col("dst").alias("p_dst"),
-                    "rnk",
-                ),
-                ["cur", "p_dst"],
+            via_cur = (
+                prs.where(live & (F.col("dp") > F.col("dc")))
+                .join(adj.select(F.col("src").alias("cur"), "dst", "rnk"), "cur")
+                .join(
+                    e2,
+                    (F.col("p_src") == F.col("prev"))
+                    & (F.col("p_dst") == F.col("dst")),
+                )
+                .select("prev", "cur", "dc", "dst", "rnk")
             )
-            .select("prev", "cur", "dc", F.col("p_dst").alias("dst"), "rnk")
-        )
-        via_cur = (
-            prs.where(live & (F.col("dp") > F.col("dc")))
-            .join(adj.select(F.col("src").alias("cur"), "dst", "rnk"), "cur")
-            .join(
-                e2,
-                (F.col("p_src") == F.col("prev"))
-                & (F.col("p_dst") == F.col("dst")),
+            in_class = (
+                via_prev.unionAll(via_cur)
+                .where(F.col("dst") != F.col("prev"))
+                .withColumn("wt", F.lit(wi).cast("long"))
             )
-            .select("prev", "cur", "dc", "dst", "rnk")
-        )
-        in_class = (
-            via_prev.unionAll(via_cur)
-            .where(F.col("dst") != F.col("prev"))
-            .withColumn("wt", F.lit(wi).cast("long"))
-        )
-        # ---- return slot: cur -> prev edge, weight w_return
-        ret = (
-            prs.join(
-                adj.select(
-                    F.col("src").alias("cur"), F.col("dst").alias("prev"), "rnk"
-                ),
-                ["cur", "prev"],
+            # ---- return slot: cur -> prev edge, weight w_return
+            ret = (
+                prs.join(
+                    adj.select(
+                        F.col("src").alias("cur"), F.col("dst").alias("prev"), "rnk"
+                    ),
+                    ["cur", "prev"],
+                )
+                .select(
+                    "prev", "cur", "dc", F.col("prev").alias("dst"), "rnk",
+                    F.lit(wr).cast("long").alias("wt"),
+                )
             )
-            .select(
-                "prev", "cur", "dc", F.col("prev").alias("dst"), "rnk",
-                F.lit(wr).cast("long").alias("wt"),
+            spec = in_class.unionAll(ret)
+            # piecewise-linear cumsum: Ci = Σ_{special j ≤ i} (wt_j - w_out);
+            # cw(k) = w_out·(k+1) + C(k) reproduces the flat mixed-rank layout
+            spec = spec.select(
+                "prev", "cur", "dc", "dst", "rnk", "wt",
+                F.sum(F.col("wt") - F.lit(wo)).over(rnk_w).alias("ci"),
+            ).select(
+                "*",
+                (F.lit(wo) * (F.col("rnk") + 1) + F.col("ci")).alias("cw"),
+                # C_last = Σ(wt - w_out) over ALL specials — NOT max(ci): ci
+                # is non-monotone whenever a class weight is below w_out
+                # (e.g. the return slot at w_return < w_out)
+                F.sum(F.col("wt") - F.lit(wo)).over(pair_w).alias("cm"),
             )
-        )
-        spec = in_class.unionAll(ret)
-        # piecewise-linear cumsum: Ci = Σ_{special j ≤ i} (wt_j - w_out);
-        # cw(k) = w_out·(k+1) + C(k) reproduces the flat mixed-rank layout
-        spec = spec.select(
-            "prev", "cur", "dc", "dst", "rnk", "wt",
-            F.sum(F.col("wt") - F.lit(wo)).over(rnk_w).alias("ci"),
-        ).select(
-            "*",
-            (F.lit(wo) * (F.col("rnk") + 1) + F.col("ci")).alias("cw"),
-            # C_last = Σ(wt - w_out) over ALL specials — NOT max(ci): ci
-            # is non-monotone whenever a class weight is below w_out
-            # (e.g. the return slot at w_return < w_out)
-            F.sum(F.col("wt") - F.lit(wo)).over(pair_w).alias("cm"),
-        )
-        spec, spec_ids = local_ckpt(spec.coalesce(small))
-        # decision rows: special brackets carry dst directly; segment
-        # rows carry the linear offset c for k = (draw - c) div w_out
-        dec_special = spec.select(
-            "prev", "cur",
-            (F.col("cw") - F.col("wt")).alias("lo"),
-            F.col("cw").alias("hi"),
-            "dst",
-            F.lit(None).cast("long").alias("c"),
-        )
-        tot_expr = (F.lit(wo) * F.col("dc") + F.coalesce("cm", F.lit(0))).alias("tot")
-        dec_seg_mid = spec.select(
-            "prev", "cur",
-            F.col("cw").alias("lo"),
-            F.coalesce(
-                F.lead(F.col("cw") - F.col("wt")).over(rnk_w),
-                F.lit(wo) * F.col("dc") + F.col("cm"),
-            ).alias("hi"),
-            F.lit(None).cast("long").alias("dst"),
-            F.col("ci").alias("c"),
-        )
-        first_lo = prs.join(
-            spec.groupBy("prev", "cur").agg(
-                F.min(F.col("cw") - F.col("wt")).alias("flo")
-            ),
-            ["prev", "cur"],
-            "left",
-        )
-        dec_seg_lead = first_lo.select(
-            "prev", "cur",
-            F.lit(0).cast("long").alias("lo"),
-            F.coalesce("flo", F.lit(wo) * F.col("dc")).alias("hi"),
-            F.lit(None).cast("long").alias("dst"),
-            F.lit(0).cast("long").alias("c"),
-        )
-        decision = dec_special.unionAll(dec_seg_mid).unionAll(dec_seg_lead)
-        totals = prs.join(
-            spec.groupBy("prev", "cur").agg(F.max("cm").alias("cm")),
-            ["prev", "cur"],
-            "left",
-        ).select("prev", "cur", tot_expr)
-        st = state.join(totals, ["prev", "cur"], "left").withColumn(
-            "draw", _step_hash(seed, "walk", t) % F.col("tot")
-        )
-        hit = (
-            st.alias("w")
-            .join(
-                decision.alias("d"),
-                (F.col("w.prev") == F.col("d.prev"))
-                & (F.col("w.cur") == F.col("d.cur"))
-                & (F.col("w.draw") >= F.col("d.lo"))
-                & (F.col("w.draw") < F.col("d.hi")),
-                "left",
+            spec = cs.ckpt(spec.coalesce(small))
+            # decision rows: special brackets carry dst directly; segment
+            # rows carry the linear offset c for k = (draw - c) div w_out
+            dec_special = spec.select(
+                "prev", "cur",
+                (F.col("cw") - F.col("wt")).alias("lo"),
+                F.col("cw").alias("hi"),
+                "dst",
+                F.lit(None).cast("long").alias("c"),
             )
-            .select(
-                F.col("w.walk").alias("walk"),
-                F.col("w.cur").alias("scur"),
-                F.col("d.dst").alias("sdst"),
-                F.when(
-                    F.col("d.dst").isNull() & F.col("d.c").isNotNull(),
-                    ((F.col("w.draw") - F.col("d.c")) / F.lit(wo)).cast("long"),
-                ).alias("k"),
-            )
-        )
-        nxt = (
-            hit.alias("h")
-            .join(
-                adj.alias("a2"),
-                (F.col("h.scur") == F.col("a2.src"))
-                & (F.col("h.k") == F.col("a2.rnk")),
-                "left",
-            )
-            .select(
-                F.col("h.walk").alias("walk"),
-                F.col("h.scur").alias("prev"),
+            tot_expr = (F.lit(wo) * F.col("dc") + F.coalesce("cm", F.lit(0))).alias("tot")
+            dec_seg_mid = spec.select(
+                "prev", "cur",
+                F.col("cw").alias("lo"),
                 F.coalesce(
-                    F.col("h.sdst"), F.col("a2.dst"), F.col("h.scur")
-                ).alias("cur"),
+                    F.lead(F.col("cw") - F.col("wt")).over(rnk_w),
+                    F.lit(wo) * F.col("dc") + F.col("cm"),
+                ).alias("hi"),
+                F.lit(None).cast("long").alias("dst"),
+                F.col("ci").alias("c"),
             )
-        )
-        nxt, _ids = local_ckpt(nxt.coalesce(small))
-        free_local_ckpt(spark, prs_ids)
-        free_local_ckpt(spark, spec_ids)
-        state = nxt
-        steps.append(
-            state.select("walk", F.lit(t + 1).cast("long").alias("step"), F.col("cur"))
-        )
-    out = steps[0]
-    for s in steps[1:]:
-        out = out.unionAll(s)
-    return out.select("walk", "step", F.col("cur").alias("vertex"))
+            first_lo = prs.join(
+                spec.groupBy("prev", "cur").agg(
+                    F.min(F.col("cw") - F.col("wt")).alias("flo")
+                ),
+                ["prev", "cur"],
+                "left",
+            )
+            dec_seg_lead = first_lo.select(
+                "prev", "cur",
+                F.lit(0).cast("long").alias("lo"),
+                F.coalesce("flo", F.lit(wo) * F.col("dc")).alias("hi"),
+                F.lit(None).cast("long").alias("dst"),
+                F.lit(0).cast("long").alias("c"),
+            )
+            decision = dec_special.unionAll(dec_seg_mid).unionAll(dec_seg_lead)
+            totals = prs.join(
+                spec.groupBy("prev", "cur").agg(F.max("cm").alias("cm")),
+                ["prev", "cur"],
+                "left",
+            ).select("prev", "cur", tot_expr)
+            st = state.join(totals, ["prev", "cur"], "left").withColumn(
+                "draw", _step_hash(seed, "walk", t) % F.col("tot")
+            )
+            hit = (
+                st.alias("w")
+                .join(
+                    decision.alias("d"),
+                    (F.col("w.prev") == F.col("d.prev"))
+                    & (F.col("w.cur") == F.col("d.cur"))
+                    & (F.col("w.draw") >= F.col("d.lo"))
+                    & (F.col("w.draw") < F.col("d.hi")),
+                    "left",
+                )
+                .select(
+                    F.col("w.walk").alias("walk"),
+                    F.col("w.cur").alias("scur"),
+                    F.col("d.dst").alias("sdst"),
+                    F.when(
+                        F.col("d.dst").isNull() & F.col("d.c").isNotNull(),
+                        ((F.col("w.draw") - F.col("d.c")) / F.lit(wo)).cast("long"),
+                    ).alias("k"),
+                )
+            )
+            nxt = (
+                hit.alias("h")
+                .join(
+                    adj.alias("a2"),
+                    (F.col("h.scur") == F.col("a2.src"))
+                    & (F.col("h.k") == F.col("a2.rnk")),
+                    "left",
+                )
+                .select(
+                    F.col("h.walk").alias("walk"),
+                    F.col("h.scur").alias("prev"),
+                    F.coalesce(
+                        F.col("h.sdst"), F.col("a2.dst"), F.col("h.scur")
+                    ).alias("cur"),
+                )
+            )
+            state = cs.ckpt(nxt.coalesce(small))
+            cs.free(prs, spec)
+            steps.append(
+                state.select("walk", F.lit(t + 1).cast("long").alias("step"), F.col("cur"))
+            )
+        out = steps[0]
+        for s in steps[1:]:
+            out = out.unionAll(s)
+        return cs.keep(out.select("walk", "step", F.col("cur").alias("vertex")))
 
 
 def skipgram_pairs(corpus: DataFrame, window: int = 2) -> DataFrame:

@@ -29,7 +29,7 @@ Broder's bow-tie). Both execution paths:
   ``mapInArrow`` job (segmented-min partials for coloring; an
   edge-masked frontier kernel for backward reach). State ships via
   shm/broadcast (``_RankShip``), merge is ``np.minimum.at``/flag-or.
-- **distributed**: DataFrame joins + groupBy-min with ``local_ckpt``
+- **distributed**: DataFrame joins + groupBy-min with checkpoint-scope
   rotation (CLAUDE.md invariant) — vertex state never leaves the
   cluster.
 
@@ -48,8 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    CkptScope,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -336,23 +336,20 @@ def _scc_broadcast(graph: Graph, max_outer: int = 1000) -> np.ndarray:
 
 
 def _claim_round_distributed(
-    graph: Graph, e: DataFrame, active: DataFrame
-) -> tuple[DataFrame, list]:
+    cs: CkptScope, graph: Graph, e: DataFrame, active: DataFrame
+) -> DataFrame:
     """One directional claim on DataFrames: min-color ``e`` to fixpoint
     over ``active``, then retire each root's SCC via masked reverse
-    frontier joins. Returns localCheckpointed ``(id, scc)`` + its ids."""
-    spark = graph.spark
+    frontier joins. Returns ``(id, scc)`` checkpointed in ``cs``."""
     p = graph.num_partitions
-    colors, color_ids = local_ckpt(
-        active.withColumn("color", F.col("id")).repartition(p, "id")
-    )
+    colors = cs.ckpt(active.withColumn("color", F.col("id")).repartition(p, "id"))
     while True:
         incoming = (
             e.join(colors.select(F.col("id").alias("src"), "color"), "src")
             .groupBy("dst")
             .agg(F.min("color").alias("nc"))
         )
-        new, new_ids = local_ckpt(
+        new = cs.ckpt(
             colors.join(incoming, colors.id == incoming.dst, "left")
             .select(
                 "id",
@@ -365,17 +362,16 @@ def _claim_round_distributed(
             .where(F.col("color") != F.col("_old"))
             .count()
         )
-        free_local_ckpt(spark, color_ids)
-        colors, color_ids = new, new_ids
+        cs.free(colors)
+        colors = new
         if changed == 0:
             break
-    reached, reached_ids = local_ckpt(
+    reached = cs.ckpt(
         colors.where(F.col("color") == F.col("id"))
         .select("id", F.col("id").alias("scc"))
         .repartition(p, "id")
     )
     frontier = reached
-    frontier_ids: set | None = None  # initial frontier shares reached's blocks
     while True:
         step = (
             e.join(frontier.select(F.col("id").alias("dst"), "scc"), "dst")
@@ -385,34 +381,25 @@ def _claim_round_distributed(
             .distinct()
             .join(reached.select("id"), "id", "left_anti")
         )
-        step, step_ids = local_ckpt(step.repartition(p, "id"))
+        step = cs.ckpt(step.repartition(p, "id"))
         if step.limit(1).count() == 0:
-            free_local_ckpt(spark, step_ids)
+            cs.free(step)
             break
-        new_reached, nr_ids = local_ckpt(
-            reached.unionAll(step).repartition(p, "id")
-        )
-        free_local_ckpt(spark, reached_ids)
-        if frontier_ids is not None:
-            # only now is the previous step superseded as the frontier
-            free_local_ckpt(spark, frontier_ids)
-        reached, reached_ids = new_reached, nr_ids
-        frontier, frontier_ids = step, step_ids
-    if frontier_ids is not None:
-        free_local_ckpt(spark, frontier_ids)
-    free_local_ckpt(spark, color_ids)
-    return reached, reached_ids
+        new_reached = cs.ckpt(reached.unionAll(step).repartition(p, "id"))
+        # the previous step is superseded as the frontier only now
+        cs.free(reached, frontier)
+        reached, frontier = new_reached, step
+    if frontier is not reached:
+        cs.free(frontier)
+    cs.free(colors)
+    return reached
 
 
-def _scc_distributed(graph: Graph, max_outer: int = 1000) -> DataFrame:
-    spark = graph.spark
+def _scc_distributed(cs: CkptScope, graph: Graph, max_outer: int = 1000) -> DataFrame:
     p = graph.num_partitions
     e_all = graph.edges.select("src", "dst")
-    active, active_ids = local_ckpt(
-        graph.vertices.select("id").repartition(p, "id")
-    )
+    active = cs.ckpt(graph.vertices.select("id").repartition(p, "id"))
     done: DataFrame | None = None
-    done_ids: list = []
     for _outer in range(max_outer):
         if active.limit(1).count() == 0:
             break
@@ -421,28 +408,28 @@ def _scc_distributed(graph: Graph, max_outer: int = 1000) -> DataFrame:
             .join(active.select(F.col("id").alias("dst")), "dst")
             .select("src", "dst")
         )
-        e, e_ids = local_ckpt(e.repartition(p, "src"))
+        e = cs.ckpt(e.repartition(p, "src"))
         # dual-direction claims per round (see _scc_broadcast): the
         # reversed view is a column swap over the same checkpointed rows
         for e_dir in (e, e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))):
             if active.limit(1).count() == 0:
                 break
-            reached, reached_ids = _claim_round_distributed(graph, e_dir, active)
-            if done is None:
-                done, done_ids = local_ckpt(reached.repartition(p, "id"))
-            else:
-                nd, nd_ids = local_ckpt(done.unionAll(reached).repartition(p, "id"))
-                free_local_ckpt(spark, done_ids)
-                done, done_ids = nd, nd_ids
-            new_active, na_ids = local_ckpt(
+            reached = _claim_round_distributed(cs, graph, e_dir, active)
+            nd = cs.ckpt(
+                (reached if done is None else done.unionAll(reached)).repartition(
+                    p, "id"
+                )
+            )
+            cs.free(done)
+            done = nd
+            new_active = cs.ckpt(
                 active.join(reached.select("id"), "id", "left_anti").repartition(
                     p, "id"
                 )
             )
-            free_local_ckpt(spark, active_ids)
-            free_local_ckpt(spark, reached_ids)
-            active, active_ids = new_active, na_ids
-        free_local_ckpt(spark, e_ids)
+            cs.free(active, reached)
+            active = new_active
+        cs.free(e)
     else:  # pragma: no cover
         raise RuntimeError(f"scc exceeded max_outer={max_outer} rounds")
     return done if done is not None else graph.vertices.select(
@@ -474,7 +461,8 @@ def strongly_connected_components(graph: Graph, mode: str = "auto") -> DataFrame
             {"id": np.arange(len(labels), dtype=np.int64), "scc": labels}
         )
         return graph.spark.createDataFrame(pdf, "id long, scc long")
-    return _scc_distributed(graph)
+    with ckpt_scope(graph.spark) as cs:
+        return cs.keep(_scc_distributed(cs, graph))
 
 
 # ----------------------------------------------------------------- bow-tie
@@ -501,50 +489,31 @@ def _reach_broadcast(graph: Graph, seed_mask: np.ndarray) -> np.ndarray:
 
 
 def _reach_distributed(
-    spark, edges: DataFrame, seeds: DataFrame, p: int, max_iter: int = 10_000
+    cs: CkptScope, edges: DataFrame, seeds: DataFrame, p: int, max_iter: int = 10_000
 ) -> DataFrame:
     """Distributed frontier reach: per round ONE frontier ⋈ edges join
-    + distinct + anti-join against the visited set (``local_ckpt``
-    rotation).  Returns the visited ``(id)`` set including seeds."""
-    from approximate_pagerank_public_spark.plans.checkpoint import (
-        free_local_ckpt,
-        local_ckpt,
-    )
-
-    reached, r_ids = local_ckpt(seeds.select("id").repartition(p, "id"))
-    frontier, f_ids = reached, None
-    try:
-        for _ in range(max_iter):
-            nxt, n_ids = local_ckpt(
-                edges.join(
-                    frontier.select(F.col("id").alias("src")), "src"
-                )
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .join(reached, "id", "left_anti")
-                .repartition(p, "id")
-            )
-            if f_ids is not None:
-                free_local_ckpt(spark, f_ids)
-            frontier, f_ids = nxt, n_ids
-            if nxt.count() == 0:
-                free_local_ckpt(spark, n_ids)
-                return reached
-            new_reached, nr_ids = local_ckpt(
-                reached.unionAll(nxt).repartition(p, "id")
-            )
-            free_local_ckpt(spark, r_ids)
-            reached, r_ids = new_reached, nr_ids
-    except Exception:
-        # release loop state on the error path (local_ckpt invariant:
-        # DataFrame.unpersist is a no-op for localCheckpoint blocks)
-        if f_ids is not None and f_ids is not r_ids:
-            free_local_ckpt(spark, f_ids)
-        free_local_ckpt(spark, r_ids)
-        raise
-    if f_ids is not None:
-        free_local_ckpt(spark, f_ids)
-    free_local_ckpt(spark, r_ids)
+    + distinct + anti-join against the visited set (checkpoint-scope
+    rotation).  Returns the visited ``(id)`` set including seeds,
+    checkpointed in ``cs``."""
+    reached = cs.ckpt(seeds.select("id").repartition(p, "id"))
+    frontier = reached
+    for _ in range(max_iter):
+        nxt = cs.ckpt(
+            edges.join(frontier.select(F.col("id").alias("src")), "src")
+            .select(F.col("dst").alias("id"))
+            .distinct()
+            .join(reached, "id", "left_anti")
+            .repartition(p, "id")
+        )
+        if frontier is not reached:
+            cs.free(frontier)
+        frontier = nxt
+        if nxt.count() == 0:
+            cs.free(nxt)
+            return reached
+        new_reached = cs.ckpt(reached.unionAll(nxt).repartition(p, "id"))
+        cs.free(reached)
+        reached = new_reached
     raise RuntimeError(  # pragma: no cover
         f"reach propagation did not converge in {max_iter} rounds"
     )
@@ -619,40 +588,40 @@ def bowtie_decomposition(graph: Graph, mode: str = "auto") -> DataFrame:
         connected_components,
     )
 
-    scc_df = strongly_connected_components(graph, mode="distributed")
-    scc_df = scc_df.localCheckpoint()
-    sizes = scc_df.groupBy("scc").agg(F.count("*").alias("n"))
-    core = int(
-        sizes.orderBy(F.col("n").desc(), F.col("scc").asc()).first()["scc"]
-    )
-    seeds = scc_df.where(F.col("scc") == core).select("id")
-    fwd = _reach_distributed(spark, graph.edges, seeds, p).select(
-        "id", F.lit(True).alias("fwd")
-    )
-    rev_e = graph.edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst")
-    )
-    bwd = _reach_distributed(spark, rev_e, seeds, p).select(
-        "id", F.lit(True).alias("bwd")
-    )
-    wcc = connected_components(graph, mode="star")
-    corewc = int(
-        wcc.join(seeds.orderBy("id").limit(1), "id").first()["component"]
-    )
-    return (
-        scc_df.join(fwd, "id", "left")
-        .join(bwd, "id", "left")
-        .join(wcc, "id", "left")
-        .select(
-            "id",
-            F.when(F.col("scc") == core, "CORE")
-            .when(F.col("fwd"), "OUT")
-            .when(F.col("bwd"), "IN")
-            .when(F.col("component") == corewc, "TENDRIL")
-            .otherwise("DISCONNECTED")
-            .alias("cls"),
+    with ckpt_scope(spark) as cs:
+        scc_df = _scc_distributed(cs, graph)
+        sizes = scc_df.groupBy("scc").agg(F.count("*").alias("n"))
+        core = int(
+            sizes.orderBy(F.col("n").desc(), F.col("scc").asc()).first()["scc"]
         )
-    )
+        seeds = scc_df.where(F.col("scc") == core).select("id")
+        fwd = _reach_distributed(cs, graph.edges, seeds, p).select(
+            "id", F.lit(True).alias("fwd")
+        )
+        rev_e = graph.edges.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst")
+        )
+        bwd = _reach_distributed(cs, rev_e, seeds, p).select(
+            "id", F.lit(True).alias("bwd")
+        )
+        wcc = connected_components(graph, mode="star")
+        corewc = int(
+            wcc.join(seeds.orderBy("id").limit(1), "id").first()["component"]
+        )
+        return cs.keep(
+            scc_df.join(fwd, "id", "left")
+            .join(bwd, "id", "left")
+            .join(wcc, "id", "left")
+            .select(
+                "id",
+                F.when(F.col("scc") == core, "CORE")
+                .when(F.col("fwd"), "OUT")
+                .when(F.col("bwd"), "IN")
+                .when(F.col("component") == corewc, "TENDRIL")
+                .otherwise("DISCONNECTED")
+                .alias("cls"),
+            )
+        )
 
 
 def dag_longest_path(
@@ -663,40 +632,36 @@ def dag_longest_path(
     """``(id, longest)`` — longest path (in edges) ENDING at each node
     of a DAG, by max-plus frontier relaxation: per round ONE edges ⋈
     state join + a map-side-combinable ``groupBy(dst).max`` + a
-    greatest() merge, ``local_ckpt`` rotation; rounds = DAG depth.
+    greatest() merge, checkpoint-scope rotation; rounds = DAG depth.
     Raises if ``max_iter`` rounds still improve (a cycle — the caller
     promised a DAG, e.g. the SCC condensation)."""
-    from approximate_pagerank_public_spark.plans.checkpoint import (
-        free_local_ckpt,
-        local_ckpt,
-    )
-
     spark = edges.sparkSession
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    state, s_ids = local_ckpt(
-        nodes.select("id", F.lit(0).cast("long").alias("d")).repartition(p, "id")
-    )
-    for _ in range(max_iter):
-        cand = (
-            edges.join(state.select(F.col("id").alias("src"), "d"), "src")
-            .groupBy("dst")
-            .agg((F.max("d") + 1).alias("nd"))
-            .select(F.col("dst").alias("id"), "nd")
+    with ckpt_scope(spark) as cs:
+        state = cs.ckpt(
+            nodes.select("id", F.lit(0).cast("long").alias("d")).repartition(p, "id")
         )
-        new, n_ids = local_ckpt(
-            state.join(cand, "id", "left")
-            .select("id", F.greatest("d", "nd").alias("d"))
-            .repartition(p, "id")
-        )
-        improved = (
-            new.join(state.withColumnRenamed("d", "_old"), "id")
-            .where(F.col("d") > F.col("_old"))
-            .count()
-        )
-        free_local_ckpt(spark, s_ids)
-        state, s_ids = new, n_ids
-        if improved == 0:
-            return state.withColumnRenamed("d", "longest")
+        for _ in range(max_iter):
+            cand = (
+                edges.join(state.select(F.col("id").alias("src"), "d"), "src")
+                .groupBy("dst")
+                .agg((F.max("d") + 1).alias("nd"))
+                .select(F.col("dst").alias("id"), "nd")
+            )
+            new = cs.ckpt(
+                state.join(cand, "id", "left")
+                .select("id", F.greatest("d", "nd").alias("d"))
+                .repartition(p, "id")
+            )
+            improved = (
+                new.join(state.withColumnRenamed("d", "_old"), "id")
+                .where(F.col("d") > F.col("_old"))
+                .count()
+            )
+            cs.free(state)
+            state = new
+            if improved == 0:
+                return cs.keep(state.withColumnRenamed("d", "longest"))
     raise RuntimeError(  # pragma: no cover — DAG depth << max_iter
         f"dag_longest_path still improving after {max_iter} rounds — "
         "input has a cycle"

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
+
 
 def _dot(a: str | F.Column, b: str | F.Column) -> F.Column:
     return F.aggregate(
@@ -541,85 +543,87 @@ def mmr_rerank(
     are k-1 tiny join+window jobs."""
     cands = cosine_topk_bruteforce(embeddings, queries, k=k_candidates)
     emb = embeddings.select("vec_id", "embedding")
-    ce = cands.join(emb, "vec_id").select(
-        "query_id", "vec_id", "cosine", "embedding"
-    )
-    ce = ce.localCheckpoint()
-    a = ce.select(
-        "query_id", F.col("vec_id").alias("i"), F.col("embedding").alias("ea")
-    )
-    b = ce.select(
-        "query_id", F.col("vec_id").alias("j"), F.col("embedding").alias("eb")
-    )
-    pairs = (
-        a.join(b, "query_id")
-        .where(F.col("i") != F.col("j"))
-        .select(
-            "query_id",
-            "i",
-            "j",
-            (_dot("ea", "eb") / (_norm("ea") * _norm("eb")))
-            .cast("double")
-            .alias("sim"),
+    with ckpt_scope(embeddings.sparkSession) as cs:
+        ce = cands.join(emb, "vec_id").select(
+            "query_id", "vec_id", "cosine", "embedding"
         )
-        .localCheckpoint()
-    )
-    base = ce.select("query_id", "vec_id", "cosine")
-    w = Window.partitionBy("query_id")
-    first = (
-        base.withColumn(
-            "_rn",
-            F.row_number().over(
-                w.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-            ),
+        ce = cs.ckpt(ce)
+        a = ce.select(
+            "query_id", F.col("vec_id").alias("i"), F.col("embedding").alias("ea")
         )
-        .where(F.col("_rn") == 1)
-        .select(
-            "query_id",
-            "vec_id",
-            F.lit(1).alias("mmr_rank"),
-            (F.lit(0.5) * F.col("cosine")).alias("score"),
+        b = ce.select(
+            "query_id", F.col("vec_id").alias("j"), F.col("embedding").alias("eb")
         )
-    )
-    selected = first.localCheckpoint()
-    for r in range(2, int(k) + 1):
-        rem = base.join(
-            selected.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_anti"
-        )
-        msim = (
-            pairs.join(
-                selected.select(
-                    "query_id", F.col("vec_id").alias("j")
-                ),
-                ["query_id", "j"],
+        pairs = cs.ckpt(
+            a.join(b, "query_id")
+            .where(F.col("i") != F.col("j"))
+            .select(
+                "query_id",
+                "i",
+                "j",
+                (_dot("ea", "eb") / (_norm("ea") * _norm("eb")))
+                .cast("double")
+                .alias("sim"),
             )
-            .groupBy("query_id", F.col("i").alias("vec_id"))
-            .agg(F.max("sim").alias("msim"))
         )
-        scored = rem.join(msim, ["query_id", "vec_id"]).select(
-            "query_id",
-            "vec_id",
-            (
-                F.lit(0.5) * F.col("cosine") - F.lit(0.5) * F.col("msim")
-            ).alias("score"),
-        )
-        pick = (
-            scored.withColumn(
+        base = ce.select("query_id", "vec_id", "cosine")
+        w = Window.partitionBy("query_id")
+        first = (
+            base.withColumn(
                 "_rn",
                 F.row_number().over(
-                    w.orderBy(F.col("score").desc(), F.col("vec_id").asc())
+                    w.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
                 ),
             )
             .where(F.col("_rn") == 1)
             .select(
-                "query_id", "vec_id", F.lit(r).alias("mmr_rank"), "score"
+                "query_id",
+                "vec_id",
+                F.lit(1).alias("mmr_rank"),
+                (F.lit(0.5) * F.col("cosine")).alias("score"),
             )
         )
-        selected = selected.unionAll(pick).localCheckpoint()
-    trunc = F.floor(F.col("score") * F.lit(1000000.0)) / F.lit(1000000.0)
-    return selected.select(
-        "query_id", "vec_id", "mmr_rank", trunc.alias("mmr_score")
-    )
+        selected = cs.ckpt(first)
+        for r in range(2, int(k) + 1):
+            rem = base.join(
+                selected.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_anti"
+            )
+            msim = (
+                pairs.join(
+                    selected.select(
+                        "query_id", F.col("vec_id").alias("j")
+                    ),
+                    ["query_id", "j"],
+                )
+                .groupBy("query_id", F.col("i").alias("vec_id"))
+                .agg(F.max("sim").alias("msim"))
+            )
+            scored = rem.join(msim, ["query_id", "vec_id"]).select(
+                "query_id",
+                "vec_id",
+                (
+                    F.lit(0.5) * F.col("cosine") - F.lit(0.5) * F.col("msim")
+                ).alias("score"),
+            )
+            pick = (
+                scored.withColumn(
+                    "_rn",
+                    F.row_number().over(
+                        w.orderBy(F.col("score").desc(), F.col("vec_id").asc())
+                    ),
+                )
+                .where(F.col("_rn") == 1)
+                .select(
+                    "query_id", "vec_id", F.lit(r).alias("mmr_rank"), "score"
+                )
+            )
+            nxt = cs.ckpt(selected.unionAll(pick))
+            cs.free(selected)
+            selected = nxt
+        trunc = F.floor(F.col("score") * F.lit(1000000.0)) / F.lit(1000000.0)
+        return cs.keep(
+            selected.select("query_id", "vec_id", "mmr_rank", trunc.alias("mmr_score"))
+        )
 
 
 def _pq_l2_kmeans(sub: np.ndarray, codes: int, iters: int) -> np.ndarray:
@@ -907,11 +911,6 @@ def kcenter_seeds(embeddings: DataFrame, k: int = 8) -> DataFrame:
     full sort materialization) and ships exactly one center row to the
     driver.  No pairwise materialization anywhere: O(k·N) distance
     evaluations total, the textbook farthest-first cost."""
-    from approximate_pagerank_public_spark.plans.checkpoint import (
-        free_local_ckpt,
-        local_ckpt,
-    )
-
     spark = embeddings.sparkSession
     emb = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -925,27 +924,27 @@ def kcenter_seeds(embeddings: DataFrame, k: int = 8) -> DataFrame:
     picked = [(1, int(first["vec_id"]), 0.0)]
     center_v, center_aa = list(first["v"]), float(first["aa"])
 
-    state, state_ids = local_ckpt(
-        base.select("vec_id", "v", "aa", F.lit(None).cast("double").alias("mind2"))
-    )
-    for pos in range(2, int(k) + 1):
-        c = F.array(*[F.lit(float(x)) for x in center_v])
-        d2 = (F.col("aa") - 2.0 * _dot("v", c)) + F.lit(center_aa)
-        new, new_ids = local_ckpt(
-            state.select(
-                "vec_id", "v", "aa", F.least("mind2", d2).alias("mind2")
+    with ckpt_scope(spark) as cs:
+        state = cs.ckpt(
+            base.select("vec_id", "v", "aa", F.lit(None).cast("double").alias("mind2"))
+        )
+        for pos in range(2, int(k) + 1):
+            c = F.array(*[F.lit(float(x)) for x in center_v])
+            d2 = (F.col("aa") - 2.0 * _dot("v", c)) + F.lit(center_aa)
+            new = cs.ckpt(
+                state.select(
+                    "vec_id", "v", "aa", F.least("mind2", d2).alias("mind2")
+                )
             )
-        )
-        free_local_ckpt(spark, state_ids)
-        state, state_ids = new, new_ids
-        top = state.orderBy(F.col("mind2").desc(), F.col("vec_id").asc()).first()
-        if top is None:  # k exceeded the corpus — keep the picks so far
-            break
-        picked.append(
-            (pos, int(top["vec_id"]), float(np.floor(top["mind2"] * 1e6) / 1e6))
-        )
-        center_v, center_aa = list(top["v"]), float(top["aa"])
-    free_local_ckpt(spark, state_ids)
+            cs.free(state)
+            state = new
+            top = state.orderBy(F.col("mind2").desc(), F.col("vec_id").asc()).first()
+            if top is None:  # k exceeded the corpus — keep the picks so far
+                break
+            picked.append(
+                (pos, int(top["vec_id"]), float(np.floor(top["mind2"] * 1e6) / 1e6))
+            )
+            center_v, center_aa = list(top["v"]), float(top["aa"])
     import pandas as pd
 
     out = pd.DataFrame(picked, columns=["pos", "vec_id", "radius"])

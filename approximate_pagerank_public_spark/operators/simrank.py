@@ -22,7 +22,7 @@ cartesian), and is intended for moderate vertex counts (entity
 vocabularies, not raw documents); the established 100-TB path is the
 Monte-Carlo estimator over reverse walks (Fogaras & Rácz, WWW 2005),
 whose deterministic walk machinery lives in ``operators/randomwalk.py``.
-Iterations rotate ``local_ckpt`` state (the leak rule in
+Iterations rotate state through a ``ckpt_scope`` (the leak rule in
 ``plans/checkpoint.py``).
 """
 
@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..plans.checkpoint import free_local_ckpt, local_ckpt
+from ..plans.checkpoint import ckpt_scope
 
 #: beyond this vertex count the exact Θ(V²)-pair iteration is gated off:
 #: `simrank` raises unless the caller either forces mode='exact' or
@@ -120,43 +120,42 @@ def simrank(
             )
         )
 
-    ea = e.select(F.col("src").alias("_i"), F.col("dst").alias("a"))
-    eb = e.select(F.col("src").alias("_j"), F.col("dst").alias("b"))
+    with ckpt_scope(spark) as cs:
+        ea = e.select(F.col("src").alias("_i"), F.col("dst").alias("a"))
+        eb = e.select(F.col("src").alias("_j"), F.col("dst").alias("b"))
 
-    # iteration 1: common in-neighbors (the diag-only start, exact ints)
-    c1 = (
-        e.alias("x")
-        .join(e.alias("y"), F.col("x.src") == F.col("y.src"))
-        .where(F.col("x.dst") < F.col("y.dst"))
-        .groupBy(F.col("x.dst").alias("a"), F.col("y.dst").alias("b"))
-        .agg(F.count("*").cast("double").alias("t"))
-    )
-    p, ck_ids = local_ckpt(_project(c1))
-    for _ in range(iters - 1):
-        sym = (
-            p.select(F.col("a").alias("_i"), F.col("b").alias("_j"), "s")
-            .union(p.select(F.col("b").alias("_i"), F.col("a").alias("_j"), "s"))
-            .union(
-                verts.select(
-                    F.col("id").alias("_i"),
-                    F.col("id").alias("_j"),
-                    F.lit(1.0).alias("s"),
+        # iteration 1: common in-neighbors (the diag-only start, exact ints)
+        c1 = (
+            e.alias("x")
+            .join(e.alias("y"), F.col("x.src") == F.col("y.src"))
+            .where(F.col("x.dst") < F.col("y.dst"))
+            .groupBy(F.col("x.dst").alias("a"), F.col("y.dst").alias("b"))
+            .agg(F.count("*").cast("double").alias("t"))
+        )
+        p = cs.ckpt(_project(c1))
+        for _ in range(iters - 1):
+            sym = (
+                p.select(F.col("a").alias("_i"), F.col("b").alias("_j"), "s")
+                .union(p.select(F.col("b").alias("_i"), F.col("a").alias("_j"), "s"))
+                .union(
+                    verts.select(
+                        F.col("id").alias("_i"),
+                        F.col("id").alias("_j"),
+                        F.lit(1.0).alias("s"),
+                    )
                 )
             )
-        )
-        cexp = (
-            sym.join(ea, "_i")
-            .join(eb, "_j")
-            .where(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.sum("s").alias("t"))
-        )
-        nxt, nxt_ids = local_ckpt(_project(cexp))
-        free_local_ckpt(spark, ck_ids)
-        p, ck_ids = nxt, nxt_ids
-    # final state keeps its blocks (lineage is truncated — the blocks
-    # are the only copy; see the checkpoint-leak rule)
-    return p
+            cexp = (
+                sym.join(ea, "_i")
+                .join(eb, "_j")
+                .where(F.col("a") < F.col("b"))
+                .groupBy("a", "b")
+                .agg(F.sum("s").alias("t"))
+            )
+            nxt = cs.ckpt(_project(cexp))
+            cs.free(p)
+            p = nxt
+        return cs.keep(p)
 
 
 def simrank_mc(
@@ -195,9 +194,11 @@ def simrank_mc(
     1:1 equi-joins against the ranked in-adjacency — the in-degree is
     pre-joined so the rank is computed on the STATE side and the
     neighbor join matches on (vertex, rank) exactly: no per-hub
-    fan-out, no residual join predicate. Lineage rotates through
-    ``local_ckpt`` on the checkpoint-leak rule. The one skewed shape is
-    the per-dst ranking window at BUILD time (hub in-degrees funnel
+    fan-out, no residual join predicate. Lineage rotates through a
+    checkpoint scope, which also unpersists the cached in-adjacency
+    (the last step is always checkpointed, so the result never reads
+    it). The one skewed shape is the per-dst ranking window at BUILD
+    time (hub in-degrees funnel
     into single partitions for that one pass — same accepted shape as
     ``randomwalk.ranked_adjacency``, paid once, not per step).
     """
@@ -208,116 +209,117 @@ def simrank_mc(
     spark = edges.sparkSession
     ls = int(num_fingerprints)
 
-    e = edges.select(
-        F.col(src_col).alias("nb"), F.col(dst_col).alias("v")
-    ).distinct()
-    # ranked in-adjacency: in-neighbors of v indexed 0..ind-1 in nb order
-    wv = Window.partitionBy("v").orderBy("nb")
-    ia = (
-        e.withColumn("rnk", F.row_number().over(wv) - 1)
-        .withColumn("ind", F.count("*").over(Window.partitionBy("v")))
-        .persist()
-    )
-    ind = ia.select("v", "ind").distinct()
-
-    p = (
-        pairs.select(F.col("a").cast("long"), F.col("b").cast("long"))
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    state = (
-        p.crossJoin(spark.range(ls).select(F.col("id").alias("l")))
-        .select(
-            "a",
-            "b",
-            "l",
-            F.col("a").alias("ca"),
-            F.col("b").alias("cb"),
-            F.lit(False).alias("dead"),
-            F.lit(None).cast("int").alias("tau"),
+    with ckpt_scope(spark) as cs:
+        e = edges.select(
+            F.col(src_col).alias("nb"), F.col(dst_col).alias("v")
+        ).distinct()
+        # ranked in-adjacency: in-neighbors of v indexed 0..ind-1 in nb order
+        wv = Window.partitionBy("v").orderBy("nb")
+        ia = (
+            e.withColumn("rnk", F.row_number().over(wv) - 1)
+            .withColumn("ind", F.count("*").over(Window.partitionBy("v")))
+            .persist()
         )
-    )
-    state, ck_ids = local_ckpt(state)
+        cs.callback(ia.unpersist)
+        ind = ia.select("v", "ind").distinct()
 
-    def _pick(cur: str, t: int) -> tuple[F.Column, str]:
-        """rank drawn on the state side: md5(seed:l:t:cur) % ind."""
-        payload = F.concat_ws(
-            ":", F.lit(seed), F.col("l"), F.lit(str(t)), F.col(cur)
+        p = (
+            pairs.select(F.col("a").cast("long"), F.col("b").cast("long"))
+            .where(F.col("a") < F.col("b"))
+            .distinct()
         )
-        return F.conv(F.substring(F.md5(payload), 1, 15), 16, 10).cast("long")
-
-    for t in range(1, iters + 1):
-        act = F.col("tau").isNull() & ~F.col("dead")
-        s0 = (
-            state.join(
-                ind.select(F.col("v").alias("ca"), F.col("ind").alias("_ia")),
-                "ca",
-                "left",
-            )
-            .join(
-                ind.select(F.col("v").alias("cb"), F.col("ind").alias("_ib")),
-                "cb",
-                "left",
-            )
-            .withColumn("_ra", _pick("ca", t) % F.col("_ia"))
-            .withColumn("_rb", _pick("cb", t) % F.col("_ib"))
-        )
-        s1 = (
-            s0.join(
-                ia.select(
-                    F.col("v").alias("ca"),
-                    F.col("rnk").alias("_ra"),
-                    F.col("nb").alias("_na"),
-                ),
-                ["ca", "_ra"],
-                "left",
-            )
-            .join(
-                ia.select(
-                    F.col("v").alias("cb"),
-                    F.col("rnk").alias("_rb"),
-                    F.col("nb").alias("_nb"),
-                ),
-                ["cb", "_rb"],
-                "left",
+        state = (
+            p.crossJoin(spark.range(ls).select(F.col("id").alias("l")))
+            .select(
+                "a",
+                "b",
+                "l",
+                F.col("a").alias("ca"),
+                F.col("b").alias("cb"),
+                F.lit(False).alias("dead"),
+                F.lit(None).cast("int").alias("tau"),
             )
         )
-        both = F.col("_na").isNotNull() & F.col("_nb").isNotNull()
-        met = act & both & (F.col("_na") == F.col("_nb"))
-        nxt = s1.select(
-            "a",
-            "b",
-            "l",
-            F.when(act & both, F.col("_na")).otherwise(F.col("ca")).alias("ca"),
-            F.when(act & both, F.col("_nb")).otherwise(F.col("cb")).alias("cb"),
-            (F.col("dead") | (act & ~both)).alias("dead"),
-            F.coalesce(
-                F.col("tau"), F.when(met, F.lit(t).cast("int"))
-            ).alias("tau"),
-        )
-        if t % _MC_CKPT_EVERY == 0 or t == iters:
-            nxt, new_ids = local_ckpt(nxt)
-            free_local_ckpt(spark, ck_ids)
-            ck_ids = new_ids
-        state = nxt
+        state = cs.ckpt(state)
 
-    # integer micro-unit score table, computed driver-side (no libm pow
-    # in either engine): tau -> round(c^tau * 1e6)
-    table = {t: int(round((c**t) * 1e6)) for t in range(1, iters + 1)}
-    score = F.lit(0)
-    for t, v in table.items():
-        score = F.when(F.col("tau") == t, F.lit(v)).otherwise(score)
-    out = (
-        state.withColumn("_sc", score.cast("long"))
-        .groupBy("a", "b")
-        .agg(F.sum("_sc").alias("_t"))
-        .select(
-            "a",
-            "b",
-            (F.col("_t") / F.lit(float(ls) * 1e6)).alias("s"),
+        def _pick(cur: str, t: int) -> F.Column:
+            """rank drawn on the state side: md5(seed:l:t:cur) % ind."""
+            payload = F.concat_ws(
+                ":", F.lit(seed), F.col("l"), F.lit(str(t)), F.col(cur)
+            )
+            return F.conv(F.substring(F.md5(payload), 1, 15), 16, 10).cast("long")
+
+        for t in range(1, iters + 1):
+            act = F.col("tau").isNull() & ~F.col("dead")
+            s0 = (
+                state.join(
+                    ind.select(F.col("v").alias("ca"), F.col("ind").alias("_ia")),
+                    "ca",
+                    "left",
+                )
+                .join(
+                    ind.select(F.col("v").alias("cb"), F.col("ind").alias("_ib")),
+                    "cb",
+                    "left",
+                )
+                .withColumn("_ra", _pick("ca", t) % F.col("_ia"))
+                .withColumn("_rb", _pick("cb", t) % F.col("_ib"))
+            )
+            s1 = (
+                s0.join(
+                    ia.select(
+                        F.col("v").alias("ca"),
+                        F.col("rnk").alias("_ra"),
+                        F.col("nb").alias("_na"),
+                    ),
+                    ["ca", "_ra"],
+                    "left",
+                )
+                .join(
+                    ia.select(
+                        F.col("v").alias("cb"),
+                        F.col("rnk").alias("_rb"),
+                        F.col("nb").alias("_nb"),
+                    ),
+                    ["cb", "_rb"],
+                    "left",
+                )
+            )
+            both = F.col("_na").isNotNull() & F.col("_nb").isNotNull()
+            met = act & both & (F.col("_na") == F.col("_nb"))
+            nxt = s1.select(
+                "a",
+                "b",
+                "l",
+                F.when(act & both, F.col("_na")).otherwise(F.col("ca")).alias("ca"),
+                F.when(act & both, F.col("_nb")).otherwise(F.col("cb")).alias("cb"),
+                (F.col("dead") | (act & ~both)).alias("dead"),
+                F.coalesce(
+                    F.col("tau"), F.when(met, F.lit(t).cast("int"))
+                ).alias("tau"),
+            )
+            if t % _MC_CKPT_EVERY == 0 or t == iters:
+                nxt = cs.ckpt(nxt)
+                cs.free(state)
+            state = nxt
+
+        # integer micro-unit score table, computed driver-side (no libm pow
+        # in either engine): tau -> round(c^tau * 1e6)
+        table = {t: int(round((c**t) * 1e6)) for t in range(1, iters + 1)}
+        score = F.lit(0)
+        for t, v in table.items():
+            score = F.when(F.col("tau") == t, F.lit(v)).otherwise(score)
+        out = (
+            state.withColumn("_sc", score.cast("long"))
+            .groupBy("a", "b")
+            .agg(F.sum("_sc").alias("_t"))
+            .select(
+                "a",
+                "b",
+                (F.col("_t") / F.lit(float(ls) * 1e6)).alias("s"),
+            )
         )
-    )
-    return out
+        return cs.keep(out)
 
 
 _MC_CKPT_EVERY = 2  # two joins per step double the per-step lineage depth

@@ -28,7 +28,7 @@ engines replay it verbatim.
 
 Scale shape: one vertex-sized map + one edge-list aggregation + two
 scalar reductions per iteration — identical to a PageRank superstep;
-state rotates through ``local_ckpt`` (the leak rule).
+state rotates through a ``ckpt_scope`` (the leak rule).
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import free_local_ckpt, local_ckpt
+from ..plans.checkpoint import ckpt_scope
 
 
 def normalized_fiedler(
@@ -51,67 +51,65 @@ def normalized_fiedler(
     if iters < 1:
         raise ValueError("iters must be >= 1")
     spark = edges.sparkSession
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    sym = (
-        e.select(F.col("src").alias("j"), F.col("dst").alias("i"))
-        .union(e.select(F.col("dst").alias("j"), F.col("src").alias("i")))
-        .distinct()
-    )
-    # materialize the loop-invariant relations ONCE — without this every
-    # iteration's jobs recompute the distinct/groupBy from the raw edges
-    # (no cross-job shuffle reuse for fresh DataFrame plans)
-    sym, sym_ck = local_ckpt(sym)
-    deg = sym.groupBy("i").agg(F.count("*").alias("d"))
-    # u_i = sqrt(d_i); uᵀu = Σd = 2m (exact integer)
-    u = deg.select(
-        F.col("i").alias("id"),
-        F.sqrt(F.col("d").cast("double")).alias("u"),
-    )
-    u, u_ck = local_ckpt(u)
-    m2 = deg.agg(F.sum("d")).collect()[0][0]
-    x = u.select(
-        "id",
-        (
-            (F.col("id") * F.lit(2654435761) % F.lit(1000003)).cast("double")
-            / F.lit(1000003.0)
-            - F.lit(0.5)
-        ).alias("x"),
-    )
-    x, ck = local_ckpt(x)
-    uj = u.select(F.col("id").alias("j"), F.col("u").alias("uj"))
-    ui = u.select(F.col("id").alias("i"), F.col("u").alias("ui"))
-    for _ in range(iters):
-        xu = x.join(u, "id")
-        proj = (
-            xu.agg(F.sum(F.col("x") * F.col("u"))).collect()[0][0] or 0.0
-        ) / float(m2)
-        y = xu.select(
-            "id", (F.col("x") - (F.lit(proj) * F.col("u"))).alias("y")
+    with ckpt_scope(spark) as cs:
+        e = edges.select(
+            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+        ).distinct()
+        sym = (
+            e.select(F.col("src").alias("j"), F.col("dst").alias("i"))
+            .union(e.select(F.col("dst").alias("j"), F.col("src").alias("i")))
+            .distinct()
         )
-        z = (
-            sym.join(y.select(F.col("id").alias("j"), "y"), "j")
-            .join(uj, "j")
-            .join(ui, "i")
-            .select(
-                F.col("i").alias("id"),
-                (F.col("y") / (F.col("ui") * F.col("uj"))).alias("t"),
+        # materialize the loop-invariant relations ONCE — without this every
+        # iteration's jobs recompute the distinct/groupBy from the raw edges
+        # (no cross-job shuffle reuse for fresh DataFrame plans)
+        sym = cs.ckpt(sym)
+        deg = sym.groupBy("i").agg(F.count("*").alias("d"))
+        # u_i = sqrt(d_i); uᵀu = Σd = 2m (exact integer)
+        u = deg.select(
+            F.col("i").alias("id"),
+            F.sqrt(F.col("d").cast("double")).alias("u"),
+        )
+        u = cs.ckpt(u)
+        m2 = deg.agg(F.sum("d")).collect()[0][0]
+        x = u.select(
+            "id",
+            (
+                (F.col("id") * F.lit(2654435761) % F.lit(1000003)).cast("double")
+                / F.lit(1000003.0)
+                - F.lit(0.5)
+            ).alias("x"),
+        )
+        x = cs.ckpt(x)
+        uj = u.select(F.col("id").alias("j"), F.col("u").alias("uj"))
+        ui = u.select(F.col("id").alias("i"), F.col("u").alias("ui"))
+        for _ in range(iters):
+            xu = x.join(u, "id")
+            proj = (
+                xu.agg(F.sum(F.col("x") * F.col("u"))).collect()[0][0] or 0.0
+            ) / float(m2)
+            y = xu.select(
+                "id", (F.col("x") - (F.lit(proj) * F.col("u"))).alias("y")
             )
-            .groupBy("id")
-            .agg(F.sum("t").alias("z"))
-        )
-        nxt_raw = u.select("id").join(z, "id", "left").select(
-            "id", F.coalesce(F.col("z"), F.lit(0.0)).alias("z")
-        )
-        nxt_raw, nxt_ck = local_ckpt(nxt_raw)
-        n = nxt_raw.agg(F.sqrt(F.sum(F.col("z") * F.col("z")))).collect()[0][0]
-        n = n if n else 1.0
-        nxt = nxt_raw.select("id", (F.col("z") / F.lit(n)).alias("x"))
-        nxt, ck2 = local_ckpt(nxt)
-        free_local_ckpt(spark, ck)
-        free_local_ckpt(spark, nxt_ck)
-        x, ck = nxt, ck2
-    free_local_ckpt(spark, sym_ck)
-    free_local_ckpt(spark, u_ck)
-    return x.select("id", F.col("x").alias("f"))
+            z = (
+                sym.join(y.select(F.col("id").alias("j"), "y"), "j")
+                .join(uj, "j")
+                .join(ui, "i")
+                .select(
+                    F.col("i").alias("id"),
+                    (F.col("y") / (F.col("ui") * F.col("uj"))).alias("t"),
+                )
+                .groupBy("id")
+                .agg(F.sum("t").alias("z"))
+            )
+            nxt_raw = u.select("id").join(z, "id", "left").select(
+                "id", F.coalesce(F.col("z"), F.lit(0.0)).alias("z")
+            )
+            nxt_raw = cs.ckpt(nxt_raw)
+            n = nxt_raw.agg(F.sqrt(F.sum(F.col("z") * F.col("z")))).collect()[0][0]
+            n = n if n else 1.0
+            nxt = nxt_raw.select("id", (F.col("z") / F.lit(n)).alias("x"))
+            nxt = cs.ckpt(nxt)
+            cs.free(x, nxt_raw)
+            x = nxt
+        return cs.keep(x.select("id", F.col("x").alias("f")))

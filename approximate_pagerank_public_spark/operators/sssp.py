@@ -22,7 +22,7 @@ relaxation):
   ``np.minimum.at`` merge (the CC/``_min_partials`` machinery with
   ``d[src] + w`` as the incoming value).
 - **distributed**: DataFrame twin — frontier ⋈ edges, ``groupBy(dst)
-  .min(dist + weight)``, ``local_ckpt`` state rotation so lineage and
+  .min(dist + weight)``, ``ckpt_scope`` state rotation so lineage and
   storage stay bounded (CLAUDE.md invariant).
 
 Bit parity: both paths compute the identical candidate multiset
@@ -43,8 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -155,35 +154,36 @@ def _sssp_distributed(
     src_df = spark.createDataFrame(
         [(int(s), 0.0) for s in sources], "id long, dist double"
     )
-    dists, dist_ids = local_ckpt(src_df.repartition(p, "id"))
-    frontier = dists
-    converged = False
-    it = 0
-    for it in range(1, max_iter + 1):
-        incoming = (
-            graph.edges.join(
-                frontier.select(F.col("id").alias("src"), "dist"), "src"
+    with ckpt_scope(spark) as cs:
+        dists = cs.ckpt(src_df.repartition(p, "id"))
+        frontier = dists
+        converged = False
+        it = 0
+        for it in range(1, max_iter + 1):
+            incoming = (
+                graph.edges.join(
+                    frontier.select(F.col("id").alias("src"), "dist"), "src"
+                )
+                .groupBy("dst")
+                .agg(F.min(F.col("dist") + F.col("weight")).alias("nd"))
             )
-            .groupBy("dst")
-            .agg(F.min(F.col("dist") + F.col("weight")).alias("nd"))
-        )
-        merged = dists.join(incoming, dists.id == incoming.dst, "full").select(
-            F.coalesce(dists.id, incoming.dst).alias("id"),
-            # least() skips nulls in Spark: new vertices take nd,
-            # un-improved vertices keep dist
-            F.least("dist", "nd").alias("dist"),
-            (F.col("nd").isNotNull() & (F.col("nd") < F.coalesce("dist", F.lit(np.inf))))
-            .alias("_improved"),
-        )
-        new, new_ids = local_ckpt(merged.repartition(p, "id"))
-        n_improved = new.where("_improved").count()
-        frontier = new.where("_improved").select("id", "dist")
-        free_local_ckpt(spark, dist_ids)
-        dists, dist_ids = new, new_ids
-        if n_improved == 0:
-            converged = True
-            break
-    return dists.select("id", "dist"), it, converged
+            merged = dists.join(incoming, dists.id == incoming.dst, "full").select(
+                F.coalesce(dists.id, incoming.dst).alias("id"),
+                # least() skips nulls in Spark: new vertices take nd,
+                # un-improved vertices keep dist
+                F.least("dist", "nd").alias("dist"),
+                (F.col("nd").isNotNull() & (F.col("nd") < F.coalesce("dist", F.lit(np.inf))))
+                .alias("_improved"),
+            )
+            new = cs.ckpt(merged.repartition(p, "id"))
+            n_improved = new.where("_improved").count()
+            frontier = new.where("_improved").select("id", "dist")
+            cs.free(dists)
+            dists = new
+            if n_improved == 0:
+                converged = True
+                break
+        return cs.keep(dists.select("id", "dist")), it, converged
 
 
 def sssp(

@@ -33,8 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
+    ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -126,60 +125,57 @@ def multi_source_bfs(
     p = graph.num_partitions
     import pandas as pd
 
-    seed, seed_ids = local_ckpt(
-        spark.createDataFrame(pd.DataFrame({"source": sources, "id": sources}))
-        .withColumn("dist", F.lit(0))
-        .repartition(p, "id")
-    )
-    # visited = lazy union of the per-level checkpointed frontiers:
-    # no O(V) re-write of the whole visited set every level, and the
-    # per-level emptiness check is a take(1) on the already-materialized
-    # frontier instead of a separate blocking count() job.
-    visited = seed
-    frontier = seed
-    # (df, storage ids) of the checkpoints backing the current `visited`;
-    # superseded ones are FREED at each collapse (free_local_ckpt —
-    # DataFrame.unpersist is a no-op for localCheckpoint blocks) so a
-    # deep traversal never accumulates stale O(V) block sets
-    pending = [(seed, seed_ids)]
-    level = 0
-    while level < max_levels:
-        level += 1
-        nxt = (
-            frontier.join(
-                graph.edges.select(F.col("src").alias("id"), "dst"), "id"
-            )
-            .select("source", F.col("dst").alias("id"))
-            .distinct()
-        )
-        if vertex_filter is not None:
-            nxt = nxt.where(vertex_filter)
-        nxt, nxt_ids = local_ckpt(
-            nxt.join(visited.select("source", "id"), ["source", "id"], "left_anti")
-            .withColumn("dist", F.lit(level))
+    with ckpt_scope(spark) as cs:
+        seed = cs.ckpt(
+            spark.createDataFrame(pd.DataFrame({"source": sources, "id": sources}))
+            .withColumn("dist", F.lit(0))
             .repartition(p, "id")
-        )  # eager: the level's ONE materializing job
-        if not nxt.take(1):
-            free_local_ckpt(spark, nxt_ids)
-            break
-        visited = visited.unionAll(nxt)
-        pending.append((nxt, nxt_ids))
-        # collapse the lazy union every 8 levels: otherwise the plan
-        # grows one leaf per level and Catalyst re-analysis is O(L^2)
-        # over a 100+-diameter traversal; the amortized O(V/8) rewrite
-        # per level is the cheaper side of that trade
-        if level % 8 == 0:
-            collapsed, coll_ids = local_ckpt(visited.repartition(p, "id"))
-            # eager checkpoint above holds all rows, so the pre-collapse
-            # leaves (except the live frontier, still joined next level)
-            # and the previous collapsed snapshot are safe to release
-            for df, ids in pending:
-                if df is not nxt:
-                    free_local_ckpt(spark, ids)
-            visited = collapsed
-            pending = [(collapsed, coll_ids), (nxt, nxt_ids)]
-        frontier = nxt
-    return visited
+        )
+        # visited = lazy union of the per-level checkpointed frontiers:
+        # no O(V) re-write of the whole visited set every level, and the
+        # per-level emptiness check is a take(1) on the already-materialized
+        # frontier instead of a separate blocking count() job.
+        visited = seed
+        frontier = seed
+        # the checkpoints backing the current `visited`; superseded ones
+        # are freed at each collapse so a deep traversal never
+        # accumulates stale O(V) block sets
+        pending = [seed]
+        level = 0
+        while level < max_levels:
+            level += 1
+            nxt = (
+                frontier.join(
+                    graph.edges.select(F.col("src").alias("id"), "dst"), "id"
+                )
+                .select("source", F.col("dst").alias("id"))
+                .distinct()
+            )
+            if vertex_filter is not None:
+                nxt = nxt.where(vertex_filter)
+            nxt = cs.ckpt(
+                nxt.join(visited.select("source", "id"), ["source", "id"], "left_anti")
+                .withColumn("dist", F.lit(level))
+                .repartition(p, "id")
+            )  # eager: the level's ONE materializing job
+            if not nxt.take(1):
+                break
+            visited = visited.unionAll(nxt)
+            pending.append(nxt)
+            # collapse the lazy union every 8 levels: otherwise the plan
+            # grows one leaf per level and Catalyst re-analysis is O(L^2)
+            # over a 100+-diameter traversal; the amortized O(V/8) rewrite
+            # per level is the cheaper side of that trade
+            if level % 8 == 0:
+                collapsed = cs.ckpt(visited.repartition(p, "id"))
+                # eager checkpoint above holds all rows, so the pre-collapse
+                # leaves (except the live frontier, still joined next level)
+                # and the previous collapsed snapshot are safe to release
+                cs.free(*(df for df in pending if df is not nxt))
+                visited = collapsed
+                pending = [collapsed, nxt]
+            frontier = nxt
+        return cs.keep(visited)
 
 
 def bfs_stats(graph: Graph, sources: list[int]) -> DataFrame:
@@ -320,67 +316,59 @@ def widest_path(graph: Graph, source: int, max_rounds: int = 10_000) -> DataFram
     the worst case (small in practice). No floats are ever accumulated
     — ``least``/``greatest`` only select, so the caps replay bit-exactly
     in the DuckDB recursive-CTE oracle. Lineage truncated per round via
-    ``local_ckpt`` (the multi_source_bfs discipline)."""
-    from approximate_pagerank_public_spark.plans.checkpoint import (
-        free_local_ckpt,
-        local_ckpt,
-    )
+    a checkpoint scope (the multi_source_bfs discipline)."""
 
     spark = graph.spark
     p = graph.num_partitions
     import pandas as pd
 
-    caps, caps_ids = local_ckpt(
-        spark.createDataFrame(
-            pd.DataFrame({"id": [int(source)], "cap": [1.0]})
-        ).repartition(p, "id")
-    )
-    frontier = caps
-    front_ids: set = set()  # the seed's blocks belong to caps_ids
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        cand = (
-            frontier.join(
-                graph.edges.select(
-                    F.col("src").alias("id"), "dst", "weight"
-                ),
-                "id",
-            )
-            .select(
-                F.col("dst").alias("id"),
-                F.least(F.col("cap"), F.col("weight")).alias("newcap"),
-            )
-            .groupBy("id")
-            .agg(F.max("newcap").alias("newcap"))
+    with ckpt_scope(spark) as cs:
+        caps = cs.ckpt(
+            spark.createDataFrame(
+                pd.DataFrame({"id": [int(source)], "cap": [1.0]})
+            ).repartition(p, "id")
         )
-        improved, imp_ids = local_ckpt(
-            cand.join(caps, "id", "left")
-            .where(F.col("cap").isNull() | (F.col("newcap") > F.col("cap")))
-            .select("id", F.col("newcap").alias("cap"))
-            .repartition(p, "id")
-        )
-        if not improved.take(1):
-            free_local_ckpt(spark, imp_ids)
-            free_local_ckpt(spark, front_ids)
-            break
-        merged, merged_ids = local_ckpt(
-            caps.join(improved.select("id", F.col("cap").alias("icap")), "id", "full")
-            .select(
-                "id",
-                F.greatest(
-                    F.coalesce(F.col("cap"), F.lit(float("-inf"))),
-                    F.coalesce(F.col("icap"), F.lit(float("-inf"))),
-                ).alias("cap"),
+        frontier = caps
+        rounds = 0
+        while rounds < max_rounds:
+            rounds += 1
+            cand = (
+                frontier.join(
+                    graph.edges.select(
+                        F.col("src").alias("id"), "dst", "weight"
+                    ),
+                    "id",
+                )
+                .select(
+                    F.col("dst").alias("id"),
+                    F.least(F.col("cap"), F.col("weight")).alias("newcap"),
+                )
+                .groupBy("id")
+                .agg(F.max("newcap").alias("newcap"))
             )
-            .repartition(p, "id")
-        )
-        merged.count()
-        free_local_ckpt(spark, caps_ids)
-        free_local_ckpt(spark, front_ids)
-        caps, caps_ids = merged, merged_ids
-        frontier, front_ids = improved, imp_ids
-    return caps
+            improved = cs.ckpt(
+                cand.join(caps, "id", "left")
+                .where(F.col("cap").isNull() | (F.col("newcap") > F.col("cap")))
+                .select("id", F.col("newcap").alias("cap"))
+                .repartition(p, "id")
+            )
+            if not improved.take(1):
+                break
+            merged = cs.ckpt(
+                caps.join(improved.select("id", F.col("cap").alias("icap")), "id", "full")
+                .select(
+                    "id",
+                    F.greatest(
+                        F.coalesce(F.col("cap"), F.lit(float("-inf"))),
+                        F.coalesce(F.col("icap"), F.lit(float("-inf"))),
+                    ).alias("cap"),
+                )
+                .repartition(p, "id")
+            )
+            merged.count()
+            cs.free(caps, frontier)
+            caps, frontier = merged, improved
+        return cs.keep(caps)
 
 
 def exact_diameter(

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 from approximate_pagerank_public_spark.plans.graph import Graph
 
 
@@ -284,56 +285,51 @@ def k_truss(graph: Graph, k: int = 4, max_rounds: int = 100) -> tuple[DataFrame,
     fixpoint when the edge count stops shrinking. Rounds are bounded by
     the peel depth (small in practice); every step is joins + a
     map-side-combinable count — no driver state beyond the count scalar,
-    lineage truncated per round via ``local_ckpt``. Returns
+    lineage truncated per round by a checkpoint scope. Returns
     ``((u, v) DataFrame, rounds)``; ``rounds`` counts support passes
     including the final no-change verification pass.
     """
-    from approximate_pagerank_public_spark.plans.checkpoint import (
-        free_local_ckpt,
-        local_ckpt,
-    )
-
-    spark = graph.spark
     p = graph.num_partitions
     thr = int(k) - 2
     e = canonical_edges(graph)
     if thr <= 0:
         return e, 0
-    e, e_ids = local_ckpt(e.repartition(p, "u"))
-    prev_n = e.count()
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        tri = _triangles_of(e)
-        sup_rows = (
-            tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
-            .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
-            .unionAll(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
-        )
-        strong = (
-            sup_rows.groupBy("u", "v")
-            .agg(F.count("*").alias("sup"))
-            .where(F.col("sup") >= F.lit(thr))
-            .select("u", "v")
-        )
-        kept, kept_ids = local_ckpt(
-            e.join(strong, ["u", "v"], "left_semi").repartition(p, "u")
-        )
-        n = kept.count()
-        free_local_ckpt(spark, e_ids)
-        e, e_ids = kept, kept_ids
-        if n == prev_n:
-            break
-        prev_n = n
-    else:  # pragma: no cover — peel depth << 100 on any real graph
-        import warnings
+    with ckpt_scope(graph.spark) as cs:
+        e = cs.ckpt(e.repartition(p, "u"))
+        prev_n = e.count()
+        rounds = 0
+        while rounds < max_rounds:
+            rounds += 1
+            tri = _triangles_of(e)
+            sup_rows = (
+                tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
+                .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
+                .unionAll(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
+            )
+            strong = (
+                sup_rows.groupBy("u", "v")
+                .agg(F.count("*").alias("sup"))
+                .where(F.col("sup") >= F.lit(thr))
+                .select("u", "v")
+            )
+            kept = cs.ckpt(
+                e.join(strong, ["u", "v"], "left_semi").repartition(p, "u")
+            )
+            n = kept.count()
+            cs.free(e)
+            e = kept
+            if n == prev_n:
+                break
+            prev_n = n
+        else:  # pragma: no cover — peel depth << 100 on any real graph
+            import warnings
 
-        warnings.warn(
-            f"k-truss peel hit max_rounds={max_rounds} before fixpoint",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return e, rounds
+            warnings.warn(
+                f"k-truss peel hit max_rounds={max_rounds} before fixpoint",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        return cs.keep(e), rounds
 
 
 def truss_decomposition(
@@ -352,61 +348,55 @@ def truss_decomposition(
     shape. Edges dropped while peeling at threshold k-2 get trussness
     k-1; the loop ends when a level's fixpoint is empty. Every step is
     the wedge join + map-side-combinable count of :func:`k_truss`;
-    per-level lineage truncated via ``local_ckpt``; labels accumulate
+    per-level lineage truncated by a checkpoint scope; labels accumulate
     as a lazily-unioned DataFrame collapsed per level.
     """
-    from approximate_pagerank_public_spark.plans.checkpoint import (
-        free_local_ckpt,
-        local_ckpt,
-    )
-
-    spark = graph.spark
     p = graph.num_partitions
-    active, a_ids = local_ckpt(canonical_edges(graph).repartition(p, "u"))
-    n_active = active.count()
-    out: DataFrame | None = None
-    out_ids: list = []
-    k = 2
-    while n_active and k < max_k:
-        k += 1
-        thr = k - 2
-        before, before_ids = active, a_ids
-        rounds = 0
-        while rounds < max_rounds:
-            rounds += 1
-            tri = _triangles_of(active)
-            strong = (
-                tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
-                .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
-                .unionAll(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
-                .groupBy("u", "v")
-                .agg(F.count("*").alias("sup"))
-                .where(F.col("sup") >= F.lit(thr))
-                .select("u", "v")
+    with ckpt_scope(graph.spark) as cs:
+        active = cs.ckpt(canonical_edges(graph).repartition(p, "u"))
+        n_active = active.count()
+        out: DataFrame | None = None
+        k = 2
+        while n_active and k < max_k:
+            k += 1
+            thr = k - 2
+            before = active
+            rounds = 0
+            while rounds < max_rounds:
+                rounds += 1
+                tri = _triangles_of(active)
+                strong = (
+                    tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
+                    .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
+                    .unionAll(tri.select(F.col("a").alias("u"), F.col("c").alias("v")))
+                    .groupBy("u", "v")
+                    .agg(F.count("*").alias("sup"))
+                    .where(F.col("sup") >= F.lit(thr))
+                    .select("u", "v")
+                )
+                kept = cs.ckpt(
+                    active.join(strong, ["u", "v"], "left_semi").repartition(p, "u")
+                )
+                n = kept.count()
+                if active is not before:
+                    cs.free(active)
+                active = kept
+                if n == n_active:
+                    break
+                n_active = n
+            dropped = before.join(active, ["u", "v"], "left_anti").select(
+                "u", "v", F.lit(k - 1).cast("long").alias("trussness")
             )
-            kept, kept_ids = local_ckpt(
-                active.join(strong, ["u", "v"], "left_semi").repartition(p, "u")
-            )
-            n = kept.count()
-            if active is not before:
-                free_local_ckpt(spark, a_ids)
-            active, a_ids = kept, kept_ids
-            if n == n_active:
-                break
-            n_active = n
-        dropped = before.join(active, ["u", "v"], "left_anti").select(
-            "u", "v", F.lit(k - 1).cast("long").alias("trussness")
-        )
-        labeled = dropped if out is None else out.unionAll(dropped)
-        # one collapse per k level keeps the plan depth O(1) and lets
-        # the superseded label checkpoints + the pre-level edge set go
-        collapsed, c_ids = local_ckpt(labeled.repartition(p, "u"))
-        collapsed.count()
-        free_local_ckpt(spark, out_ids)
-        free_local_ckpt(spark, before_ids)
-        out, out_ids = collapsed, c_ids
-    free_local_ckpt(spark, a_ids)
-    return out if out is not None else canonical_edges(graph).select(
+            labeled = dropped if out is None else out.unionAll(dropped)
+            # one collapse per k level keeps the plan depth O(1) and lets
+            # the superseded label checkpoints + the pre-level edge set go
+            collapsed = cs.ckpt(labeled.repartition(p, "u"))
+            collapsed.count()
+            cs.free(out, before)
+            out = collapsed
+        if out is not None:
+            return cs.keep(out)
+    return canonical_edges(graph).select(
         "u", "v", F.lit(2).cast("long").alias("trussness")
     ).where(F.lit(False))
 
@@ -503,67 +493,68 @@ def clique_percolation(
     """
     from .components import star_components_edges
 
-    e = canonical_edges(graph)
-    tri = _triangles_of(e)
-    tid = F.conv(
-        F.substring(F.md5(F.concat_ws(":", "a", "b", "c")), 1, 15), 16, 10
-    ).cast("long")
-    # materialize the keyed triangle list ONCE — the three posting
-    # branches and the final label join would otherwise re-run the
-    # triangle wedge join 4x (localCheckpoint, not persist: the lineage
-    # behind it is the expensive part, and the blocks are the operator's
-    # own working set)
-    trik = tri.withColumn("tid", tid).localCheckpoint()
-    posting = (
-        trik.select(F.concat_ws(":", "a", "b").alias("ek"), "tid")
-        .unionAll(trik.select(F.concat_ws(":", "a", "c").alias("ek"), "tid"))
-        .unionAll(trik.select(F.concat_ws(":", "b", "c").alias("ek"), "tid"))
-    )
-    mins = posting.groupBy("ek").agg(F.min("tid").alias("m"))
-    stars = (
-        posting.join(mins, "ek")
-        .where(F.col("tid") != F.col("m"))
-        .select(F.col("tid").alias("a"), F.col("m").alias("b"))
-        .distinct()
-    )
-    spark = e.sparkSession
-    # same cutover discipline as dedup.duplicate_clusters: the star
-    # pairs are the OUTPUT of the reduction (≤ one per posting row) —
-    # small sets union-find on the driver (the star loop's per-round
-    # fixpoint jobs cost more than the whole scan), big sets run the
-    # distributed star loop
-    stars = stars.persist()
-    if stars.count() <= broadcast_max_pairs:
-        parent: dict = {}
+    with ckpt_scope(graph.spark) as cs:
+        e = canonical_edges(graph)
+        tri = _triangles_of(e)
+        tid = F.conv(
+            F.substring(F.md5(F.concat_ws(":", "a", "b", "c")), 1, 15), 16, 10
+        ).cast("long")
+        # materialize the keyed triangle list ONCE — the three posting
+        # branches and the final label join would otherwise re-run the
+        # triangle wedge join 4x (localCheckpoint, not persist: the lineage
+        # behind it is the expensive part, and the blocks are the operator's
+        # own working set)
+        trik = cs.ckpt(tri.withColumn("tid", tid))
+        posting = (
+            trik.select(F.concat_ws(":", "a", "b").alias("ek"), "tid")
+            .unionAll(trik.select(F.concat_ws(":", "a", "c").alias("ek"), "tid"))
+            .unionAll(trik.select(F.concat_ws(":", "b", "c").alias("ek"), "tid"))
+        )
+        mins = posting.groupBy("ek").agg(F.min("tid").alias("m"))
+        stars = (
+            posting.join(mins, "ek")
+            .where(F.col("tid") != F.col("m"))
+            .select(F.col("tid").alias("a"), F.col("m").alias("b"))
+            .distinct()
+        )
+        spark = e.sparkSession
+        # same cutover discipline as dedup.duplicate_clusters: the star
+        # pairs are the OUTPUT of the reduction (≤ one per posting row) —
+        # small sets union-find on the driver (the star loop's per-round
+        # fixpoint jobs cost more than the whole scan), big sets run the
+        # distributed star loop
+        stars = stars.persist()
+        if stars.count() <= broadcast_max_pairs:
+            parent: dict = {}
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
+            def find(x):
+                while parent[x] != x:
+                    parent[x] = parent[parent[x]]
+                    x = parent[x]
+                return x
 
-        for row in stars.select("a", "b").toLocalIterator():
-            a, b = int(row["a"]), int(row["b"])
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        stars.unpersist()
-        rep_rows = [(x, find(x)) for x in parent]
-        if rep_rows:
-            roots = F.broadcast(spark.createDataFrame(rep_rows, "a long, r long"))
+            for row in stars.select("a", "b").toLocalIterator():
+                a, b = int(row["a"]), int(row["b"])
+                parent.setdefault(a, a)
+                parent.setdefault(b, b)
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                    parent[hi] = lo
+            stars.unpersist()
+            rep_rows = [(x, find(x)) for x in parent]
+            if rep_rows:
+                roots = F.broadcast(spark.createDataFrame(rep_rows, "a long, r long"))
+            else:
+                roots = spark.createDataFrame([], "a long, r long")
         else:
-            roots = spark.createDataFrame([], "a long, r long")
-    else:
-        p = max(int(spark.sparkContext.defaultParallelism), 8)
-        roots, _rounds = star_components_edges(spark, stars, p, max_rounds)
-        stars.unpersist()
-    out = trik.join(roots, trik["tid"] == roots["a"], "left").select(
-        trik["a"].alias("a"),
-        "b",
-        "c",
-        F.least(F.col("tid"), F.coalesce("r", F.col("tid"))).alias("community"),
-    )
-    return out
+            p = max(int(spark.sparkContext.defaultParallelism), 8)
+            roots, _rounds = star_components_edges(cs, stars, p, max_rounds)
+            stars.unpersist()
+        out = trik.join(roots, trik["tid"] == roots["a"], "left").select(
+            trik["a"].alias("a"),
+            "b",
+            "c",
+            F.least(F.col("tid"), F.coalesce("r", F.col("tid"))).alias("community"),
+        )
+        return cs.keep(out)

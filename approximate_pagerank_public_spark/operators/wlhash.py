@@ -26,7 +26,7 @@ same ``conv(substr(md5(...),1,k),16,10)`` ↔ DuckDB
 Scale shape per round: one edge-pass equi-join of the |V|-row color
 table (broadcast below the ETL vertex gate, hash join above), one
 map-side-combined sum keyed by dst, one |V|-row left join back. State
-rotates through ``plans/checkpoint.py::local_ckpt`` (the
+rotates through a ``plans/checkpoint.py::ckpt_scope`` (the
 unpersist-is-a-no-op leak discipline every iterative loop here follows).
 """
 
@@ -35,10 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from approximate_pagerank_public_spark.plans.checkpoint import (
-    free_local_ckpt,
-    local_ckpt,
-)
+from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 from approximate_pagerank_public_spark.plans.graph import Graph
 
 
@@ -77,21 +74,21 @@ def wl_refinement(graph: Graph, rounds: int = 3) -> DataFrame:
         deg.select(F.col("src").alias("id"), "d"), "id", "left"
     ).select("id", F.coalesce("d", F.lit(0)).cast("long").alias("lab"))
 
-    labels, ckpt_ids = local_ckpt(labels)
     broadcastable = _labels_broadcastable(graph)
-    for _ in range(rounds):
-        lsrc = labels.select(F.col("id").alias("src"), _h28(F.col("lab")).alias("h"))
-        if broadcastable:
-            lsrc = F.broadcast(lsrc)
-        sums = sym.join(lsrc, "src").groupBy("dst").agg(
-            F.sum("h").alias("ns")
-        ).select(F.col("dst").alias("id"), "ns")
-        nxt = labels.join(sums, "id", "left").select(
-            "id",
-            _h60(F.col("lab"), F.coalesce("ns", F.lit(0))).alias("lab"),
-        )
-        nxt, new_ids = local_ckpt(nxt)
-        free_local_ckpt(spark, ckpt_ids)
-        labels, ckpt_ids = nxt, new_ids
-    sym.unpersist()
-    return labels.select("id", F.col("lab").alias("wl"))
+    with ckpt_scope(spark) as cs:
+        cs.callback(sym.unpersist)
+        labels = cs.ckpt(labels)
+        for _ in range(rounds):
+            lsrc = labels.select(F.col("id").alias("src"), _h28(F.col("lab")).alias("h"))
+            if broadcastable:
+                lsrc = F.broadcast(lsrc)
+            sums = sym.join(lsrc, "src").groupBy("dst").agg(
+                F.sum("h").alias("ns")
+            ).select(F.col("dst").alias("id"), "ns")
+            nxt = cs.ckpt(labels.join(sums, "id", "left").select(
+                "id",
+                _h60(F.col("lab"), F.coalesce("ns", F.lit(0))).alias("lab"),
+            ))
+            cs.free(labels)
+            labels = nxt
+        return cs.keep(labels.select("id", F.col("lab").alias("wl")))

@@ -18,7 +18,12 @@ Layout under ``<dir>/``:
 
 Durable parquet (not ``localCheckpoint``) is used for the resumable
 checkpoints; the iterative loops additionally truncate lineage in-memory
-every superstep.
+every superstep with ``localCheckpoint``, and :func:`ckpt_scope` is the
+one owner of those blocks: a loop checkpoints through its scope, frees
+superseded state through it, and ``keep``s what its result reads; the
+scope releases everything else when the operator call exits, also on
+error. ``localCheckpoint()`` is called only here, so checkpoint jobs
+carry this module's call site.
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -65,42 +70,86 @@ def pinned_confs(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, old)
 
 
-def local_ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """``localCheckpoint()`` plus the storage-RDD ids it materialized.
-
-    ``DataFrame.unpersist()`` is a NO-OP for localCheckpoint storage
-    (the blocks live outside the cache manager), so an iterative loop
-    that rotates checkpointed state accumulates every superstep's
-    blocks until driver GC + ContextCleaner get around to them — at
-    ~100 MB+ per superstep that is an escalating-superstep-time leak.
-    The returned ids let :func:`free_local_ckpt` drop the blocks
-    deterministically.
-
-    Caveats: the id capture diffs ``getRDDStorageInfo`` around the
-    checkpoint, so it must not race concurrent persists on the same
-    driver (the superstep loops are sequential); and a freed
-    localCheckpoint is UNRECOVERABLE (its lineage was truncated) — only
-    free state that has been superseded, never the final result.
-    """
-    sc = df.sparkSession.sparkContext
-    before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+def _local_ckpt(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eager ``localCheckpoint()`` plus the id of the storage RDD it
+    materialized, read from the checkpoint's own plan (a ``LogicalRDD``
+    over the locally checkpointed RDD) — so an input the checkpoint job
+    computes and caches for the first time is never mistaken for it."""
     out = df.localCheckpoint()
-    after = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
-    return out, after - before
+    return out, out._jdf.queryExecution().analyzed().rdd().id()
 
 
-def free_local_ckpt(spark: SparkSession, ids: set[int]) -> None:
-    """Drop the storage blocks of a superseded :func:`local_ckpt`.
+def _free_local_ckpt(jsc, rid: int) -> None:
+    """Drop the storage blocks of a superseded checkpoint through
+    ``SparkContext.unpersistRDD`` (package-private in Scala, public in
+    bytecode): ``DataFrame.unpersist()`` is a NO-OP for localCheckpoint
+    storage, which lives outside the cache manager."""
+    try:
+        jsc.unpersistRDD(rid, False)
+    except Exception:  # pragma: no cover — already cleaned
+        pass
 
-    Goes through ``SparkContext.unpersistRDD`` (package-private in
-    Scala, public in bytecode) because no public DataFrame API releases
-    localCheckpoint blocks."""
-    jsc = spark.sparkContext._jsc.sc()
-    for rid in ids:
-        try:
-            jsc.unpersistRDD(rid, False)
-        except Exception:  # pragma: no cover — already cleaned
-            pass
+
+def _ckpt_reads(df: DataFrame) -> set[int]:
+    """Ids of the RDDs behind every ``LogicalRDD`` leaf of ``df``'s
+    analyzed plan (a checkpoint's plan is exactly one such leaf)."""
+    ids = set()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "LogicalRDD":
+            ids.add(leaf.rdd().id())
+    return ids
+
+
+class CkptScope(ExitStack):
+    """Owner of the localCheckpoint blocks an operator call creates.
+
+    ``ckpt`` takes an eager checkpoint the scope owns, ``free`` releases
+    superseded ones right away, ``keep`` marks the ones a returned frame
+    reads. On a normal exit every owned checkpoint that is not kept is
+    freed; on an error exit all of them are. Registered callbacks
+    (``callback``/``push``, from ``ExitStack``) run on both exits,
+    before the release. A freed checkpoint is unrecoverable (its lineage
+    was truncated), so free only state that has been superseded.
+    """
+
+    def __init__(self, spark: SparkSession):
+        super().__init__()
+        self._jsc = spark.sparkContext._jsc.sc()
+        self._owned: set[int] = set()
+        self._kept: set[int] = set()
+        self.push(self._release)
+
+    def ckpt(self, df: DataFrame) -> DataFrame:
+        out, rid = _local_ckpt(df)
+        self._owned.add(rid)
+        return out
+
+    def free(self, *dfs: DataFrame | None) -> None:
+        for df in dfs:
+            if df is None:
+                continue
+            for rid in _ckpt_reads(df) & self._owned:
+                self._owned.discard(rid)
+                _free_local_ckpt(self._jsc, rid)
+
+    def keep(self, *dfs: DataFrame):
+        for df in dfs:
+            self._kept |= _ckpt_reads(df) & self._owned
+        return dfs[0] if len(dfs) == 1 else dfs
+
+    def _release(self, exc_type, exc, tb) -> bool:
+        drop = self._owned if exc_type is not None else self._owned - self._kept
+        for rid in drop:
+            _free_local_ckpt(self._jsc, rid)
+        self._owned.clear()
+        return False
+
+
+def ckpt_scope(spark: SparkSession) -> CkptScope:
+    """``with ckpt_scope(spark) as cs:`` — see :class:`CkptScope`."""
+    return CkptScope(spark)
 
 
 class CheckpointManager:

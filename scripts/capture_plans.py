@@ -7,7 +7,7 @@ relational surface stays inside whole-stage codegen.
 
 import io
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, "/root/repo")
 
@@ -459,7 +459,7 @@ def _textrank_edges_plan(spark) -> str:
 
 def _truss_round_plan(spark) -> str:
     """One support-and-keep round of truss_decomposition, symbolically
-    (the loop itself truncates lineage per round via local_ckpt)."""
+    (the loop itself truncates lineage per round by checkpointing)."""
     from approximate_pagerank_public_spark.operators.triangles import (
         _triangles_of,
         canonical_edges,
@@ -483,7 +483,7 @@ def _truss_round_plan(spark) -> str:
 
 def _densest_round_plan(spark) -> str:
     """Round 0 of the densest-subgraph peel, un-checkpointed (the loop
-    truncates lineage per round via local_ckpt)."""
+    truncates lineage per round by checkpointing)."""
     from approximate_pagerank_public_spark.operators.densest import _NUM, _DEN
     from approximate_pagerank_public_spark.operators.triangles import (
         canonical_edges,
@@ -504,34 +504,34 @@ def _densest_round_plan(spark) -> str:
     return cap(bad)
 
 
-def _wl_round_plan(spark) -> str:
-    """One un-checkpointed WL round (same lineage-truncation stub as
-    the Louvain section)."""
-    import approximate_pagerank_public_spark.operators.wlhash as WL
+@contextmanager
+def _uncheckpointed():
+    """Stub the checkpoint scope's ``ckpt`` to the identity, so a loop's
+    in-round plan is not hidden behind a ``Scan ExistingRDD`` leaf."""
+    from approximate_pagerank_public_spark.plans.checkpoint import CkptScope
 
-    real_ckpt, real_free = WL.local_ckpt, WL.free_local_ckpt
-    WL.local_ckpt = lambda df: (df, set())
-    WL.free_local_ckpt = lambda _spark, _ids: None
+    real = CkptScope.ckpt
+    CkptScope.ckpt = lambda _self, df: df
     try:
-        g = E._graph(spark, SF)
-        return cap(WL.wl_refinement(g, rounds=1))
+        yield
     finally:
-        WL.local_ckpt, WL.free_local_ckpt = real_ckpt, real_free
+        CkptScope.ckpt = real
+
+
+def _wl_round_plan(spark) -> str:
+    """One un-checkpointed WL round."""
+    from approximate_pagerank_public_spark.operators.wlhash import wl_refinement
+
+    with _uncheckpointed():
+        return cap(wl_refinement(E._graph(spark, SF), rounds=1))
 
 
 def _louvain_round_plan(spark) -> str:
-    """One un-checkpointed local-move round (localCheckpoint truncates
-    lineage, hiding the in-loop plan behind a Scan ExistingRDD)."""
-    import approximate_pagerank_public_spark.operators.labelprop as LP
+    """One un-checkpointed local-move round."""
+    from approximate_pagerank_public_spark.operators.labelprop import louvain_rounds
 
-    real_ckpt, real_free = LP.local_ckpt, LP.free_local_ckpt
-    LP.local_ckpt = lambda df: (df, [])
-    LP.free_local_ckpt = lambda _spark, _ids: None
-    try:
-        g = E._graph(spark, SF)
-        return cap(LP.louvain_rounds(g, rounds=1))
-    finally:
-        LP.local_ckpt, LP.free_local_ckpt = real_ckpt, real_free
+    with _uncheckpointed():
+        return cap(louvain_rounds(E._graph(spark, SF), rounds=1))
 
 
 def _star_round_plan(spark) -> str:

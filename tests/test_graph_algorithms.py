@@ -67,6 +67,7 @@ def test_connected_components_star_mode_path_graph(spark):
     from approximate_pagerank_public_spark.operators.components import (
         _cc_star_distributed,
     )
+    from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 
     n = 600
     src = list(range(n - 1)) + [700]
@@ -84,7 +85,8 @@ def test_connected_components_star_mode_path_graph(spark):
     assert (star == gold).all()
     # round count: O(log n), far under the path's O(n) diameter
     und = g.undirected()
-    _, rounds = _cc_star_distributed(und)
+    with ckpt_scope(spark) as cs:
+        _, rounds = _cc_star_distributed(cs, und)
     und.unpersist()
     assert rounds <= 15
     g.unpersist()

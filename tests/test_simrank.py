@@ -2,6 +2,7 @@
 
 import numpy as np
 import pytest
+from pyspark.storagelevel import StorageLevel
 
 from approximate_pagerank_public_spark.operators.simrank import simrank
 
@@ -135,3 +136,24 @@ def test_simrank_auto_gate_raises(spark, edges, monkeypatch):
     # mc mode without pairs is an explicit error
     with pytest.raises(ValueError, match="pairs"):
         simrank(edges, mode="mc")
+
+
+def test_simrank_mc_releases_in_adjacency_cache(spark, edges, monkeypatch):
+    """Every frame simrank_mc persists (the ranked in-adjacency) is
+    unpersisted by the time the call returns: the result reads only its
+    final checkpoint."""
+    from approximate_pagerank_public_spark.operators.simrank import simrank_mc
+
+    frame_cls = type(edges)
+    cached = []
+    real = frame_cls.persist
+
+    def spy(self, *args, **kwargs):
+        cached.append(real(self, *args, **kwargs))
+        return cached[-1]
+
+    monkeypatch.setattr(frame_cls, "persist", spy)
+    pairs = spark.createDataFrame([(3, 4), (5, 6)], "a long, b long")
+    simrank_mc(edges, pairs, iters=3, num_fingerprints=4).collect()
+    assert cached
+    assert all(df.storageLevel == StorageLevel.NONE for df in cached)
