@@ -701,15 +701,16 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via the large-star/small-star O(log n)
-    alternation — same labels as min-prop, same recursive-CTE oracle."""
+    """Connected components on the distributed path, the
+    large-star/small-star O(log n) alternation — same labels as the
+    broadcast min-prop, same recursive-CTE oracle."""
     from approximate_pagerank_public_spark.operators.components import (
         connected_components,
     )
     from approximate_pagerank_public_spark.plans.graph import Graph
 
     g = _graph(spark, sf_dir)
-    return connected_components(g, mode="star").select("id", "component")
+    return connected_components(g, mode="distributed").select("id", "component")
 
 
 def q_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -61,12 +61,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.functions.sketch import ALPHA_M2, M
+from approximate_pagerank_public_spark.plans.blocks import shm_available
 from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
-
-BROADCAST_MAX_EDGES = 50_000_000
+from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
 
 # Flajolet small-range correction, tabulated so no engine evaluates ln():
 # LC_TABLE[z-1] = m * ln(m / z) for z = n_zero ∈ 1..256. repr() round-trips
@@ -426,7 +426,10 @@ def _sketch_contribs(store, state: DataFrame, shuffle_partitions: int) -> DataFr
     Python↔Arrow↔JVM shuffle round trip, same rationale as
     ``DistBlockStore.contribs``) → token-routed manifest shuffle →
     per-block scatter + tiled segment max.
-    ``state`` must expose (id, pids, sk)."""
+    ``state`` must expose (id, pids, sk). Shares the store's spill-dir
+    rule with ``DistBlockStore.contribs``: at most one unmaterialized
+    plan per store, since building one reclaims the previous plan's
+    messages."""
     import pyarrow as pa
 
     from approximate_pagerank_public_spark.plans.distblocks import (
@@ -594,24 +597,20 @@ def anf_hyperball(g: Graph, rounds: int = 4, mode: str = "auto") -> ANFResult:
     effective-diameter read-off."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    if mode == "auto":
-        if g.num_edges <= BROADCAST_MAX_EDGES:
-            mode = "broadcast"
-        else:
-            from approximate_pagerank_public_spark.plans.blocks import (
-                shm_available,
-            )
-
-            mode = "blocks" if shm_available(g.spark) else "packed"
+    # above the cutover: the block store where shm is there, else packed
+    mode = resolve_mode(
+        mode,
+        edges_fit(g),
+        ("broadcast", "blocks", "packed"),
+        above="blocks" if shm_available(g.spark) else "packed",
+    )
     if mode == "broadcast":
         src, dst, _w = g.edges_numpy()
         nf = anf_numpy(src, dst, g.num_vertices, rounds)
     elif mode == "blocks":
         nf = _anf_blocks(g, rounds)
-    elif mode == "packed":
-        nf = _anf_packed(g, rounds)
     else:
-        raise ValueError(f"unknown mode {mode!r}")
+        nf = _anf_packed(g, rounds)
     import pandas as pd
 
     pdf = pd.DataFrame(
@@ -659,10 +658,8 @@ def hyperball_harmonic(
     """``(id, h_micro_lcm)`` for every vertex: harmonic-centrality
     estimate scaled by 1e6·lcm(1..rounds) — exact BIGINT. Divide by
     that constant for the float value; ranking needs no division."""
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "packed"
     lcm = _lcm_upto(rounds)
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g), ("broadcast", "packed")) == "broadcast":
         src, dst, _w = g.edges_numpy()
         n = g.num_vertices
         regs = np.zeros((n, M), dtype=np.uint8)
@@ -689,8 +686,6 @@ def hyperball_harmonic(
         return g.spark.createDataFrame(pdf).select(
             "id", F.col("h").cast("long").alias("h_micro_lcm")
         )
-    if mode != "packed":
-        raise ValueError(f"unknown mode {mode!r}")
     # packed path: same rounds as _anf_packed, carrying (prev, h) columns
     import pyarrow as pa
 

@@ -33,8 +33,9 @@ no per-vertex fan-out beyond degree.  The subtree aggregation peels
 BFS levels bottom-up (depth rounds; depth ~ diameter on the web-scale
 graphs this engine targets).  Modes mirror ``connected_components``:
 ``broadcast`` keeps the O(V) level/parent/signature vectors on the
-driver (gated by ``BROADCAST_MAX_VERTICES``); ``distributed`` keeps
-all state in DataFrames, checkpointed in one ``ckpt_scope`` per call.
+driver (gated on vertex count, ``plans/modes.py``); ``distributed``
+keeps all state in DataFrames, checkpointed in one ``ckpt_scope`` per
+call.
 
 2-edge-connected components follow for free: drop the bridges and run
 the large-star/small-star CC over the surviving pair list
@@ -58,12 +59,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
-
-#: broadcast mode keeps three O(V) int64 vectors on the driver — same
-#: bound as the PageRank/CC broadcast path.
-from approximate_pagerank_public_spark.operators.pagerank import (  # noqa: E402
-    BROADCAST_MAX_VERTICES,
-)
+from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 
 
 def _h60(a: str, b: str):
@@ -233,12 +229,10 @@ def _bridge_parts(
     cs.callback(und.unpersist)
     n = und.num_vertices
     spark, p = graph.spark, und.num_partitions
-    if mode == "auto":
-        mode = (
-            "broadcast"
-            if n <= BROADCAST_MAX_VERTICES and und.blocks is not None
-            else "distributed"
-        )
+    # the driver path keeps three O(V) int64 vectors and relaxes levels
+    # on the CSR blocks
+    fits = state_fits(und)
+    mode = resolve_mode(mode, lambda: fits() and und.blocks is not None)
 
     if mode == "broadcast":
         lvl = _forest_levels_broadcast(und, max_iter)

@@ -36,6 +36,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
+from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
 
 _NO_NEIGHBOR = "~"  # sorts after every md5 hex digit
 
@@ -106,17 +107,12 @@ def greedy_coloring(
     """``((id, color), rounds)`` — a proper coloring of the symmetrized
     simple graph; colors are dense small ints starting at 0.
 
-    ``mode``: ``"driver"`` (one collect + Python kernel, small graphs),
-    ``"distributed"`` (per-round joins, the scale path), or ``"auto"``
-    (driver below :data:`COLORING_DRIVER_MAX_EDGES`)."""
+    ``mode``: ``"broadcast"`` (one collect + Python kernel, small
+    graphs), ``"distributed"`` (per-round joins, the scale path), or
+    ``"auto"`` (broadcast up to :data:`COLORING_DRIVER_MAX_EDGES`)."""
     spark = graph.spark
-    if mode == "auto":
-        mode = (
-            "driver"
-            if graph.num_edges <= COLORING_DRIVER_MAX_EDGES
-            else "distributed"
-        )
-    if mode == "driver":
+    fits = edges_fit(graph, COLORING_DRIVER_MAX_EDGES)
+    if resolve_mode(mode, fits) == "broadcast":
         src, dst, _w = graph.edges_numpy()
         colors, rounds = coloring_python(
             src.tolist(), dst.tolist(), graph.num_vertices, seed

@@ -1,21 +1,25 @@
-"""Weakly connected components via iterative min-label propagation.
+"""Weakly connected components: min-label propagation on the driver,
+large-star/small-star on the cluster.
 
 Mandated by the north rule (the reference's ``cc.gm`` is *closeness
-centrality*, not components — ``src/cpu/src/main/resources/cc.gm:1-28``;
-components here run on the same superstep machinery as PageRank with
-``min`` replacing ``sum``).
+centrality*, not components — ``src/cpu/src/main/resources/cc.gm:1-28``).
+Labels are component ids = the minimum vertex id in the component, over
+the symmetrized edge set.
 
-Semantics: every vertex starts labeled with its own id; each superstep
-every vertex takes the min of its own label and its neighbors' labels
-(over the symmetrized edge set); fixpoint labels are the component ids
-(= min vertex id in the component).
+Two paths, picked by ``plans/modes.py::resolve_mode`` on vertex count:
 
-Modes mirror ``pagerank``: an Arrow broadcast kernel
-(``np.minimum.reduceat`` over dst-sorted batches, one Spark job per
-superstep) and a distributed DataFrame mode (join + ``groupBy(dst).min``)
-for vertex states beyond driver memory. Iteration count is bounded by
-the graph diameter; at web scale, switch-to large-star/small-star is a
-known follow-up, noted in the module TODO.
+- ``broadcast`` — min-label propagation on the PageRank superstep
+  machinery with ``min`` replacing ``sum``: frontier-sparse relaxation
+  on the CSR blocks, else an Arrow kernel (``np.minimum.reduceat`` over
+  dst-sorted batches, one Spark job per superstep). O(diameter)
+  supersteps, each cheap while the label vector sits on the driver.
+- ``distributed`` — large-star/small-star (Kiveris et al., SoCC 2014):
+  O(log n) rounds of joins + ``groupBy``-min whatever the diameter,
+  with no state on the driver.
+
+:func:`pair_components` is the same cutover for an arbitrary pair list
+``(a, b)`` (near-duplicate clusters, clique-percolation stars): union-find
+on the driver for small lists, the star loop above that.
 """
 
 from __future__ import annotations
@@ -33,6 +37,12 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
+from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
+
+# Pair lists up to this size resolve by union-find on the driver: they
+# are the OUTPUT of a reduction (near-dup pairs, triangle stars), and the
+# star loop's per-round fixpoint jobs cost more than the whole scan.
+PAIR_CC_BROADCAST_MAX_PAIRS = 2_000_000
 
 _MIN_SCHEMA = StructType(
     [StructField("dst", LongType()), StructField("lbl", LongType())]
@@ -118,48 +128,14 @@ def _cc_broadcast(graph: Graph, max_iter: int) -> tuple[np.ndarray, int]:
     return labels, max_iter
 
 
-def _cc_distributed(
-    cs: CkptScope, graph: Graph, max_iter: int
-) -> tuple[DataFrame, int]:
-    p = graph.num_partitions
-    labels = graph.vertices.withColumn("label", F.col("id"))
-    labels = cs.ckpt(labels.repartition(p, "id"))
-    for it in range(1, max_iter + 1):
-        incoming = (
-            graph.edges.join(
-                labels.select(F.col("id").alias("src"), F.col("label")), "src"
-            )
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new = cs.ckpt(
-            labels.join(incoming, labels.id == incoming.dst, "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-            )
-            .repartition(p, "id")
-        )
-        changed = (
-            new.join(labels.withColumnRenamed("label", "_old"), "id")
-            .where(F.col("label") != F.col("_old"))
-            .count()
-        )
-        cs.free(labels)
-        labels = new
-        if changed == 0:
-            return labels, it
-    return labels, max_iter
-
-
 def _cc_star_distributed(
     cs: CkptScope, graph: Graph, max_rounds: int = 60
 ) -> tuple[DataFrame, int]:
     """Large-star/small-star alternation (Kiveris et al., "Connected
     Components in MapReduce and Beyond") — converges in O(log n) rounds
     regardless of diameter, where min-label propagation needs
-    O(diameter) supersteps (the r1 TODO: a path-shaped 100x graph is
-    the first place min-prop falls over).
+    O(diameter) supersteps (a path-shaped graph is the first place
+    min-prop falls over).
 
     Each round is joins + groupBy-min over the edge list — no
     collect_list, so hub neighborhoods never materialize in one task:
@@ -189,8 +165,8 @@ def star_components_edges(
 ) -> tuple[DataFrame, int]:
     """Large-star/small-star alternation over an arbitrary undirected
     pair list ``(a, b)`` — the :func:`_cc_star_distributed` core, shared
-    with non-graph callers (duplicate-cluster resolution runs it over
-    near-dup DOC pairs, ``operators/dedup.py::duplicate_clusters``).
+    with non-graph callers (:func:`pair_components`, and the bridge-free
+    pairs of ``biconnect.two_edge_components``).
 
     Round state is checkpointed in the caller's scope ``cs``; the final
     round's checkpoint is what ``roots`` reads, so the caller keeps it
@@ -265,33 +241,77 @@ def star_components_edges(
     return roots, rounds
 
 
+def pair_components(
+    cs: CkptScope,
+    pairs: DataFrame,
+    num_partitions: int,
+    mode: str = "auto",
+    max_rounds: int = 60,
+) -> DataFrame:
+    """``roots (a, r)`` of the undirected pair list ``pairs (a, b)``:
+    every non-root member maps to its component minimum (the driver path
+    maps the minima to themselves too), so callers resolve ids with
+    ``least(id, coalesce(r, id))``. ``broadcast``: union-find on the
+    driver, the roots ship back as one broadcast-size frame;
+    ``distributed``: the star loop in ``cs``. ``auto`` counts the pairs
+    against :data:`PAIR_CC_BROADCAST_MAX_PAIRS`."""
+
+    def few_pairs() -> bool:
+        # the count and the path's read would otherwise run the upstream
+        # pipeline twice
+        pairs.persist()
+        cs.callback(pairs.unpersist)
+        return pairs.count() <= PAIR_CC_BROADCAST_MAX_PAIRS
+
+    if resolve_mode(mode, few_pairs) == "distributed":
+        return star_components_edges(cs, pairs, num_partitions, max_rounds)[0]
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for row in pairs.select("a", "b").toLocalIterator():
+        a, b = int(row["a"]), int(row["b"])
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by MIN id so the representative is the component min
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    spark = pairs.sparkSession
+    rep_rows = [(x, find(x)) for x in parent]
+    if not rep_rows:
+        return spark.createDataFrame([], "a long, r long")
+    return F.broadcast(spark.createDataFrame(rep_rows, "a long, r long"))
+
+
 def connected_components(
     graph: Graph, max_iter: int = 200, mode: str = "auto"
 ) -> DataFrame:
     """``(id, component)`` over the symmetrized graph (weak components).
 
-    ``mode``: ``broadcast`` (Arrow min-label kernel, O(diameter)
-    supersteps), ``distributed`` (DataFrame min-prop twin), or ``star``
-    (large-star/small-star, O(log n) rounds — the path-graph-safe choice
-    for high-diameter graphs at any scale)."""
+    ``mode``: ``broadcast`` (min-label propagation, O(diameter)
+    supersteps of at most ``max_iter``) or ``distributed``
+    (large-star/small-star, O(log n) rounds — diameter-safe at any
+    scale); ``auto`` picks broadcast while the label vector fits."""
+    mode = resolve_mode(mode, state_fits(graph))
     und = graph.undirected()
-    if mode == "auto":
-        mode = "broadcast" if graph.num_vertices <= 100_000_000 else "distributed"
     with ckpt_scope(graph.spark) as cs:
         cs.callback(und.unpersist)
-        if mode == "star":
+        if mode == "distributed":
             labels_df, _ = _cc_star_distributed(cs, und)
             return cs.keep(labels_df)
-        if mode == "broadcast":
-            labels, _ = _cc_broadcast(und, max_iter)
-            import pandas as pd
+        labels, _ = _cc_broadcast(und, max_iter)
+        import pandas as pd
 
-            pdf = pd.DataFrame(
-                {"id": np.arange(len(labels), dtype=np.int64), "component": labels}
-            )
-            return graph.spark.createDataFrame(pdf)
-        labels_df, _ = _cc_distributed(cs, und, max_iter)
-        return cs.keep(labels_df.withColumnRenamed("label", "component"))
+        pdf = pd.DataFrame(
+            {"id": np.arange(len(labels), dtype=np.int64), "component": labels}
+        )
+        return graph.spark.createDataFrame(pdf)
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

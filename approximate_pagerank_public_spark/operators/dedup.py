@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from approximate_pagerank_public_spark.operators.components import pair_components
 from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 
 logger = logging.getLogger(__name__)
@@ -490,7 +491,6 @@ def duplicate_clusters(
     id_col: str = "doc_id",
     num_partitions: int | None = None,
     mode: str = "auto",
-    broadcast_max_pairs: int = 2_000_000,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into CLUSTERS and pick one keeper.
 
@@ -502,72 +502,28 @@ def duplicate_clusters(
     where ``rep_id`` is the cluster minimum and ``keep = (doc_id ==
     rep_id)``.
 
-    Two execution paths (the engine's usual cutover discipline):
+    Two execution paths (``components.py::pair_components``, the
+    engine's usual cutover discipline):
 
-    - ``broadcast`` (pair count <= ``broadcast_max_pairs``): collect the
-      pairs — they are the OUTPUT of a dedup pass, vastly smaller than
-      the corpus — and union-find on the driver; the rep map ships back
-      as one broadcast join. Near-dup pair sets are latency territory,
-      and the star loop's per-round fixpoint jobs cost more than the
-      whole union-find.
-    - ``star``: large-star/small-star over the pair list only
-      (``components.py::star_components_edges`` — O(log n) rounds, no
-      collect, diameter-safe for chained near-dup runs). The cluster
-      state never touches the driver.
+    - ``broadcast`` (pair count <=
+      ``components.PAIR_CC_BROADCAST_MAX_PAIRS``): collect the pairs —
+      they are the OUTPUT of a dedup pass, vastly smaller than the
+      corpus — and union-find on the driver; the rep map ships back as
+      one broadcast join. Near-dup pair sets are latency territory, and
+      the star loop's per-round fixpoint jobs cost more than the whole
+      union-find.
+    - ``distributed``: large-star/small-star over the pair list only
+      (O(log n) rounds, no collect, diameter-safe for chained near-dup
+      runs). The cluster state never touches the driver.
 
     Both paths end in ONE broadcast-size left join onto the corpus; the
     corpus itself is never shuffled. Paths are value-identical
     (parity-tested).
     """
     spark = docs.sparkSession
-    persisted = False
-    if mode == "auto":
-        # the count and the union-find read would otherwise recompute the
-        # whole upstream dedup pipeline twice
-        pairs = pairs.persist()
-        persisted = True
-        mode = "broadcast" if pairs.count() <= broadcast_max_pairs else "star"
+    p = num_partitions or spark.sparkContext.defaultParallelism
     with ckpt_scope(spark) as cs:
-        if mode == "broadcast":
-            parent: dict[int, int] = {}
-
-            def find(x: int) -> int:
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]  # path halving
-                    x = parent[x]
-                return x
-
-            for row in pairs.select("a", "b").toLocalIterator():
-                a, b = int(row["a"]), int(row["b"])
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union by MIN id so the representative is the cluster min
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            rep_rows = [(x, find(x)) for x in parent]
-            if persisted:
-                pairs.unpersist()
-            if rep_rows:
-                roots = F.broadcast(
-                    spark.createDataFrame(rep_rows, "a long, r long")
-                )
-            else:
-                roots = spark.createDataFrame([], "a long, r long")
-        elif mode == "star":
-            p = num_partitions or spark.sparkContext.defaultParallelism
-            from approximate_pagerank_public_spark.operators.components import (
-                star_components_edges,
-            )
-
-            roots, _rounds = star_components_edges(cs, pairs, p)
-            # the star loop has run to fixpoint (per-round signature jobs),
-            # so the cached pairs were fully consumed
-            if persisted:
-                pairs.unpersist()
-        else:
-            raise ValueError(f"unknown mode {mode!r}")
+        roots = pair_components(cs, pairs, p, mode)
         d = docs.select(F.col(id_col).cast("long").alias("doc_id"))
         out = d.join(roots, d["doc_id"] == roots["a"], "left").select(
             "doc_id",

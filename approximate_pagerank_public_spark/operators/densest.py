@@ -52,8 +52,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
-
-BROADCAST_MAX_EDGES = 50_000_000
+from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
 
 # threshold constant: remove iff 4*deg*v_r <= 9*e_r  (i.e. 1+eps = 9/8)
 _NUM, _DEN = 9, 4
@@ -211,15 +210,9 @@ def _densest_distributed(g: Graph) -> DensestResult:
 
 def densest_subgraph(g: Graph, mode: str = "auto") -> DensestResult:
     """Greedy-peel densest subgraph (2(1+eps)-approx, 1+eps = 9/8)."""
-    if mode == "auto":
-        mode = (
-            "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-        )
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g)) == "broadcast":
         return _densest_broadcast(g)
-    if mode == "distributed":
-        return _densest_distributed(g)
-    raise ValueError(f"unknown mode {mode!r}")
+    return _densest_distributed(g)
 
 
 # ------------------------------------------------------------------- oracle

@@ -40,12 +40,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
-
-# Above this the one-off driver Arrow collect of (src, dst) stops being
-# cheap relative to the join path; same order of magnitude as the
-# measured PageRank cutover (pagerank.py::BROADCAST_MAX_VERTICES) but
-# keyed on edges because HITS state here is O(E) on the driver.
-BROADCAST_MAX_EDGES = 50_000_000
+from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
 
 
 @dataclass
@@ -131,15 +126,10 @@ def hits(g: Graph, max_iter: int = 8, mode: str = "auto") -> HitsResult:
     """Kleinberg HITS, fixed ``max_iter`` power iterations (the same
     iteration-budget approximation knob as the reference's PageRank,
     ``options.hpp:20``)."""
-    if mode == "auto":
-        m = g.num_edges
-        mode = "broadcast" if m <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g)) == "broadcast":
         df = _hits_broadcast(g, max_iter)
-    elif mode == "distributed":
-        df = _hits_distributed(g, max_iter)
     else:
-        raise ValueError(f"unknown mode {mode!r}")
+        df = _hits_distributed(g, max_iter)
     return HitsResult(iterations=max_iter, _df=df)
 
 
@@ -161,9 +151,7 @@ def eigenvector_centrality(
     the cluster, both half-step shuffles are map-side-combinable.
     """
     spark = g.spark
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g)) == "broadcast":
         src, dst, _w = g.edges_numpy()
         n = g.num_vertices
         x = np.ones(n, dtype=np.float64)
@@ -178,8 +166,6 @@ def eigenvector_centrality(
             pd.DataFrame({"id": np.arange(n, dtype=np.int64), "eig": x}),
             "id long, eig double",
         )
-    if mode != "distributed":
-        raise ValueError(f"unknown mode {mode!r}")
     edges = g.edges.select("src", "dst")
     verts = g.vertices
     with ckpt_scope(spark) as cs:
@@ -203,22 +189,14 @@ def katz_centrality(
     CTE chain and 1e-6 truncation absorbs per-dst sum-order drift (the
     ``pagerank_fixed8`` discipline).
 
-    ``broadcast`` runs the NumPy COO loop on the driver below
-    ``BROADCAST_MAX_VERTICES``; ``distributed`` is the per-iteration
+    ``broadcast`` runs the NumPy COO loop on the collected edge arrays
+    below ``BROADCAST_MAX_EDGES``; ``distributed`` is the per-iteration
     join + hash-agg twin with checkpoint-scope rotation (bit-parity
     tested). β must stay below 1/λ_max for the series to mean anything;
     the truncated iteration is defined (and replayable) for any β.
     """
-    from approximate_pagerank_public_spark.operators.pagerank import (
-        BROADCAST_MAX_VERTICES,
-    )
-
     spark = g.spark
-    if mode == "auto":
-        mode = (
-            "broadcast" if g.num_vertices <= BROADCAST_MAX_VERTICES else "distributed"
-        )
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g)) == "broadcast":
         src, dst, _w = g.edges_numpy()
         n = g.num_vertices
         x = np.ones(n, dtype=np.float64)
@@ -233,8 +211,6 @@ def katz_centrality(
             pd.DataFrame({"id": np.arange(n, dtype=np.int64), "katz": x}),
             "id long, katz double",
         )
-    if mode != "distributed":
-        raise ValueError(f"unknown mode {mode!r}")
     verts = g.vertices.select("id")
     x = verts.select("id", F.lit(1.0).alias("x"))
     with ckpt_scope(spark) as cs:
@@ -284,9 +260,7 @@ def salsa(g: Graph, max_iter: int = 8, mode: str = "auto") -> DataFrame:
     cluster, and both degree tables are O(V) side inputs computed once.
     """
     spark = g.spark
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g)) == "broadcast":
         src, dst, _w = g.edges_numpy()
         n = g.num_vertices
         outdeg = np.zeros(n, dtype=np.float64)
@@ -312,8 +286,6 @@ def salsa(g: Graph, max_iter: int = 8, mode: str = "auto") -> DataFrame:
             ),
             "id long, hub double, authority double",
         )
-    if mode != "distributed":
-        raise ValueError(f"unknown mode {mode!r}")
     edges = g.edges.select("src", "dst")
     outdeg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("d")

@@ -51,10 +51,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
-
-# Same order of magnitude as hits.py: above this the one-off driver
-# Arrow collect of the canonical edge list stops being cheap.
-BROADCAST_MAX_EDGES = 50_000_000
+from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
 
 
 @dataclass
@@ -147,9 +144,7 @@ def k_core(g: Graph, k: int, mode: str = "auto") -> KCoreResult:
     with their within-core degree. Simultaneous-removal rounds."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g)) == "broadcast":
         ids, core_deg, rounds = _kcore_broadcast(g, k)
         import pandas as pd
 
@@ -159,10 +154,8 @@ def k_core(g: Graph, k: int, mode: str = "auto") -> KCoreResult:
         else:
             df = g.spark.createDataFrame(pdf)
         return KCoreResult(k=k, rounds=rounds, _df=df)
-    if mode == "distributed":
-        df, rounds = _kcore_distributed(g, k)
-        return KCoreResult(k=k, rounds=rounds, _df=df)
-    raise ValueError(f"unknown mode {mode!r}")
+    df, rounds = _kcore_distributed(g, k)
+    return KCoreResult(k=k, rounds=rounds, _df=df)
 
 
 # ----------------------------------------------------------- onion layers
@@ -252,9 +245,7 @@ def peel_layers(g: Graph, k: int, mode: str = "auto") -> tuple[DataFrame, int]:
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g)) == "broadcast":
         src, dst, n = _sym_arrays(g)
         ids, layers, rounds = peel_layers_numpy(src, dst, n, k)
         import pandas as pd
@@ -265,9 +256,7 @@ def peel_layers(g: Graph, k: int, mode: str = "auto") -> tuple[DataFrame, int]:
         else:
             df = g.spark.createDataFrame(pdf)
         return df, rounds
-    if mode == "distributed":
-        return _peel_layers_distributed(g, k)
-    raise ValueError(f"unknown mode {mode!r}")
+    return _peel_layers_distributed(g, k)
 
 
 # --------------------------------------------------------- H-index coreness
@@ -354,9 +343,7 @@ def _coreness_distributed(g: Graph) -> tuple[DataFrame, int]:
 def core_numbers(g: Graph, mode: str = "auto") -> CorenessResult:
     """Coreness of every vertex via the H-index iteration (converges to
     the k-core decomposition; isolated vertices get 0)."""
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g)) == "broadcast":
         c, rounds = _coreness_broadcast(g)
         import pandas as pd
 
@@ -364,7 +351,5 @@ def core_numbers(g: Graph, mode: str = "auto") -> CorenessResult:
             pd.DataFrame({"id": np.arange(len(c), dtype=np.int64), "core": c})
         )
         return CorenessResult(rounds=rounds, _df=df)
-    if mode == "distributed":
-        df, rounds = _coreness_distributed(g)
-        return CorenessResult(rounds=rounds, _df=df)
-    raise ValueError(f"unknown mode {mode!r}")
+    df, rounds = _coreness_distributed(g)
+    return CorenessResult(rounds=rounds, _df=df)

@@ -33,6 +33,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
+from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 
 _VOTE_SCHEMA = StructType(
     [
@@ -126,17 +127,10 @@ def _lpa_broadcast(graph: Graph, und: Graph, max_iter: int) -> np.ndarray:
 def label_propagation(graph: Graph, max_iter: int = 10, mode: str = "auto") -> DataFrame:
     """``(id, label)`` after ``max_iter`` synchronous rounds (early-stops
     on a fixpoint). ``mode``: 'broadcast' (driver-held labels, one
-    shuffle-free job/round), 'dataframe' (state stays on the cluster),
+    shuffle-free job/round), 'distributed' (state stays on the cluster),
     'auto' picks by vertex count like ``pagerank``."""
-    from approximate_pagerank_public_spark.operators.pagerank import (
-        BROADCAST_MAX_VERTICES,
-    )
-
+    mode = resolve_mode(mode, state_fits(graph))
     und = graph.undirected()
-    if mode == "auto":
-        mode = (
-            "broadcast" if graph.num_vertices <= BROADCAST_MAX_VERTICES else "dataframe"
-        )
     with ckpt_scope(graph.spark) as cs:
         cs.callback(und.unpersist)
         if mode == "broadcast":

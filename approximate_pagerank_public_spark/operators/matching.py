@@ -34,8 +34,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
-
-BROADCAST_MAX_EDGES = 50_000_000
+from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
 
 
 def _prio_col():
@@ -133,12 +132,8 @@ def _matching_distributed(g: Graph, max_rounds: int = 200) -> DataFrame:
 def maximal_matching(g: Graph, mode: str = "auto") -> DataFrame:
     """``(u, v)`` — the deterministic maximal matching (each vertex in
     ≤ 1 edge; no remaining edge has both endpoints free)."""
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "distributed":
+    if resolve_mode(mode, edges_fit(g)) == "distributed":
         return _matching_distributed(g)
-    if mode != "broadcast":
-        raise ValueError(f"unknown mode {mode!r}")
     pdf = canonical_edges(g).select("u", "v", _prio_col().alias("h")).toPandas()
     import pandas as pd
 

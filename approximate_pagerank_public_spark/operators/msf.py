@@ -49,8 +49,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
-
-BROADCAST_MAX_EDGES = 50_000_000
+from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
 
 
 def undirected_weighted_edges(g: Graph) -> DataFrame:
@@ -156,12 +155,8 @@ def _msf_distributed(g: Graph) -> DataFrame:
 
 def minimum_spanning_forest(g: Graph, mode: str = "auto") -> DataFrame:
     """``(u, v, w)`` — the unique MSF under the (w, u, v) order."""
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "distributed":
+    if resolve_mode(mode, edges_fit(g)) == "distributed":
         return _msf_distributed(g)
-    if mode != "broadcast":
-        raise ValueError(f"unknown mode {mode!r}")
     pdf = undirected_weighted_edges(g).toPandas()
     if not len(pdf):
         return g.spark.createDataFrame([], "u long, v long, w double")
@@ -228,14 +223,10 @@ def affinity_clusters(g: Graph, rounds: int = 2, mode: str = "auto") -> DataFram
     ``(id, cluster)`` with cluster = min vertex id in the cluster."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "distributed":
+    if resolve_mode(mode, edges_fit(g)) == "distributed":
         with ckpt_scope(g.spark) as cs:
             _forest, labels = _boruvka_distributed(cs, g, rounds)
             return cs.keep(labels.select("id", F.col("lab").alias("cluster")))
-    if mode != "broadcast":
-        raise ValueError(f"unknown mode {mode!r}")
     pdf = undirected_weighted_edges(g).toPandas()
     import pandas as pd
 

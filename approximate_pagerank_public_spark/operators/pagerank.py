@@ -27,7 +27,8 @@ PPR are its S=1 cases) behind one dispatcher, with two execution paths:
   CSR blocks with packed message shuffles and vectorized NumPy kernels
   (``plans/distblocks.py``). The recommended path at 10^12-turn scale.
 - ``mode='auto'`` picks ``broadcast`` while the driver state
-  ``num_vertices · S`` stays within :data:`BROADCAST_MAX_VERTICES`.
+  ``num_vertices · S`` stays within
+  ``plans/modes.py::BROADCAST_MAX_VERTICES``.
 
 Every superstep appends to the iteration-metrics series
 ``(iter, l1_err, sq_l2_err, dangling_sum, wall_ms)`` — the reference's
@@ -51,17 +52,9 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     pinned_confs,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
+from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 
-# Mode-selection cutover, MEASURED at the protocol-max graph
-# (BENCH_SCALING.json `distributed-twin/ppr-supersteps*` rows, |E|=1e8):
-# the single-host barrier/block path sustains ~1.1B edge-traversals/s
-# while the cluster-state paths reach 51-216M on the same box, so on ONE
-# node broadcast mode wins whenever driver state fits. The PageRank family
-# gates on state cells (vertices × sources, ~0.8 GB of f64 at this
-# threshold); the other families that import it gate on vertices.
-BROADCAST_MAX_VERTICES = 100_000_000
-
-MODES = ("auto", "broadcast", "distributed-arrow")
+PATHS = ("broadcast", "distributed-arrow")
 
 try:  # job/scheduling failures surface as Py4J errors in classic PySpark
     from py4j.protocol import Py4JError
@@ -538,18 +531,6 @@ def _run_distributed_arrow(
     )
 
 
-def _pick_mode(graph: Graph, mode: str, num_sources: int) -> str:
-    """Resolve ``mode`` for an S-source run; unknown modes raise."""
-    if mode not in MODES:
-        raise ValueError(f"unknown mode {mode!r}; expected one of {MODES}")
-    if mode != "auto":
-        return mode
-    # the broadcast path holds S×N f64 on the driver
-    if graph.num_vertices * num_sources <= BROADCAST_MAX_VERTICES:
-        return "broadcast"
-    return "distributed-arrow"
-
-
 def _run(
     graph: Graph,
     sources: list[int] | None,
@@ -566,7 +547,8 @@ def _run(
     """The one PageRank-family dispatcher; ``sources=None`` is global
     PageRank (S=1, uniform teleport)."""
     num_sources = 1 if sources is None else len(sources)
-    if _pick_mode(graph, mode, num_sources) == "broadcast":
+    # the broadcast path holds S×N f64 on the driver
+    if resolve_mode(mode, state_fits(graph, num_sources), PATHS) == "broadcast":
         run = _run_broadcast
     else:
         run = _run_distributed_arrow

@@ -60,8 +60,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
-
-BROADCAST_MAX_EDGES = 50_000_000
+from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
 
 
 @dataclass
@@ -202,14 +201,10 @@ def approx_ppr_push(
 ) -> PushResult:
     """Approximate single-source PPR by synchronous forward push. See
     module docstring for semantics and the approximation guarantee."""
-    if mode == "auto":
-        mode = "broadcast" if g.num_edges <= BROADCAST_MAX_EDGES else "distributed"
-    if mode == "broadcast":
+    if resolve_mode(mode, edges_fit(g)) == "broadcast":
         df, rounds, converged = _push_broadcast(g, source, alpha, eps, max_rounds)
-    elif mode == "distributed":
-        df, rounds, converged = _push_distributed(g, source, alpha, eps, max_rounds)
     else:
-        raise ValueError(f"unknown mode {mode!r}")
+        df, rounds, converged = _push_distributed(g, source, alpha, eps, max_rounds)
     return PushResult(rounds=rounds, converged=converged, _df=df)
 
 

@@ -52,6 +52,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
+from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 
 from approximate_pagerank_public_spark.plans.blocks import REV_BLOCKS_MIN_EDGES
 
@@ -443,17 +444,7 @@ def strongly_connected_components(graph: Graph, mode: str = "auto") -> DataFrame
 
     ``mode``: ``broadcast`` (driver-resident arrays, Arrow kernels) or
     ``distributed`` (DataFrame joins, state on-cluster)."""
-    from approximate_pagerank_public_spark.operators.pagerank import (
-        BROADCAST_MAX_VERTICES,
-    )
-
-    if mode == "auto":
-        mode = (
-            "broadcast"
-            if graph.num_vertices <= BROADCAST_MAX_VERTICES
-            else "distributed"
-        )
-    if mode == "broadcast":
+    if resolve_mode(mode, state_fits(graph)) == "broadcast":
         import pandas as pd
 
         labels = _scc_broadcast(graph)
@@ -531,18 +522,8 @@ def bowtie_decomposition(graph: Graph, mode: str = "auto") -> DataFrame:
     reachability passes (forward + on the reversed graph), one weak-CC
     pass, then a single codegen'd CASE projection.  Modes mirror
     ``strongly_connected_components``."""
-    from approximate_pagerank_public_spark.operators.pagerank import (
-        BROADCAST_MAX_VERTICES,
-    )
-
     spark, p = graph.spark, graph.num_partitions
-    if mode == "auto":
-        mode = (
-            "broadcast"
-            if graph.num_vertices <= BROADCAST_MAX_VERTICES
-            else "distributed"
-        )
-    if mode == "broadcast":
+    if resolve_mode(mode, state_fits(graph)) == "broadcast":
         import pandas as pd
 
         from approximate_pagerank_public_spark.operators.components import (
@@ -604,7 +585,7 @@ def bowtie_decomposition(graph: Graph, mode: str = "auto") -> DataFrame:
         bwd = _reach_distributed(cs, rev_e, seeds, p).select(
             "id", F.lit(True).alias("bwd")
         )
-        wcc = connected_components(graph, mode="star")
+        wcc = connected_components(graph, mode="distributed")
         corewc = int(
             wcc.join(seeds.orderBy("id").limit(1), "id").first()["component"]
         )

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.checkpoint import ckpt_scope
+from ..plans.modes import resolve_mode
 
 #: beyond this vertex count the exact Θ(V²)-pair iteration is gated off:
 #: `simrank` raises unless the caller either forces mode='exact' or
@@ -68,21 +69,6 @@ def simrank(
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    if mode not in ("auto", "exact", "mc"):
-        raise ValueError(f"unknown mode {mode!r}")
-    if mode == "mc" or (mode == "auto" and pairs is not None):
-        if pairs is None:
-            raise ValueError("mode='mc' needs candidate `pairs` (a, b)")
-        return simrank_mc(
-            edges,
-            pairs,
-            iters=iters,
-            c=c,
-            num_fingerprints=num_fingerprints,
-            seed=seed,
-            src_col=src_col,
-            dst_col=dst_col,
-        )
     spark = edges.sparkSession
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -93,15 +79,29 @@ def simrank(
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    if mode == "auto":
-        nv = verts.count()
-        if nv > EXACT_MAX_VERTICES:
+    mode = resolve_mode(
+        mode,
+        lambda: pairs is None and verts.count() <= EXACT_MAX_VERTICES,
+        ("exact", "mc"),
+    )
+    if mode == "mc":
+        if pairs is None:
             raise ValueError(
-                f"all-pairs SimRank over {nv} vertices exceeds the exact-"
-                f"path gate ({EXACT_MAX_VERTICES}); pass candidate `pairs`"
-                " for the Fogaras-Racz MC estimator (mode='mc'), or force"
-                " mode='exact' if you really want Θ(V²) pair state"
+                "mode='mc' needs candidate `pairs` (a, b); `auto` picks it for"
+                f" graphs beyond the exact-path gate ({EXACT_MAX_VERTICES}"
+                " vertices) — force mode='exact' if you really want Θ(V²)"
+                " pair state"
             )
+        return simrank_mc(
+            edges,
+            pairs,
+            iters=iters,
+            c=c,
+            num_fingerprints=num_fingerprints,
+            seed=seed,
+            src_col=src_col,
+            dst_col=dst_col,
+        )
 
     def _project(counts: DataFrame) -> DataFrame:
         # pinned association: (C · t) / (dᵃ·dᵇ) — integers exact, one division

@@ -46,6 +46,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
+from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 
 _DIST_SCHEMA = StructType(
     [StructField("dst", LongType()), StructField("dist", DoubleType())]
@@ -198,18 +199,8 @@ def sssp(
     ``mode``: ``broadcast`` (Arrow min-plus kernel, driver-resident
     vector) or ``distributed`` (DataFrame frontier joins, state never
     leaves the cluster). ``auto`` picks by vertex count like PageRank."""
-    from approximate_pagerank_public_spark.operators.pagerank import (
-        BROADCAST_MAX_VERTICES,
-    )
-
     sources = [source] if isinstance(source, int) else list(source)
-    if mode == "auto":
-        mode = (
-            "broadcast"
-            if graph.num_vertices <= BROADCAST_MAX_VERTICES
-            else "distributed"
-        )
-    if mode == "broadcast":
+    if resolve_mode(mode, state_fits(graph)) == "broadcast":
         d, _rounds, converged = _sssp_broadcast(graph, sources, max_iter)
         if not converged:
             import warnings

@@ -470,7 +470,6 @@ def edge_support(graph: Graph, orientation: str = "id") -> DataFrame:
 def clique_percolation(
     graph: Graph,
     max_rounds: int = 60,
-    broadcast_max_pairs: int = 2_000_000,
 ) -> DataFrame:
     """k=3 clique percolation communities (CPM — Palla, Derényi, Farkas
     & Vicsek, Nature 2005): two triangles belong to one community iff
@@ -487,11 +486,11 @@ def clique_percolation(
     per-edge MIN-STAR (every triangle on edge e links to e's minimum
     key: component-identical to the full Σ t_e² adjacency, but LINEAR
     in the edge→triangle postings), and the component labels come from
-    the same large-star/small-star loop as every other pair-list CC
-    (``components.star_components_edges``, O(log n) rounds, nothing on
-    the driver).
+    the pair-list CC every other caller uses
+    (``components.pair_components``: union-find on the driver for small
+    star sets, else the O(log n)-round large-star/small-star loop).
     """
-    from .components import star_components_edges
+    from .components import pair_components
 
     with ckpt_scope(graph.spark) as cs:
         e = canonical_edges(graph)
@@ -517,40 +516,8 @@ def clique_percolation(
             .select(F.col("tid").alias("a"), F.col("m").alias("b"))
             .distinct()
         )
-        spark = e.sparkSession
-        # same cutover discipline as dedup.duplicate_clusters: the star
-        # pairs are the OUTPUT of the reduction (≤ one per posting row) —
-        # small sets union-find on the driver (the star loop's per-round
-        # fixpoint jobs cost more than the whole scan), big sets run the
-        # distributed star loop
-        stars = stars.persist()
-        if stars.count() <= broadcast_max_pairs:
-            parent: dict = {}
-
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for row in stars.select("a", "b").toLocalIterator():
-                a, b = int(row["a"]), int(row["b"])
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            stars.unpersist()
-            rep_rows = [(x, find(x)) for x in parent]
-            if rep_rows:
-                roots = F.broadcast(spark.createDataFrame(rep_rows, "a long, r long"))
-            else:
-                roots = spark.createDataFrame([], "a long, r long")
-        else:
-            p = max(int(spark.sparkContext.defaultParallelism), 8)
-            roots, _rounds = star_components_edges(cs, stars, p, max_rounds)
-            stars.unpersist()
+        p = max(int(e.sparkSession.sparkContext.defaultParallelism), 8)
+        roots = pair_components(cs, stars, p, max_rounds=max_rounds)
         out = trik.join(roots, trik["tid"] == roots["a"], "left").select(
             trik["a"].alias("a"),
             "b",

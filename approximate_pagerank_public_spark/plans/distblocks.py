@@ -290,6 +290,12 @@ class DistBlockStore:
         shuffle (≤ P rows per state partition, binary payload) → block
         SpMV (mmap-cached CSR, L2-tiled NumPy) — plus, for skew-salted
         layouts whose blocks share dsts, a final partial+final hash agg.
+
+        At most ONE unmaterialized contribs plan may exist per store:
+        building a plan reclaims the previous plan's spill dir, so an
+        earlier plan evaluated after that (or two loops interleaving on
+        one store) fails on its missing message files. Materialize each
+        plan (checkpoint its consumer) before building the next.
         """
         s = n_sources
         cols = [f"r{i}" for i in range(s)]

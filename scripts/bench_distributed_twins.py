@@ -10,7 +10,9 @@ skew 0.1):
 - multi-PPR supersteps in ``mode='distributed-arrow'`` (message-shuffle
   block path, state never leaves the cluster) at two parallelism levels
   -> the path's own N->4N scaling efficiency;
-- connected components, distributed min-prop and star modes;
+- connected components on the distributed (large-star/small-star)
+  path; the ``distributed-twin/cc-distributed`` rows already there
+  measured the min-prop DataFrame path, since deleted;
 - 50-source BFS through the DataFrame twin (``multi_source_bfs``);
 - warm single-source block BFS (the missing PGX head-to-head point).
 
@@ -247,13 +249,12 @@ def main() -> None:
             flush()
             return
 
-    # 2. connected components, both distributed modes (32 cores)
-    for mode in ("distributed", "star"):
-        rec(
-            f"cc-{mode}",
-            "DataFrame-only components at the protocol-max graph",
-            run_worker("cc", 32, v, e, to, ccmode=mode),
-        )
+    # 2. connected components, the distributed (star) path (32 cores)
+    rec(
+        "cc-star",
+        "DataFrame-only components at the protocol-max graph",
+        run_worker("cc", 32, v, e, to, ccmode="distributed"),
+    )
 
     # 3. 50-source BFS through the DataFrame twin (32 cores)
     rec(

@@ -1,9 +1,10 @@
 """spark-submit entry point: PageRank / PPR / CC / LPA / triangles over a
 transcript table, with durable checkpointing and resume.
 
-Ship as:
+Ship as (build the zip with ``bash scripts/package.sh`` first; it is
+not checked in):
 
-    scripts/package.sh
+    bash scripts/package.sh
     spark-submit --py-files dist/approximate_pagerank_public_spark.zip \\
         scripts/run_pagerank_job.py \\
         --transcripts <parquet-or-iceberg-path> \\
@@ -59,7 +60,7 @@ def main(argv: list[str] | None = None) -> int:
         "--mode",
         default="auto",
         help="pagerank family: auto|broadcast|distributed-arrow; "
-        "others (cc, scc, sssp, ...): auto|broadcast|distributed; cc also: star",
+        "others (cc, scc, sssp, ...): auto|broadcast|distributed",
     )
     p.add_argument(
         "--no-dangling-norm",

@@ -75,13 +75,13 @@ CASES = {
     "dedup": lambda g: dedup.duplicate_clusters(
         g.spark.range(6).select(F.col("id").alias("doc_id")),
         g.spark.createDataFrame([(1, 2), (2, 3), (4, 5)], "a long, b long"),
-        mode="star",
+        mode="distributed",
     ),
     "densest": lambda g: densest.densest_subgraph(g, mode="distributed")._df,
     "graphstats": lambda g: graphstats.attack_tolerance(g, ks=(0, 1)),
     "hits": lambda g: hits.hits(g, max_iter=3, mode="distributed").scores(),
     "kcore": lambda g: kcore.peel_layers(g, 2, mode="distributed")[0],
-    "labelprop": lambda g: labelprop.label_propagation(g, max_iter=3, mode="dataframe"),
+    "labelprop": lambda g: labelprop.label_propagation(g, max_iter=3, mode="distributed"),
     "matching": lambda g: matching.maximal_matching(g, mode="distributed"),
     "mis": lambda g: mis.maximal_independent_set(g).labels,
     "msf": lambda g: msf.minimum_spanning_forest(g, mode="distributed"),

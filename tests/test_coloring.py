@@ -17,7 +17,7 @@ def test_coloring_distributed_matches_python_replay(g_rand):
 
 
 def test_coloring_driver_distributed_parity(g_rand):
-    d_df, d_rounds = greedy_coloring(g_rand, mode="driver")
+    d_df, d_rounds = greedy_coloring(g_rand, mode="broadcast")
     x_df, x_rounds = greedy_coloring(g_rand, mode="distributed")
     assert d_rounds == x_rounds
     d = {(r["id"], r["color"]) for r in d_df.collect()}

@@ -263,7 +263,7 @@ def test_duplicate_clusters_broadcast_star_parity(spark):
     )
     b = sorted(
         (r["doc_id"], r["rep_id"], r["keep"])
-        for r in duplicate_clusters(docs, pairs, mode="star").collect()
+        for r in duplicate_clusters(docs, pairs, mode="distributed").collect()
     )
     assert a == b
     got = {d: rep for d, rep, _ in a}

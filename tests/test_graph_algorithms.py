@@ -59,9 +59,9 @@ def test_connected_components_distributed_parity(spark):
 
 
 def test_connected_components_star_mode_path_graph(spark):
-    """Large-star/small-star must agree with min-prop on a 600-vertex
-    path — the diameter-bound worst case — while converging in O(log n)
-    rounds instead of O(n) supersteps."""
+    """The distributed path (large-star/small-star) must match the
+    golden labels on a 600-vertex path — the diameter-bound worst case —
+    while converging in O(log n) rounds instead of O(n) supersteps."""
     import numpy as np
 
     from approximate_pagerank_public_spark.operators.components import (
@@ -74,7 +74,7 @@ def test_connected_components_star_mode_path_graph(spark):
     dst = list(range(1, n)) + [701]
     g = Graph.from_edge_arrays(spark, src, dst, num_vertices=702, num_partitions=4)
     star = (
-        connected_components(g, mode="star")
+        connected_components(g, mode="distributed")
         .toPandas()
         .sort_values("id")["component"]
         .to_numpy()
@@ -100,7 +100,7 @@ def test_connected_components_star_matches_broadcast(g_rand):
         .to_numpy()
     )
     b = (
-        connected_components(g_rand, mode="star")
+        connected_components(g_rand, mode="distributed")
         .toPandas()
         .sort_values("id")["component"]
         .to_numpy()

@@ -2,7 +2,6 @@
 reference's CPU-vs-FPGA validation bar)."""
 
 import numpy as np
-import pytest
 
 from approximate_pagerank_public_spark.functions import golden
 from approximate_pagerank_public_spark.functions.metrics import evaluate_ranking
@@ -78,29 +77,20 @@ def test_multi_ppr_matches_golden(g_rand):
     assert np.allclose(res.ranks_np, gold, atol=1e-6)
 
 
-@pytest.mark.parametrize("mode", ["distributed", "brodcast"])
-def test_unknown_mode_raises(g5, mode):
-    """Removed or misspelled modes fail loudly instead of silently
-    running some other path."""
-    calls = [
-        lambda: pagerank(g5, mode=mode),
-        lambda: personalized_pagerank(g5, 2, mode=mode),
-        lambda: multi_ppr(g5, [0, 2], mode=mode),
-    ]
-    for call in calls:
-        with pytest.raises(ValueError, match="distributed-arrow"):
-            call()
-
-
-def test_auto_mode_gates_broadcast_on_vertices_times_sources():
+def test_auto_mode_gates_broadcast_on_vertices_times_sources(monkeypatch):
     """The broadcast path holds S×N f64 on the driver, so `auto` gates on
     N·S: 1.25e7 vertices × 8 sources sit exactly on the cutover."""
     from types import SimpleNamespace
 
-    from approximate_pagerank_public_spark.operators.pagerank import _pick_mode
+    from approximate_pagerank_public_spark.operators import pagerank as pr
+
+    monkeypatch.setattr(pr, "_run_broadcast", lambda *a, **k: "broadcast")
+    monkeypatch.setattr(
+        pr, "_run_distributed_arrow", lambda *a, **k: "distributed-arrow"
+    )
 
     def pick(n, s):
-        return _pick_mode(SimpleNamespace(num_vertices=n), "auto", s)
+        return multi_ppr(SimpleNamespace(num_vertices=n), list(range(s)))
 
     assert pick(12_500_000, 8) == "broadcast"
     assert pick(12_500_001, 8) == "distributed-arrow"
