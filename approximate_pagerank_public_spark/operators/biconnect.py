@@ -224,9 +224,8 @@ def _bridge_parts(
     """Shared core → ``(bridges, pairs, partitions)``.  ``bridges`` is
     checkpointed in ``cs``; ``pairs`` is the canonical ``a<b``
     undirected pair list, lineage-bound to the symmetrized graph, which
-    ``cs`` unpersists on exit."""
+    ``graph`` owns (``Graph.undirected`` is memoized)."""
     und = graph.undirected()
-    cs.callback(und.unpersist)
     n = und.num_vertices
     spark, p = graph.spark, und.num_partitions
     # the driver path keeps three O(V) int64 vectors and relaxes levels

@@ -300,18 +300,17 @@ def connected_components(
     scale); ``auto`` picks broadcast while the label vector fits."""
     mode = resolve_mode(mode, state_fits(graph))
     und = graph.undirected()
-    with ckpt_scope(graph.spark) as cs:
-        cs.callback(und.unpersist)
-        if mode == "distributed":
+    if mode == "distributed":
+        with ckpt_scope(graph.spark) as cs:
             labels_df, _ = _cc_star_distributed(cs, und)
             return cs.keep(labels_df)
-        labels, _ = _cc_broadcast(und, max_iter)
-        import pandas as pd
+    labels, _ = _cc_broadcast(und, max_iter)
+    import pandas as pd
 
-        pdf = pd.DataFrame(
-            {"id": np.arange(len(labels), dtype=np.int64), "component": labels}
-        )
-        return graph.spark.createDataFrame(pdf)
+    pdf = pd.DataFrame(
+        {"id": np.arange(len(labels), dtype=np.int64), "component": labels}
+    )
+    return graph.spark.createDataFrame(pdf)
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

@@ -10,10 +10,14 @@ deterministic (the classic async variants are randomized; deterministic
 synchronous variants are required for golden parity testing and
 cross-engine oracle replay).
 
-One implementation serves both scales: the per-(dst,label) weight
+LPA has two paths, picked by ``plans/modes.py::resolve_mode``. The
+driver path holds the label vector: all rounds run in one barrier job
+over the symmetrized graph's CSR blocks (per-block NumPy votes), with
+one ``mapInArrow`` job per round as the fallback. The distributed path
+keeps the labels on the cluster: the per-(dst,label) weight
 aggregation is a DataFrame ``groupBy(dst, label).sum`` with map-side
-partial aggregation, and the argmax is a window over each dst group —
-all JVM-side, no Python in the loop.
+partial aggregation, and the argmax is a window over each dst group,
+all JVM-side.
 """
 
 from __future__ import annotations
@@ -32,6 +36,11 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     CkptScope,
     ckpt_scope,
 )
+from approximate_pagerank_public_spark.plans.blocks import (
+    vote_argmax,
+    vote_block,
+    vote_sums,
+)
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 
@@ -46,102 +55,95 @@ _VOTE_SCHEMA = StructType(
 
 def _vote_partials(edges: DataFrame, load_labels) -> DataFrame:
     """Per-partition partial ``(dst, label, Σweight)`` votes — the
-    map-side combine of the LPA superstep, vectorized (lexsort +
+    map-side combine of the per-round LPA job, vectorized (lexsort +
     reduceat), labels shipped via shm/broadcast like the rank state."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        labels = load_labels()
-        ds, ls, ws = [], [], []
+        labels = np.asarray(load_labels())
+        parts = []
         for b in batches:
             if b.num_rows == 0:
                 continue
             src = b.column("src").to_numpy(zero_copy_only=False)
             dst = b.column("dst").to_numpy(zero_copy_only=False)
             w = b.column("weight").to_numpy(zero_copy_only=False)
-            lab = np.asarray(labels)[src]
-            order = np.lexsort((lab, dst))
-            d, l, wt = dst[order], lab[order], w[order]
-            brk = np.r_[True, (d[1:] != d[:-1]) | (l[1:] != l[:-1])]
-            starts = np.flatnonzero(brk)
-            ds.append(d[starts])
-            ls.append(l[starts])
-            ws.append(np.add.reduceat(wt, starts))
-        if not ds:
+            parts.append(vote_sums(dst, labels[src], w))
+        if not parts:
             return
-        d = np.concatenate(ds)
-        l = np.concatenate(ls)
-        w = np.concatenate(ws)
-        order = np.lexsort((l, d))
-        d, l, w = d[order], l[order], w[order]
-        brk = np.r_[True, (d[1:] != d[:-1]) | (l[1:] != l[:-1])]
-        starts = np.flatnonzero(brk)
+        d, l, w = vote_sums(*(np.concatenate(c) for c in zip(*parts)))
         yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(d[starts]),
-                pa.array(l[starts]),
-                pa.array(np.add.reduceat(w, starts)),
-            ],
-            names=["dst", "label", "w"],
+            [pa.array(d), pa.array(l), pa.array(w)], names=["dst", "label", "w"]
         )
 
     return edges.mapInArrow(kernel, _VOTE_SCHEMA)
 
 
-def _lpa_broadcast(graph: Graph, und: Graph, max_iter: int) -> np.ndarray:
-    """Driver-state LPA: one shuffle-free Spark job per round (partial
-    votes), argmax merge on the driver — same shape as the PageRank/CC
-    broadcast supersteps."""
+def _lpa_broadcast(und: Graph, max_iter: int) -> tuple[np.ndarray, int]:
+    """Driver-state LPA over the symmetrized graph → ``(labels,
+    rounds)``. On local masters with dst-disjoint CSR blocks every
+    round runs inside ONE gang-scheduled barrier job
+    (``plans.barrier.run_barrier_rounds`` with the ``vote_block``
+    kernel). Otherwise, and when the gang fails, each round is one
+    shuffle-free ``mapInArrow`` job of partial votes with the argmax
+    merged on the driver. Both paths take the same :func:`vote_argmax`
+    and stop at the same round: the first that changes no label, or
+    ``max_iter``."""
     from approximate_pagerank_public_spark.operators.spmv import _RankShip
+    from approximate_pagerank_public_spark.plans.barrier import (
+        BARRIER_FALLBACK_ERRORS,
+        barrier_available,
+        run_barrier_rounds,
+        warn_barrier_fallback,
+    )
 
-    n = graph.num_vertices
+    n = und.num_vertices
     labels = np.arange(n, dtype=np.int64)
-    for _ in range(max_iter):
-        ship = _RankShip(graph.spark, labels)
+    if barrier_available(und):
+        try:
+            out, rounds, _ = run_barrier_rounds(
+                und, labels[:, None], np.ones(n, dtype=bool), vote_block, max_iter
+            )
+            return out[:, 0], rounds
+        except BARRIER_FALLBACK_ERRORS as ex:
+            warn_barrier_fallback(ex, "per-round jobs")
+    rounds = 0
+    for rounds in range(1, max_iter + 1):
+        ship = _RankShip(und.spark, labels)
         try:
             pdf = _vote_partials(und.edges, ship.load).toPandas()
         finally:
             ship.cleanup()
-        if not len(pdf):
+        if not len(pdf):  # no edges: nothing votes
             break
-        d = pdf["dst"].to_numpy(np.int64)
-        l = pdf["label"].to_numpy(np.int64)
-        w = pdf["w"].to_numpy(np.float64)
-        order = np.lexsort((l, d))
-        d, l, w = d[order], l[order], w[order]
-        brk = np.r_[True, (d[1:] != d[:-1]) | (l[1:] != l[:-1])]
-        starts = np.flatnonzero(brk)
-        dd, ll = d[starts], l[starts]
-        ww = np.add.reduceat(w, starts)
-        # argmax with the deterministic tie-break: (w desc, label asc)
-        o2 = np.lexsort((ll, -ww, dd))
-        dd2, ll2 = dd[o2], ll[o2]
-        first = np.flatnonzero(np.r_[True, dd2[1:] != dd2[:-1]])
+        d, best = vote_argmax(
+            pdf["dst"].to_numpy(np.int64),
+            pdf["label"].to_numpy(np.int64),
+            pdf["w"].to_numpy(np.float64),
+        )
         new = labels.copy()
-        new[dd2[first]] = ll2[first]
+        new[d] = best
         if np.array_equal(new, labels):
             break
         labels = new
-    return labels
+    return labels, rounds
 
 
 def label_propagation(graph: Graph, max_iter: int = 10, mode: str = "auto") -> DataFrame:
     """``(id, label)`` after ``max_iter`` synchronous rounds (early-stops
-    on a fixpoint). ``mode``: 'broadcast' (driver-held labels, one
-    shuffle-free job/round), 'distributed' (state stays on the cluster),
-    'auto' picks by vertex count like ``pagerank``."""
+    on a fixpoint). ``mode``: 'broadcast' (driver-held labels; all
+    rounds in one barrier job over the CSR blocks, else one
+    shuffle-free job per round), 'distributed' (state stays on the
+    cluster), 'auto' picks by vertex count like ``pagerank``."""
     mode = resolve_mode(mode, state_fits(graph))
     und = graph.undirected()
-    with ckpt_scope(graph.spark) as cs:
-        cs.callback(und.unpersist)
-        if mode == "broadcast":
-            import pandas as pd
+    if mode == "broadcast":
+        import pandas as pd
 
-            labels = _lpa_broadcast(graph, und, max_iter)
-            return graph.spark.createDataFrame(
-                pd.DataFrame(
-                    {"id": np.arange(len(labels), dtype=np.int64), "label": labels}
-                )
-            )
+        labels, _ = _lpa_broadcast(und, max_iter)
+        return graph.spark.createDataFrame(
+            pd.DataFrame({"id": np.arange(len(labels), dtype=np.int64), "label": labels})
+        )
+    with ckpt_scope(graph.spark) as cs:
         p = graph.num_partitions
         labels = und.vertices.withColumn("label", F.col("id"))
         labels = cs.ckpt(labels.repartition(p, "id"))
@@ -645,7 +647,6 @@ def seeded_label_propagation(
     und = graph.undirected()
     seeds = seeds.select("id", "label")
     with ckpt_scope(graph.spark) as cs:
-        cs.callback(und.unpersist)
         labels = cs.ckpt(seeds.repartition(p, "id"))
         for _ in range(rounds):
             votes = (

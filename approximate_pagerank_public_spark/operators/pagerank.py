@@ -56,13 +56,6 @@ from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fi
 
 PATHS = ("broadcast", "distributed-arrow")
 
-try:  # job/scheduling failures surface as Py4J errors in classic PySpark
-    from py4j.protocol import Py4JError
-
-    _BARRIER_FALLBACK_ERRORS: tuple = (TimeoutError, Py4JError)
-except ImportError:  # pragma: no cover — Connect-only; barrier never engages
-    _BARRIER_FALLBACK_ERRORS = (TimeoutError,)
-
 
 @dataclass
 class PageRankResult:
@@ -210,8 +203,10 @@ def _run_broadcast(
     # and resume semantics as the per-superstep path, job overhead
     # amortized over the chunk.
     from approximate_pagerank_public_spark.plans.barrier import (
+        BARRIER_FALLBACK_ERRORS,
         barrier_available,
         run_barrier_pagerank,
+        warn_barrier_fallback,
     )
 
     if barrier_available(graph):
@@ -266,18 +261,9 @@ def _run_broadcast(
                 _graph=graph,
                 phase_timings=phases,
             )
-        except _BARRIER_FALLBACK_ERRORS as ex:
-            # barrier unschedulable / gang failed mid-run → the
-            # per-superstep path below recomputes from start_it. A
-            # kernel bug would land here too, so make it LOUD.
-            import warnings
-
-            warnings.warn(
-                f"barrier fast path failed, falling back to per-superstep "
-                f"jobs: {type(ex).__name__}: {str(ex)[:400]}",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+        except BARRIER_FALLBACK_ERRORS as ex:
+            # the per-superstep path below recomputes from start_it
+            warn_barrier_fallback(ex, "per-superstep jobs")
 
     nc = n_chunks(n)
     err_buf = np.zeros((nc, s), dtype=np.float64)

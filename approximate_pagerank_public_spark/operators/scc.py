@@ -536,16 +536,12 @@ def bowtie_decomposition(graph: Graph, mode: str = "auto") -> DataFrame:
         core_mask = labels == core
         fwd = _reach_broadcast(graph, core_mask)
         bwd = _reach_broadcast(graph.reversed_graph(), core_mask)
-        und = graph.undirected()
-        try:
-            # max_iter = |V| guarantees fixpoint (min-label propagation
-            # converges within the weak diameter < |V|); a fixed 200 cap
-            # could silently misclassify TENDRIL/DISCONNECTED on a
-            # high-diameter weak component (it only warned).  The
-            # relaxation is frontier-sparse, so the bound is free.
-            wcc, _ = _cc_broadcast(und, max(200, graph.num_vertices))
-        finally:
-            und.unpersist()
+        # max_iter = |V| guarantees fixpoint (min-label propagation
+        # converges within the weak diameter < |V|); a fixed 200 cap
+        # could silently misclassify TENDRIL/DISCONNECTED on a
+        # high-diameter weak component (it only warned).  The
+        # relaxation is frontier-sparse, so the bound is free.
+        wcc, _ = _cc_broadcast(graph.undirected(), max(200, graph.num_vertices))
         corewc = int(wcc[int(np.flatnonzero(core_mask).min())])
         cls = np.where(
             core_mask,

@@ -414,32 +414,49 @@ def exact_diameter(
         .first()
     )
     start = int(root_row["src"])
-    dists = bfs(gu, start).select("id", "dist").persist()
-    ecc_start = int(dists.agg(F.max("dist")).first()[0])
+    dists = None
+    if gu.blocks is not None:
+        # the root's level vector is already on the driver: keep it
+        # there (a DataFrame over it would pin shm result files to the
+        # graph until unpersist, one set per call)
+        dist, inf = _block_bfs_distances(gu, [start])
+        lvl = np.where(dist[:, 0] < inf - 1000, dist[:, 0].astype(np.int64), -1)
+        ecc_start = int(lvl.max())
+
+        def level(i: int) -> list[int]:
+            return np.flatnonzero(lvl == i).tolist()
+
+    else:
+        dists = multi_source_bfs(gu, [start]).select("id", "dist").persist()
+        ecc_start = int(dists.agg(F.max("dist")).first()[0])
+
+        def level(i: int) -> list[int]:
+            rows = dists.where(F.col("dist") == i).select("id").collect()
+            return [int(r["id"]) for r in rows]
+
     lb = ecc_start
     i = ecc_start
     evals = 0
-    while i > 0 and lb < 2 * i:
-        vs = [
-            int(r["id"])
-            for r in dists.where(F.col("dist") == i).select("id").collect()
-        ]
-        evals += len(vs)
-        if max_ecc_evals is not None and evals > max_ecc_evals:
+    try:
+        while i > 0 and lb < 2 * i:
+            vs = level(i)
+            evals += len(vs)
+            if max_ecc_evals is not None and evals > max_ecc_evals:
+                raise RuntimeError(
+                    f"exact_diameter: fringe sweep needs > {max_ecc_evals} "
+                    f"eccentricity evaluations (lb={lb}, level={i}, "
+                    f"|level|={len(vs)}) — iFUB is degenerating on this graph "
+                    "(uniform-degree inputs); use approx_diameter or raise "
+                    "max_ecc_evals"
+                )
+            for k in range(0, len(vs), batch):
+                chunk = vs[k : k + batch]
+                got = eccentricity(gu, chunk).agg(F.max("ecc")).first()[0]
+                lb = max(lb, int(got))
+            i -= 1
+    finally:
+        if dists is not None:
             dists.unpersist()
-            raise RuntimeError(
-                f"exact_diameter: fringe sweep needs > {max_ecc_evals} "
-                f"eccentricity evaluations (lb={lb}, level={i}, "
-                f"|level|={len(vs)}) — iFUB is degenerating on this graph "
-                "(uniform-degree inputs); use approx_diameter or raise "
-                "max_ecc_evals"
-            )
-        for k in range(0, len(vs), batch):
-            chunk = vs[k : k + batch]
-            got = eccentricity(gu, chunk).agg(F.max("ecc")).first()[0]
-            lb = max(lb, int(got))
-        i -= 1
-    dists.unpersist()
     import pandas as pd
 
     pdf = pd.DataFrame({"start": [start], "diameter": [int(lb)]})
@@ -607,12 +624,12 @@ def frontier_min_relax(
 
     Execution: on local masters with dst-disjoint blocks, ALL rounds run
     inside ONE gang-scheduled barrier job
-    (``plans.barrier.run_barrier_min_relax``) — per-round Spark jobs pay
+    (``plans.barrier.run_barrier_rounds``) — per-round Spark jobs pay
     a fixed ~0.3-0.7 s scheduling + Python-worker round-trip that
-    dominates post-peak rounds. Everywhere else (and on any barrier
-    failure) each round is its own ``mapInArrow`` job over the same
-    ``relax_block`` kernel; the min-plus fixpoint is unique, so both
-    paths return identical state.
+    dominates post-peak rounds. Everywhere else (and when the gang
+    fails, with a ``RuntimeWarning``) each round is its own
+    ``mapInArrow`` job over the same ``relax_block`` kernel; the
+    min-plus fixpoint is unique, so both paths return identical state.
 
     Returns ``(state, rounds, converged)`` — ``rounds`` is the number of
     relaxation rounds actually executed and ``converged`` is False only
@@ -622,8 +639,10 @@ def frontier_min_relax(
     import pyarrow as pa
 
     from approximate_pagerank_public_spark.plans.barrier import (
+        BARRIER_FALLBACK_ERRORS,
         barrier_available,
-        run_barrier_min_relax,
+        run_barrier_rounds,
+        warn_barrier_fallback,
     )
     from approximate_pagerank_public_spark.plans.blocks import (
         load_block,
@@ -636,23 +655,41 @@ def frontier_min_relax(
     dist = state
     one = dtype.type(1) if plus_one else dtype.type(0)
     bu_inf = inf_value if (plus_one and not edge_weighted) else None
+    sparse_threshold = _sparse_threshold(n)
+
+    def kernel(block_dir, pid, blk, snap, front, fmask):
+        # sparse-frontier rounds (pre-peak/post-peak: most of a
+        # high-diameter traversal, ALL levels of a single-source one)
+        # look up frontier vertices' edges through a cached src-sorted
+        # index — O(f log E + touched edges) — instead of gathering an
+        # |E|-long mask. The dense selection stays for peak levels where
+        # most vertices changed (and switches per block to bottom-up
+        # when the caller armed it).
+        if len(front) <= sparse_threshold:
+            return relax_block(
+                block_dir, pid, blk, snap, front=front, one=one, edge_weighted=edge_weighted
+            )
+        return relax_block(
+            block_dir,
+            pid,
+            blk,
+            snap,
+            mask=fmask,
+            inf_value=bu_inf,
+            front_frac=len(front) / max(1, n),
+            one=one,
+            edge_weighted=edge_weighted,
+        )
 
     if barrier_available(graph):
         try:
-            out, rounds, converged = run_barrier_min_relax(
-                graph,
-                state,
-                changed,
-                one=one,
-                edge_weighted=edge_weighted,
-                max_iters=max_iters,
-                inf_value=bu_inf,
-                sparse_threshold=_sparse_threshold(n),
+            out, rounds, converged = run_barrier_rounds(
+                graph, state, changed, kernel, max_iters
             )
             state[:] = out
             return state, rounds, converged
-        except Exception:  # barrier scheduling/retry failure → per-round
-            pass
+        except BARRIER_FALLBACK_ERRORS as ex:
+            warn_barrier_fallback(ex, "per-round jobs")
 
     run_dir = os.path.join(blocks.dir, f"bfs_{uuid.uuid4().hex}")
     os.makedirs(run_dir)
@@ -670,51 +707,22 @@ def frontier_min_relax(
         for _level in range(max_iters):
             rounds = _level + 1
             np.save(state_path, dist)
-            front = np.flatnonzero(changed)
-            # sparse-frontier levels (pre-peak/post-peak: most of a
-            # high-diameter traversal, ALL levels of a single-source
-            # one) look up frontier vertices' edges through a cached
-            # src-sorted index — O(f log E + touched edges) — instead
-            # of gathering an |E|-long mask. The dense path stays for
-            # peak levels where most vertices changed (and switches
-            # per block to bottom-up when the caller armed it).
-            sparse = len(front) <= _sparse_threshold(n)
-            if sparse:
-                np.save(front_path, front)
-            else:
-                np.save(mask_path, changed)
-            front_frac = len(front) / max(1, n)
+            np.save(front_path, np.flatnonzero(changed))
+            np.save(mask_path, changed)
             out_dir = f"{run_dir}/out"
             os.makedirs(out_dir, exist_ok=True)
 
-            def step(
-                batches: Iterator[pa.RecordBatch], sparse: bool = sparse,
-                front_frac: float = front_frac,
-            ) -> Iterator[pa.RecordBatch]:
-                if sparse:
-                    front_w = np.load(front_path, mmap_mode="r")
-                    mask = None
-                else:
-                    front_w = None
-                    mask = np.load(mask_path, mmap_mode="r")
+            def step(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+                front = np.load(front_path, mmap_mode="r")
+                mask = np.load(mask_path, mmap_mode="r")
                 state = np.load(state_path, mmap_mode="r")
                 done = []
                 for b in batches:
                     for task_i in b.column("id").to_pylist():
                         pid = pids[task_i]
-                        blk = load_block(block_dir, pid)
                         done.append(pid)
-                        res = relax_block(
-                            block_dir,
-                            pid,
-                            blk,
-                            state,
-                            front=front_w,
-                            mask=mask,
-                            inf_value=None if sparse else bu_inf,
-                            front_frac=None if sparse else front_frac,
-                            one=one,
-                            edge_weighted=edge_weighted,
+                        res = kernel(
+                            block_dir, pid, load_block(block_dir, pid), state, front, mask
                         )
                         if res is None:
                             continue

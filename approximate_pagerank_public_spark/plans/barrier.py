@@ -53,6 +53,10 @@ partials in ``plans/reduction.py`` — the per-superstep path uses the
 same chunking, so the stop scalars (and hence the convergence
 iteration) are bit-identical across both paths and any task count.
 
+:func:`run_barrier_rounds` is the same protocol for synchronous
+per-block fixpoints — min-relaxation (BFS/CC/SCC/SSSP) and label
+propagation votes — with the per-block kernel as an argument.
+
 Engages only when: local master with /dev/shm (state is shared
 pages), CSR blocks built, dst-disjoint partitioning. Durable
 checkpointing runs the loop in chunks of ``checkpoint_every``
@@ -84,6 +88,28 @@ from approximate_pagerank_public_spark.plans.reduction import (
     n_chunks,
     CHUNK_ROWS,
 )
+
+try:  # job/scheduling failures surface as Py4J errors in classic PySpark
+    from py4j.protocol import Py4JError
+
+    BARRIER_FALLBACK_ERRORS: tuple = (TimeoutError, Py4JError)
+except ImportError:  # pragma: no cover — Connect-only; barrier never engages
+    BARRIER_FALLBACK_ERRORS = (TimeoutError,)
+
+
+def warn_barrier_fallback(ex: BaseException, fallback: str) -> None:
+    """The gang was unschedulable or failed mid-run (one of
+    :data:`BARRIER_FALLBACK_ERRORS`) and the caller reruns on its
+    ``fallback`` path. A kernel bug raised inside a task lands here
+    too, so the fallback is LOUD; any other error propagates."""
+    import warnings
+
+    warnings.warn(
+        f"barrier fast path failed, falling back to {fallback}: "
+        f"{type(ex).__name__}: {str(ex)[:400]}",
+        RuntimeWarning,
+        stacklevel=3,
+    )
 
 
 def barrier_available(graph) -> bool:
@@ -123,73 +149,103 @@ def _shared(path: str, shape, dtype, fill=None):
     return mm
 
 
-def run_barrier_min_relax(
+def _lpt_assign(blocks: BlockStore, ntasks: int) -> list[list[int]]:
+    """Greedy LPT block assignment: heaviest block to the least-loaded
+    task (dynamic O_EXCL claim-stealing was tried and measured WORSE —
+    tmpfs directory-lock contention plus loss of per-task block cache
+    affinity outweighed the balance win)."""
+    sizes = dict(
+        zip(blocks.manifest["pid"].tolist(), blocks.manifest["n_edges"].tolist())
+    )
+    assign: list[list[int]] = [[] for _ in range(ntasks)]
+    loads = [0] * ntasks
+    for pid in sorted(blocks.pids, key=lambda p: -sizes[p]):
+        j = loads.index(min(loads))
+        assign[j].append(pid)
+        loads[j] += sizes[pid]
+    return assign
+
+
+def _wait(arr, t: int, deadline_s: float = 3600.0) -> None:
+    """Spin until every flag in ``arr`` reaches ``t``. Exponential
+    backoff: early waiters otherwise generate ~5k wakeups/s each,
+    preempting the still-computing stragglers when every core is
+    occupied by the gang."""
+    t0 = time.perf_counter()
+    pause = 0.0002
+    while int(arr.min()) < t:
+        if time.perf_counter() - t0 > deadline_s:
+            raise TimeoutError("barrier sync timed out")
+        time.sleep(pause)
+        pause = min(pause * 1.5, 0.004)
+
+
+def run_barrier_rounds(
     graph,
     state: np.ndarray,
     changed: np.ndarray,
-    one,
-    edge_weighted: bool,
+    kernel,
     max_iters: int,
-    inf_value=None,
-    sparse_threshold: int = 1024,
 ) -> tuple[np.ndarray, int, bool]:
-    """ALL min-relaxation rounds (BFS levels / min-label CC rounds /
-    Bellman-Ford sweeps) inside ONE gang-scheduled barrier job.
+    """ALL rounds of a synchronous per-block fixpoint — BFS levels,
+    min-label CC rounds, Bellman-Ford sweeps (``kernel`` wraps
+    ``plans.blocks.relax_block``) or label-propagation votes
+    (``plans.blocks.vote_block``) — inside ONE gang-scheduled barrier
+    job. Returns ``(state, rounds, converged)``.
 
-    The per-round ``mapInArrow`` loop in
-    ``operators.traversal.frontier_min_relax`` pays a fixed ~0.3-0.7 s
-    Spark job launch per round — at |E|=10⁸ a 6-level single-source BFS
-    spends >80% of its wall clock on scheduling, not edges (the round-3
-    verdict's one `weak` entry). Here each task owns its CSR blocks for
-    the whole traversal and rounds sync through shared-memory flags,
-    exactly the :func:`run_barrier_pagerank` protocol.
+    The per-round ``mapInArrow`` loops pay a fixed ~0.3-0.7 s Spark job
+    launch per round — at |E|=10⁸ a 6-level single-source BFS spends
+    >80% of its wall clock on scheduling, not edges. Here each task owns
+    its CSR blocks for the whole run and rounds sync through
+    shared-memory flags, exactly the :func:`run_barrier_pagerank`
+    protocol.
+
+    ``kernel(block_dir, pid, blk, snap, front, fmask)`` runs one block
+    against the round's snapshot ``snap`` (N, S) and returns ``(gd,
+    new_rows)`` — the global dst rows whose value changes — or None.
+    ``front``/``fmask`` are the rows that changed last round (index
+    array and boolean mask; ``changed`` seeds round 1). Blocks are
+    dst-disjoint, so each task writes only rows it alone owns. The run
+    stops when a round changes no row or ``max_iters`` is reached.
 
     Frontier bookkeeping is a versioned ``last_imp`` int32 array
-    (vertex → round it last improved) instead of double-buffered masks:
+    (vertex → round it last changed) instead of double-buffered masks:
     round ``t``'s frontier is ``last_imp == t-1``, writes go only to a
     task's own (disjoint) dst rows, and no zeroing phase or buffer swap
-    is needed — two sub-millisecond spin-syncs per round total.
+    is needed.
 
     Rounds are strictly SYNCHRONOUS: each round first snapshots state
     into a second shared buffer (each task copies its contiguous row
-    range — one extra sub-ms spin-sync), candidates gather from the
-    snapshot, improvements write to live state. Live single-buffer
-    reads were measured WRONG here: a task reading a neighbour's
-    freshly-lowered mid-round value can assign a *provisional*
-    too-large finite level, and the bottom-up selection (which skips
-    visited rows — the entire point of the direction switch) never
-    revisits it. With the snapshot, every round sees exactly the
-    previous round's fixpoint-monotone state, so values, per-round
-    frontiers, and the round count are bit-identical to the per-round
-    ``mapInArrow`` path (which snapshots by construction). The frontier
-    mask is computed BEFORE a task's copy_done flag: every round-``t``
-    writer is blocked on all copy flags, so no round-``t``
-    ``last_imp`` store can race an earlier task's mask read.
+    range — one extra sub-ms spin-sync), kernels read the snapshot,
+    changes write to live state. Live single-buffer reads were measured
+    WRONG for BFS: a task reading a neighbour's freshly-lowered
+    mid-round value can assign a *provisional* too-large finite level,
+    and the bottom-up selection (which skips visited rows) never
+    revisits it; LPA votes must see one round's labels by definition.
+    With the snapshot, values, per-round frontiers, and the round count
+    are bit-identical to the per-round ``mapInArrow`` paths (which
+    snapshot by construction). The frontier mask is computed BEFORE a
+    task's copy_done flag: every round-``t`` writer is blocked on all
+    copy flags, so no round-``t`` ``last_imp`` store can race an
+    earlier task's mask read.
 
-    ``inf_value`` arms the bottom-up (direction-optimizing) edge
-    selection for fat frontiers — see ``plans.blocks.relax_block``.
-
-    Raises on barrier-scheduling failure; the caller falls back to the
+    Raises on barrier-scheduling failure; the caller falls back to its
     per-round path (state here is a private shm copy, so the caller's
     array is untouched on failure).
     """
-    from approximate_pagerank_public_spark.plans.blocks import relax_block
-
     blocks: BlockStore = graph.blocks
-    spark = graph.spark
     n = graph.num_vertices
-    s = state.shape[1]
-    sc = spark.sparkContext
+    sc = graph.spark.sparkContext
     ntasks = max(1, min(blocks.num_partitions, _task_slots(sc)))
 
-    run_dir = os.path.join(blocks.dir, f"relax_{uuid.uuid4().hex}")
+    run_dir = os.path.join(blocks.dir, f"rounds_{uuid.uuid4().hex}")
     os.makedirs(run_dir)
     try:
-        st = _shared(f"{run_dir}/state.npy", (n, s), state.dtype)
+        st = _shared(f"{run_dir}/state.npy", state.shape, state.dtype)
         st[:] = state
         st.flush()
         del st
-        _shared(f"{run_dir}/snap.npy", (n, s), state.dtype)
+        _shared(f"{run_dir}/snap.npy", state.shape, state.dtype)
         li = _shared(f"{run_dir}/last_imp.npy", (n,), np.int32, -1)
         li[np.asarray(changed, dtype=bool)] = 0
         li.flush()
@@ -197,19 +253,10 @@ def run_barrier_min_relax(
         _shared(f"{run_dir}/copy_done.npy", (ntasks,), np.int64, -1)
         _shared(f"{run_dir}/relax_done.npy", (ntasks,), np.int64, -1)
         _shared(f"{run_dir}/imp_cnt.npy", (ntasks,), np.int64, 0)
-        _shared(f"{run_dir}/ctl.npy", (3,), np.int64, -1)  # release, stop, rounds
+        _shared(f"{run_dir}/ctl.npy", (2,), np.int64, -1)  # release, stop
 
         block_dir = blocks.dir
-        deadline_s = 3600.0
-        sizes = dict(
-            zip(blocks.manifest["pid"].tolist(), blocks.manifest["n_edges"].tolist())
-        )
-        assign: list[list[int]] = [[] for _ in range(ntasks)]
-        loads = [0] * ntasks
-        for pid in sorted(blocks.pids, key=lambda p: -sizes[p]):
-            j = loads.index(min(loads))
-            assign[j].append(pid)
-            loads[j] += sizes[pid]
+        assign = _lpt_assign(blocks, ntasks)
 
         def loop(_it):
             from pyspark import BarrierTaskContext
@@ -221,7 +268,6 @@ def run_barrier_min_relax(
                 # restarts from its own pristine copy
                 raise RuntimeError("barrier task retry: shared state unsafe")
             me = ctx.partitionId()
-            leader = me == 0
             my_pids = assign[me]
             pre = {pid: load_block(block_dir, pid) for pid in my_pids}
             state = np.load(f"{run_dir}/state.npy", mmap_mode="r+")
@@ -233,15 +279,6 @@ def run_barrier_min_relax(
             imp_cnt = np.load(f"{run_dir}/imp_cnt.npy", mmap_mode="r+")
             ctl = np.load(f"{run_dir}/ctl.npy", mmap_mode="r+")
 
-            def wait(arr, t):
-                t0 = time.perf_counter()
-                pause = 0.0002
-                while int(arr.min()) < t:
-                    if time.perf_counter() - t0 > deadline_s:
-                        raise TimeoutError("barrier relax sync timed out")
-                    time.sleep(pause)
-                    pause = min(pause * 1.5, 0.004)
-
             for t in range(1, max_iters + 1):
                 # frontier mask BEFORE copy_done: round-t last_imp writers
                 # are all blocked on this task's copy flag (see docstring)
@@ -249,24 +286,11 @@ def run_barrier_min_relax(
                 front = np.flatnonzero(fmask)
                 snap[lo:hi] = state[lo:hi]
                 copy_done[me] = t
-                wait(copy_done, t)
-                sparse = len(front) <= sparse_threshold
-                front_frac = len(front) / max(1, n)
+                _wait(copy_done, t)
                 imp = 0
                 if len(front):
                     for pid in my_pids:
-                        res = relax_block(
-                            block_dir,
-                            pid,
-                            pre[pid],
-                            snap,
-                            front=front if sparse else None,
-                            mask=None if sparse else fmask,
-                            inf_value=None if sparse else inf_value,
-                            front_frac=None if sparse else front_frac,
-                            one=one,
-                            edge_weighted=edge_weighted,
-                        )
+                        res = kernel(block_dir, pid, pre[pid], snap, front, fmask)
                         if res is not None:
                             gd, new = res
                             state[gd] = new
@@ -274,18 +298,17 @@ def run_barrier_min_relax(
                             imp += len(gd)
                 imp_cnt[me] = imp
                 relax_done[me] = t
-                if leader:
-                    wait(relax_done, t)
+                if me == 0:
+                    _wait(relax_done, t)
                     total = int(np.asarray(imp_cnt).sum())
                     ctl[1] = 1 if total == 0 or t >= max_iters else 0
-                    ctl[2] = t
                     ctl[0] = t  # release LAST
                 else:
-                    wait(ctl[:1], t)
+                    _wait(ctl[:1], t)
                 if ctl[1]:
-                    # converged iff the LAST executed round improved
+                    # converged iff the LAST executed round changed
                     # nothing (not a max_iters bailout)
-                    return iter([(me, t, imp == 0 and int(np.asarray(imp_cnt).sum()) == 0)])
+                    return iter([(me, t, int(np.asarray(imp_cnt).sum()) == 0)])
             return iter([(me, max_iters, False)])
 
         rows = (
@@ -372,20 +395,7 @@ def run_barrier_pagerank(
 
         block_dir = blocks.dir
         src_list = sources
-        deadline_s = 3600.0
-        # greedy LPT assignment: heaviest block to the least-loaded task
-        # (dynamic O_EXCL claim-stealing was tried and measured WORSE —
-        # tmpfs directory-lock contention plus loss of per-task block
-        # cache affinity outweighed the balance win)
-        sizes = dict(
-            zip(blocks.manifest["pid"].tolist(), blocks.manifest["n_edges"].tolist())
-        )
-        assign: list[list[int]] = [[] for _ in range(ntasks)]
-        loads = [0] * ntasks
-        for pid in sorted(blocks.pids, key=lambda p: -sizes[p]):
-            j = loads.index(min(loads))
-            assign[j].append(pid)
-            loads[j] += sizes[pid]
+        assign = _lpt_assign(blocks, ntasks)
 
         def loop(_it):
             from pyspark import BarrierTaskContext
@@ -422,18 +432,6 @@ def run_barrier_pagerank(
             shift2 = (1.0 - alpha) / n if src_list is None else 0.0
             shift_arr = np.load(f"{run_dir}/shift.npy", mmap_mode="r+")
 
-            def wait(arr, t):
-                # exponential backoff: early waiters otherwise generate
-                # ~5k wakeups/s each, preempting the still-computing
-                # stragglers when every core is occupied by the gang
-                t0 = time.perf_counter()
-                pause = 0.0002
-                while int(arr.min()) < t:
-                    if time.perf_counter() - t0 > deadline_s:
-                        raise TimeoutError("barrier superstep sync timed out")
-                    time.sleep(pause)
-                    pause = min(pause * 1.5, 0.004)
-
             t = 0
             t_wall = time.perf_counter()
             ph = {"wait": 0.0, "rowwork": 0.0, "ctl": 0.0, "fill": 0.0, "compute": 0.0}
@@ -446,7 +444,7 @@ def run_barrier_pagerank(
 
             _last = time.perf_counter()
             while True:
-                wait(compute_done, t)  # state_t body complete
+                _wait(compute_done, t)  # state_t body complete
                 ph["wait"] += _tick()
                 # ---- rowwork: finalize + chunked partials over my rows
                 st = np.load(sp(t), mmap_mode="r+")
@@ -462,7 +460,7 @@ def run_barrier_pagerank(
                 row_done[me] = t
                 # ---- leader reduce: stop decision, metrics, next-state prep
                 if leader:
-                    wait(row_done, t)
+                    _wait(row_done, t)
                     stop = t >= max_iter
                     conv = False
                     if t > 0:
@@ -495,7 +493,7 @@ def run_barrier_pagerank(
                     ctl[3] = t
                     ctl[0] = t  # release LAST
                 else:
-                    wait(ctl[:1], t)
+                    _wait(ctl[:1], t)
                 ph["ctl"] += _tick()
                 if ctl[1]:
                     break
@@ -505,7 +503,7 @@ def run_barrier_pagerank(
                 nxt[lo:hi] = shift1 + shift2  # == (α·0 + shift1) + shift2
                 ph["fill"] += _tick()
                 fill_done[me] = t
-                wait(fill_done, t)  # all rows based before scattered writes
+                _wait(fill_done, t)  # all rows based before scattered writes
                 ph["wait"] += _tick()
                 # ---- compute: L2-tiled SpMV per block → α·p + shift
                 # at the block's (disjoint) u_dst rows

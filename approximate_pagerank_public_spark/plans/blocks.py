@@ -270,6 +270,46 @@ def relax_block(
     return gd[imp], new[imp]
 
 
+def vote_sums(dst: np.ndarray, label: np.ndarray, w: np.ndarray):
+    """Label-propagation votes summed per ``(dst, label)``: returns the
+    groups' ``(dst, label, Σw)`` in (dst, label) order. The sort is
+    stable, so each group sums in its input order."""
+    order = np.lexsort((label, dst))
+    d, l, wt = dst[order], label[order], w[order]
+    starts = np.flatnonzero(np.r_[True, (d[1:] != d[:-1]) | (l[1:] != l[:-1])])
+    return d[starts], l[starts], np.add.reduceat(wt, starts)
+
+
+def vote_argmax(dst: np.ndarray, label: np.ndarray, w: np.ndarray):
+    """``(dst, label)`` per distinct dst: the label with the greatest
+    summed vote weight, ties → smallest label (the deterministic
+    synchronous LPA rule)."""
+    d, l, wt = vote_sums(dst, label, w)
+    o = np.lexsort((l, -wt, d))
+    d, l = d[o], l[o]
+    first = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
+    return d[first], l[first]
+
+
+def vote_block(block_dir: str, pid: int, blk: tuple, labels: np.ndarray, _front, _fmask):
+    """One label-propagation round of a CSR block against the round's
+    ``labels`` snapshot ``(N, 1)``: every dst row of the block takes
+    :func:`vote_argmax` of its in-edges' votes. A block holds ALL
+    in-edges of its dst rows (dst-partitioned CSR), so the vote is
+    complete with no merge. Returns ``(gd, new_rows)`` for the rows
+    whose label changes, or None — the ``run_barrier_rounds`` kernel
+    contract (the frontier arguments are unused: every row re-votes)."""
+    src_b, w, udst, *_ = blk
+    edge_dst = np.asarray(_edge_dst(block_dir, pid, blk))
+    lab = labels[np.asarray(src_b), 0]
+    d, best = vote_argmax(edge_dst, lab, np.asarray(w))
+    gd = np.asarray(udst)[d]
+    diff = best != labels[gd, 0]
+    if not diff.any():
+        return None
+    return gd[diff], best[diff][:, None]
+
+
 def shm_available(spark: SparkSession) -> bool:
     return spark.sparkContext.master.startswith("local") and os.path.isdir(_SHM_DIR)
 

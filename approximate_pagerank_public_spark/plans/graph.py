@@ -106,6 +106,7 @@ class Graph:
         self._blocks = None
         self._dist_blocks = None
         self._rev_graph: "Graph | None" = None
+        self._und_graph: "Graph | None" = None
 
     def reversed_graph(self) -> "Graph":
         """Memoized transposed Graph (dst-hash layout + CSR blocks of
@@ -236,6 +237,9 @@ class Graph:
         if self._rev_graph is not None:
             self._rev_graph.unpersist()
             self._rev_graph = None
+        if self._und_graph is not None:
+            self._und_graph.unpersist()
+            self._und_graph = None
 
     # -------------------------------------------------------- constructors
     @classmethod
@@ -289,17 +293,27 @@ class Graph:
         return cls(df, num_vertices=num_vertices, num_partitions=num_partitions)
 
     def undirected(self) -> "Graph":
-        """Symmetrized copy (reference ``undirectFast``,
+        """Memoized symmetrized Graph (reference ``undirectFast``,
         ``utils.hpp:618-671``): union with reversed edges, dedup,
-        re-normalize weights."""
-        from pyspark.sql.window import Window
+        re-normalize weights. Built once, like :meth:`reversed_graph`:
+        CC, LPA, bridges, the bow-tie and the diameter all reuse its
+        cached edges and CSR blocks instead of paying the shuffle,
+        window and block build per call. The parent graph owns it, so
+        callers never unpersist it; :meth:`unpersist` releases it."""
+        if self._und_graph is None:
+            from pyspark.sql.window import Window
 
-        e = self.edges.select("src", "dst")
-        sym = (
-            e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        w = Window.partitionBy("src")
-        sym = sym.select("src", "dst", (F.lit(1.0) / F.count("*").over(w)).alias("weight"))
-        return Graph(sym, num_vertices=self.num_vertices, num_partitions=self.num_partitions)
+            e = self.edges.select("src", "dst")
+            sym = (
+                e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+                .where(F.col("src") != F.col("dst"))
+                .distinct()
+            )
+            w = Window.partitionBy("src")
+            sym = sym.select(
+                "src", "dst", (F.lit(1.0) / F.count("*").over(w)).alias("weight")
+            )
+            self._und_graph = Graph(
+                sym, num_vertices=self.num_vertices, num_partitions=self.num_partitions
+            )
+        return self._und_graph

@@ -87,7 +87,6 @@ def test_connected_components_star_mode_path_graph(spark):
     und = g.undirected()
     with ckpt_scope(spark) as cs:
         _, rounds = _cc_star_distributed(cs, und)
-    und.unpersist()
     assert rounds <= 15
     g.unpersist()
 
@@ -157,7 +156,6 @@ def test_label_propagation_matches_golden(spark):
     res = label_propagation(g, max_iter=10).toPandas().sort_values("id")
     assert (res["label"].to_numpy() == gold).all()
     g.unpersist()
-    und.unpersist()
 
 
 def test_four_cycles_known(spark):
