@@ -686,7 +686,8 @@ def q_multi_ppr_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pos, vid in enumerate(order, start=1):
             rows.append((s, pos, int(vid)))
     return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["source", "pos", "vertex"]).astype("int64")
+        pd.DataFrame(rows, columns=["source", "pos", "vertex"]),
+        "source long, pos long, vertex long",
     )
 
 

@@ -616,9 +616,9 @@ def anf_hyperball(g: Graph, rounds: int = 4, mode: str = "auto") -> ANFResult:
     pdf = pd.DataFrame(
         {"round": np.arange(rounds + 1, dtype=np.int64), "nf_micro": nf}
     )
-    df = g.spark.createDataFrame(pdf).select(
+    df = g.spark.createDataFrame(pdf, "round long, nf_micro long").select(
         "round",
-        F.col("nf_micro").cast("long"),
+        "nf_micro",
         (
             F.floor(
                 F.col("nf_micro").cast("double")
@@ -682,10 +682,8 @@ def hyperball_harmonic(
             prev = cur
         import pandas as pd
 
-        pdf = pd.DataFrame({"id": np.arange(n, dtype=np.int64), "h": h})
-        return g.spark.createDataFrame(pdf).select(
-            "id", F.col("h").cast("long").alias("h_micro_lcm")
-        )
+        pdf = pd.DataFrame({"id": np.arange(n, dtype=np.int64), "h_micro_lcm": h})
+        return g.spark.createDataFrame(pdf, "id long, h_micro_lcm long")
     # packed path: same rounds as _anf_packed, carrying (prev, h) columns
     import pyarrow as pa
 

@@ -239,7 +239,8 @@ def _bridge_parts(
             spark.createDataFrame(
                 pd.DataFrame(
                     {"id": np.arange(n, dtype=np.int64), "lvl": lvl}
-                )
+                ),
+                "id long, lvl long",
             ).repartition(p, "id")
         )
     else:
@@ -298,12 +299,7 @@ def _bridge_parts(
                 "b": np.maximum(child, parent[child]),
             }
         ).astype("int64")
-        schema = "a long, b long"
-        bridges_df = (
-            spark.createDataFrame(br_pdf, schema=schema)
-            if len(br_pdf)
-            else spark.createDataFrame([], schema=schema)
-        )
+        bridges_df = spark.createDataFrame(br_pdf, "a long, b long")
     else:
         sig_df = _subtree_xor_distributed(cs, lv_df, tree, w_df, p)
         bridges_df = cs.ckpt(

@@ -284,8 +284,6 @@ def pair_components(
             parent[hi] = lo
     spark = pairs.sparkSession
     rep_rows = [(x, find(x)) for x in parent]
-    if not rep_rows:
-        return spark.createDataFrame([], "a long, r long")
     return F.broadcast(spark.createDataFrame(rep_rows, "a long, r long"))
 
 
@@ -310,7 +308,7 @@ def connected_components(
     pdf = pd.DataFrame(
         {"id": np.arange(len(labels), dtype=np.int64), "component": labels}
     )
-    return graph.spark.createDataFrame(pdf)
+    return graph.spark.createDataFrame(pdf, "id long, component long")
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

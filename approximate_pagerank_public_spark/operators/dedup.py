@@ -723,13 +723,11 @@ def containment_pairs(
     never an all-pairs scan. All counts are integers; the containment
     ratio is ONE IEEE division, so a DuckDB replay is hash-exact.
     """
-    from .triangles import salted_wedge_pairs
-
     # one gram shuffle total: collect each doc's DISTINCT shingles
     # straight from the raw explode (collect_set ≡ shingles()'s per-doc
     # distinct — shingle rows never carry cross-doc keys, so a separate
     # global distinct pass is a second 14M-gram shuffle for nothing),
-    # cache the arrays, and derive the posting list by re-exploding
+    # checkpoint the arrays, and derive the posting list by re-exploding
     # them. The prior shape paid the distinct shuffle once per consumer
     # (posting + verify) plus the collect AND a per-pair×per-shingle
     # fan-out verify join — measured 73-88 s at 200k docs; this one
@@ -737,8 +735,6 @@ def containment_pairs(
     # a candidate-doc semi-join before the collect serializes subtrees
     # that otherwise overlap, and shuffle_hash hints on the verify join
     # push ~0.5 GB of arrays through two exchanges — 147 s.)
-    from pyspark.storagelevel import StorageLevel
-
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.split(_normalized_text(text_col), " ").alias("toks"),
@@ -754,12 +750,22 @@ def containment_pairs(
             )
         ).alias("shingle"),
     )
-    sharr = (
-        raw.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_set("shingle")).alias("sa"))
-        .withColumn("sz", F.size("sa").cast("long"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    # the result reads the checkpoint, so it lives as long as the
+    # returned frame and no longer
+    with ckpt_scope(docs.sparkSession) as cs:
+        sharr = cs.ckpt(
+            raw.groupBy("doc_id")
+            .agg(F.sort_array(F.collect_set("shingle")).alias("sa"))
+            .withColumn("sz", F.size("sa").cast("long"))
+        )
+        return cs.keep(_containment_verify(sharr, threshold_bp, cap))
+
+
+def _containment_verify(sharr: DataFrame, threshold_bp: int, cap: int | None) -> DataFrame:
+    """:func:`containment_pairs` from the per-doc ``(doc_id, sa, sz)``
+    sorted shingle arrays: candidate pairs, exact intersect, cut."""
+    from .triangles import salted_wedge_pairs
+
     sh = sharr.select("doc_id", F.explode("sa").alias("shingle"))
     posting = cap_bucket_size(sh, ["shingle"], "doc_id", cap, label="containment")
     if cap is not None:
@@ -782,7 +788,7 @@ def containment_pairs(
     # never evaluated twice per pair. (A candidate-doc semi-join before
     # the collect was measured SLOWER at 200k docs — it serializes the
     # posting and array subtrees, and the collect is not the
-    # bottleneck; the cached sharr above serves both consumers.)
+    # bottleneck; the checkpointed sharr serves both consumers.)
     bp = F.lit(int(threshold_bp))
     cand = (
         und.join(

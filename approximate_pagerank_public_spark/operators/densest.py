@@ -113,20 +113,16 @@ def _densest_broadcast(g: Graph) -> DensestResult:
     v = pdf["v"].to_numpy(np.int64)
     rr, best_r, best_v, best_e, rounds = peel_densest_numpy(u, v, n)
     ids = np.flatnonzero(rr >= 0)
-    if len(ids) == 0:
-        df = g.spark.createDataFrame(
-            [], "id long, round_removed long, in_densest int"
-        )
-    else:
-        df = g.spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "id": ids,
-                    "round_removed": rr[ids],
-                    "in_densest": (rr[ids] >= best_r).astype(np.int32),
-                }
-            )
-        )
+    df = g.spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "id": ids,
+                "round_removed": rr[ids],
+                "in_densest": (rr[ids] >= best_r).astype(np.int32),
+            }
+        ),
+        "id long, round_removed long, in_densest int",
+    )
     return DensestResult(
         rounds=rounds,
         best_round=best_r,

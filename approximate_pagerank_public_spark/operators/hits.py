@@ -77,7 +77,9 @@ def _hits_broadcast(g: Graph, max_iter: int) -> DataFrame:
     }
     import pandas as pd
 
-    return g.spark.createDataFrame(pd.DataFrame(pdf))
+    return g.spark.createDataFrame(
+        pd.DataFrame(pdf), "id long, hub double, authority double"
+    )
 
 
 def _half_step(

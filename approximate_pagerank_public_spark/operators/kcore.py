@@ -149,10 +149,7 @@ def k_core(g: Graph, k: int, mode: str = "auto") -> KCoreResult:
         import pandas as pd
 
         pdf = pd.DataFrame({"id": ids, "core_deg": core_deg})
-        if len(pdf) == 0:
-            df = g.spark.createDataFrame([], "id long, core_deg long")
-        else:
-            df = g.spark.createDataFrame(pdf)
+        df = g.spark.createDataFrame(pdf, "id long, core_deg long")
         return KCoreResult(k=k, rounds=rounds, _df=df)
     df, rounds = _kcore_distributed(g, k)
     return KCoreResult(k=k, rounds=rounds, _df=df)
@@ -251,11 +248,7 @@ def peel_layers(g: Graph, k: int, mode: str = "auto") -> tuple[DataFrame, int]:
         import pandas as pd
 
         pdf = pd.DataFrame({"id": ids, "layer": layers})
-        if len(pdf) == 0:
-            df = g.spark.createDataFrame([], "id long, layer long")
-        else:
-            df = g.spark.createDataFrame(pdf)
-        return df, rounds
+        return g.spark.createDataFrame(pdf, "id long, layer long"), rounds
     return _peel_layers_distributed(g, k)
 
 
@@ -348,7 +341,8 @@ def core_numbers(g: Graph, mode: str = "auto") -> CorenessResult:
         import pandas as pd
 
         df = g.spark.createDataFrame(
-            pd.DataFrame({"id": np.arange(len(c), dtype=np.int64), "core": c})
+            pd.DataFrame({"id": np.arange(len(c), dtype=np.int64), "core": c}),
+            "id long, core long",
         )
         return CorenessResult(rounds=rounds, _df=df)
     df, rounds = _coreness_distributed(g)

@@ -141,7 +141,8 @@ def label_propagation(graph: Graph, max_iter: int = 10, mode: str = "auto") -> D
 
         labels, _ = _lpa_broadcast(und, max_iter)
         return graph.spark.createDataFrame(
-            pd.DataFrame({"id": np.arange(len(labels), dtype=np.int64), "label": labels})
+            pd.DataFrame({"id": np.arange(len(labels), dtype=np.int64), "label": labels}),
+            "id long, label long",
         )
     with ckpt_scope(graph.spark) as cs:
         p = graph.num_partitions

@@ -137,13 +137,11 @@ def maximal_matching(g: Graph, mode: str = "auto") -> DataFrame:
     pdf = canonical_edges(g).select("u", "v", _prio_col().alias("h")).toPandas()
     import pandas as pd
 
-    if not len(pdf):
-        return g.spark.createDataFrame([], "u long, v long")
     u = pdf["u"].to_numpy(np.int64)
     v = pdf["v"].to_numpy(np.int64)
     keep = matching_numpy(u, v, pdf["h"].to_numpy(np.int64))
     return g.spark.createDataFrame(
-        pd.DataFrame({"u": u[keep], "v": v[keep]})
+        pd.DataFrame({"u": u[keep], "v": v[keep]}), "u long, v long"
     )
 
 

@@ -158,8 +158,6 @@ def minimum_spanning_forest(g: Graph, mode: str = "auto") -> DataFrame:
     if resolve_mode(mode, edges_fit(g)) == "distributed":
         return _msf_distributed(g)
     pdf = undirected_weighted_edges(g).toPandas()
-    if not len(pdf):
-        return g.spark.createDataFrame([], "u long, v long, w double")
     u = pdf["u"].to_numpy(np.int64)
     v = pdf["v"].to_numpy(np.int64)
     w = pdf["w"].to_numpy(np.float64)
@@ -167,7 +165,8 @@ def minimum_spanning_forest(g: Graph, mode: str = "auto") -> DataFrame:
     import pandas as pd
 
     return g.spark.createDataFrame(
-        pd.DataFrame({"u": u[keep], "v": v[keep], "w": w[keep]})
+        pd.DataFrame({"u": u[keep], "v": v[keep], "w": w[keep]}),
+        "u long, v long, w double",
     )
 
 
@@ -231,18 +230,16 @@ def affinity_clusters(g: Graph, rounds: int = 2, mode: str = "auto") -> DataFram
     import pandas as pd
 
     n = g.num_vertices
-    if not len(pdf):
-        lab = np.arange(n, dtype=np.int64)
-    else:
-        lab = boruvka_labels_numpy(
-            pdf["u"].to_numpy(np.int64),
-            pdf["v"].to_numpy(np.int64),
-            pdf["w"].to_numpy(np.float64),
-            n,
-            rounds,
-        )
+    lab = boruvka_labels_numpy(
+        pdf["u"].to_numpy(np.int64),
+        pdf["v"].to_numpy(np.int64),
+        pdf["w"].to_numpy(np.float64),
+        n,
+        rounds,
+    )
     return g.spark.createDataFrame(
-        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "cluster": lab})
+        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "cluster": lab}),
+        "id long, cluster long",
     )
 
 

@@ -78,28 +78,24 @@ class PageRankResult:
         import pandas as pd
 
         r = self.ranks_np
-        n = r.shape[1]
-        pdf = pd.DataFrame({"id": np.arange(n, dtype=np.int64)})
-        if self.sources is None:
-            pdf["rank"] = r[0]
-        else:
-            for i in range(r.shape[0]):
-                pdf[f"rank_{i}"] = r[i]
-        return self._graph.spark.createDataFrame(pdf)
+        cols = ["rank"] if self.sources is None else [f"rank_{i}" for i in range(len(r))]
+        pdf = pd.DataFrame({"id": np.arange(r.shape[1], dtype=np.int64), **dict(zip(cols, r))})
+        schema = ", ".join(["id long", *(f"{c} double" for c in cols)])
+        return self._graph.spark.createDataFrame(pdf, schema)
 
     def metrics_df(self) -> DataFrame:
         """Iteration-metrics table ``(iter, l1_err, sq_l2_err,
         dangling_sum, wall_ms)`` — the reference's per-iteration
         convergence-error series (V9, ``multi_personalized_pagerank.cpp:
-        96-108``) as a queryable DataFrame. Non-scalar keys (defensive —
-        none are produced today) are stripped before conversion."""
+        96-108``) as a queryable DataFrame; empty when no superstep
+        ran."""
         import pandas as pd
 
-        scalar = [
-            {k: v for k, v in m.items() if np.isscalar(v) or v is None}
-            for m in self.metrics
-        ]
-        return self._graph.spark.createDataFrame(pd.DataFrame(scalar))
+        cols = ["iter", "l1_err", "sq_l2_err", "dangling_sum", "wall_ms"]
+        return self._graph.spark.createDataFrame(
+            pd.DataFrame(self.metrics, columns=cols),
+            "iter long, l1_err double, sq_l2_err double, dangling_sum double, wall_ms double",
+        )
 
     def rank_vector(self, source_pos: int = 0) -> np.ndarray:
         if self.ranks_np is not None:

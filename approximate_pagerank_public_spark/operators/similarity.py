@@ -948,4 +948,4 @@ def kcenter_seeds(embeddings: DataFrame, k: int = 8) -> DataFrame:
     import pandas as pd
 
     out = pd.DataFrame(picked, columns=["pos", "vec_id", "radius"])
-    return spark.createDataFrame(out.astype({"pos": "int64", "vec_id": "int64"}))
+    return spark.createDataFrame(out, "pos long, vec_id long, radius double")

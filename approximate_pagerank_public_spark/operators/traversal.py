@@ -127,7 +127,9 @@ def multi_source_bfs(
 
     with ckpt_scope(spark) as cs:
         seed = cs.ckpt(
-            spark.createDataFrame(pd.DataFrame({"source": sources, "id": sources}))
+            spark.createDataFrame(
+                pd.DataFrame({"source": sources, "id": sources}), "source long, id long"
+            )
             .withColumn("dist", F.lit(0))
             .repartition(p, "id")
         )
@@ -325,7 +327,7 @@ def widest_path(graph: Graph, source: int, max_rounds: int = 10_000) -> DataFram
     with ckpt_scope(spark) as cs:
         caps = cs.ckpt(
             spark.createDataFrame(
-                pd.DataFrame({"id": [int(source)], "cap": [1.0]})
+                pd.DataFrame({"id": [int(source)], "cap": [1.0]}), "id long, cap double"
             ).repartition(p, "id")
         )
         frontier = caps
@@ -416,9 +418,9 @@ def exact_diameter(
     start = int(root_row["src"])
     dists = None
     if gu.blocks is not None:
-        # the root's level vector is already on the driver: keep it
-        # there (a DataFrame over it would pin shm result files to the
-        # graph until unpersist, one set per call)
+        # the root's level vector is already on the driver: read the
+        # fringe levels from it instead of uploading it as a frame and
+        # querying each level back
         dist, inf = _block_bfs_distances(gu, [start])
         lvl = np.where(dist[:, 0] < inf - 1000, dist[:, 0].astype(np.int64), -1)
         ecc_start = int(lvl.max())
@@ -486,69 +488,27 @@ def multi_source_bfs_block(
     :func:`multi_source_bfs`. Returns ``(source, id, dist)`` over
     reached vertices only.
     """
-    blocks = graph.blocks
-    if blocks is None:
+    if graph.blocks is None:
         return multi_source_bfs(graph, sources, max_levels)
+    import pandas as pd
+
     s = len(sources)
     src_arr = np.asarray(sources, dtype=np.int64)
     dist, inf = _block_bfs_distances(graph, sources, max_levels)
-    # zero-pandas conversion: flat reached index → shm-backed columns (the
-    # naive nonzero + pd.DataFrame path cost more than the BFS itself, and
-    # a driver-local createDataFrame costs ~3 s/10⁶ rows through Py4J —
-    # more than the whole warm traversal)
+    # flat reached index → columns without a per-row Python pass; above
+    # the session's 1 MiB localRelationThreshold the upload is an RDD of
+    # Arrow batches, so downstream scans run on the executors
     flat = np.flatnonzero(dist.ravel() < inf - 1000)
     vid = flat // s
     sidx = flat - vid * s
-    return _df_from_shm_columns(
-        graph.spark,
-        blocks,
+    pdf = pd.DataFrame(
         {
             "source": src_arr[sidx],
             "id": vid.astype(np.int64),
             "dist": dist.ravel()[flat].astype(np.int64),
-        },
-        "source long, id long, dist long",
+        }
     )
-
-
-def _df_from_shm_columns(
-    spark, blocks, cols: dict[str, np.ndarray], schema: str
-) -> DataFrame:
-    """Driver-resident NumPy columns → distributed DataFrame through the
-    shared-memory block dir: columns are written once as .npy, tasks
-    mmap disjoint row ranges (``mapInArrow``) — no Py4J upload of the
-    payload, and downstream ops read it in parallel. Files live in a
-    ``res_*`` subdir of the BlockStore dir, reclaimed by
-    ``Graph.unpersist`` (re-reads must stay possible while the
-    DataFrame's lineage is alive)."""
-    import pyarrow as pa
-
-    d = os.path.join(blocks.dir, f"res_{uuid.uuid4().hex}")
-    os.makedirs(d)
-    names = list(cols)
-    n = len(cols[names[0]])
-    for name, arr in cols.items():
-        np.save(f"{d}/{name}.npy", np.ascontiguousarray(arr))
-    p = max(1, min(spark.sparkContext.defaultParallelism, max(1, n // 65_536)))
-
-    def gen(batches):
-        for b in batches:
-            for i in b.column("id").to_pylist():
-                lo, hi = i * n // p, (i + 1) * n // p
-                if hi > lo:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(
-                                np.asarray(
-                                    np.load(f"{d}/{nm}.npy", mmap_mode="r")[lo:hi]
-                                )
-                            )
-                            for nm in names
-                        ],
-                        names=names,
-                    )
-
-    return spark.range(0, p, 1, p).mapInArrow(gen, schema)
+    return graph.spark.createDataFrame(pdf, "source long, id long, dist long")
 
 
 def _block_bfs_distances(

@@ -192,7 +192,8 @@ class CheckpointManager:
         pdf = pd.DataFrame({"id": np.arange(n, dtype=np.int64)})
         for i in range(s):
             pdf[f"c{i}"] = rank2d[i]
-        df = spark.createDataFrame(pdf).repartition(num_partitions, "id")
+        schema = ", ".join(["id long", *(f"c{i} double" for i in range(s))])
+        df = spark.createDataFrame(pdf, schema).repartition(num_partitions, "id")
         it_dir = os.path.join(self.path, f"iter_{iteration:05d}")
         df.write.mode("overwrite").parquet(os.path.join(it_dir, "ranks.parquet"))
         # per-partition lineage: row count per physical partition

@@ -171,7 +171,7 @@ def main() -> None:
         rec(
             "bfs1-warm",
             "single-source block BFS, warm protocol (5 runs, median): "
-            "gang-scheduled barrier min-relax + shm result columns",
+            "gang-scheduled barrier min-relax + Arrow result upload",
             r,
         )
         flush()

@@ -9,9 +9,13 @@ comparison is over ids rather than counts because the ContextCleaner
 may drop blocks of earlier, garbage-collected results meanwhile. The
 first call of each case is a warm-up, so Graph-level caches that the
 operator fills on first use (ranked adjacency, block stores) are not
-counted. The error-exit variant makes the operator's third checkpoint
-raise and expects nothing new to stay persisted.
+counted. The same holds for the bytes under the graph's block store
+dir: a call leaves no files behind there. The error-exit variant makes
+the operator's third checkpoint raise and expects nothing new to stay
+persisted.
 """
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -105,6 +109,14 @@ CASES = {
     "wlhash": lambda g: wlhash.wl_refinement(g, rounds=2),
 }
 
+# calls that take fewer than three checkpoints: checked for what they
+# leave behind, not by the error-exit injection
+RESULT_CASES = {
+    **CASES,
+    "bfs_blocks": lambda g: traversal.bfs(g, 1),
+    "containment": lambda g: dedup.containment_pairs(_docs(g.spark), threshold_bp=5000),
+}
+
 
 def _persisted(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
@@ -120,15 +132,24 @@ def _rdd_leaves(df) -> set[int]:
     return ids
 
 
-@pytest.mark.parametrize("case", sorted(CASES))
+def _store_bytes(g) -> int:
+    """Bytes under the graph's block store dir (0 without one)."""
+    if g.blocks is None:
+        return 0
+    walk = os.walk(g.blocks.dir)
+    return sum(os.path.getsize(os.path.join(d, f)) for d, _, fs in walk for f in fs)
+
+
+@pytest.mark.parametrize("case", sorted(RESULT_CASES))
 def test_call_releases_unread_checkpoints(g5, case):
     spark = g5.spark
-    CASES[case](g5).collect()  # warm-up: fills Graph-level caches
-    before = _persisted(spark)
-    out = CASES[case](g5)
+    RESULT_CASES[case](g5).collect()  # warm-up: fills Graph-level caches
+    before, before_bytes = _persisted(spark), _store_bytes(g5)
+    out = RESULT_CASES[case](g5)
     out.collect()
     after = _persisted(spark)
     assert after - before == (_rdd_leaves(out) & after) - before
+    assert _store_bytes(g5) == before_bytes
 
 
 @pytest.mark.parametrize("case", sorted(CASES))

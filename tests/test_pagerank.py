@@ -240,3 +240,19 @@ def _warm_delta_edges():
     dst = rng.integers(0, 250, 1200)
     keep = src != dst
     return src[keep], dst[keep]
+
+
+def test_metrics_df_without_supersteps(g5):
+    """A run with no superstep has an empty metrics table with the
+    declared schema, on both execution paths."""
+    for mode in ("broadcast", "distributed-arrow"):
+        res = pagerank(g5, mode=mode, max_iter=0)
+        df = res.metrics_df()
+        assert df.schema.simpleString() == (
+            "struct<iter:bigint,l1_err:double,sq_l2_err:double,"
+            "dangling_sum:double,wall_ms:double>"
+        )
+        assert df.count() == 0
+        assert res.ranks().columns == ["id", "rank"]
+    full = pagerank(g5, mode="broadcast", max_iter=3, tol=0.0).metrics_df()
+    assert [r["iter"] for r in full.orderBy("iter").collect()] == [1, 2, 3]

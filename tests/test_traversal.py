@@ -424,3 +424,48 @@ def test_exact_diameter_eval_guard(g_rand):
 
     with _pytest.raises(RuntimeError, match="max_ecc_evals"):
         exact_diameter(g_rand, max_ecc_evals=0)
+
+
+def _plan_leaves(df) -> set[str]:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    names = set()
+    while leaves.hasNext():
+        names.add(leaves.next().nodeName())
+    return names
+
+
+def test_driver_results_upload_route(spark, g5):
+    """Driver results reach Spark by one Arrow upload: above the
+    session's 1 MiB ``localRelationThreshold`` as an RDD of Arrow
+    batches, below it as a ``LocalRelation``; an empty result keeps its
+    declared schema."""
+    from approximate_pagerank_public_spark.operators.kcore import k_core
+    from approximate_pagerank_public_spark.operators.traversal import (
+        multi_source_bfs_block,
+    )
+    from approximate_pagerank_public_spark.plans.graph import Graph
+
+    # bidirected binary tree: depth ~14, every source reaches every vertex
+    n = 20_000
+    child = np.arange(1, n)
+    parent = (child - 1) // 2
+    g = Graph.from_edge_arrays(
+        spark,
+        np.concatenate([child, parent]),
+        np.concatenate([parent, child]),
+        num_vertices=n,
+        num_partitions=4,
+    )
+    try:
+        big = multi_source_bfs_block(g, list(range(8)))  # 1.6·10⁵ rows, 3.8 MB
+        assert _plan_leaves(big) == {"LogicalRDD"}
+        assert big.count() == 8 * n
+        assert big.where("source = 7 and id = 7").first()["dist"] == 0
+    finally:
+        g.unpersist()
+    small = multi_source_bfs_block(g5, [1])
+    assert _plan_leaves(small) == {"LocalRelation"}
+    assert sorted(r["id"] for r in small.collect()) == [0, 1, 2, 3]
+    empty = k_core(g5, k=10, mode="broadcast")._df
+    assert empty.schema.simpleString() == "struct<id:bigint,core_deg:bigint>"
+    assert empty.count() == 0
