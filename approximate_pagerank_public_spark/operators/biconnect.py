@@ -60,6 +60,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
+from approximate_pagerank_public_spark.session import upload_frame
 
 
 def _h60(a: str, b: str):
@@ -299,7 +300,7 @@ def _bridge_parts(
                 "b": np.maximum(child, parent[child]),
             }
         ).astype("int64")
-        bridges_df = spark.createDataFrame(br_pdf, "a long, b long")
+        bridges_df = upload_frame(spark, br_pdf, "a long, b long")
     else:
         sig_df = _subtree_xor_distributed(cs, lv_df, tree, w_df, p)
         bridges_df = cs.ckpt(

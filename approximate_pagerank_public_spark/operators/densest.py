@@ -53,6 +53,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
+from approximate_pagerank_public_spark.session import upload_frame
 
 # threshold constant: remove iff 4*deg*v_r <= 9*e_r  (i.e. 1+eps = 9/8)
 _NUM, _DEN = 9, 4
@@ -113,7 +114,8 @@ def _densest_broadcast(g: Graph) -> DensestResult:
     v = pdf["v"].to_numpy(np.int64)
     rr, best_r, best_v, best_e, rounds = peel_densest_numpy(u, v, n)
     ids = np.flatnonzero(rr >= 0)
-    df = g.spark.createDataFrame(
+    df = upload_frame(
+        g.spark,
         pd.DataFrame(
             {
                 "id": ids,
@@ -177,8 +179,8 @@ def _densest_distributed(g: Graph) -> DensestResult:
             alive, edges = nxt_alive, nxt_edges
             r += 1
         if not removed:
-            out = g.spark.createDataFrame(
-                [], "id long, round_removed long, in_densest int"
+            out = upload_frame(
+                g.spark, [], "id long, round_removed long, in_densest int"
             )
         else:
             parts = [

@@ -52,6 +52,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
+from approximate_pagerank_public_spark.session import upload_frame
 
 
 @dataclass
@@ -149,7 +150,7 @@ def k_core(g: Graph, k: int, mode: str = "auto") -> KCoreResult:
         import pandas as pd
 
         pdf = pd.DataFrame({"id": ids, "core_deg": core_deg})
-        df = g.spark.createDataFrame(pdf, "id long, core_deg long")
+        df = upload_frame(g.spark, pdf, "id long, core_deg long")
         return KCoreResult(k=k, rounds=rounds, _df=df)
     df, rounds = _kcore_distributed(g, k)
     return KCoreResult(k=k, rounds=rounds, _df=df)
@@ -248,7 +249,7 @@ def peel_layers(g: Graph, k: int, mode: str = "auto") -> tuple[DataFrame, int]:
         import pandas as pd
 
         pdf = pd.DataFrame({"id": ids, "layer": layers})
-        return g.spark.createDataFrame(pdf, "id long, layer long"), rounds
+        return upload_frame(g.spark, pdf, "id long, layer long"), rounds
     return _peel_layers_distributed(g, k)
 
 

@@ -35,6 +35,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
+from approximate_pagerank_public_spark.session import upload_frame
 
 
 def _prio_col():
@@ -125,7 +126,7 @@ def _matching_distributed(g: Graph, max_rounds: int = 200) -> DataFrame:
             cs.free(active)
             active = nxt
         if matched is None:
-            return g.spark.createDataFrame([], "u long, v long")
+            return upload_frame(g.spark, [], "u long, v long")
         return cs.keep(matched.select("u", "v"))
 
 
@@ -140,8 +141,8 @@ def maximal_matching(g: Graph, mode: str = "auto") -> DataFrame:
     u = pdf["u"].to_numpy(np.int64)
     v = pdf["v"].to_numpy(np.int64)
     keep = matching_numpy(u, v, pdf["h"].to_numpy(np.int64))
-    return g.spark.createDataFrame(
-        pd.DataFrame({"u": u[keep], "v": v[keep]}), "u long, v long"
+    return upload_frame(
+        g.spark, pd.DataFrame({"u": u[keep], "v": v[keep]}), "u long, v long"
     )
 
 

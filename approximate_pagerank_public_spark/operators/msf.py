@@ -50,6 +50,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
+from approximate_pagerank_public_spark.session import upload_frame
 
 
 def undirected_weighted_edges(g: Graph) -> DataFrame:
@@ -149,7 +150,7 @@ def _msf_distributed(g: Graph) -> DataFrame:
     with ckpt_scope(g.spark) as cs:
         forest, _labels = _boruvka_distributed(cs, g, max_rounds)
         if forest is None:
-            return g.spark.createDataFrame([], "u long, v long, w double")
+            return upload_frame(g.spark, [], "u long, v long, w double")
         return cs.keep(forest.select("u", "v", "w"))
 
 
@@ -164,7 +165,8 @@ def minimum_spanning_forest(g: Graph, mode: str = "auto") -> DataFrame:
     keep = kruskal_numpy(u, v, w)
     import pandas as pd
 
-    return g.spark.createDataFrame(
+    return upload_frame(
+        g.spark,
         pd.DataFrame({"u": u[keep], "v": v[keep], "w": w[keep]}),
         "u long, v long, w double",
     )
@@ -237,7 +239,8 @@ def affinity_clusters(g: Graph, rounds: int = 2, mode: str = "auto") -> DataFram
         n,
         rounds,
     )
-    return g.spark.createDataFrame(
+    return upload_frame(
+        g.spark,
         pd.DataFrame({"id": np.arange(n, dtype=np.int64), "cluster": lab}),
         "id long, cluster long",
     )

@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+import weakref
 from collections.abc import Iterator
 
 import numpy as np
@@ -321,6 +322,8 @@ class BlockStore:
         self.spark = spark
         self.dir = os.path.join(_SHM_DIR, f"apr_blocks_{uuid.uuid4().hex}")
         os.makedirs(self.dir, exist_ok=True)
+        # the dir goes with the store (or at exit), unpersisted or not
+        self._finalizer = weakref.finalize(self, shutil.rmtree, self.dir, True)
         block_dir = self.dir
 
         def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -450,4 +453,4 @@ class BlockStore:
             shutil.rmtree(out_dir, ignore_errors=True)
 
     def cleanup(self) -> None:
-        shutil.rmtree(self.dir, ignore_errors=True)
+        self._finalizer()

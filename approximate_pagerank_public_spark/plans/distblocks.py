@@ -89,6 +89,7 @@ import os
 import shutil
 import tempfile
 import uuid
+import weakref
 from collections.abc import Iterator
 
 import numpy as np
@@ -193,6 +194,8 @@ class DistBlockStore:
         self.spark = spark
         self.dir = path or default_store_dir()
         os.makedirs(self.dir, exist_ok=True)
+        # the dir goes with the store (or at exit), unpersisted or not
+        self._finalizer = weakref.finalize(self, shutil.rmtree, self.dir, True)
         block_dir = self.dir
         if num_blocks is None and num_edges:
             epb = int(
@@ -496,4 +499,4 @@ class DistBlockStore:
 
     def cleanup(self) -> None:
         self.routing.unpersist()
-        shutil.rmtree(self.dir, ignore_errors=True)
+        self._finalizer()

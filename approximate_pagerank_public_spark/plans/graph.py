@@ -212,7 +212,9 @@ class Graph:
         return self._dangling_mask
 
     def edges_numpy(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(src, dst, weight) arrays — test/golden helper, small graphs only."""
+        """(src, dst, weight) arrays on the driver — for the driver paths
+        ``auto`` takes while the edges fit (``plans/modes.py::edges_fit``)
+        and for test goldens."""
         pdf = self.edges.toPandas()
         return (
             pdf["src"].to_numpy(np.int64),

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -34,7 +34,7 @@ def get_spark(
       memory at scale.
     - shuffle partitions default to 32 locally (``local[32]``); on a real
       cluster set ``spark.sql.shuffle.partitions`` ~ 2-3x total cores.
-    - Driver results (``createDataFrame(pandas, schema)``) above 1 MiB
+    - Driver results (:func:`upload_frame`) above 1 MiB
       upload as an RDD of Arrow batches instead of a driver-side
       ``LocalRelation``. Spark's 48 MiB default keeps every scan of a
       mid-size result on the driver: an 8-source BFS result of 10⁶ rows
@@ -67,3 +67,14 @@ def get_spark(
         .config("spark.sql.ansi.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def upload_frame(spark: SparkSession, pdf, schema: str) -> DataFrame:
+    """A driver result as a DataFrame of ``schema``: one Arrow upload of
+    ``pdf``, or, when it is empty, an RDD of no partitions (PySpark
+    plans an empty pandas upload as ``spark.default.parallelism`` empty
+    partitions, so every job over it would launch a stage of empty
+    tasks)."""
+    if len(pdf) == 0:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    return spark.createDataFrame(pdf, schema)

@@ -132,7 +132,9 @@ def test_random_walk_ppr_keeps_graph_adjacency_cache(spark):
     src, dst = [1, 1, 2, 2, 3, 4], [0, 3, 0, 1, 2, 3]
     g = Graph.from_edge_arrays(spark, src, dst, num_vertices=5, num_partitions=4)
     try:
-        res = random_walk_ppr(g, 2, num_walks=32, walk_length=2 * _CKPT_EVERY)
+        res = random_walk_ppr(
+            g, 2, num_walks=32, walk_length=2 * _CKPT_EVERY, mode="distributed"
+        )
         res.endpoints().collect()
         assert _cache_rdd_id(g._ranked_adj) in _persisted(spark)
     finally:

@@ -93,7 +93,9 @@ CASES = {
         g, mode="distributed-arrow", max_iter=3, tol=0.0
     ).ranks_df,
     "push": lambda g: push.approx_ppr_push(g, 1, eps=1e-3, mode="distributed").state(),
-    "randomwalk": lambda g: randomwalk.node2vec_corpus(g, walk_length=2),
+    "randomwalk": lambda g: randomwalk.node2vec_corpus(
+        g, walk_length=2, mode="distributed"
+    ),
     "scc": lambda g: scc.strongly_connected_components(g, mode="distributed"),
     "similarity": lambda g: similarity.kcenter_seeds(_emb(g.spark), k=3),
     "simrank": lambda g: simrank.simrank_mc(
@@ -115,6 +117,9 @@ RESULT_CASES = {
     **CASES,
     "bfs_blocks": lambda g: traversal.bfs(g, 1),
     "containment": lambda g: dedup.containment_pairs(_docs(g.spark), threshold_bp=5000),
+    "randomwalk_driver": lambda g: randomwalk.node2vec_corpus(
+        g, walk_length=2, mode="broadcast"
+    ),
 }
 
 

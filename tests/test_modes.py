@@ -21,6 +21,7 @@ from approximate_pagerank_public_spark.operators import (
     msf,
     pagerank,
     push,
+    randomwalk,
     scc,
     simrank,
     sssp,
@@ -105,6 +106,18 @@ ENTRIES = {
     ),
     "sssp": (lambda g, s, m: sssp.sssp(g, 0, mode=m), PATHS),
     "approx_ppr_push": (lambda g, s, m: push.approx_ppr_push(g, 1, mode=m), PATHS),
+    "random_walk_ppr": (
+        lambda g, s, m: randomwalk.random_walk_ppr(g, 1, mode=m),
+        PATHS,
+    ),
+    "random_walk_corpus": (
+        lambda g, s, m: randomwalk.random_walk_corpus(g, mode=m),
+        PATHS,
+    ),
+    "node2vec_corpus": (
+        lambda g, s, m: randomwalk.node2vec_corpus(g, mode=m),
+        PATHS,
+    ),
 }
 
 # names a path had before it was deleted or renamed
@@ -196,6 +209,19 @@ GATES = {
     "densest_subgraph": (densest, densest.densest_subgraph, "edges", E, "distributed"),
     "approx_ppr_push": (
         push, lambda g: push.approx_ppr_push(g, 0), "edges", E, "distributed"
+    ),
+    "random_walk_ppr": (
+        randomwalk,
+        lambda g: randomwalk.random_walk_ppr(g, 0),
+        "edges",
+        E,
+        "distributed",
+    ),
+    "random_walk_corpus": (
+        randomwalk, randomwalk.random_walk_corpus, "edges", E, "distributed"
+    ),
+    "node2vec_corpus": (
+        randomwalk, randomwalk.node2vec_corpus, "edges", E, "distributed"
     ),
     "greedy_coloring": (coloring, coloring.greedy_coloring, "edges", C, "distributed"),
     "hyperball_harmonic": (anf, anf.hyperball_harmonic, "edges", E, "packed"),

@@ -5,8 +5,13 @@ estimator agreement with exact PPR on the hub graph."""
 import hashlib
 
 import numpy as np
+import pytest
 
+from approximate_pagerank_public_spark.operators import randomwalk
 from approximate_pagerank_public_spark.operators.randomwalk import random_walk_ppr
+
+# the walk entry points' paths; the hop-replay tests check both
+MODES = ("broadcast", "distributed")
 
 
 def _draw(seed: str, w: int, t: int) -> int:
@@ -40,12 +45,15 @@ def _python_walks(src, dst, source, num_walks, walk_length, pct, seed):
 def test_mc_ppr_matches_python_golden(g_rand):
     src, dst, _ = g_rand.edges_numpy()
     want = _python_walks(src, dst, 5, 64, 10, 80, "tseed")
-    got = (
-        random_walk_ppr(g_rand, 5, num_walks=64, walk_length=10, seed="tseed")
-        .endpoints()
-        .toPandas()
-    )
-    assert dict(zip(got["id"], got["endpoints"])) == want
+    for mode in MODES:
+        got = (
+            random_walk_ppr(
+                g_rand, 5, num_walks=64, walk_length=10, seed="tseed", mode=mode
+            )
+            .endpoints()
+            .toPandas()
+        )
+        assert dict(zip(got["id"], got["endpoints"])) == want, mode
 
 
 def test_mc_ppr_endpoint_conservation_and_determinism(g5):
@@ -114,9 +122,12 @@ def test_random_walk_corpus_replays_hops(g5):
                 if nbrs:
                     cur = nbrs[hv % len(nbrs)]
                 gold[(walk, t + 1)] = cur
-    rows = random_walk_corpus(g5, walks_per_vertex=K, walk_length=L, seed=seed).collect()
-    got = {(r["walk"], r["step"]): r["vertex"] for r in rows}
-    assert got == gold
+    for mode in MODES:
+        rows = random_walk_corpus(
+            g5, walks_per_vertex=K, walk_length=L, seed=seed, mode=mode
+        ).collect()
+        got = {(r["walk"], r["step"]): r["vertex"] for r in rows}
+        assert got == gold, mode
 
 
 def test_node2vec_corpus_replays_hops(g_rand):
@@ -161,11 +172,12 @@ def test_node2vec_corpus_replays_hops(g_rand):
                         break
             # dangling: prev/cur unchanged (pad in place)
             gold[(start, t + 1)] = cur
-    rows = node2vec_corpus(
-        g_rand, walk_length=L, w_return=wr, w_in=wi, w_out=wo, seed=seed
-    ).collect()
-    got = {(r["walk"], r["step"]): r["vertex"] for r in rows}
-    assert got == gold
+    for mode in MODES:
+        rows = node2vec_corpus(
+            g_rand, walk_length=L, w_return=wr, w_in=wi, w_out=wo, seed=seed, mode=mode
+        ).collect()
+        got = {(r["walk"], r["step"]): r["vertex"] for r in rows}
+        assert got == gold, mode
 
 
 def test_node2vec_dangling_pads_and_dedup_adjacency(spark):
@@ -178,11 +190,78 @@ def test_node2vec_dangling_pads_and_dedup_adjacency(spark):
     g = Graph.from_edge_arrays(
         spark, [0, 0, 1], [1, 1, 2], num_vertices=3, num_partitions=2
     )
-    rows = node2vec_corpus(g, walk_length=4).collect()
-    got = {(r["walk"], r["step"]): r["vertex"] for r in rows}
-    # walk from 0: 0 -> 1 -> 2 -> 2 -> 2 (2 is dangling)
-    assert got[(0, 1)] == 1 and got[(0, 2)] == 2 and got[(0, 4)] == 2
+    for mode in MODES:
+        rows = node2vec_corpus(g, walk_length=4, mode=mode).collect()
+        got = {(r["walk"], r["step"]): r["vertex"] for r in rows}
+        # walk from 0: 0 -> 1 -> 2 -> 2 -> 2 (2 is dangling)
+        assert got[(0, 1)] == 1 and got[(0, 2)] == 2 and got[(0, 4)] == 2, mode
     g.unpersist()
+
+
+class _Edges:
+    """Graph stand-in for the driver kernel: edge arrays and a size."""
+
+    def __init__(self, src, dst, n):
+        self.src, self.dst, self.num_vertices = src, dst, n
+
+    def edges_numpy(self):
+        return self.src, self.dst, np.ones(len(self.src))
+
+
+@pytest.mark.parametrize("weights", [(1, 4, 2), (1, 3, 5), (0, 2, 1), (0, 1, 3)])
+def test_node2vec_driver_hop_on_a_reciprocal_hub_graph(weights):
+    """The driver hop materializes only the special slots and resolves
+    out-class draws by integer division; on a graph with reciprocal
+    edges (return slots) and hubs (long out-class runs) every hop must
+    still be the flat layout's pick."""
+    wr, wi, wo = weights
+    rng = np.random.default_rng(7)
+    n = 60
+    src = rng.integers(0, n, 300)
+    dst = (rng.zipf(1.5, 300) - 1) % n
+    src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+    pairs = np.unique(np.stack([src, dst], 1)[src != dst], axis=0)
+    src, dst = pairs[:, 0].copy(), pairs[:, 1].copy()
+    eset = set(zip(src.tolist(), dst.tolist()))
+    adj: dict[int, list[int]] = {}
+    for u, v in sorted(eset):
+        adj.setdefault(u, []).append(v)
+    csr = randomwalk._Csr(_Edges(src, dst, n))
+    walks = np.arange(n)
+    prev = cur = walks
+    gprev, gcur = list(range(n)), list(range(n))
+    for t in range(5):
+        prev, cur = cur, randomwalk._node2vec_hop(
+            csr, walks, prev, cur, "hub", t, wr, wi, wo
+        )
+        for w in range(n):
+            nbrs = adj.get(gcur[w], [])
+            if not nbrs:
+                continue
+            wts = [
+                wr if d == gprev[w] else (wi if (gprev[w], d) in eset else wo)
+                for d in nbrs
+            ]
+            draw = _draw("hub", w, t) % sum(wts)
+            pick = int(np.searchsorted(np.cumsum(wts), draw, "right"))
+            gprev[w], gcur[w] = gcur[w], nbrs[pick]
+        assert cur.tolist() == gcur
+
+
+@pytest.mark.parametrize("chunk", [None, "one walk"])
+def test_node2vec_paths_agree_when_return_weighs_least(g_rand, monkeypatch, chunk):
+    """w_return < w_out is the case whose cumulative special weights
+    are non-monotone on the distributed path; the driver path must pick
+    the same rows, also when each candidate chunk holds a single walk."""
+    if chunk:
+        monkeypatch.setattr(randomwalk, "_HOP_CHUNK", 1)
+    kw = dict(walk_length=4, w_return=1, w_in=3, w_out=5, seed="par")
+    rows = {
+        m: sorted(map(tuple, randomwalk.node2vec_corpus(g_rand, mode=m, **kw).collect()))
+        for m in MODES
+    }
+    assert len(rows["broadcast"]) == 300 * 5
+    assert rows["broadcast"] == rows["distributed"]
 
 
 def test_skipgram_pairs_window_counts(spark):

@@ -438,7 +438,7 @@ def test_driver_results_upload_route(spark, g5):
     """Driver results reach Spark by one Arrow upload: above the
     session's 1 MiB ``localRelationThreshold`` as an RDD of Arrow
     batches, below it as a ``LocalRelation``; an empty result keeps its
-    declared schema."""
+    declared schema and plans no partitions."""
     from approximate_pagerank_public_spark.operators.kcore import k_core
     from approximate_pagerank_public_spark.operators.traversal import (
         multi_source_bfs_block,
@@ -469,3 +469,5 @@ def test_driver_results_upload_route(spark, g5):
     empty = k_core(g5, k=10, mode="broadcast")._df
     assert empty.schema.simpleString() == "struct<id:bigint,core_deg:bigint>"
     assert empty.count() == 0
+    # no stage of empty tasks downstream of an empty result
+    assert empty.rdd.getNumPartitions() <= 1

@@ -3,7 +3,8 @@
 ``Graph.undirected()`` is memoized like ``reversed_graph()``: connected
 components, label propagation, bridges and the exact diameter share one
 symmetrized edge table and one CSR block store, and only the parent's
-``unpersist()`` releases them.
+``unpersist()`` releases them. A block store's dir also goes when the
+store is garbage-collected, or at exit.
 """
 
 import os
@@ -102,3 +103,25 @@ def test_exact_diameter_releases_the_symmetrized_graph(spark):
     g.unpersist()
     assert _persisted(spark) - rdds0 == set()
     assert _shm_bytes() == shm0
+
+
+def test_block_store_dirs_go_with_a_dropped_graph(spark):
+    """A Graph dropped without ``unpersist()`` still removes its block
+    store dirs once collected; dirs of live stores go at exit."""
+    import gc
+
+    g = _two_triangles(spark)
+    edges, stores = g.edges, [g.blocks, g.dist_blocks()]
+    routing = stores[1].routing
+    dirs = [s.dir for s in stores]
+    fins = [s._finalizer for s in stores]
+    assert all(os.path.isdir(d) for d in dirs)
+    assert all(f.atexit for f in fins)
+    del g, stores
+    gc.collect()
+    try:
+        assert not any(f.alive for f in fins)
+        assert not any(os.path.exists(d) for d in dirs)
+    finally:
+        edges.unpersist()
+        routing.unpersist()
