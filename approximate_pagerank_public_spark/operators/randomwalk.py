@@ -21,15 +21,17 @@ reproducible across engines (the DuckDB oracle replays it exactly):
   reference's fixed iteration budget).
 
 Every walk entry point here (MC PPR, the DeepWalk corpus, node2vec) has
-two paths, picked by ``plans/modes.py::resolve_mode`` on the edge count:
+two paths, picked by ``plans/modes.py::resolve_mode``:
 
-- ``broadcast`` (``auto`` while the edge arrays fit,
-  ``BROADCAST_MAX_EDGES``): the edges are collected once and sorted into
-  a CSR in :func:`ranked_adjacency`'s (src, dst) order, every hop of
-  every walk is one vectorized NumPy step over it (the md5 draws through
-  ``hashlib``), and the result is uploaded as one DataFrame. A Spark job
-  chain per hop (joins, windows, checkpoints) costs ~2 s of driver time
-  even on a 25k-edge graph; the driver step costs milliseconds.
+- ``broadcast`` (``auto`` while the walk draws and the edge arrays fit,
+  ``plans/modes.py::walks_fit``: walks · hops under the measured
+  ``WALK_MAX_HOPS`` / ``HEAVY_WALK_MAX_HOPS``, E ≤
+  ``BROADCAST_MAX_EDGES``): the edges are collected once and sorted
+  into a CSR in :func:`ranked_adjacency`'s (src, dst) order, every hop of every walk is one vectorized NumPy step
+  over it (the md5 draws through ``hashlib``, one core), and the result
+  is uploaded as one DataFrame. A Spark job chain per hop (joins,
+  windows, checkpoints) costs ~1-2 s of driver time even on a 25k-edge
+  graph; the driver step costs milliseconds there.
 - ``distributed`` (the 100-TB path): walk state is a DataFrame
   ``(walk, cur, stopped)`` of W rows; each step is one equi-join against
   the ranked adjacency ``(src, rnk, dst)`` — shuffle volume O(W) per
@@ -55,7 +57,11 @@ from pyspark.sql.window import Window
 
 from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 from approximate_pagerank_public_spark.plans.graph import Graph
-from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
+from approximate_pagerank_public_spark.plans.modes import (
+    HEAVY_WALK_MAX_HOPS,
+    resolve_mode,
+    walks_fit,
+)
 from approximate_pagerank_public_spark.session import upload_frame
 
 _CKPT_EVERY = 4  # join-lineage truncation cadence
@@ -105,15 +111,13 @@ def ranked_adjacency(g: Graph) -> DataFrame:
 # ------------------------------------------------------------ driver path
 def _draws(seed: str, walks: np.ndarray, t: int) -> np.ndarray:
     """:func:`_step_hash` on the driver: the first 60 bits of
-    ``md5(f"{seed}:{walk}:{t}")`` for every walk id in ``walks``."""
-    return np.fromiter(
-        (
-            int.from_bytes(md5(f"{seed}:{w}:{t}".encode()).digest()[:8], "big") >> 4
-            for w in walks.tolist()
-        ),
-        dtype=np.int64,
-        count=len(walks),
-    )
+    ``md5(f"{seed}:{walk}:{t}")`` for every walk id in ``walks``. One
+    bytes format and one digest per walk, the high words read in bulk:
+    ~1.6x the rate of an f-string and ``int.from_bytes`` per walk."""
+    fmt = f"{seed.replace('%', '%%')}:%d:{t}".encode()
+    digests = b"".join([md5(fmt % w).digest() for w in walks.tolist()])
+    hi = np.frombuffer(digests, dtype=">u8")[::2]
+    return (hi >> np.uint64(4)).astype(np.int64)
 
 
 class _Csr:
@@ -219,13 +223,14 @@ def _node2vec_hop(csr, walks, prev, cur, seed, t, wr, wi, wo) -> np.ndarray:
     return nxt
 
 
-def _corpus_frame(g: Graph, walks: np.ndarray, path: list[np.ndarray]) -> DataFrame:
-    """``(walk, step, vertex)`` rows of the per-step positions ``path``."""
+def _corpus_frame(g: Graph, walks: np.ndarray, pos: np.ndarray) -> DataFrame:
+    """``(walk, step, vertex)`` rows of ``pos[step, i]``, the position of
+    walk ``walks[i]`` after ``step`` hops."""
     pdf = pd.DataFrame(
         {
-            "walk": np.tile(walks, len(path)),
-            "step": np.repeat(np.arange(len(path), dtype=np.int64), len(walks)),
-            "vertex": np.concatenate(path),
+            "walk": np.tile(walks, len(pos)),
+            "step": np.repeat(np.arange(len(pos), dtype=np.int64), len(walks)),
+            "vertex": pos.ravel(),
         }
     )
     return upload_frame(g.spark, pdf, _WALK_SCHEMA)
@@ -236,15 +241,15 @@ def _random_walk_corpus_broadcast(
 ) -> DataFrame:
     csr = _Csr(g)
     walks = np.arange(g.num_vertices * k, dtype=np.int64)
-    cur = walks // k
-    path = [cur]
+    pos = np.empty((walk_length + 1, len(walks)), dtype=np.int64)
+    pos[0] = walks // k
     for t in range(walk_length):
+        pos[t + 1] = pos[t]
+        cur = pos[t + 1]
         lo, deg = csr.rows(cur)
         mv = np.flatnonzero(deg)
-        cur = cur.copy()
         cur[mv] = csr.dst[lo[mv] + _draws(seed, walks[mv], t) % deg[mv]]
-        path.append(cur)
-    return _corpus_frame(g, walks, path)
+    return _corpus_frame(g, walks, pos)
 
 
 def _node2vec_broadcast(
@@ -252,12 +257,12 @@ def _node2vec_broadcast(
 ) -> DataFrame:
     csr = _Csr(g)
     walks = np.arange(g.num_vertices, dtype=np.int64)
-    prev = cur = walks
-    path = [cur]
+    pos = np.empty((walk_length + 1, len(walks)), dtype=np.int64)
+    pos[0] = walks
     for t in range(walk_length):
-        prev, cur = cur, _node2vec_hop(csr, walks, prev, cur, seed, t, wr, wi, wo)
-        path.append(cur)
-    return _corpus_frame(g, walks, path)
+        prev = pos[t - 1] if t else pos[0]
+        pos[t + 1] = _node2vec_hop(csr, walks, prev, pos[t], seed, t, wr, wi, wo)
+    return _corpus_frame(g, walks, pos)
 
 
 def _random_walk_ppr_broadcast(
@@ -307,12 +312,14 @@ def random_walk_ppr(
     percent so the md5 draw decides identically in both engines.
 
     ``mode``: ``broadcast`` walks every hop on the driver CSR (``auto``
-    while the edges fit), ``distributed`` joins the walk-state DataFrame
-    against the ranked adjacency per hop; same endpoints on both.
+    while ``num_walks · walk_length`` ≤ ``HEAVY_WALK_MAX_HOPS`` and the
+    edges fit), ``distributed`` joins the walk-state DataFrame against
+    the ranked adjacency per hop; same endpoints on both.
     """
     spark = g.spark
     continue_pct = int(round(alpha * 100))
-    if resolve_mode(mode, edges_fit(g)) == "broadcast":
+    fits = walks_fit(g, walk_length, walks=num_walks, limit=HEAVY_WALK_MAX_HOPS)
+    if resolve_mode(mode, fits) == "broadcast":
         df = _random_walk_ppr_broadcast(
             g, source, num_walks, walk_length, continue_pct, seed
         )
@@ -383,8 +390,9 @@ def random_walk_corpus(
     order; a dangling vertex pads the remaining steps in place (the
     trajectory keeps its fixed length — documented, SQL-replayable).
 
-    ``mode``: ``broadcast`` (``auto`` while the edges fit) runs every
-    hop as one NumPy step over the driver CSR and uploads the corpus;
+    ``mode``: ``broadcast`` (``auto`` while ``V·K·L`` ≤ ``WALK_MAX_HOPS``
+    and the edges fit) runs every hop as one NumPy step over the driver
+    CSR and uploads the corpus;
     ``distributed`` keeps the state ``(walk, cur)`` of V·K rows on the
     cluster, each step one equi-join against the ranked adjacency
     (shuffle O(V·K), independent of |E|), lineage truncated by a
@@ -394,7 +402,7 @@ def random_walk_corpus(
     """
     spark = g.spark
     k = int(walks_per_vertex)
-    if resolve_mode(mode, edges_fit(g)) == "broadcast":
+    if resolve_mode(mode, walks_fit(g, walk_length, per_vertex=k)) == "broadcast":
         return _random_walk_corpus_broadcast(g, k, walk_length, seed)
     adj = ranked_adjacency(g)
     state = (
@@ -461,8 +469,9 @@ def node2vec_corpus(
     Dangling vertices pad in place, keeping trajectories fixed-length
     like :func:`random_walk_corpus`.
 
-    ``mode``: ``broadcast`` (``auto`` while the edges fit) walks on the
-    driver CSR: per hop, each walk's special slots (collapse 2 below)
+    ``mode``: ``broadcast`` (``auto`` while ``V·L`` ≤
+    ``HEAVY_WALK_MAX_HOPS`` and the edges fit) walks on the driver CSR:
+    per hop, each walk's special slots (collapse 2 below)
     are class-tested by ``searchsorted`` on the sorted ``src·n + dst``
     keys and the draw picks its bracket by ``searchsorted`` on their
     integer cumulative weights, or by integer division between them
@@ -498,7 +507,8 @@ def node2vec_corpus(
     """
     spark = g.spark
     wr, wi, wo = int(w_return), int(w_in), int(w_out)
-    if resolve_mode(mode, edges_fit(g)) == "broadcast":
+    fits = walks_fit(g, walk_length, limit=HEAVY_WALK_MAX_HOPS)
+    if resolve_mode(mode, fits) == "broadcast":
         return _node2vec_broadcast(g, walk_length, wr, wi, wo, seed)
     adj = ranked_adjacency(g)
     e2 = g.edges.select(F.col("src").alias("p_src"), F.col("dst").alias("p_dst"))

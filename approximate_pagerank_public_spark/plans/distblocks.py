@@ -259,6 +259,10 @@ class DistBlockStore:
             .withColumnRenamed("src", "id")
             .persist()
         )
+        # a collected store releases its routing table too; not at exit,
+        # where the JVM and its cache go with the process
+        self._unroute = weakref.finalize(self, self.routing.unpersist)
+        self._unroute.atexit = False
         self.num_messages = self.routing.agg(
             F.sum(F.size("pids")).alias("m")
         ).first()["m"] or 0
@@ -498,5 +502,5 @@ class DistBlockStore:
         )
 
     def cleanup(self) -> None:
-        self.routing.unpersist()
+        self._unroute()
         self._finalizer()

@@ -236,7 +236,7 @@ def main(argv: list[str] | None = None) -> int:
             node2vec_corpus,
         )
 
-        node2vec_corpus(graph, walk_length=args.max_iter).write.mode(
+        node2vec_corpus(graph, walk_length=args.max_iter, mode=args.mode).write.mode(
             "overwrite"
         ).parquet(args.output)
     elif args.algorithm == "eigenvector":

@@ -30,6 +30,8 @@ from approximate_pagerank_public_spark.plans.modes import (
     BROADCAST_MAX_EDGES,
     BROADCAST_MAX_VERTICES,
     PATHS,
+    HEAVY_WALK_MAX_HOPS,
+    WALK_MAX_HOPS,
     resolve_mode,
 )
 from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
@@ -210,19 +212,6 @@ GATES = {
     "approx_ppr_push": (
         push, lambda g: push.approx_ppr_push(g, 0), "edges", E, "distributed"
     ),
-    "random_walk_ppr": (
-        randomwalk,
-        lambda g: randomwalk.random_walk_ppr(g, 0),
-        "edges",
-        E,
-        "distributed",
-    ),
-    "random_walk_corpus": (
-        randomwalk, randomwalk.random_walk_corpus, "edges", E, "distributed"
-    ),
-    "node2vec_corpus": (
-        randomwalk, randomwalk.node2vec_corpus, "edges", E, "distributed"
-    ),
     "greedy_coloring": (coloring, coloring.greedy_coloring, "edges", C, "distributed"),
     "hyperball_harmonic": (anf, anf.hyperball_harmonic, "edges", E, "packed"),
     "strongly_connected_components": (
@@ -240,6 +229,30 @@ GATES = {
     ),
     "bridges": (biconnect, biconnect.bridges, "vertices", V, "distributed"),
 }
+
+# walk entry point -> (call(graph, walks, hops), its walk-hops limit,
+# the vertex count at which limit // 8 walks of 8 hops run: MC PPR walks
+# from one source, the corpus 2 walks per vertex, node2vec one)
+WALK_GATES = {
+    "random_walk_ppr": (
+        lambda g, w, h: randomwalk.random_walk_ppr(g, 0, num_walks=w, walk_length=h),
+        HEAVY_WALK_MAX_HOPS,
+        10,
+    ),
+    "random_walk_corpus": (
+        lambda g, w, h: randomwalk.random_walk_corpus(
+            g, walks_per_vertex=2, walk_length=h
+        ),
+        WALK_MAX_HOPS,
+        WALK_MAX_HOPS // 8 // 2,
+    ),
+    "node2vec_corpus": (
+        lambda g, w, h: randomwalk.node2vec_corpus(g, walk_length=h),
+        HEAVY_WALK_MAX_HOPS,
+        HEAVY_WALK_MAX_HOPS // 8,
+    ),
+}
+
 
 # resolve inside a checkpoint scope, so their stand-in needs a session
 _IN_SCOPE = {"bridges"}
@@ -296,3 +309,26 @@ def test_pair_components_cutover_counts_pairs(spark, monkeypatch, limit, path):
     assert seen == [path]
     assert not pairs.is_cached
     assert got == {2: 1, 3: 1, 5: 4}
+
+
+@pytest.mark.parametrize("entry", sorted(WALK_GATES))
+def test_auto_gates_walks_on_draws_and_edges(entry, monkeypatch):
+    """The driver walk path draws one md5 value per walk and hop on one
+    core and holds the collected edges: ``auto`` takes it at exactly its
+    family's walk-hops limit and ``BROADCAST_MAX_EDGES`` edges, and
+    leaves it one walk, hop or edge above either."""
+    call, limit, n = WALK_GATES[entry]
+    w = limit // 8
+
+    def path(n, m, walks=w, hops=8):
+        return _auto_path(
+            monkeypatch, randomwalk, lambda g: call(g, walks, hops), _Sizes(n, m)
+        )
+
+    assert path(n, E) == "broadcast"
+    assert path(n, E + 1) == "distributed"
+    assert path(n, E, hops=9) == "distributed"
+    if entry == "random_walk_ppr":
+        assert path(n, E, walks=w + 1) == "distributed"
+    else:
+        assert path(n + 1, E) == "distributed"

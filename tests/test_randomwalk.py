@@ -42,6 +42,17 @@ def _python_walks(src, dst, source, num_walks, walk_length, pct, seed):
     return ends
 
 
+@pytest.mark.parametrize("seed", ["mc", "50%d", "ü:1", ""])
+def test_driver_draws_are_the_md5_draws(seed):
+    """The driver path's bulk draw is ``_draw`` for every walk id, for
+    any seed text (``%`` is escaped in the bytes format)."""
+    walks = np.array([0, 1, 9, 10, 123_456_789_012], dtype=np.int64)
+    got = randomwalk._draws(seed, walks, 3)
+    assert got.dtype == np.int64
+    assert got.tolist() == [_draw(seed, w, 3) for w in walks.tolist()]
+    assert len(randomwalk._draws(seed, walks[:0], 3)) == 0
+
+
 def test_mc_ppr_matches_python_golden(g_rand):
     src, dst, _ = g_rand.edges_numpy()
     want = _python_walks(src, dst, 5, 64, 10, 80, "tseed")

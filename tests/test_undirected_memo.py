@@ -107,7 +107,8 @@ def test_exact_diameter_releases_the_symmetrized_graph(spark):
 
 def test_block_store_dirs_go_with_a_dropped_graph(spark):
     """A Graph dropped without ``unpersist()`` still removes its block
-    store dirs once collected; dirs of live stores go at exit."""
+    store dirs and the distributed store's routing table once collected;
+    dirs of live stores go at exit."""
     import gc
 
     g = _two_triangles(spark)
@@ -117,11 +118,13 @@ def test_block_store_dirs_go_with_a_dropped_graph(spark):
     fins = [s._finalizer for s in stores]
     assert all(os.path.isdir(d) for d in dirs)
     assert all(f.atexit for f in fins)
+    assert routing.is_cached
     del g, stores
     gc.collect()
     try:
         assert not any(f.alive for f in fins)
         assert not any(os.path.exists(d) for d in dirs)
+        assert not routing.is_cached
     finally:
+        # the graph's own cached edges have no finalizer
         edges.unpersist()
-        routing.unpersist()
