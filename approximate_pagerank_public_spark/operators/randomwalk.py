@@ -27,9 +27,10 @@ two paths, picked by ``plans/modes.py::resolve_mode``:
   ``plans/modes.py::walks_fit``: walks · hops under the measured
   ``WALK_MAX_HOPS`` / ``HEAVY_WALK_MAX_HOPS``, E ≤
   ``BROADCAST_MAX_EDGES``): the edges are collected once and sorted
-  into a CSR in :func:`ranked_adjacency`'s (src, dst) order, every hop of every walk is one vectorized NumPy step
-  over it (the md5 draws through ``hashlib``, one core), and the result
-  is uploaded as one DataFrame. A Spark job chain per hop (joins,
+  into a CSR in :func:`ranked_adjacency`'s (src, dst) order, every hop
+  of every walk is one vectorized NumPy step over it (the md5 draws
+  through ``hashlib``, one core), and the result is uploaded as one
+  DataFrame. A Spark job chain per hop (joins,
   windows, checkpoints) costs ~1-2 s of driver time even on a 25k-edge
   graph; the driver step costs milliseconds there.
 - ``distributed`` (the 100-TB path): walk state is a DataFrame

@@ -53,10 +53,11 @@ BROADCAST_MAX_EDGES = 50_000_000
 #   still wins below ~3.6e6.
 WALK_MAX_HOPS = 4_000_000
 # - node2vec_corpus, 8 hops: 1.6e6 walk-hops 7.1 s vs 103.7 s (its join
-#   hop is ~25 jobs); random_walk_ppr, 12 hops, α=0.8: 9.6e6 5.4 s vs
-#   21.4, 3.84e7 21.2 vs 45.7 (its driver path draws only for live
-#   walks). Neither crossed in the measured range, so their limit is the
-#   driver memory instead: a 2.5e7-position corpus peaks near 2 GB.
+#   hop is a chain of joins and windows); random_walk_ppr, 12 hops,
+#   α=0.8: 9.6e6 5.4 s vs 21.4, 3.84e7 21.2 vs 45.7 (its driver path
+#   draws only for live walks). Neither crossed in the measured range,
+#   so their limit is the driver memory instead: a 2.5e7-position corpus
+#   peaks near 2 GB.
 HEAVY_WALK_MAX_HOPS = 25_000_000
 
 PATHS = ("broadcast", "distributed")
