@@ -67,6 +67,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
+from approximate_pagerank_public_spark.session import upload_frame
 
 # Flajolet small-range correction, tabulated so no engine evaluates ln():
 # LC_TABLE[z-1] = m * ln(m / z) for z = n_zero ∈ 1..256. repr() round-trips
@@ -74,6 +75,8 @@ from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mod
 LC_TABLE = [float(M) * math.log(M / z) for z in range(1, M + 1)]
 # raw-estimate threshold below which linear counting applies (HLL paper)
 LC_THRESHOLD = 2.5 * M
+# edges per block of the blocks path's store (see _anf_blocks)
+ANF_EDGES_PER_BLOCK = 1_000_000
 
 
 @dataclass
@@ -565,11 +568,9 @@ def _anf_blocks(g: Graph, rounds: int) -> list[int]:
     # shuffle); with the r5 file-spill the ordering flips (4-round
     # probe at 2e7/32c: 8 blocks 36.2 s, 16 blocks 32.6, 32 blocks
     # 32.0), so the default targets block count ≈ cores
-    # (SPARK_GRAFT_ANF_EDGES_PER_BLOCK overrides; cap at the task
-    # slots, floor 4).
+    # (ANF_EDGES_PER_BLOCK; cap at the task slots, floor 4).
     n_edges = g.num_edges + g.num_vertices
-    epb = int(os.environ.get("SPARK_GRAFT_ANF_EDGES_PER_BLOCK", 1_000_000))
-    nb = max(4, min(p, -(-n_edges // epb)))
+    nb = max(4, min(p, -(-n_edges // ANF_EDGES_PER_BLOCK)))
     store = DistBlockStore(spark, store_edges, num_blocks=nb, num_edges=n_edges)
     with ckpt_scope(spark) as cs:
         cs.callback(store.cleanup)
@@ -616,7 +617,7 @@ def anf_hyperball(g: Graph, rounds: int = 4, mode: str = "auto") -> ANFResult:
     pdf = pd.DataFrame(
         {"round": np.arange(rounds + 1, dtype=np.int64), "nf_micro": nf}
     )
-    df = g.spark.createDataFrame(pdf, "round long, nf_micro long").select(
+    df = upload_frame(g.spark, pdf, "round long, nf_micro long").select(
         "round",
         "nf_micro",
         (
@@ -683,7 +684,7 @@ def hyperball_harmonic(
         import pandas as pd
 
         pdf = pd.DataFrame({"id": np.arange(n, dtype=np.int64), "h_micro_lcm": h})
-        return g.spark.createDataFrame(pdf, "id long, h_micro_lcm long")
+        return upload_frame(g.spark, pdf, "id long, h_micro_lcm long")
     # packed path: same rounds as _anf_packed, carrying (prev, h) columns
     import pyarrow as pa
 

@@ -237,7 +237,8 @@ def _bridge_parts(
     if mode == "broadcast":
         lvl = _forest_levels_broadcast(und, max_iter)
         lv_df = cs.ckpt(
-            spark.createDataFrame(
+            upload_frame(
+                spark,
                 pd.DataFrame(
                     {"id": np.arange(n, dtype=np.int64), "lvl": lvl}
                 ),

@@ -44,6 +44,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 from approximate_pagerank_public_spark.plans.graph import Graph
+from approximate_pagerank_public_spark.session import upload_frame
 
 _UNSET = np.int64(-1)
 
@@ -216,7 +217,7 @@ def stress_centrality(
             "stress": stress.astype(np.int64),
         }
     )
-    return graph.spark.createDataFrame(pdf, "id long, stress long")
+    return upload_frame(graph.spark, pdf, "id long, stress long")
 
 
 def betweenness_centrality(
@@ -252,7 +253,7 @@ def betweenness_centrality(
     pdf = pd.DataFrame(
         {"id": np.arange(n, dtype=np.int64), "betweenness": bc}
     )
-    return graph.spark.createDataFrame(pdf, "id long, betweenness double")
+    return upload_frame(graph.spark, pdf, "id long, betweenness double")
 
 
 def stress_centrality_distributed(

@@ -38,6 +38,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
+from approximate_pagerank_public_spark.session import upload_frame
 
 # Pair lists up to this size resolve by union-find on the driver: they
 # are the OUTPUT of a reduction (near-dup pairs, triangle stars), and the
@@ -308,7 +309,7 @@ def connected_components(
     pdf = pd.DataFrame(
         {"id": np.arange(len(labels), dtype=np.int64), "component": labels}
     )
-    return graph.spark.createDataFrame(pdf, "id long, component long")
+    return upload_frame(graph.spark, pdf, "id long, component long")
 
 
 def component_sizes(components: DataFrame) -> DataFrame:

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import upload_frame
 from .dedup import _normalized_text, shingles
 from .sampling import dataset_split
 
@@ -655,4 +656,4 @@ def max_coverage_docs(
     import pandas as pd
 
     out = pd.DataFrame(picks, columns=["pos", "doc_id", "new_shingles"])
-    return spark.createDataFrame(out.astype("int64"), "pos long, doc_id long, new_shingles long")
+    return upload_frame(spark, out.astype("int64"), "pos long, doc_id long, new_shingles long")

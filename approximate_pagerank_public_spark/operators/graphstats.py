@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
 from approximate_pagerank_public_spark.plans.graph import Graph
+from approximate_pagerank_public_spark.session import upload_frame
 
 
 def _labels_broadcastable(graph: Graph) -> bool:
@@ -618,7 +619,7 @@ def _incremental_giant_curve(
         base_units = (
             units.select("comp", "n")
             if units is not None
-            else spark.createDataFrame([], "comp long, n long")
+            else upload_frame(spark, [], "comp long, n long")
         )
         new_units = _merge(
             base_units.unionAll(
@@ -631,7 +632,7 @@ def _incremental_giant_curve(
         base_lab = (
             lab
             if lab is not None
-            else spark.createDataFrame([], "id long, comp long")
+            else upload_frame(spark, [], "id long, comp long")
         )
         new_lab = _merge(
             base_lab.unionAll(new_ids.select("id", F.col("id").alias("comp"))),
@@ -713,7 +714,8 @@ def attack_tolerance(graph: Graph, ks=(0, 1, 4, 16)) -> DataFrame:
         ]
         import pandas as pd
 
-        return graph.spark.createDataFrame(
+        return upload_frame(
+            graph.spark,
             pd.DataFrame(rows, columns=["k", "removed", "giant_size"]).astype(
                 "int64"
             ),
@@ -783,7 +785,8 @@ def random_failure_curve(graph: Graph, keep_pcts=(100, 75, 50, 25)) -> DataFrame
         ]
         import pandas as pd
 
-        return graph.spark.createDataFrame(
+        return upload_frame(
+            graph.spark,
             pd.DataFrame(rows, columns=["keep_pct", "kept_pairs", "giant_size"]).astype(
                 "int64"
             ),

@@ -41,6 +41,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
+from approximate_pagerank_public_spark.session import upload_frame
 
 
 @dataclass
@@ -77,7 +78,8 @@ def _hits_broadcast(g: Graph, max_iter: int) -> DataFrame:
     }
     import pandas as pd
 
-    return g.spark.createDataFrame(
+    return upload_frame(
+        g.spark,
         pd.DataFrame(pdf), "id long, hub double, authority double"
     )
 
@@ -164,7 +166,8 @@ def eigenvector_centrality(
             x = s
         import pandas as pd
 
-        return spark.createDataFrame(
+        return upload_frame(
+            spark,
             pd.DataFrame({"id": np.arange(n, dtype=np.int64), "eig": x}),
             "id long, eig double",
         )
@@ -209,7 +212,8 @@ def katz_centrality(
             x = 1.0 + beta * s
         import pandas as pd
 
-        return spark.createDataFrame(
+        return upload_frame(
+            spark,
             pd.DataFrame({"id": np.arange(n, dtype=np.int64), "katz": x}),
             "id long, katz double",
         )
@@ -282,7 +286,8 @@ def salsa(g: Graph, max_iter: int = 8, mode: str = "auto") -> DataFrame:
             np.add.at(h, src, ac[dst])
         import pandas as pd
 
-        return spark.createDataFrame(
+        return upload_frame(
+            spark,
             pd.DataFrame(
                 {"id": np.arange(n, dtype=np.int64), "hub": h, "authority": a}
             ),

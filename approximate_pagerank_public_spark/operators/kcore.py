@@ -341,7 +341,8 @@ def core_numbers(g: Graph, mode: str = "auto") -> CorenessResult:
         c, rounds = _coreness_broadcast(g)
         import pandas as pd
 
-        df = g.spark.createDataFrame(
+        df = upload_frame(
+            g.spark,
             pd.DataFrame({"id": np.arange(len(c), dtype=np.int64), "core": c}),
             "id long, core long",
         )

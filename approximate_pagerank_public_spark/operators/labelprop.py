@@ -22,7 +22,6 @@ all JVM-side.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -43,6 +42,7 @@ from approximate_pagerank_public_spark.plans.blocks import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
+from approximate_pagerank_public_spark.session import upload_frame
 
 _VOTE_SCHEMA = StructType(
     [
@@ -140,7 +140,8 @@ def label_propagation(graph: Graph, max_iter: int = 10, mode: str = "auto") -> D
         import pandas as pd
 
         labels, _ = _lpa_broadcast(und, max_iter)
-        return graph.spark.createDataFrame(
+        return upload_frame(
+            graph.spark,
             pd.DataFrame({"id": np.arange(len(labels), dtype=np.int64), "label": labels}),
             "id long, label long",
         )
@@ -251,14 +252,14 @@ def louvain_rounds(graph: Graph, rounds: int = 4) -> DataFrame:
     (``modularity(graph, louvain_rounds(g))``; sanity-tested ≥ the
     singleton partition's Q).
 
-    Scale shape per round: one exchange-free |E|-row join of the
-    dst-partitioned symmetrized edges against the hash(id) labels, ONE
+    Scale shape per round: one |E|-row join of the dst-partitioned
+    symmetrized edges (which stay in place) against the labels, ONE
     map-side-combined (id, label) aggregation (the mandatory kin=0 stay
     rows are unioned BEFORE it, not re-aggregated after), a
     |communities|-row Σtot table joined broadcast below
     ``ETL_BROADCAST_MAX_VERTICES`` and hash-on-label above (in round 0
     |C| = |V|, so an unconditional broadcast would ship the whole
-    vertex set), one per-vertex window argmax. Degrees and ``2m`` are
+    vertex set), one per-vertex struct-MAX argmax. Degrees and ``2m`` are
     computed once outside the loop.
     """
     p = graph.num_partitions
@@ -302,10 +303,8 @@ def _symd_weighted(graph: Graph) -> DataFrame:
 #: the symmetric weighted row set) — the coloring.py pattern: below the
 #: gate the all-integer rounds run in one NumPy pass on the driver
 #: (identical arithmetic + tie order, bit-parity-tested), above it the
-#: distributed rounds run unchanged. Env-overridable; 0 disables.
-LOUVAIN_DRIVER_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_LOUVAIN_DRIVER_MAX_ROWS", 4_000_000)
-)
+#: distributed rounds run unchanged. 0 disables.
+LOUVAIN_DRIVER_MAX_ROWS = 4_000_000
 
 
 def _local_move_rounds_np(src, dst, w, rounds: int):
@@ -375,7 +374,8 @@ def _local_move_rounds_driver(
     ids, labs = _local_move_rounds_np(
         pdf["src"].to_numpy(), pdf["dst"].to_numpy(), pdf["w"].to_numpy(), rounds
     )
-    out = wrows.sparkSession.createDataFrame(
+    out = upload_frame(
+        wrows.sparkSession,
         pd.DataFrame({"id": ids, "label": labs}), "id long, label long"
     )
     # checkpointed like the distributed rounds' result
@@ -450,9 +450,11 @@ def _local_move_rounds(
                 - F.col("k") * (F.col("sigtot") - F.col("k")),
             ).otherwise(F.lit(m2) * F.col("kin") - F.col("k") * F.col("sigtot"))
             # argmax by (gain desc, stay-first, smaller label) as a
-            # lexicographic struct MAX — a hash aggregate with map-side
-            # partial combine (a window would shuffle + SORT every
-            # candidate row); all-integer fields keep it bit-exact.
+            # lexicographic struct MAX with a map-side partial combine;
+            # Spark has no hash aggregate for a struct max, so it plans
+            # a SortAggregate (a window would shuffle every candidate
+            # row before sorting it); all-integer fields keep it
+            # bit-exact.
             # stay-first: a move must STRICTLY improve, so on equal
             # gain the stay candidate (flag 1) outranks every move.
             pick = F.max(

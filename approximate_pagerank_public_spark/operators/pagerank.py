@@ -53,6 +53,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
+from approximate_pagerank_public_spark.session import upload_frame
 
 PATHS = ("broadcast", "distributed-arrow")
 
@@ -81,7 +82,7 @@ class PageRankResult:
         cols = ["rank"] if self.sources is None else [f"rank_{i}" for i in range(len(r))]
         pdf = pd.DataFrame({"id": np.arange(r.shape[1], dtype=np.int64), **dict(zip(cols, r))})
         schema = ", ".join(["id long", *(f"{c} double" for c in cols)])
-        return self._graph.spark.createDataFrame(pdf, schema)
+        return upload_frame(self._graph.spark, pdf, schema)
 
     def metrics_df(self) -> DataFrame:
         """Iteration-metrics table ``(iter, l1_err, sq_l2_err,
@@ -92,7 +93,8 @@ class PageRankResult:
         import pandas as pd
 
         cols = ["iter", "l1_err", "sq_l2_err", "dangling_sum", "wall_ms"]
-        return self._graph.spark.createDataFrame(
+        return upload_frame(
+            self._graph.spark,
             pd.DataFrame(self.metrics, columns=cols),
             "iter long, l1_err double, sq_l2_err double, dangling_sum double, wall_ms double",
         )
@@ -337,13 +339,16 @@ def _run_distributed_arrow(
     observed on the job that checkpoints the new state, so neither
     costs a job of its own. Vertex state never leaves the cluster.
 
-    The loop runs with the partition layout pinned: the checkpointed
-    state must stay hash(id, p) across supersteps (the shuffle-hash join
-    streams it in place only then); AQE partition coalescing re-plans
-    the contribs exchange to fewer partitions and the layout drifts
-    superstep over superstep (measured: escalating 5→29 s supersteps at
-    |E|=10⁸ / 32 cores). See
+    The loop runs with the partition count pinned: AQE partition
+    coalescing re-plans the contribs exchange to fewer partitions and
+    the state's partition count drifts superstep over superstep
+    (measured: escalating 5→29 s supersteps at |E|=10⁸ / 32 cores). See
     :func:`~approximate_pagerank_public_spark.plans.checkpoint.pinned_confs`.
+    The pin does not keep the state's hash(id, p) layout across a
+    checkpoint: on Spark 4.1 ``localCheckpoint()`` reports
+    ``UnknownPartitioning``, so every superstep re-shuffles ``rt`` and
+    the state (five exchanges per superstep, pinned by
+    ``tests/test_plan_shapes.py``).
 
     On exit the pinned routing checkpoint and the last superstep's
     spilled messages are released; on an error exit the current state
@@ -373,13 +378,12 @@ def _run_distributed_arrow(
     ), ckpt_scope(spark) as cs:
         store = graph.dist_blocks()
         cs.callback(store.clear_messages)
-        # the routing column is STATIC — pin it once as its own hash(id, p)
-        # checkpoint and join it to the loop state per superstep (an
-        # exchange-free shuffle-hash join: both sides keep the same
-        # partitioning). The checkpointed loop state carries only a 1-byte
-        # `dang` flag instead of the ~P-entry pids array, cutting the
-        # per-superstep checkpoint write and the two state reads by ~2×
-        # (measured 3.5 → ~3 s superstep at |E|=10⁸/32c).
+        # the routing column is STATIC — checkpoint it once and join it to
+        # the loop state per superstep. The checkpointed loop state
+        # carries only a 1-byte `dang` flag instead of the ~P-entry pids
+        # array, cutting the per-superstep checkpoint write and the two
+        # state reads by ~2× (measured 3.5 → ~3 s superstep at
+        # |E|=10⁸/32c).
         rt = cs.ckpt(store.attach_routing(graph.vertices).repartition(p, "id"))
         dang = rt.select("id", F.size("pids").eqNullSafe(0).alias("dang"))
         routed = dang
@@ -423,7 +427,8 @@ def _run_distributed_arrow(
             d = [0.0] * s
         for it in range(start_it + 1, max_iter + 1):
             t0 = time.perf_counter()
-            # exchange-free SHJ: rt and state share hash(id, p)
+            # not exchange-free: a checkpoint reports no partitioning, so
+            # rt and state are both re-shuffled to hash(id, p)
             contribs = store.contribs(
                 rt.join(state.select("id", *cols), "id"), s, p
             )
@@ -454,13 +459,11 @@ def _run_distributed_arrow(
             # while rows stream past), so no second O(V·S) scan job per
             # superstep; the checkpoint holds only (id, dang, r*).
             #
-            # Join shape: localCheckpoint preserves the state's
-            # hash(id, p) outputPartitioning, so with shuffle partitions
-            # == p the ONLY exchange here is contribs→hash(id, p); the
-            # shuffle_hash hint builds the hash map on the contribs side
-            # and streams state in-place (a sort-merge join would add
-            # two O(V·S) sorts per superstep), and the join output is
-            # already hash(id, p), so no trailing repartition.
+            # Join shape: the shuffle_hash hint builds the hash map on
+            # the contribs side and streams state (a sort-merge join
+            # would add two O(V·S) sorts per superstep). Both sides are
+            # exchanged to hash(id, p): localCheckpoint reports
+            # UnknownPartitioning, so the state is re-shuffled here too.
             obs = Observation()
             new = cs.ckpt(
                 state.join(contribs.hint("shuffle_hash"), "id", "left")

@@ -61,6 +61,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import edges_fit, resolve_mode
+from approximate_pagerank_public_spark.session import upload_frame
 
 
 @dataclass
@@ -108,7 +109,8 @@ def _push_broadcast(
 
     import pandas as pd
 
-    df = g.spark.createDataFrame(
+    df = upload_frame(
+        g.spark,
         pd.DataFrame({"id": np.arange(n, dtype=np.int64), "p": p, "r": r}),
         "id long, p double, r double",
     )

@@ -55,6 +55,7 @@ from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 
 from approximate_pagerank_public_spark.plans.blocks import REV_BLOCKS_MIN_EDGES
+from approximate_pagerank_public_spark.session import upload_frame
 
 _HUGE = np.int64(1) << 62  # inactive-vertex sentinel for min-label passes
 _SRC_SCHEMA = StructType([StructField("src", LongType())])
@@ -451,7 +452,7 @@ def strongly_connected_components(graph: Graph, mode: str = "auto") -> DataFrame
         pdf = pd.DataFrame(
             {"id": np.arange(len(labels), dtype=np.int64), "scc": labels}
         )
-        return graph.spark.createDataFrame(pdf, "id long, scc long")
+        return upload_frame(graph.spark, pdf, "id long, scc long")
     with ckpt_scope(graph.spark) as cs:
         return cs.keep(_scc_distributed(cs, graph))
 
@@ -559,7 +560,7 @@ def bowtie_decomposition(graph: Graph, mode: str = "auto") -> DataFrame:
         pdf = pd.DataFrame(
             {"id": np.arange(len(labels), dtype=np.int64), "cls": cls}
         )
-        return spark.createDataFrame(pdf, "id long, cls string")
+        return upload_frame(spark, pdf, "id long, cls string")
 
     from approximate_pagerank_public_spark.operators.components import (
         connected_components,

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
+from approximate_pagerank_public_spark.session import upload_frame
 
 
 def _dot(a: str | F.Column, b: str | F.Column) -> F.Column:
@@ -918,9 +919,7 @@ def kcenter_seeds(embeddings: DataFrame, k: int = 8) -> DataFrame:
     base = emb.select("vec_id", "v", _dot("v", "v").alias("aa"))
     first = base.orderBy("vec_id").first()
     if first is None:  # empty corpus — no seeds to pick
-        return spark.createDataFrame(
-            [], "pos bigint, vec_id bigint, radius double"
-        )
+        return upload_frame(spark, [], "pos bigint, vec_id bigint, radius double")
     picked = [(1, int(first["vec_id"]), 0.0)]
     center_v, center_aa = list(first["v"]), float(first["aa"])
 
@@ -948,4 +947,4 @@ def kcenter_seeds(embeddings: DataFrame, k: int = 8) -> DataFrame:
     import pandas as pd
 
     out = pd.DataFrame(picked, columns=["pos", "vec_id", "radius"])
-    return spark.createDataFrame(out, "pos long, vec_id long, radius double")
+    return upload_frame(spark, out, "pos long, vec_id long, radius double")

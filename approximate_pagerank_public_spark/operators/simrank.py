@@ -28,8 +28,6 @@ Iterations rotate state through a ``ckpt_scope`` (the leak rule in
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -39,10 +37,8 @@ from ..plans.modes import resolve_mode
 
 #: beyond this vertex count the exact Θ(V²)-pair iteration is gated off:
 #: `simrank` raises unless the caller either forces mode='exact' or
-#: passes candidate `pairs` for the MC estimator. Env-overridable.
-EXACT_MAX_VERTICES = int(
-    os.environ.get("SPARK_GRAFT_SIMRANK_EXACT_MAX_VERTICES", 200_000)
-)
+#: passes candidate `pairs` for the MC estimator.
+EXACT_MAX_VERTICES = 200_000
 
 
 def simrank(

@@ -47,6 +47,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
+from approximate_pagerank_public_spark.session import upload_frame
 
 _DIST_SCHEMA = StructType(
     [StructField("dst", LongType()), StructField("dist", DoubleType())]
@@ -215,7 +216,7 @@ def sssp(
 
         reached = np.flatnonzero(np.isfinite(d))
         pdf = pd.DataFrame({"id": reached.astype(np.int64), "dist": d[reached]})
-        return graph.spark.createDataFrame(pdf, "id long, dist double")
+        return upload_frame(graph.spark, pdf, "id long, dist double")
     df, _rounds, converged = _sssp_distributed(graph, sources, max_iter)
     if not converged:
         import warnings

@@ -36,6 +36,7 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
+from approximate_pagerank_public_spark.session import upload_frame
 
 
 def bfs(
@@ -202,7 +203,8 @@ def bfs_stats(graph: Graph, sources: list[int]) -> DataFrame:
                 "closeness": np.where(sums > 0, 1.0 / np.maximum(sums, 1), 0.0),
             }
         )
-        return graph.spark.createDataFrame(
+        return upload_frame(
+            graph.spark,
             pdf, "source long, ecc long, closeness double"
         )
     dists = multi_source_bfs(graph, sources)
@@ -253,7 +255,7 @@ def harmonic_centrality(graph: Graph, sources: list[int]) -> DataFrame:
                 h = h + np.float64(int(c)) / np.float64(int(d))
             rows.append((int(s), float(h)))
         pdf = pd.DataFrame(rows, columns=["source", "harmonic"])
-        return graph.spark.createDataFrame(pdf, "source long, harmonic double")
+        return upload_frame(graph.spark, pdf, "source long, harmonic double")
     dists = multi_source_bfs(graph, sources)
     hist = (
         dists.where(F.col("dist") > 0)
@@ -294,7 +296,8 @@ def approx_diameter(graph: Graph, start: int = 0) -> DataFrame:
     pdf = pd.DataFrame(
         {"start": [start], "peak": [peak], "diameter_lb": [int(ecc2)]}
     )
-    return graph.spark.createDataFrame(
+    return upload_frame(
+        graph.spark,
         pdf, "start long, peak long, diameter_lb long"
     )
 
@@ -462,7 +465,7 @@ def exact_diameter(
     import pandas as pd
 
     pdf = pd.DataFrame({"start": [start], "diameter": [int(lb)]})
-    return graph.spark.createDataFrame(pdf, "start long, diameter long")
+    return upload_frame(graph.spark, pdf, "start long, diameter long")
 
 
 def multi_source_bfs_block(
@@ -508,7 +511,7 @@ def multi_source_bfs_block(
             "dist": dist.ravel()[flat].astype(np.int64),
         }
     )
-    return graph.spark.createDataFrame(pdf, "source long, id long, dist long")
+    return upload_frame(graph.spark, pdf, "source long, id long, dist long")
 
 
 def _block_bfs_distances(

@@ -43,15 +43,16 @@ def pinned_confs(spark: SparkSession, confs: dict[str, str]):
     """Pin session confs for the duration of an iterative loop, restoring
     the previous values (or unsetting) on exit.
 
-    The superstep loops manage their own partitioning: the checkpointed
-    vertex state must stay hash(id, p)-partitioned so the next
-    superstep's shuffle-hash join streams it in place. AQE's partition
-    coalescing re-plans the join exchange to fewer partitions (measured:
-    32 → 16 at |V|=10⁶), the LogicalRDD then reports the drifted layout,
-    and outbox parallelism + join locality degrade superstep over
+    The superstep loops manage their own partition count: AQE's
+    partition coalescing re-plans the join exchange to fewer partitions
+    (measured: 32 → 16 at |V|=10⁶), the checkpointed state inherits the
+    smaller count, and outbox parallelism degrades superstep over
     superstep — so the loops pin ``coalescePartitions.enabled=false``
     and ``shuffle.partitions=p`` while they run, leaving the relational
-    ETL stages (where AQE coalescing is the right call) untouched.
+    ETL stages (where AQE coalescing is the right call) untouched. The
+    pin keeps the count, not the layout: on Spark 4.1 a
+    ``localCheckpoint`` reports ``UnknownPartitioning``, so the next
+    superstep re-shuffles the state for its joins.
     """
     prev: dict[str, str | None] = {}
     for k, v in confs.items():

@@ -72,10 +72,12 @@ bit-exact: per-column summation order inside :func:`tiled_spmv` is
 independent of which columns share a kernel call, and with
 dst-disjoint blocks each (id, column) has exactly ONE non-null
 contribution row, so the merging ``F.sum`` returns that value
-verbatim. The state side never re-shuffles because
-``localCheckpoint`` preserves its hash(id, p) partitioning. A
-DataFrame join formulation would instead pay an |E|-row join + |E|-row
-hash agg per superstep.
+verbatim. The state side is re-shuffled every superstep, for the
+routing join and for the contribs join: on Spark 4.1
+``localCheckpoint`` reports ``UnknownPartitioning``, so its hash(id, p)
+layout is lost. Those are O(V·S) exchanges; a DataFrame join
+formulation would instead pay an |E|-row join + |E|-row hash agg per
+superstep.
 
 Reference: the message packing mirrors the FPGA's block-local
 accumulation + burst write-back (``spmv_coo_multi_stream.hpp:178-232``);
@@ -324,14 +326,7 @@ class DistBlockStore:
         # Chunk tasks slice columns of the SAME spilled value file, so
         # this costs no extra traffic (only the small idx file is read
         # once per chunk instead of once per block).
-        env_chunks = os.environ.get("SPARK_GRAFT_DIST_SOURCE_CHUNKS")
-        if s > 1:
-            if env_chunks:
-                chunks = max(1, min(s, int(env_chunks)))
-            else:
-                chunks = max(1, min(s, -(-n_slots // nblocks)))
-        else:
-            chunks = 1
+        chunks = max(1, min(s, -(-n_slots // nblocks)))
         bounds = np.linspace(0, s, chunks + 1).astype(np.int64)
 
         def outbox(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

@@ -27,15 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: substrings identifying a *shuffle* exchange in an executed plan
-#: (BroadcastExchange is deliberately not counted — broadcasting a dim
-#: table is the cheap path, not a data shuffle)
-_SHUFFLE_MARKERS = (
-    "Exchange hashpartitioning",
-    "Exchange rangepartitioning",
-    "Exchange SinglePartition",
-)
-
 
 def write_bucketed(
     df: DataFrame,
@@ -59,18 +50,10 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def shuffle_exchange_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the EXECUTED plan — the metric a
-    bucketed layout is supposed to drive to zero. Counts only data
-    shuffles (hash/range/single-partition), not broadcasts."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return sum(plan.count(m) for m in _SHUFFLE_MARKERS)
-
-
 def bucketed_equijoin(
     spark: SparkSession, left_table: str, right_table: str, on: list[str]
 ) -> DataFrame:
     """Equi-join two catalog tables on their bucket key. With matching
-    bucket specs on both sides this plans WITHOUT any exchange (assert
-    via :func:`shuffle_exchange_count` — regression-tested)."""
+    bucket specs on both sides this plans WITHOUT any exchange
+    (``plans/shape.py::plan_shape`` counts none — regression-tested)."""
     return spark.table(left_table).join(spark.table(right_table), on)

@@ -42,7 +42,8 @@ north metric; bench_scaling.py reuses q_spmv_throughput at two
 parallelism levels for the N→4N scaling-efficiency evidence.
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_N,
-BENCH_ONLY=q1,q2 (subset), BENCH_SPMV_V/E/ITERS/SOURCES.
+BENCH_ONLY=q1,q2 (subset; BENCH_FULL.json is written only without it),
+BENCH_SPMV_V/E/ITERS/SOURCES.
 """
 
 from __future__ import annotations
@@ -479,13 +480,15 @@ def main() -> None:
     # full blob to a file + stdout for humans; then a COMPACT medians-only
     # summary as the LAST line — the driver's tail capture truncated the
     # full line at r3 (BENCH_r03 "parsed": null), so the parseable record
-    # must be the small one
-    try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_FULL.json"), "w") as f:
-            json.dump(full, f, indent=1)
-    except OSError:
-        pass
+    # must be the small one. A BENCH_ONLY subset run leaves the file
+    # alone: it records the whole suite.
+    if not ONLY:
+        try:
+            with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                                   "BENCH_FULL.json"), "w") as f:
+                json.dump(full, f, indent=1)
+        except OSError:
+            pass
     print(json.dumps(full))
     compact_extra = {
         k: extra[k]

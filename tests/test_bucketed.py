@@ -3,9 +3,9 @@
 import pytest
 from pyspark.sql import functions as F
 
+from approximate_pagerank_public_spark.plans.shape import plan_shape
 from approximate_pagerank_public_spark.sources.bucketed import (
     bucketed_equijoin,
-    shuffle_exchange_count,
     write_bucketed,
 )
 
@@ -35,7 +35,7 @@ def test_bucketed_join_has_zero_shuffles(spark, warehouse):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         joined = bucketed_equijoin(spark, "b_edges", "b_state", ["dst"])
-        assert shuffle_exchange_count(joined) == 0
+        assert plan_shape(joined)["Exchange"] == 0
         # and the result is still correct
         assert joined.count() == 2000
 
@@ -48,7 +48,7 @@ def test_bucketed_join_has_zero_shuffles(spark, warehouse):
             "path", f"{warehouse}/nbs"
         ).saveAsTable("nb_state")
         plain = bucketed_equijoin(spark, "nb_edges", "nb_state", ["dst"])
-        assert shuffle_exchange_count(plain) >= 1
+        assert plan_shape(plain)["Exchange"] >= 1
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     del with_buckets
@@ -58,7 +58,7 @@ def test_bucketed_groupby_has_zero_shuffles(spark, warehouse):
     edges, _ = _frames(spark)
     write_bucketed(edges, "b_edges", 4, ["dst"], path=f"{warehouse}/be")
     agg = spark.table("b_edges").groupBy("dst").agg(F.count("*").alias("d"))
-    assert shuffle_exchange_count(agg) == 0
+    assert plan_shape(agg)["Exchange"] == 0
     assert agg.count() == 97
 
 

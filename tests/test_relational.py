@@ -2,17 +2,11 @@
 (the correctness gate is the DuckDB contract oracle; these tests pin
 the integer-cents arithmetic and that Catalyst gets to do its job)."""
 
-import io
-from contextlib import redirect_stdout
+import re
 
 import pandas as pd
 
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from approximate_pagerank_public_spark.plans.shape import plan_shape
 
 
 def test_pricing_summary_hand_golden(spark):
@@ -64,12 +58,13 @@ def test_regional_revenue_plan_broadcasts_dims_and_pushes_filters(spark):
         load_table(spark, sf, "lineitem"),
         load_table(spark, sf, "supplier"),
     )
-    plan = _plan(df)
     # the region-name and order-date predicates reach the parquet scans
-    assert "PushedFilters" in plan and "r_name" in plan
-    assert "o_orderdate" in plan
+    # (pushed filters are scan metadata, not operators)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[[^\]]*r_name", plan)
+    assert re.search(r"PushedFilters: \[[^\]]*o_orderdate", plan)
     # dictionary-sized dims ride broadcast joins at this SF
-    assert "BroadcastHashJoin" in plan
+    assert plan_shape(df)["BroadcastHashJoin"] >= 1
     # and the result matches the fixture's own arithmetic
     rows = df.collect()
     assert all(r["revenue_cpct"] > 0 for r in rows)

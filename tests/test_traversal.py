@@ -440,6 +440,7 @@ def test_driver_results_upload_route(spark, g5):
     batches, below it as a ``LocalRelation``; an empty result keeps its
     declared schema and plans no partitions."""
     from approximate_pagerank_public_spark.operators.kcore import k_core
+    from approximate_pagerank_public_spark.operators.pagerank import pagerank
     from approximate_pagerank_public_spark.operators.traversal import (
         multi_source_bfs_block,
     )
@@ -471,3 +472,8 @@ def test_driver_results_upload_route(spark, g5):
     assert empty.count() == 0
     # no stage of empty tasks downstream of an empty result
     assert empty.rdd.getNumPartitions() <= 1
+    # the same for a result that used to call createDataFrame directly:
+    # no superstep ran, so the iteration-metrics table is empty
+    no_steps = pagerank(g5, max_iter=0, mode="broadcast").metrics_df()
+    assert no_steps.count() == 0
+    assert no_steps.rdd.getNumPartitions() <= 1
