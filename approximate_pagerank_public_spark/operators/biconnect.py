@@ -229,10 +229,8 @@ def _bridge_parts(
     und = graph.undirected()
     n = und.num_vertices
     spark, p = graph.spark, und.num_partitions
-    # the driver path keeps three O(V) int64 vectors and relaxes levels
-    # on the CSR blocks
-    fits = state_fits(und)
-    mode = resolve_mode(mode, lambda: fits() and und.blocks is not None)
+    # the driver path keeps three O(V) int64 vectors
+    mode = resolve_mode(mode, state_fits(und))
 
     if mode == "broadcast":
         lvl = _forest_levels_broadcast(und, max_iter)

@@ -22,10 +22,11 @@ sensitive per in-neighborhood, so it is engine-side only (tested
 against a pure-Python Brandes golden) — the same declared reason the
 Adamic-Adar score stays engine-side in ``linkpred.py``.
 
-Execution: broadcast path ships the (S, N) state via shm/broadcast and
-runs one ``mapInArrow`` adjacency-sum job per level per direction (the
-backward sweep reuses the forward kernel on the REVERSED column view —
-no extra shuffle); a distributed DataFrame twin keeps state on-cluster.
+Execution: the (S, N) state stays on the driver and each level per
+direction is one ``spmv.gather`` ``usum`` pass — the block kernels with
+shm CSR blocks, else one streamed ``mapInArrow`` job (the backward
+sweep gathers over the REVERSED column view, no extra shuffle, or over
+the memoized reversed graph's blocks at scale).
 Exact totals need all-source sweeps (O(V) BFS batches); the sampled
 variant (Brandes-Pich 2007) takes S pivot sources — at web scale that
 is the only tractable protocol, and the contract query pins S=4 fixed
@@ -34,79 +35,15 @@ pivots so the oracle replays exactly.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from approximate_pagerank_public_spark.plans.checkpoint import ckpt_scope
+from approximate_pagerank_public_spark.operators.spmv import gather
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.session import upload_frame
 
 _UNSET = np.int64(-1)
-
-
-def _adj_schema(s: int) -> StructType:
-    return StructType(
-        [StructField("dst", LongType())]
-        + [StructField(f"c{i}", DoubleType()) for i in range(s)]
-    )
-
-
-def _adj_gather(graph: Graph, edges: DataFrame, state: np.ndarray) -> np.ndarray:
-    """(S, N) → (S, N) unweighted adjacency sum over ``edges`` (one
-    shuffle-free job, driver ``np.add.at`` merge)."""
-    from approximate_pagerank_public_spark.operators.spmv import _RankShip
-
-    state2d = np.ascontiguousarray(np.atleast_2d(state.astype(np.float64)))
-    s = state2d.shape[0]
-    ship = _RankShip(graph.spark, state2d)
-    try:
-        pdf = _adj_sum_partials(edges, ship.load, s).toPandas()
-    finally:
-        ship.cleanup()
-    out = np.zeros((s, graph.num_vertices), dtype=np.float64)
-    if len(pdf):
-        idx = pdf["dst"].to_numpy(np.int64)
-        for i in range(s):
-            np.add.at(out[i], idx, pdf[f"c{i}"].to_numpy(np.float64))
-    return out
-
-
-def _adj_sum_partials(edges: DataFrame, load_state, s: int) -> DataFrame:
-    """Per-partition ``(dst, Σ over in-edges state[:, src])`` — the
-    unweighted adjacency analogue of ``spmv_partials`` (plain gather +
-    segmented sum, ignoring the weight column)."""
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from approximate_pagerank_public_spark.operators.spmv import _segmented_sum
-
-        state = load_state()
-        dsts: list[np.ndarray] = []
-        parts: list[np.ndarray] = []
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            src = b.column("src").to_numpy(zero_copy_only=False)
-            dst = b.column("dst").to_numpy(zero_copy_only=False)
-            u, p = _segmented_sum(dst, state[:, src])
-            dsts.append(u)
-            parts.append(p)
-        if not dsts:
-            return
-        dst_all = np.concatenate(dsts)
-        part_all = np.concatenate(parts, axis=1)
-        order = np.argsort(dst_all, kind="stable")
-        u, p = _segmented_sum(dst_all[order], part_all[:, order])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(u)]
-            + [pa.array(np.ascontiguousarray(p[i])) for i in range(p.shape[0])],
-            names=["dst"] + [f"c{i}" for i in range(p.shape[0])],
-        )
-
-    return edges.mapInArrow(kernel, _adj_schema(s))
 
 
 def _reversed_view(edges: DataFrame) -> DataFrame:
@@ -120,9 +57,8 @@ def _forward_sweep(
 ) -> tuple[np.ndarray, np.ndarray, int]:
     """(dist, sigma, levels): BFS distances + shortest-path counts.
 
-    With shm CSR blocks each level is one L2-tiled ``usum``
-    block-kernel superstep; otherwise the streaming mapInArrow kernel
-    over the edge scan."""
+    Each level is one ``usum`` gather: an L2-tiled block-kernel
+    superstep with shm CSR blocks, else one streamed edge pass."""
     n = graph.num_vertices
     s = len(sources)
     src_idx = np.asarray(sources, dtype=np.int64)
@@ -130,16 +66,12 @@ def _forward_sweep(
     sigma = np.zeros((s, n), dtype=np.float64)  # exact ints ≤ 2^53
     dist[np.arange(s), src_idx] = 0
     sigma[np.arange(s), src_idx] = 1.0
-    blocks = graph.blocks
     levels = 0
     for lvl in range(max_levels):
         frontier_sigma = np.where(dist == lvl, sigma, 0.0)
         if not frontier_sigma.any():
             break
-        if blocks is not None:
-            incoming = blocks.gather(frontier_sigma, op="usum")
-        else:
-            incoming = _adj_gather(graph, graph.edges, frontier_sigma)
+        incoming = gather(graph, frontier_sigma, "usum")
         newly = (incoming > 0) & (dist == _UNSET)
         if not newly.any():
             break
@@ -176,9 +108,9 @@ class _BackwardSweep:
             self._rev_graph = graph.reversed_graph()
 
     def gather(self, y: np.ndarray) -> np.ndarray:
-        if self._rev_graph is not None and self._rev_graph.blocks is not None:
-            return self._rev_graph.blocks.gather(y, op="usum")
-        return _adj_gather(self._graph, self._rev_view, y)
+        if self._rev_graph is not None:
+            return gather(self._rev_graph, y, "usum")
+        return gather(self._graph, y, "usum", edges=self._rev_view)
 
 
 def _sweeps_broadcast(
@@ -254,87 +186,3 @@ def betweenness_centrality(
         {"id": np.arange(n, dtype=np.int64), "betweenness": bc}
     )
     return upload_frame(graph.spark, pdf, "id long, betweenness double")
-
-
-def stress_centrality_distributed(
-    graph: Graph, sources: list[int], max_levels: int = 10_000
-) -> DataFrame:
-    """DataFrame twin of :func:`stress_centrality` — state on-cluster,
-    batched over sources via a ``source`` column; integer arithmetic
-    end-to-end so it is value-identical to the broadcast path."""
-    spark = graph.spark
-    p = graph.num_partitions
-    e = graph.edges.select("src", "dst")
-    with ckpt_scope(spark) as cs:
-        state = spark.createDataFrame(
-            [(int(s), int(s), 0, 1) for s in sources],
-            "source long, id long, dist long, sigma long",
-        )
-        state = cs.ckpt(state.repartition(p, "id"))
-        frontier = state
-        lvl = 0
-        for lvl in range(max_levels):
-            nxt = (
-                e.join(
-                    frontier.where(F.col("dist") == lvl).select(
-                        "source", F.col("id").alias("src"), "sigma"
-                    ),
-                    "src",
-                )
-                .groupBy("source", "dst")
-                .agg(F.sum("sigma").alias("sigma"))
-                .join(
-                    state.select("source", F.col("id").alias("dst")),
-                    ["source", "dst"],
-                    "left_anti",
-                )
-                .select("source", F.col("dst").alias("id"), F.lit(lvl + 1).alias("dist"), "sigma")
-            )
-            nxt = cs.ckpt(nxt.repartition(p, "id"))
-            if nxt.limit(1).count() == 0:
-                break
-            merged = cs.ckpt(state.unionAll(nxt).repartition(p, "id"))
-            cs.free(state, frontier)
-            state, frontier = merged, nxt
-        levels = lvl
-        cont = state.select("source", "id", F.lit(0).cast("long").alias("cont"))
-        cont = cs.ckpt(cont.repartition(p, "id"))
-        dists = state.select("source", "id", "dist")
-        for back_lvl in range(levels - 1, -1, -1):
-            upper = (
-                cont.join(dists, ["source", "id"])
-                .where(F.col("dist") == back_lvl + 1)
-                .select("source", F.col("id").alias("dst"), (F.col("cont") + 1).alias("y"))
-            )
-            sums = (
-                e.join(upper, "dst")
-                .groupBy("source", F.col("src").alias("id"))
-                .agg(F.sum("y").alias("back"))
-            )
-            new_cont = (
-                cont.join(dists, ["source", "id"])
-                .join(sums, ["source", "id"], "left")
-                .select(
-                    "source",
-                    "id",
-                    F.when(
-                        F.col("dist") == back_lvl, F.coalesce("back", F.lit(0))
-                    )
-                    .otherwise(F.col("cont"))
-                    .alias("cont"),
-                )
-            )
-            new_cont = cs.ckpt(new_cont.repartition(p, "id"))
-            cs.free(cont)
-            cont = new_cont
-        per_source = (
-            state.join(cont, ["source", "id"])
-            .where(F.col("source") != F.col("id"))
-            .select("id", (F.col("sigma") * F.col("cont")).alias("contrib"))
-        )
-        out = (
-            graph.vertices.select("id")
-            .join(per_source.groupBy("id").agg(F.sum("contrib").alias("s")), "id", "left")
-            .select("id", F.coalesce("s", F.lit(0)).cast("long").alias("stress"))
-        )
-        return cs.keep(out)

@@ -10,9 +10,9 @@ Two paths, picked by ``plans/modes.py::resolve_mode`` on vertex count:
 
 - ``broadcast`` — min-label propagation on the PageRank superstep
   machinery with ``min`` replacing ``sum``: frontier-sparse relaxation
-  on the CSR blocks, else an Arrow kernel (``np.minimum.reduceat`` over
-  dst-sorted batches, one Spark job per superstep). O(diameter)
-  supersteps, each cheap while the label vector sits on the driver.
+  (``traversal.frontier_min_relax``) on the CSR blocks, or one streamed
+  edge pass per superstep without them. O(diameter) supersteps, each
+  cheap while the label vector sits on the driver.
 - ``distributed`` — large-star/small-star (Kiveris et al., SoCC 2014):
   O(log n) rounds of joins + ``groupBy``-min whatever the diameter,
   with no state on the driver.
@@ -24,13 +24,9 @@ on the driver for small lists, the star loop above that.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
     CkptScope,
@@ -45,88 +41,31 @@ from approximate_pagerank_public_spark.session import upload_frame
 # star loop's per-round fixpoint jobs cost more than the whole scan.
 PAIR_CC_BROADCAST_MAX_PAIRS = 2_000_000
 
-_MIN_SCHEMA = StructType(
-    [StructField("dst", LongType()), StructField("lbl", LongType())]
-)
-
-
-def _min_partials(edges: DataFrame, load_labels) -> DataFrame:
-    """Per-partition (dst, min incoming label) — vectorized, map-side combined."""
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        labels = load_labels()
-        dsts: list[np.ndarray] = []
-        lbls: list[np.ndarray] = []
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            src = b.column("src").to_numpy(zero_copy_only=False)
-            dst = b.column("dst").to_numpy(zero_copy_only=False)
-            incoming = labels[src]
-            starts = np.flatnonzero(np.r_[True, dst[1:] != dst[:-1]])
-            dsts.append(dst[starts])
-            lbls.append(np.minimum.reduceat(incoming, starts))
-        if not dsts:
-            return
-        dst_all = np.concatenate(dsts)
-        lbl_all = np.concatenate(lbls)
-        order = np.argsort(dst_all, kind="stable")
-        dst_all, lbl_all = dst_all[order], lbl_all[order]
-        starts = np.flatnonzero(np.r_[True, dst_all[1:] != dst_all[:-1]])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(dst_all[starts]), pa.array(np.minimum.reduceat(lbl_all, starts))],
-            names=["dst", "lbl"],
-        )
-
-    return edges.mapInArrow(kernel, _MIN_SCHEMA)
-
 
 def _cc_broadcast(graph: Graph, max_iter: int) -> tuple[np.ndarray, int]:
-    from approximate_pagerank_public_spark.operators.spmv import _RankShip
+    """Frontier-sparse min-label relaxation (the BFS machinery with
+    ``plus_one=False``): supersteps touch only edges whose src label
+    improved last round, so a high-diameter component costs
+    O(frontier edges) per extra round instead of a full edge pass."""
+    from approximate_pagerank_public_spark.operators.traversal import (
+        frontier_min_relax,
+    )
 
     n = graph.num_vertices
-    labels = np.arange(n, dtype=np.int64)
-    blocks = graph.blocks
-    if blocks is not None:
-        # frontier-sparse min-label relaxation on the CSR blocks (the
-        # BFS machinery with plus_one=False): supersteps touch only
-        # edges whose src label improved last round, so a high-diameter
-        # component costs O(frontier edges) per extra round instead of
-        # a full edge pass
-        from approximate_pagerank_public_spark.operators.traversal import (
-            frontier_min_relax,
-        )
+    state = np.arange(n, dtype=np.int64)[:, None]
+    out, rounds, converged = frontier_min_relax(
+        graph, state, np.ones(n, dtype=bool), plus_one=False, max_iters=max_iter
+    )
+    if not converged:
+        import warnings
 
-        state = labels[:, None].copy()
-        changed = np.ones(n, dtype=bool)
-        out, rounds, converged = frontier_min_relax(
-            graph, state, changed, plus_one=False, max_iters=max_iter
+        warnings.warn(
+            f"min-label propagation hit max_iter={max_iter} before "
+            "fixpoint; labels may not be component minima",
+            RuntimeWarning,
+            stacklevel=2,
         )
-        if not converged:
-            import warnings
-
-            warnings.warn(
-                f"min-label propagation hit max_iter={max_iter} before "
-                "fixpoint; labels may not be component minima",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return out[:, 0], rounds
-    for it in range(1, max_iter + 1):
-        ship = _RankShip(graph.spark, labels)
-        try:
-            # partials are disjoint-ish across dst-partitioned edges;
-            # driver-side minimum.at merge makes a shuffle unnecessary
-            pdf = _min_partials(graph.edges, ship.load).toPandas()
-        finally:
-            ship.cleanup()
-        new = labels.copy()
-        idx = pdf["dst"].to_numpy(np.int64)
-        np.minimum.at(new, idx, pdf["lbl"].to_numpy(np.int64))
-        if np.array_equal(new, labels):
-            return labels, it
-        labels = new
-    return labels, max_iter
+    return out[:, 0], rounds
 
 
 def _cc_star_distributed(

@@ -28,7 +28,6 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
@@ -44,16 +43,7 @@ from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 from approximate_pagerank_public_spark.session import upload_frame
 
-_VOTE_SCHEMA = StructType(
-    [
-        StructField("dst", LongType()),
-        StructField("label", LongType()),
-        StructField("w", DoubleType()),
-    ]
-)
-
-
-def _vote_partials(edges: DataFrame, load_labels) -> DataFrame:
+def _vote_kernel(load_labels):
     """Per-partition partial ``(dst, label, Σweight)`` votes — the
     map-side combine of the per-round LPA job, vectorized (lexsort +
     reduceat), labels shipped via shm/broadcast like the rank state."""
@@ -75,7 +65,7 @@ def _vote_partials(edges: DataFrame, load_labels) -> DataFrame:
             [pa.array(d), pa.array(l), pa.array(w)], names=["dst", "label", "w"]
         )
 
-    return edges.mapInArrow(kernel, _VOTE_SCHEMA)
+    return kernel
 
 
 def _lpa_broadcast(und: Graph, max_iter: int) -> tuple[np.ndarray, int]:
@@ -88,7 +78,7 @@ def _lpa_broadcast(und: Graph, max_iter: int) -> tuple[np.ndarray, int]:
     merged on the driver. Both paths take the same :func:`vote_argmax`
     and stop at the same round: the first that changes no label, or
     ``max_iter``."""
-    from approximate_pagerank_public_spark.operators.spmv import _RankShip
+    from approximate_pagerank_public_spark.operators.spmv import ship_and_collect
     from approximate_pagerank_public_spark.plans.barrier import (
         BARRIER_FALLBACK_ERRORS,
         barrier_available,
@@ -108,11 +98,9 @@ def _lpa_broadcast(und: Graph, max_iter: int) -> tuple[np.ndarray, int]:
             warn_barrier_fallback(ex, "per-round jobs")
     rounds = 0
     for rounds in range(1, max_iter + 1):
-        ship = _RankShip(und.spark, labels)
-        try:
-            pdf = _vote_partials(und.edges, ship.load).toPandas()
-        finally:
-            ship.cleanup()
+        pdf = ship_and_collect(
+            und.spark, und.edges, labels, _vote_kernel, "dst long, label long, w double"
+        )
         if not len(pdf):  # no edges: nothing votes
             break
         d, best = vote_argmax(

@@ -45,7 +45,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from approximate_pagerank_public_spark.operators.spmv import gather_contrib
+from approximate_pagerank_public_spark.operators.spmv import gather
 from approximate_pagerank_public_spark.plans.checkpoint import (
     CheckpointManager,
     ckpt_scope,
@@ -125,7 +125,7 @@ def _superstep_np(
     precomputed (S,) dangling dot (K2) — zeros when ``dangling_norm``
     is off (``ppr.gm:14-16``)."""
     n = graph.num_vertices
-    contrib = gather_contrib(graph, pr)  # (S, N), one Spark job
+    contrib = gather(graph, pr, "sum")  # (S, N), one Spark job
     new = alpha * contrib + (alpha / n) * d[:, None]  # axpb (K3)
     if sources is None:
         new += (1.0 - alpha) / n

@@ -91,7 +91,8 @@ def ranked_adjacency(g: Graph) -> DataFrame:
     Cached (persisted, spillable) on the Graph: every walk hop joins it
     3-4 times, and an L=8 node2vec corpus otherwise re-runs the window
     shuffle ~30 times (measured ~40% of q_node2vec_sg's wall clock).
-    ``Graph.unpersist`` releases it with the other derived tables.
+    ``Graph.unpersist`` releases it with the other derived tables, as
+    does a dropped Graph (``Graph.release_with``).
     """
     cached = getattr(g, "_ranked_adj", None)
     if cached is not None:
@@ -105,7 +106,7 @@ def ranked_adjacency(g: Graph) -> DataFrame:
         .withColumn("deg", F.count("*").over(Window.partitionBy("src")))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    g._ranked_adj = df
+    g._ranked_adj = g.release_with(df)
     return df
 
 

@@ -26,9 +26,10 @@ practice (web-scale graphs are one giant SCC plus shallow periphery;
 Broder's bow-tie). Both execution paths:
 
 - **broadcast**: driver-resident color/reached arrays; per superstep one
-  ``mapInArrow`` job (segmented-min partials for coloring; an
-  edge-masked frontier kernel for backward reach). State ships via
-  shm/broadcast (``_RankShip``), merge is ``np.minimum.at``/flag-or.
+  Spark job — a ``BlockStore.run_round`` over the CSR blocks, or
+  without them one streamed edge pass (``spmv.gather`` min for
+  coloring, an edge-masked kernel for backward reach through
+  ``spmv.ship_and_collect``); the driver merges by min / flag-or.
 - **distributed**: DataFrame joins + groupBy-min with checkpoint-scope
   rotation (CLAUDE.md invariant) — vertex state never leaves the
   cluster.
@@ -45,7 +46,6 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
     CkptScope,
@@ -54,18 +54,22 @@ from approximate_pagerank_public_spark.plans.checkpoint import (
 from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 
-from approximate_pagerank_public_spark.plans.blocks import REV_BLOCKS_MIN_EDGES
+from approximate_pagerank_public_spark.plans.blocks import (
+    REV_BLOCKS_MIN_EDGES,
+    _edge_dst,
+    frontier_edges,
+)
 from approximate_pagerank_public_spark.session import upload_frame
 
 _HUGE = np.int64(1) << 62  # inactive-vertex sentinel for min-label passes
-_SRC_SCHEMA = StructType([StructField("src", LongType())])
 
 
-def _back_reach_partials(edges: DataFrame, load_enc) -> DataFrame:
-    """Distinct srcs newly reached by one backward step: edge u→v
-    relaxes u when v is reached, u is not yet, and both share a color.
-    ``load_enc()`` returns the packed state ``enc = color * 2 + reached``
-    (colors < 2^62, so the packing is lossless in int64)."""
+def _back_reach_kernel(load_enc):
+    """The streamed backward step: the distinct srcs one step newly
+    reaches — edge u→v relaxes u when v is reached, u is not yet, and
+    both share a color. ``load_enc()`` returns the packed state
+    ``enc = color * 2 + reached`` (colors < 2^62, so the packing is
+    lossless in int64)."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         enc = load_enc()
@@ -87,7 +91,24 @@ def _back_reach_partials(edges: DataFrame, load_enc) -> DataFrame:
             [pa.array(np.unique(np.concatenate(outs)))], names=["src"]
         )
 
-    return edges.mapInArrow(kernel, _SRC_SCHEMA)
+    return kernel
+
+
+def _back_reach_block(block_dir, pid, blk, enc, front):
+    """The block backward step: the frontier's out-edges only (through
+    the cached src-sorted index), returning the distinct same-color,
+    not-yet-reached dsts — ``back_graph`` encodes the REVERSE of the
+    claim direction, so a dst here is a src of the claim edges."""
+    src_b, _w, udst, *_ = blk
+    src_b = np.asarray(src_b)
+    sel = frontier_edges(block_dir, pid, src_b, front)
+    if sel is None:
+        return None
+    u_ids = np.asarray(udst)[np.asarray(_edge_dst(block_dir, pid, blk))[sel]]
+    ev = enc[src_b[sel]]  # frontier side: reached
+    eu = enc[u_ids]
+    hit = (eu >= 0) & ~(eu & 1).astype(bool) & ((eu >> 1) == (ev >> 1))
+    return (np.unique(u_ids[hit]),) if hit.any() else None
 
 
 def _reversed_view(edges: DataFrame) -> DataFrame:
@@ -100,7 +121,6 @@ def _reversed_view(edges: DataFrame) -> DataFrame:
 
 
 def _masked_back_reach_blocks(
-    graph: Graph,
     back_graph: Graph,
     colors: np.ndarray,
     reached: np.ndarray,
@@ -114,107 +134,20 @@ def _masked_back_reach_blocks(
     src-sorted permutation (the ``frontier_min_relax`` trick) instead of
     a full edge scan — 27.6 s → ~2 s for the backward phase at 2·10⁷
     edges. Mutates ``reached`` in place."""
-    import os
-    import shutil
-    import uuid
-
-    from approximate_pagerank_public_spark.plans.blocks import load_block
-
-    blocks = back_graph.blocks
-    run_dir = os.path.join(blocks.dir, f"scc_{uuid.uuid4().hex}")
-    os.makedirs(run_dir)
-    enc_path = f"{run_dir}/enc.npy"
-    front_path = f"{run_dir}/front.npy"
-    block_dir = blocks.dir
-    pids = blocks.pids
-    sc = graph.spark.sparkContext
-    k = blocks.num_partitions
-    n_tasks = max(1, min(k, sc.defaultParallelism))
     frontier = np.flatnonzero(reached)
-    try:
-        while len(frontier):
-            enc = np.where(active, colors * 2 + reached, np.int64(-1))
-            tmp = f"{enc_path}.{uuid.uuid4().hex}.tmp.npy"
-            np.save(tmp, enc)
-            os.rename(tmp, enc_path)
-            tmp = f"{front_path}.{uuid.uuid4().hex}.tmp.npy"
-            np.save(tmp, np.sort(frontier))
-            os.rename(tmp, front_path)
-
-            def step(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-                enc_w = np.load(enc_path, mmap_mode="r")
-                front_w = np.load(front_path, mmap_mode="r")
-                outs: list[np.ndarray] = []
-                for b in batches:
-                    for task_i in b.column("id").to_pylist():
-                        pid = pids[task_i]
-                        blk = load_block(block_dir, pid)
-                        src_b, _w, udst, starts, segmap, _tb, _sb = blk
-                        src_b = np.asarray(src_b)
-                        # src-sorted permutation cache (tmp+rename so a
-                        # killed task never leaves a truncated file)
-                        sp_path = f"{block_dir}/sperm_{pid}.npy"
-                        ss_path = f"{block_dir}/ssrc_{pid}.npy"
-                        if not os.path.exists(sp_path):
-                            perm = np.argsort(src_b, kind="stable")
-                            t1 = f"{ss_path}.{uuid.uuid4().hex}.tmp.npy"
-                            np.save(t1, src_b[perm])
-                            os.rename(t1, ss_path)
-                            t2 = f"{sp_path}.{uuid.uuid4().hex}.tmp.npy"
-                            np.save(t2, perm)
-                            os.rename(t2, sp_path)
-                        ss = np.load(ss_path, mmap_mode="r")
-                        lo = np.searchsorted(ss, front_w, side="left")
-                        hi = np.searchsorted(ss, front_w, side="right")
-                        spans = hi - lo
-                        nz = spans > 0
-                        if not nz.any():
-                            continue
-                        lo2, sp2 = lo[nz], spans[nz]
-                        total = int(sp2.sum())
-                        offs = np.repeat(np.cumsum(sp2) - sp2, sp2)
-                        idx = np.repeat(lo2, sp2) + np.arange(total) - offs
-                        sel = np.asarray(np.load(sp_path, mmap_mode="r"))[idx]
-                        # per-edge dst cache (segment map expansion)
-                        ed_path = f"{block_dir}/edst_{pid}.npy"
-                        if os.path.exists(ed_path):
-                            edge_dst = np.load(ed_path, mmap_mode="r")
-                        else:
-                            seg_len = np.diff(np.r_[np.asarray(starts), len(src_b)])
-                            edge_dst = np.repeat(np.asarray(segmap), seg_len)
-                            t3 = f"{ed_path}.{uuid.uuid4().hex}.tmp.npy"
-                            np.save(t3, edge_dst)
-                            os.rename(t3, ed_path)
-                        u_ids = np.asarray(udst)[np.asarray(edge_dst)[sel]]
-                        ev = enc_w[src_b[sel]]  # frontier side: reached
-                        eu = enc_w[u_ids]
-                        hit = (
-                            (eu >= 0)
-                            & ~(eu & 1).astype(bool)
-                            & ((eu >> 1) == (ev >> 1))
-                        )
-                        if hit.any():
-                            outs.append(np.unique(u_ids[hit]))
-                if outs:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(np.unique(np.concatenate(outs)))], names=["u"]
-                    )
-
-            pdf = (
-                graph.spark.range(0, k, 1, n_tasks)
-                .mapInArrow(step, "u long")
-                .toPandas()
-            )
-            if not len(pdf):
-                break
-            newly = pdf["u"].to_numpy(np.int64)
-            fresh = newly[~reached[newly]]
-            if not len(fresh):
-                break
-            reached[fresh] = True
-            frontier = np.unique(fresh)
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+    while len(frontier):
+        enc = np.where(active, colors * 2 + reached, np.int64(-1))
+        res = back_graph.blocks.run_round(
+            _back_reach_block, enc=enc, front=np.sort(frontier)
+        )
+        if not res:
+            break
+        newly = np.concatenate([u for (u,) in res.values()])
+        fresh = newly[~reached[newly]]
+        if not len(fresh):
+            break
+        reached[fresh] = True
+        frontier = np.unique(fresh)
 
 
 def _claim_round_broadcast(
@@ -230,16 +163,18 @@ def _claim_round_broadcast(
     reverse-reachability (frontier-sparse on ``back_graph``'s blocks
     when provided — they must encode the REVERSE of ``edges``).
     Mutates ``active``/``scc`` in place."""
-    from approximate_pagerank_public_spark.operators.components import _min_partials
-    from approximate_pagerank_public_spark.operators.spmv import _RankShip
+    from approximate_pagerank_public_spark.operators.spmv import (
+        gather,
+        ship_and_collect,
+    )
 
     colors = np.where(active, ids, _HUGE)
     colored = False
-    if active.all() and edges is graph.edges and graph.blocks is not None:
+    if active.all() and edges is graph.edges:
         # all-active forward claim (the dominant cost: the giant SCC's
-        # coloring) takes the frontier-sparse CSR-block relax — post-peak
-        # rounds touch only improved-src edges instead of a full edge
-        # pass per round (14 s → ~4 s at sf-bench scale)
+        # coloring) takes the frontier-sparse relax — post-peak rounds
+        # touch only improved-src edges instead of a full edge pass per
+        # round (14 s → ~4 s at sf-bench scale on the CSR blocks)
         from approximate_pagerank_public_spark.operators.traversal import (
             frontier_min_relax,
         )
@@ -255,23 +190,14 @@ def _claim_round_broadcast(
         # else: fall through to the streaming fixpoint below (colors
         # unchanged — correctness over speed on pathological inputs)
     while not colored:
-        ship = _RankShip(graph.spark, colors)
-        try:
-            pdf = _min_partials(edges, ship.load).toPandas()
-        finally:
-            ship.cleanup()
-        new = colors.copy()
-        if len(pdf):
-            np.minimum.at(
-                new, pdf["dst"].to_numpy(np.int64), pdf["lbl"].to_numpy(np.int64)
-            )
+        new = np.minimum(colors, gather(graph, colors, "umin", edges=edges)[0])
         new[~active] = _HUGE  # inactive dsts take no color
         if np.array_equal(new, colors):
             break
         colors = new
     reached = active & (colors == ids)
     if back_graph is not None and back_graph.blocks is not None:
-        _masked_back_reach_blocks(graph, back_graph, colors, reached, active)
+        _masked_back_reach_blocks(back_graph, colors, reached, active)
         scc[reached] = colors[reached]
         active &= ~reached
         return
@@ -279,11 +205,9 @@ def _claim_round_broadcast(
         # inactive → -1: bit0 set (never relaxed as src), color -1
         # (never matches an active color) — avoids _HUGE*2 overflow
         enc = np.where(active, colors * 2 + reached, np.int64(-1))
-        ship = _RankShip(graph.spark, enc)
-        try:
-            pdf = _back_reach_partials(edges, ship.load).toPandas()
-        finally:
-            ship.cleanup()
+        pdf = ship_and_collect(
+            graph.spark, edges, enc, _back_reach_kernel, "src long"
+        )
         if not len(pdf):
             break
         newly = pdf["src"].to_numpy(np.int64)

@@ -17,10 +17,10 @@ non-increasing, so a source whose distance did not improve last round
 cannot improve any neighbor this round and is dropped from the
 relaxation):
 
-- **broadcast**: one ``mapInArrow`` job per round over the dst-sorted
-  edge layout; per-batch ``np.minimum.reduceat`` segmented min, driver
-  ``np.minimum.at`` merge (the CC/``_min_partials`` machinery with
-  ``d[src] + w`` as the incoming value).
+- **broadcast**: ``traversal.frontier_min_relax`` with the per-edge
+  weight added before the segmented min (the CC machinery with
+  ``d[src] + w`` as the incoming value): relaxation rounds on the CSR
+  blocks, or one streamed edge pass per round without them.
 - **distributed**: DataFrame twin — frontier ⋈ edges, ``groupBy(dst)
   .min(dist + weight)``, ``ckpt_scope`` state rotation so lineage and
   storage stay bounded (CLAUDE.md invariant).
@@ -34,13 +34,9 @@ replays the same rounds as unrolled min-plus CTEs).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from approximate_pagerank_public_spark.plans.checkpoint import (
     ckpt_scope,
@@ -49,102 +45,31 @@ from approximate_pagerank_public_spark.plans.graph import Graph
 from approximate_pagerank_public_spark.plans.modes import resolve_mode, state_fits
 from approximate_pagerank_public_spark.session import upload_frame
 
-_DIST_SCHEMA = StructType(
-    [StructField("dst", LongType()), StructField("dist", DoubleType())]
-)
-
-
-def _minplus_partials(edges: DataFrame, load_dists) -> DataFrame:
-    """Per-partition ``(dst, min over in-edges of d[src] + w)`` —
-    vectorized segmented min, map-side combined. ``load_dists()`` must
-    return the frontier-masked distance vector (``+inf`` for vertices
-    that did not improve last round — their contributions are already
-    folded into the driver state, so skipping them is safe)."""
-
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        d = load_dists()
-        dsts: list[np.ndarray] = []
-        vals: list[np.ndarray] = []
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            src = b.column("src").to_numpy(zero_copy_only=False)
-            dst = b.column("dst").to_numpy(zero_copy_only=False)
-            w = b.column("weight").to_numpy(zero_copy_only=False)
-            cand = d[src] + w
-            finite = np.isfinite(cand)
-            if not finite.any():
-                continue
-            dst, cand = dst[finite], cand[finite]
-            starts = np.flatnonzero(np.r_[True, dst[1:] != dst[:-1]])
-            dsts.append(dst[starts])
-            vals.append(np.minimum.reduceat(cand, starts))
-        if not dsts:
-            return
-        dst_all = np.concatenate(dsts)
-        val_all = np.concatenate(vals)
-        order = np.argsort(dst_all, kind="stable")
-        dst_all, val_all = dst_all[order], val_all[order]
-        starts = np.flatnonzero(np.r_[True, dst_all[1:] != dst_all[:-1]])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(dst_all[starts]), pa.array(np.minimum.reduceat(val_all, starts))],
-            names=["dst", "dist"],
-        )
-
-    return edges.mapInArrow(kernel, _DIST_SCHEMA)
-
 
 def _sssp_broadcast(
     graph: Graph, sources: list[int], max_iter: int
 ) -> tuple[np.ndarray, int, bool]:
-    """Driver-resident distance vector, frontier-masked relaxation jobs."""
-    from approximate_pagerank_public_spark.operators.spmv import _RankShip
+    """Driver-resident distance vector, frontier-sparse relaxation:
+    rounds past the hop-count peak touch only improved-src edges, not
+    the full edge set — Bellman-Ford over 1/outdeg weights needs far
+    more rounds than the BFS diameter (lighter many-hop paths keep
+    improving), so on the CSR blocks this is the difference between ~1
+    and ~30 effective edge passes at 2·10⁷ edges (59 s → ~7 s
+    measured)."""
+    from approximate_pagerank_public_spark.operators.traversal import (
+        frontier_min_relax,
+    )
 
     n = graph.num_vertices
-    d = np.full(n, np.inf)
-    d[np.asarray(sources, dtype=np.int64)] = 0.0
+    src = np.asarray(sources, dtype=np.int64)
+    state = np.full((n, 1), np.inf)
+    state[src, 0] = 0.0
     changed = np.zeros(n, dtype=bool)
-    changed[np.asarray(sources, dtype=np.int64)] = True
-    if graph.blocks is not None:
-        # frontier-sparse CSR-block relax: rounds past the hop-count
-        # peak touch only improved-src edges, not the full edge set —
-        # Bellman-Ford over 1/outdeg weights needs far more rounds than
-        # the BFS diameter (lighter many-hop paths keep improving), so
-        # this is the difference between ~1 and ~30 effective edge
-        # passes at 2·10⁷ edges (59 s → ~7 s measured)
-        from approximate_pagerank_public_spark.operators.traversal import (
-            frontier_min_relax,
-        )
-
-        state = d[:, None].copy()
-        out, rounds, converged = frontier_min_relax(
-            graph,
-            state,
-            changed,
-            plus_one=False,
-            max_iters=max_iter,
-            edge_weighted=True,
-        )
-        return out[:, 0], rounds, converged
-    for it in range(1, max_iter + 1):
-        frontier = np.where(changed, d, np.inf)
-        ship = _RankShip(graph.spark, frontier)
-        try:
-            pdf = _minplus_partials(graph.edges, ship.load).toPandas()
-        finally:
-            ship.cleanup()
-        new = d.copy()
-        if len(pdf):
-            np.minimum.at(
-                new,
-                pdf["dst"].to_numpy(np.int64),
-                pdf["dist"].to_numpy(np.float64),
-            )
-        changed = new < d
-        if not changed.any():
-            return d, it, True
-        d = new
-    return d, max_iter, False
+    changed[src] = True
+    out, rounds, converged = frontier_min_relax(
+        graph, state, changed, plus_one=False, max_iters=max_iter, edge_weighted=True
+    )
+    return out[:, 0], rounds, converged
 
 
 def _sssp_distributed(
@@ -197,8 +122,8 @@ def sssp(
     """``(id, dist)`` weighted shortest-path distances for vertices
     reachable from ``source`` (rows only for reached vertices).
 
-    ``mode``: ``broadcast`` (Arrow min-plus kernel, driver-resident
-    vector) or ``distributed`` (DataFrame frontier joins, state never
+    ``mode``: ``broadcast`` (frontier-sparse min-plus relaxation,
+    driver-resident vector) or ``distributed`` (DataFrame frontier joins, state never
     leaves the cluster). ``auto`` picks by vertex count like PageRank."""
     sources = [source] if isinstance(source, int) else list(source)
     if resolve_mode(mode, state_fits(graph)) == "broadcast":

@@ -23,11 +23,6 @@ the multi-PPR block).
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-from collections.abc import Iterator
-
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -565,7 +560,8 @@ def frontier_min_relax(
     edge_weighted: bool = False,
     inf_value=None,
 ) -> np.ndarray:
-    """Generic frontier-sparse min-relaxation over the CSR blocks.
+    """Generic frontier-sparse min-relaxation: the min-fixpoint of every
+    driver-state traversal (BFS, CC, SCC coloring, SSSP, reach).
 
     Repeatedly applies ``state[dst] = min(state[dst], min over frontier
     in-neighbors u of state[u] (+1 if plus_one))`` until no row
@@ -576,8 +572,9 @@ def frontier_min_relax(
     segmented min (weighted SSSP — ``state`` must then be float64, and
     the per-candidate ``d[src] + w`` single add keeps the fixpoint
     bit-identical to the streaming/DataFrame paths).
-    ``state`` is an (N, S) integer array (mutated in place and
-    returned); ``changed`` is the initial frontier mask.
+    ``state`` is an (N, S) integer array with every value below its
+    dtype's max (float64 for ``edge_weighted``), mutated in place and
+    returned; ``changed`` is the initial frontier mask.
 
     ``inf_value`` (unweighted min-plus only) is the caller's
     "unvisited" sentinel; passing it arms the **bottom-up** edge
@@ -589,28 +586,27 @@ def frontier_min_relax(
     inside ONE gang-scheduled barrier job
     (``plans.barrier.run_barrier_rounds``) — per-round Spark jobs pay
     a fixed ~0.3-0.7 s scheduling + Python-worker round-trip that
-    dominates post-peak rounds. Everywhere else (and when the gang
-    fails, with a ``RuntimeWarning``) each round is its own
-    ``mapInArrow`` job over the same ``relax_block`` kernel; the
-    min-plus fixpoint is unique, so both paths return identical state.
+    dominates post-peak rounds. With blocks elsewhere (and when the
+    gang fails, with a ``RuntimeWarning``) each round is one
+    ``BlockStore.run_round`` job over the same ``relax_block`` kernel.
+    Without blocks (a master with no shm) each round is one streamed
+    ``spmv.gather`` min pass over the frontier's out-edges. The
+    fixpoint is unique and every path relaxes the same candidates per
+    round, so all of them return identical state, rounds and frontiers.
 
     Returns ``(state, rounds, converged)`` — ``rounds`` is the number of
     relaxation rounds actually executed and ``converged`` is False only
     when ``max_iters`` ran out while rows were still improving (callers
     surface that instead of silently reporting ``max_iters``).
     """
-    import pyarrow as pa
-
+    from approximate_pagerank_public_spark.operators.spmv import gather
     from approximate_pagerank_public_spark.plans.barrier import (
         BARRIER_FALLBACK_ERRORS,
         barrier_available,
         run_barrier_rounds,
         warn_barrier_fallback,
     )
-    from approximate_pagerank_public_spark.plans.blocks import (
-        load_block,
-        relax_block,
-    )
+    from approximate_pagerank_public_spark.plans.blocks import relax_block
 
     n = graph.num_vertices
     blocks = graph.blocks
@@ -654,79 +650,43 @@ def frontier_min_relax(
         except BARRIER_FALLBACK_ERRORS as ex:
             warn_barrier_fallback(ex, "per-round jobs")
 
-    run_dir = os.path.join(blocks.dir, f"bfs_{uuid.uuid4().hex}")
-    os.makedirs(run_dir)
-    state_path = f"{run_dir}/dist.npy"
-    mask_path = f"{run_dir}/mask.npy"
-    front_path = f"{run_dir}/front.npy"
-    block_dir = blocks.dir
-    pids = blocks.pids
-    sc = graph.spark.sparkContext
-    k = blocks.num_partitions
-    n_tasks = max(1, min(k, sc.defaultParallelism))
+    def block_round(changed):
+        res = blocks.run_round(
+            kernel, snap=dist, front=np.flatnonzero(changed), fmask=changed
+        )
+        return res.values()
+
+    def streamed_round(changed):
+        # the candidates relax_block selects: frontier-src edges, min
+        # over state[src] (+ w), then + one; rows no frontier edge
+        # reaches hold the identity
+        cand = gather(
+            graph, dist.T, "min" if edge_weighted else "umin", frontier=changed
+        ).T
+        ident = np.iinfo(dtype).max if dtype.kind in "iu" else np.inf
+        rows = np.flatnonzero((cand != ident).any(axis=1))
+        cur = dist[rows]
+        new = np.minimum(cur, cand[rows] + one)
+        imp = (new < cur).any(axis=1)
+        return [(rows[imp], new[imp])]
+
+    if blocks is None:
+        relax_round, disjoint = streamed_round, True
+    else:
+        relax_round, disjoint = block_round, blocks.dst_disjoint
     rounds = 0
     converged = False
-    try:
-        for _level in range(max_iters):
-            rounds = _level + 1
-            np.save(state_path, dist)
-            np.save(front_path, np.flatnonzero(changed))
-            np.save(mask_path, changed)
-            out_dir = f"{run_dir}/out"
-            os.makedirs(out_dir, exist_ok=True)
-
-            def step(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-                front = np.load(front_path, mmap_mode="r")
-                mask = np.load(mask_path, mmap_mode="r")
-                state = np.load(state_path, mmap_mode="r")
-                done = []
-                for b in batches:
-                    for task_i in b.column("id").to_pylist():
-                        pid = pids[task_i]
-                        done.append(pid)
-                        res = kernel(
-                            block_dir, pid, load_block(block_dir, pid), state, front, mask
-                        )
-                        if res is None:
-                            continue
-                        gd, new = res
-                        # v before i, both via rename: the driver keys on
-                        # i_<pid> existing, so its presence must imply a
-                        # complete v_<pid>
-                        vt = f"{out_dir}/v_{pid}.{uuid.uuid4().hex}.tmp.npy"
-                        np.save(vt, new)
-                        os.rename(vt, f"{out_dir}/v_{pid}.npy")
-                        it_ = f"{out_dir}/i_{pid}.{uuid.uuid4().hex}.tmp.npy"
-                        np.save(it_, gd)
-                        os.rename(it_, f"{out_dir}/i_{pid}.npy")
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(done, type=pa.int64())], names=["pid"]
-                )
-
-            rows = (
-                graph.spark.range(0, k, 1, n_tasks)
-                .mapInArrow(step, "pid long")
-                .collect()
-            )
-            changed = np.zeros(n, dtype=bool)
-            any_imp = False
-            for r in rows:
-                pid = r["pid"]
-                ipath = f"{out_dir}/i_{pid}.npy"
-                if not os.path.exists(ipath):
-                    continue
-                idx = np.load(ipath)
-                val = np.load(f"{out_dir}/v_{pid}.npy")
-                if blocks.dst_disjoint:
-                    dist[idx] = val  # val already = min(cur, cand)
-                else:
-                    np.minimum.at(dist, idx, val)
-                changed[idx] = True  # conservative under overlap: extra
-                any_imp = True  # frontier rows re-relax, never miss
-            shutil.rmtree(out_dir, ignore_errors=True)
-            if not any_imp:
-                converged = True
-                break
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+    for rounds in range(1, max_iters + 1):
+        changed_next = np.zeros(n, dtype=bool)
+        for idx, val in relax_round(changed):
+            if disjoint:
+                dist[idx] = val  # val already = min(cur, cand)
+            else:
+                np.minimum.at(dist, idx, val)
+            changed_next[idx] = True  # conservative under overlap: extra
+            # frontier rows re-relax, never miss
+        changed = changed_next
+        if not changed.any():
+            converged = True
+            break
     return dist, rounds, converged

@@ -1,26 +1,14 @@
 """Triangle counting — one-shot DataFrame job (north-rule algorithm).
 
-Two orientation strategies, both pure equi-join pipelines (Catalyst/AQE
-pick broadcast vs sort-merge and split skewed keys):
-
-- ``orientation='id'`` (default): canonical low-id→high-id orientation,
-  wedges at the middle vertex (``a<b<c``), closing semi-join. Fastest
-  in practice — measured 5.8 s vs 14 s for the degree variant on the
-  2M-edge powerlaw-cluster bench graph, and ~2 s vs ~5 s on the
-  transcript graph — because it needs no degree computation and its
-  wedge set is small whenever hub ids don't cluster adversarially in
-  the middle of the id range.
-- ``orientation='degree'``: node-iterator++ — edges oriented by
-  ``(degree, id)`` rank, wedges are forward-neighbor PAIRS of the
-  lowest-rank corner. Its wedge count is Σ out_fwd(x)² ≤ O(E^{3/2})
-  for ANY id assignment (out_fwd ≤ O(√E) under degree ranking) — the
-  insurance policy for graphs where ids do correlate with degree in
-  the worst way. Costs a degree aggregation + two joins up front and
-  enumerates pairs, so it only wins when id-orientation's wedge set
-  degenerates.
-
-Both count each triangle exactly once and return identical rows
-(parity-tested).
+One pure equi-join pipeline (Catalyst/AQE pick broadcast vs sort-merge
+and split skewed keys): canonical low-id→high-id orientation, wedges at
+the middle vertex (``a<b<c``), closing semi-join. It needs no degree
+computation, and its wedge set is small whenever hub ids don't cluster
+adversarially in the middle of the id range. A ``(degree, id)``
+node-iterator++ orientation (wedge count ≤ O(E^{3/2}) for any id
+assignment) measured slower — 14 s vs 5.8 s on the 2M-edge
+powerlaw-cluster bench graph, ~5 s vs ~2 s on the transcript graph —
+and was removed.
 """
 
 from __future__ import annotations
@@ -44,62 +32,27 @@ def canonical_edges(graph: Graph) -> DataFrame:
     )
 
 
-def degree_oriented_edges(graph: Graph) -> DataFrame:
-    """``(x, y, dy)``: each undirected edge once, oriented so
-    ``(deg(x), x) < (deg(y), y)``; ``dy`` carries deg(y) so wedge
-    generation can rank two forward neighbors without another join."""
-    e = canonical_edges(graph)
-    deg = (
-        e.select(F.col("u").alias("id"))
-        .unionAll(e.select(F.col("v").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("deg"))
-    )
-    ed = (
-        e.join(deg.select(F.col("id").alias("u"), F.col("deg").alias("du")), "u")
-        .join(deg.select(F.col("id").alias("v"), F.col("deg").alias("dv")), "v")
-    )
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    return ed.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("x"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("y"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dy"),
-    )
+def _triangles_of(e: DataFrame) -> DataFrame:
+    """``(a, b, c)`` with ``a<b<c`` over an explicit canonical edge set."""
+    ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
+    bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
+    ac = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
+    return ab.join(bc, "b").join(ac, ["a", "c"], "left_semi").select("a", "b", "c")
 
 
-def triangle_count(graph: Graph, orientation: str = "id") -> int:
+def triangle_count(graph: Graph) -> int:
     """Total number of triangles in the undirected simple graph."""
-    return triangle_df(graph, orientation).count()
+    return triangle_df(graph).count()
 
 
-def triangle_df(graph: Graph, orientation: str = "id") -> DataFrame:
+def triangle_df(graph: Graph) -> DataFrame:
     """``(a, b, c)`` with ``a<b<c`` (by id) — one row per triangle."""
-    if orientation == "id":
-        e = canonical_edges(graph)
-        ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
-        ac = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
-        return ab.join(bc, "b").join(ac, ["a", "c"], "left_semi").select("a", "b", "c")
-    if orientation != "degree":
-        raise ValueError(f"unknown orientation {orientation!r}")
-    o = degree_oriented_edges(graph)
-    p1 = o.select("x", F.col("y").alias("p"), F.col("dy").alias("dp"))
-    p2 = o.select("x", F.col("y").alias("q"), F.col("dy").alias("dq"))
-    wedges = p1.join(p2, "x").where(
-        (F.col("dp") < F.col("dq"))
-        | ((F.col("dp") == F.col("dq")) & (F.col("p") < F.col("q")))
-    )
-    closing = o.select(F.col("x").alias("p"), F.col("y").alias("q"))
-    tri = wedges.join(closing, ["p", "q"], "left_semi")
-    s = F.array_sort(F.array("x", "p", "q"))
-    return tri.select(s[0].alias("a"), s[1].alias("b"), s[2].alias("c"))
+    return _triangles_of(canonical_edges(graph))
 
 
-def per_vertex_triangles(graph: Graph, orientation: str = "id") -> DataFrame:
+def per_vertex_triangles(graph: Graph) -> DataFrame:
     """``(id, triangles)`` — triangles incident to each vertex."""
-    t = triangle_df(graph, orientation)
+    t = triangle_df(graph)
     verts = (
         t.select(F.col("a").alias("id"))
         .unionAll(t.select(F.col("b").alias("id")))
@@ -108,7 +61,7 @@ def per_vertex_triangles(graph: Graph, orientation: str = "id") -> DataFrame:
     return verts.groupBy("id").agg(F.count("*").alias("triangles"))
 
 
-def clustering_coefficient(graph: Graph, orientation: str = "id") -> DataFrame:
+def clustering_coefficient(graph: Graph) -> DataFrame:
     """``(id, deg, triangles, lcc)`` for every graph vertex:
     ``lcc = 2·T(v) / (deg(v)·(deg(v)−1))`` on the undirected simple
     graph, 0.0 for deg < 2. T and deg are exact integers and the lcc is
@@ -121,7 +74,7 @@ def clustering_coefficient(graph: Graph, orientation: str = "id") -> DataFrame:
         .groupBy("id")
         .agg(F.count("*").alias("deg"))
     )
-    t = per_vertex_triangles(graph, orientation)
+    t = per_vertex_triangles(graph)
     return (
         graph.vertices.join(deg, "id", "left")
         .join(t, "id", "left")
@@ -244,7 +197,7 @@ def four_cliques_df(graph: Graph) -> DataFrame:
     listing plan (Chiba–Nishizeki orientation bounds the join fan-out
     by Σ out(x)·tri(x), not by raw degree)."""
     e = canonical_edges(graph)
-    tri = triangle_df(graph, orientation="id")
+    tri = triangle_df(graph)
     ext = tri.join(e.select(F.col("u").alias("a"), F.col("v").alias("d")), "a")
     ext = ext.join(
         e.select(F.col("u").alias("b"), F.col("v").alias("d")),
@@ -264,14 +217,6 @@ def four_clique_count_df(graph: Graph) -> DataFrame:
     return four_cliques_df(graph).agg(
         F.count("*").cast("long").alias("four_cliques")
     )
-
-
-def _triangles_of(e: DataFrame) -> DataFrame:
-    """``(a, b, c)`` with ``a<b<c`` over an explicit canonical edge set."""
-    ab = e.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    bc = e.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    ac = e.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    return ab.join(bc, "b").join(ac, ["a", "c"], "left_semi").select("a", "b", "c")
 
 
 def k_truss(graph: Graph, k: int = 4, max_rounds: int = 100) -> tuple[DataFrame, int]:
@@ -433,12 +378,8 @@ def sampled_triangle_estimate(
         F.lit(int(q)),
     )
     s = e.where(key == 0).persist()
-    ab = s.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    bc = s.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    ac = s.select(F.col("u").alias("a"), F.col("v").alias("c"))
-    tri = ab.join(bc, "b").join(ac, ["a", "c"], "left_semi")
     n_edges = s.count()
-    n_tri = tri.count()
+    n_tri = _triangles_of(s).count()
     s.unpersist()
     return graph.spark.createDataFrame(
         [(n_edges, n_tri, n_tri * q**3)],
@@ -446,13 +387,13 @@ def sampled_triangle_estimate(
     )
 
 
-def edge_support(graph: Graph, orientation: str = "id") -> DataFrame:
+def edge_support(graph: Graph) -> DataFrame:
     """``(u, v, support)`` for every canonical undirected edge —
     support = number of triangles the edge lies in (the k-truss
     building block and the standard tie-strength signal). One explode
     of the wedge-bounded triangle list + a left join back to the edge
     relation (zero-support edges included)."""
-    tri = triangle_df(graph, orientation)
+    tri = triangle_df(graph)
     per_edge = (
         tri.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))

@@ -115,48 +115,37 @@ def tiled_usum(state: np.ndarray, blk: tuple) -> np.ndarray:
     return p
 
 
-def tiled_min(state: np.ndarray, blk: tuple) -> np.ndarray:
-    """min-aggregation variant (connected components / label prop)."""
-    src, _w, u_dst, starts, seg_map, tb, sb = blk
-    if np.issubdtype(state.dtype, np.integer):
-        init = np.iinfo(state.dtype).max
-    else:
-        init = np.inf
-    shape = (len(u_dst),) + state.shape[1:]
-    p = np.full(shape, init, dtype=state.dtype)
-    for ti in range(len(tb) - 1):
-        e0, e1 = int(tb[ti]), int(tb[ti + 1])
-        s0, s1 = int(sb[ti]), int(sb[ti + 1])
-        incoming = state[np.asarray(src[e0:e1])]
-        tp = np.minimum.reduceat(incoming, np.asarray(starts[s0:s1]) - e0, axis=0)
-        idx = np.asarray(seg_map[s0:s1])
-        p[idx] = np.minimum(p[idx], tp)
-    return p
-
-
 # edge count below which building a REVERSED-graph BlockStore (for
 # frontier-sparse backward passes: SCC reach, Brandes backward sweeps)
 # costs more than the streaming full-scan rounds it replaces
 REV_BLOCKS_MIN_EDGES = 5_000_000
 
 
+def _save_renamed(path: str, *arrays) -> None:
+    """Write one array (``.npy``) or several (``.npz``) to ``path``
+    under a tmp name, then rename: a task killed mid-write (retry /
+    speculation) never leaves a truncated file that a later reader or
+    exists-check trusts."""
+    base, ext = os.path.splitext(path)
+    tmp = f"{base}.{uuid.uuid4().hex}.tmp{ext}"
+    if ext == ".npz":
+        np.savez(tmp, *arrays)
+    else:
+        np.save(tmp, arrays[0])
+    os.rename(tmp, path)
+
+
 def _sorted_src_index(block_dir: str, pid: int, src_b: np.ndarray):
     """Cached src-sorted view of a block's edges: ``(ssrc, sperm)`` where
     ``ssrc = src_b[sperm]`` is ascending. Built once per block, reused by
-    every sparse-frontier traversal. tmp + ``os.rename``: a task killed
-    mid-write (retry / speculation) must never leave a truncated file a
-    later exists-check trusts; ssrc before sperm so sperm existing
-    implies a complete ssrc."""
+    every sparse-frontier traversal. Written tmp + ``os.rename``, ssrc
+    before sperm, so sperm existing implies a complete ssrc."""
     sp_path = f"{block_dir}/sperm_{pid}.npy"
     ss_path = f"{block_dir}/ssrc_{pid}.npy"
     if not os.path.exists(sp_path):
         perm = np.argsort(src_b, kind="stable")
-        tmp = f"{block_dir}/ssrc_{pid}.{uuid.uuid4().hex}.tmp.npy"
-        np.save(tmp, src_b[perm])
-        os.rename(tmp, ss_path)
-        tmp = f"{block_dir}/sperm_{pid}.{uuid.uuid4().hex}.tmp.npy"
-        np.save(tmp, perm)
-        os.rename(tmp, sp_path)
+        _save_renamed(ss_path, src_b[perm])
+        _save_renamed(sp_path, perm)
     return np.load(ss_path, mmap_mode="r"), sp_path
 
 
@@ -170,9 +159,7 @@ def _edge_dst(block_dir: str, pid: int, blk: tuple) -> np.ndarray:
     src_b, _w, _udst, starts, segmap, _tb, _sb = blk
     seg_len = np.diff(np.r_[np.asarray(starts), len(src_b)])
     edge_dst = np.repeat(np.asarray(segmap), seg_len)
-    tmp = f"{block_dir}/edst_{pid}.{uuid.uuid4().hex}.tmp.npy"
-    np.save(tmp, edge_dst)
-    os.rename(tmp, ed_path)
+    _save_renamed(ed_path, edge_dst)
     return edge_dst
 
 
@@ -182,6 +169,21 @@ def _expand_ranges(lo: np.ndarray, spans: np.ndarray) -> np.ndarray:
     total = int(spans.sum())
     offs = np.repeat(np.cumsum(spans) - spans, spans)
     return np.repeat(lo, spans) + np.arange(total) - offs
+
+
+def frontier_edges(block_dir: str, pid: int, src_b: np.ndarray, front: np.ndarray):
+    """Positions of the block's edges whose src is in the sorted
+    ``front``, found through the cached src-sorted index — O(f log E +
+    touched edges), no |E|-long gather. None when there are none."""
+    ss, sp_path = _sorted_src_index(block_dir, pid, src_b)
+    lo = np.searchsorted(ss, front, side="left")
+    hi = np.searchsorted(ss, front, side="right")
+    spans = hi - lo
+    nz = spans > 0
+    if not nz.any():
+        return None
+    idx = _expand_ranges(lo[nz], spans[nz])
+    return np.asarray(np.load(sp_path, mmap_mode="r"))[idx]
 
 
 def relax_block(
@@ -227,15 +229,9 @@ def relax_block(
     src_b = np.asarray(src_b)
     udst_arr = np.asarray(udst)
     if front is not None:
-        ss, sp_path = _sorted_src_index(block_dir, pid, src_b)
-        lo = np.searchsorted(ss, front, side="left")
-        hi = np.searchsorted(ss, front, side="right")
-        spans = hi - lo
-        nz = spans > 0
-        if not nz.any():
+        sel = frontier_edges(block_dir, pid, src_b, front)
+        if sel is None:
             return None
-        idx = _expand_ranges(lo[nz], spans[nz])
-        sel = np.asarray(np.load(sp_path, mmap_mode="r"))[idx]
     else:
         bottom_up = False
         if inf_value is not None and front_frac is not None and not edge_weighted:
@@ -379,78 +375,75 @@ class BlockStore:
 
     # ----------------------------------------------------------- supersteps
     def gather(self, rank2d: np.ndarray, op: str = "sum") -> np.ndarray:
-        """One superstep over all blocks; ``op`` is 'sum' (weighted SpMV),
-        'usum' (unweighted adjacency sum — Brandes sweeps), or 'min'
-        (label propagation on int64 labels)."""
+        """One superstep over all blocks; ``op`` is 'sum' (weighted SpMV)
+        or 'usum' (unweighted adjacency sum — Brandes sweeps)."""
         n = rank2d.shape[-1]
-        is_min = op == "min"
         if self.num_partitions == 0:  # empty graph
-            return rank2d.copy() if is_min else np.zeros_like(rank2d)
-        rank_path = os.path.join(self.dir, f"state_{uuid.uuid4().hex}.npy")
-        # ship N-major (N, S): the per-edge gather then reads one
-        # contiguous S·8-byte row per edge (one cache line for S=8)
-        # instead of S scattered reads — measured ~10x faster
-        np.save(rank_path, rank2d if is_min else np.ascontiguousarray(rank2d.T))
-        out_dir = os.path.join(self.dir, f"out_{uuid.uuid4().hex}")
-        os.makedirs(out_dir, exist_ok=True)
-        block_dir = self.dir
-        pids = self.pids
-
-        def step(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            done = []
-            for b in batches:
-                for task_i in b.column("id").to_pylist():
-                    pid = pids[task_i]
-                    blk = load_block(block_dir, pid)
-                    state = np.load(rank_path, mmap_mode="r")
-                    if is_min:
-                        p = tiled_min(state, blk)
-                    elif op == "usum":
-                        p = tiled_usum(state, blk)
-                    else:
-                        p = tiled_spmv(state, blk)
-                    np.save(os.path.join(out_dir, f"p_{pid}.npy"), p)
-                    done.append(pid)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(done, type=pa.int64())], names=["pid"]
-            )
-
-        k = self.num_partitions
-        # one task wave: per-task launch costs ~10 ms through the Python
-        # worker round-trip, so extra waves dominate the superstep at
-        # this scale — each task walks a contiguous range of block ids
-        n_tasks = max(1, min(k, self.spark.sparkContext.defaultParallelism))
-        rows = (
-            self.spark.range(0, k, 1, n_tasks).mapInArrow(step, "pid long").collect()
+            return np.zeros_like(rank2d)
+        tiled = tiled_usum if op == "usum" else tiled_spmv
+        parts = self.run_round(
+            lambda block_dir, pid, blk, state: (tiled(state, blk),),
+            # ship N-major (N, S): the per-edge gather then reads one
+            # contiguous S·8-byte row per edge (one cache line for S=8)
+            # instead of S scattered reads — measured ~10x faster
+            state=np.ascontiguousarray(rank2d.T),
         )
-        done_pids = {r["pid"] for r in rows}
-        try:
-            if is_min:
-                out = rank2d.copy()
-                if self.dst_disjoint:
-                    for pid in done_pids:
-                        p = np.load(os.path.join(out_dir, f"p_{pid}.npy"))
-                        idx = np.asarray(self._u_dst[pid])
-                        out[idx] = np.minimum(out[idx], p)
-                else:
-                    for pid in done_pids:
-                        p = np.load(os.path.join(out_dir, f"p_{pid}.npy"))
-                        np.minimum.at(out, self._u_dst[pid], p)
+        out_ns = np.zeros((n, rank2d.shape[0]), dtype=np.float64)
+        for pid, (p,) in parts.items():  # p: (K, S)
+            if self.dst_disjoint:
+                out_ns[np.asarray(self._u_dst[pid])] = p
             else:
-                out_ns = np.zeros((n, rank2d.shape[0]), dtype=np.float64)
-                if self.dst_disjoint:
-                    for pid in done_pids:
-                        p = np.load(os.path.join(out_dir, f"p_{pid}.npy"))  # (K, S)
-                        out_ns[np.asarray(self._u_dst[pid])] = p
-                else:
-                    for pid in done_pids:
-                        p = np.load(os.path.join(out_dir, f"p_{pid}.npy"))
-                        np.add.at(out_ns, self._u_dst[pid], p)
-                out = np.ascontiguousarray(out_ns.T)
+                np.add.at(out_ns, self._u_dst[pid], p)
+        return np.ascontiguousarray(out_ns.T)
+
+    def run_round(self, kernel, **arrays) -> dict[int, tuple]:
+        """One per-round job over all blocks, the driver-state superstep
+        of every block path. ``kernel(block_dir, pid, blk, **arrays)``
+        runs once per block with ``arrays`` memory-mapped from the
+        round's run dir, and returns a tuple of arrays or None. Returns
+        ``{pid: tuple}`` for the blocks that returned one, in the order
+        the job reported them; the run dir goes on every exit."""
+        run_dir = os.path.join(self.dir, f"run_{uuid.uuid4().hex}")
+        os.makedirs(run_dir)
+        block_dir, pids, names = self.dir, self.pids, list(arrays)
+        try:
+            for name, arr in arrays.items():
+                _save_renamed(f"{run_dir}/{name}.npy", arr)
+
+            def step(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+                args = {
+                    name: np.load(f"{run_dir}/{name}.npy", mmap_mode="r")
+                    for name in names
+                }
+                done = []
+                for b in batches:
+                    for task_i in b.column("id").to_pylist():
+                        pid = pids[task_i]
+                        res = kernel(block_dir, pid, load_block(block_dir, pid), **args)
+                        if res is not None:
+                            _save_renamed(f"{run_dir}/r_{pid}.npz", *res)
+                        done.append(pid)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(done, type=pa.int64())], names=["pid"]
+                )
+
+            k = self.num_partitions
+            # one task wave: per-task launch costs ~10 ms through the Python
+            # worker round-trip, so extra waves dominate the superstep at
+            # this scale — each task walks a contiguous range of block ids
+            n_tasks = max(1, min(k, self.spark.sparkContext.defaultParallelism))
+            rows = (
+                self.spark.range(0, k, 1, n_tasks).mapInArrow(step, "pid long").collect()
+            )
+            out = {}
+            for r in rows:
+                path = f"{run_dir}/r_{r['pid']}.npz"
+                if os.path.exists(path):
+                    with np.load(path) as z:
+                        out[r["pid"]] = tuple(z[f"arr_{j}"] for j in range(len(z.files)))
             return out
         finally:
-            os.unlink(rank_path)
-            shutil.rmtree(out_dir, ignore_errors=True)
+            shutil.rmtree(run_dir, ignore_errors=True)
 
     def cleanup(self) -> None:
         self._finalizer()

@@ -22,6 +22,8 @@ inherent because the partial aggregation happens *before* the shuffle.
 
 from __future__ import annotations
 
+import weakref
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,6 +92,8 @@ class Graph:
         self.edges = layout.sortWithinPartitions("dst", "src").persist(
             StorageLevel.MEMORY_AND_DISK
         )
+        self._releases: list[weakref.finalize] = []
+        self.release_with(self.edges)
         if num_vertices is None:
             row = self.edges.agg(
                 F.max(F.greatest("src", "dst")).alias("mx"),
@@ -107,6 +111,17 @@ class Graph:
         self._dist_blocks = None
         self._rev_graph: "Graph | None" = None
         self._und_graph: "Graph | None" = None
+
+    def release_with(self, df: DataFrame) -> DataFrame:
+        """Unpersist ``df`` when this Graph is unpersisted or collected,
+        whichever comes first, and only then: Spark keys a cache by its
+        plan, so unpersisting again after an equal Graph has cached the
+        same plan would uncache that Graph's copy. Not at exit, when the
+        session may already be stopped."""
+        release = weakref.finalize(self, df.unpersist)
+        release.atexit = False
+        self._releases.append(release)
+        return df
 
     def reversed_graph(self) -> "Graph":
         """Memoized transposed Graph (dst-hash layout + CSR blocks of
@@ -223,11 +238,10 @@ class Graph:
         )
 
     def unpersist(self) -> None:
-        self.edges.unpersist()
-        ra = getattr(self, "_ranked_adj", None)
-        if ra is not None:
-            ra.unpersist()
-            self._ranked_adj = None
+        for release in self._releases:  # the edges, the ranked adjacency
+            release()
+        self._releases.clear()
+        self._ranked_adj = None
         if self.vertex_names is not None:
             self.vertex_names.unpersist()
         if self._blocks is not None:

@@ -7,7 +7,6 @@ import numpy as np
 from approximate_pagerank_public_spark.operators.centrality import (
     betweenness_centrality,
     stress_centrality,
-    stress_centrality_distributed,
 )
 from approximate_pagerank_public_spark.plans.graph import Graph
 
@@ -75,13 +74,6 @@ def test_stress_path_graph_spot(spark):
         assert got == [0, 2, 1, 0]
     finally:
         g.unpersist()
-
-
-def test_stress_broadcast_distributed_parity(g_rand):
-    b = stress_centrality(g_rand, SOURCES).toPandas().sort_values("id")
-    d = stress_centrality_distributed(g_rand, SOURCES).toPandas().sort_values("id")
-    assert b["id"].tolist() == d["id"].tolist()
-    assert b["stress"].tolist() == d["stress"].tolist()
 
 
 def test_betweenness_matches_brandes_golden(g_rand):

@@ -24,7 +24,6 @@ from approximate_pagerank_public_spark.operators import (
     absorbing,
     anf,
     biconnect,
-    centrality,
     coloring,
     components,
     curation,
@@ -72,7 +71,6 @@ CASES = {
     "absorbing": lambda g: absorbing.hitting_probability(g, [2], absorb_ids=[1], iters=3),
     "anf": lambda g: anf.hyperball_harmonic(g, rounds=2, mode="packed"),
     "biconnect": lambda g: biconnect.two_edge_components(g, mode="distributed"),
-    "centrality": lambda g: centrality.stress_centrality_distributed(g, [1, 2]),
     "coloring": lambda g: coloring.greedy_coloring(g, mode="distributed")[0],
     "components": lambda g: components.connected_components(g, mode="distributed"),
     "curation": lambda g: curation.max_coverage_docs(_docs(g.spark), k=3),

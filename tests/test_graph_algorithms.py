@@ -125,16 +125,6 @@ def test_triangle_count_known(spark):
     g.unpersist()
 
 
-def test_triangle_orientations_agree(g_rand):
-    """id-canonical (default, fastest measured) and degree-ordered
-    (O(E^1.5)-bounded insurance) must produce identical triangle sets."""
-    from approximate_pagerank_public_spark.operators.triangles import triangle_df
-
-    a = sorted(map(tuple, triangle_df(g_rand, "id").collect()))
-    b = sorted(map(tuple, triangle_df(g_rand, "degree").collect()))
-    assert a == b and len(a) > 0
-
-
 def test_triangle_count_random(g_rand):
     src, dst, _ = g_rand.edges_numpy()
     gold = golden.golden_triangle_count(src, dst, 300)

@@ -159,7 +159,6 @@ class _Sizes:
     ``num_edges`` (on a real Graph it may run a count)."""
 
     num_partitions = 1
-    blocks = object()  # biconnect's driver path also needs the CSR blocks
 
     def __init__(self, n, m, spark=None):
         self.num_vertices, self._m, self.spark = n, m, spark

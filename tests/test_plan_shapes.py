@@ -196,6 +196,18 @@ def test_cc_star_round_shape(g_rand, monkeypatch):
     }
 
 
+def test_triangle_df_shape(g_rand):
+    from approximate_pagerank_public_spark.operators.triangles import triangle_df
+
+    assert _pinned(plan_shape(triangle_df(g_rand))) == {
+        # the canonical-edge distinct under each of the wedge join's
+        # three uses (ab, bc and the closing ac); no other shuffle
+        "Exchange": 3,
+        # ab ⋈ bc and the closing semi-join broadcast at fixture size
+        "BroadcastHashJoin": 2,
+    }
+
+
 def test_relational_regional_revenue_shape(spark):
     from approximate_pagerank_public_spark.operators.relational import (
         regional_revenue,

@@ -107,8 +107,9 @@ def test_exact_diameter_releases_the_symmetrized_graph(spark):
 
 def test_block_store_dirs_go_with_a_dropped_graph(spark):
     """A Graph dropped without ``unpersist()`` still removes its block
-    store dirs and the distributed store's routing table once collected;
-    dirs of live stores go at exit."""
+    store dirs and unpersists its cached edges and the distributed
+    store's routing table once collected; dirs of live stores go at
+    exit."""
     import gc
 
     g = _two_triangles(spark)
@@ -119,12 +120,29 @@ def test_block_store_dirs_go_with_a_dropped_graph(spark):
     assert all(os.path.isdir(d) for d in dirs)
     assert all(f.atexit for f in fins)
     assert routing.is_cached
+    assert edges.is_cached
     del g, stores
     gc.collect()
+    assert not any(f.alive for f in fins)
+    assert not any(os.path.exists(d) for d in dirs)
+    assert not routing.is_cached
+    assert not edges.is_cached
+
+
+def test_an_unpersisted_graph_leaves_an_equal_graph_cached(spark):
+    """Spark keys a cache by plan, so two Graphs over the same input
+    share one cached edge table. A Graph released by ``unpersist()``
+    must not release again when collected: by then an equal Graph may
+    have cached the plan anew (a benchmark's second set-up does)."""
+    import gc
+
+    g = _two_triangles(spark)
+    g.unpersist()
+    g2 = _two_triangles(spark)
     try:
-        assert not any(f.alive for f in fins)
-        assert not any(os.path.exists(d) for d in dirs)
-        assert not routing.is_cached
+        assert g2.edges.storageLevel.useMemory
+        del g
+        gc.collect()
+        assert g2.edges.storageLevel.useMemory
     finally:
-        # the graph's own cached edges have no finalizer
-        edges.unpersist()
+        g2.unpersist()
