@@ -70,7 +70,7 @@ def _vote_kernel(load_labels):
 
 def _lpa_broadcast(und: Graph, max_iter: int) -> tuple[np.ndarray, int]:
     """Driver-state LPA over the symmetrized graph → ``(labels,
-    rounds)``. On local masters with dst-disjoint CSR blocks every
+    rounds)``. On local masters (where the graph has CSR blocks) every
     round runs inside ONE gang-scheduled barrier job
     (``plans.barrier.run_barrier_rounds`` with the ``vote_block``
     kernel). Otherwise, and when the gang fails, each round is one
@@ -80,22 +80,22 @@ def _lpa_broadcast(und: Graph, max_iter: int) -> tuple[np.ndarray, int]:
     ``max_iter``."""
     from approximate_pagerank_public_spark.operators.spmv import ship_and_collect
     from approximate_pagerank_public_spark.plans.barrier import (
-        BARRIER_FALLBACK_ERRORS,
-        barrier_available,
         run_barrier_rounds,
-        warn_barrier_fallback,
+        run_gang,
     )
 
     n = und.num_vertices
     labels = np.arange(n, dtype=np.int64)
-    if barrier_available(und):
-        try:
-            out, rounds, _ = run_barrier_rounds(
-                und, labels[:, None], np.ones(n, dtype=bool), vote_block, max_iter
-            )
-            return out[:, 0], rounds
-        except BARRIER_FALLBACK_ERRORS as ex:
-            warn_barrier_fallback(ex, "per-round jobs")
+    gang = run_gang(
+        und,
+        lambda: run_barrier_rounds(
+            und, labels[:, None], np.ones(n, dtype=bool), vote_block, max_iter
+        ),
+        "per-round jobs",
+    )
+    if gang is not None:
+        out, rounds, _ = gang
+        return out[:, 0], rounds
     rounds = 0
     for rounds in range(1, max_iter + 1):
         pdf = ship_and_collect(

@@ -201,67 +201,60 @@ def _run_broadcast(
     # and resume semantics as the per-superstep path, job overhead
     # amortized over the chunk.
     from approximate_pagerank_public_spark.plans.barrier import (
-        BARRIER_FALLBACK_ERRORS,
-        barrier_available,
         run_barrier_pagerank,
-        warn_barrier_fallback,
+        run_gang,
     )
 
-    if barrier_available(graph):
-        try:
-            it_b = start_it
-            pr_b = pr
-            metrics_b = list(metrics)
-            conv_b = False
-            phases: dict = {}
-            while it_b < max_iter:
-                chunk = (
-                    min(checkpoint_every, max_iter - it_b)
-                    if ckpt
-                    else max_iter - it_b
-                )
-                state, m, its, conv_b, phases = run_barrier_pagerank(
-                    graph,
-                    alpha,
-                    tol,
-                    chunk,
-                    sources,
-                    init_state=(
-                        pr_b
-                        if (ckpt or it_b > 0 or init_ranks is not None)
-                        else None
-                    ),
-                    iter_offset=it_b,
-                    dangling_norm=dangling_norm,
-                    post_superstep=post_superstep,
-                )
-                if its > 0:
-                    pr_b = state
-                metrics_b.extend(m)
-                it_b += its
-                if ckpt:
-                    ckpt.save(
-                        graph.spark,
-                        it_b,
-                        pr_b,
-                        metrics_b,
-                        config=config,
-                        num_partitions=graph.num_partitions,
-                    )
-                if conv_b or its < chunk:
-                    break
-            return PageRankResult(
-                iterations=it_b,
-                converged=conv_b,
-                metrics=metrics_b,
-                sources=sources,
-                ranks_np=pr_b,
-                _graph=graph,
-                phase_timings=phases,
+    def gang() -> PageRankResult:
+        it_b = start_it
+        pr_b = pr
+        metrics_b = list(metrics)
+        conv_b = False
+        phases: dict = {}
+        while it_b < max_iter:
+            chunk = min(checkpoint_every, max_iter - it_b) if ckpt else max_iter - it_b
+            state, m, its, conv_b, phases = run_barrier_pagerank(
+                graph,
+                alpha,
+                tol,
+                chunk,
+                sources,
+                init_state=(
+                    pr_b if (ckpt or it_b > 0 or init_ranks is not None) else None
+                ),
+                iter_offset=it_b,
+                dangling_norm=dangling_norm,
+                post_superstep=post_superstep,
             )
-        except BARRIER_FALLBACK_ERRORS as ex:
-            # the per-superstep path below recomputes from start_it
-            warn_barrier_fallback(ex, "per-superstep jobs")
+            if its > 0:
+                pr_b = state
+            metrics_b.extend(m)
+            it_b += its
+            if ckpt:
+                ckpt.save(
+                    graph.spark,
+                    it_b,
+                    pr_b,
+                    metrics_b,
+                    config=config,
+                    num_partitions=graph.num_partitions,
+                )
+            if conv_b or its < chunk:
+                break
+        return PageRankResult(
+            iterations=it_b,
+            converged=conv_b,
+            metrics=metrics_b,
+            sources=sources,
+            ranks_np=pr_b,
+            _graph=graph,
+            phase_timings=phases,
+        )
+
+    # the per-superstep path below recomputes from start_it
+    res = run_gang(graph, gang, "per-superstep jobs")
+    if res is not None:
+        return res
 
     nc = n_chunks(n)
     err_buf = np.zeros((nc, s), dtype=np.float64)

@@ -15,13 +15,14 @@ fancy-index gather (the reference's ``scatter_vec``,
 (the reference's streaming write-back FSM,
 ``spmv_coo_multi_stream.hpp:178-232``). Each partition emits exactly
 one partial sum per distinct dst. Because the edge layout is hash
-partitioned **by dst**, partials are (nearly) disjoint across
-partitions, so no shuffle is needed at all: the driver merges the
-collected partials with ``np.add.at`` (exact even when skew salting
-spreads one dst over several partitions). Shuffle count per
-superstep: zero. The same pass with ``np.minimum`` in place of
-``np.add`` is the min-label / min-plus superstep of every driver-state
-relaxation on a master without shm blocks.
+partitioned **by dst**, each dst's partial comes from one partition,
+so no shuffle is needed at all. The driver merges the collected
+partials with ``ufunc.at``, which stays exact for an edge view whose
+partitions share dsts: the reversed columns (``edges=``) that
+backward passes gather over. Shuffle count per superstep: zero. The
+same pass with ``np.minimum`` in place of ``np.add`` is the min-label
+/ min-plus superstep of every driver-state relaxation on a master
+without shm blocks, and after a failed barrier gang.
 
 Rank shipping: on ``local[*]`` masters the (S,N) block is written
 once per superstep to ``/dev/shm`` and ``np.load(mmap_mode='r')``-ed

@@ -582,17 +582,16 @@ def frontier_min_relax(
     Beamer direction-optimizing switch). Values and per-round frontiers
     are bit-identical either way; it is purely an edge-work saver.
 
-    Execution: on local masters with dst-disjoint blocks, ALL rounds run
-    inside ONE gang-scheduled barrier job
+    Execution: on local masters (where the graph has CSR blocks), ALL
+    rounds run inside ONE gang-scheduled barrier job
     (``plans.barrier.run_barrier_rounds``) — per-round Spark jobs pay
     a fixed ~0.3-0.7 s scheduling + Python-worker round-trip that
-    dominates post-peak rounds. With blocks elsewhere (and when the
-    gang fails, with a ``RuntimeWarning``) each round is one
-    ``BlockStore.run_round`` job over the same ``relax_block`` kernel.
-    Without blocks (a master with no shm) each round is one streamed
-    ``spmv.gather`` min pass over the frontier's out-edges. The
-    fixpoint is unique and every path relaxes the same candidates per
-    round, so all of them return identical state, rounds and frontiers.
+    dominates post-peak rounds. Without blocks (a master with no shm),
+    and when the gang fails (with a ``RuntimeWarning``), each round is
+    one streamed ``spmv.gather`` min pass over the frontier's
+    out-edges. The fixpoint is unique and both paths relax the same
+    candidates per round, so they return identical state, rounds and
+    frontiers.
 
     Returns ``(state, rounds, converged)`` — ``rounds`` is the number of
     relaxation rounds actually executed and ``converged`` is False only
@@ -601,17 +600,13 @@ def frontier_min_relax(
     """
     from approximate_pagerank_public_spark.operators.spmv import gather
     from approximate_pagerank_public_spark.plans.barrier import (
-        BARRIER_FALLBACK_ERRORS,
-        barrier_available,
         run_barrier_rounds,
-        warn_barrier_fallback,
+        run_gang,
     )
     from approximate_pagerank_public_spark.plans.blocks import relax_block
 
     n = graph.num_vertices
-    blocks = graph.blocks
     dtype = state.dtype
-    dist = state
     one = dtype.type(1) if plus_one else dtype.type(0)
     bu_inf = inf_value if (plus_one and not edge_weighted) else None
     sparse_threshold = _sparse_threshold(n)
@@ -640,53 +635,33 @@ def frontier_min_relax(
             edge_weighted=edge_weighted,
         )
 
-    if barrier_available(graph):
-        try:
-            out, rounds, converged = run_barrier_rounds(
-                graph, state, changed, kernel, max_iters
-            )
-            state[:] = out
-            return state, rounds, converged
-        except BARRIER_FALLBACK_ERRORS as ex:
-            warn_barrier_fallback(ex, "per-round jobs")
+    gang = run_gang(
+        graph,
+        lambda: run_barrier_rounds(graph, state, changed, kernel, max_iters),
+        "streamed per-round jobs",
+    )
+    if gang is not None:
+        out, rounds, converged = gang
+        state[:] = out
+        return state, rounds, converged
 
-    def block_round(changed):
-        res = blocks.run_round(
-            kernel, snap=dist, front=np.flatnonzero(changed), fmask=changed
-        )
-        return res.values()
-
-    def streamed_round(changed):
-        # the candidates relax_block selects: frontier-src edges, min
-        # over state[src] (+ w), then + one; rows no frontier edge
-        # reaches hold the identity
-        cand = gather(
-            graph, dist.T, "min" if edge_weighted else "umin", frontier=changed
-        ).T
-        ident = np.iinfo(dtype).max if dtype.kind in "iu" else np.inf
-        rows = np.flatnonzero((cand != ident).any(axis=1))
-        cur = dist[rows]
-        new = np.minimum(cur, cand[rows] + one)
-        imp = (new < cur).any(axis=1)
-        return [(rows[imp], new[imp])]
-
-    if blocks is None:
-        relax_round, disjoint = streamed_round, True
-    else:
-        relax_round, disjoint = block_round, blocks.dst_disjoint
+    # streamed rounds select the candidates relax_block does: frontier-src
+    # edges, min over state[src] (+ w), then + one; rows no frontier edge
+    # reaches hold the identity
+    op = "min" if edge_weighted else "umin"
+    ident = np.iinfo(dtype).max if dtype.kind in "iu" else np.inf
     rounds = 0
     converged = False
     for rounds in range(1, max_iters + 1):
-        changed_next = np.zeros(n, dtype=bool)
-        for idx, val in relax_round(changed):
-            if disjoint:
-                dist[idx] = val  # val already = min(cur, cand)
-            else:
-                np.minimum.at(dist, idx, val)
-            changed_next[idx] = True  # conservative under overlap: extra
-            # frontier rows re-relax, never miss
-        changed = changed_next
-        if not changed.any():
+        cand = gather(graph, state.T, op, frontier=changed).T
+        rows = np.flatnonzero((cand != ident).any(axis=1))
+        cur = state[rows]
+        new = np.minimum(cur, cand[rows] + one)
+        imp = (new < cur).any(axis=1)
+        if not imp.any():
             converged = True
             break
-    return dist, rounds, converged
+        state[rows[imp]] = new[imp]
+        changed = np.zeros(n, dtype=bool)
+        changed[rows[imp]] = True
+    return state, rounds, converged

@@ -57,11 +57,13 @@ iteration) are bit-identical across both paths and any task count.
 per-block fixpoints — min-relaxation (BFS/CC/SCC/SSSP) and label
 propagation votes — with the per-block kernel as an argument.
 
-Engages only when: local master with /dev/shm (state is shared
-pages), CSR blocks built, dst-disjoint partitioning. Durable
-checkpointing runs the loop in chunks of ``checkpoint_every``
-supersteps via ``init_state``/``iter_offset`` with a save between
-chunks. Every other case falls back. On a
+Every family enters through :func:`run_gang`, which engages when the
+graph has CSR blocks — a local master with /dev/shm (state is shared
+pages); every Graph's blocks are dst-disjoint by its layout. Without
+blocks, or when the gang fails, the caller falls back to its
+per-superstep or streamed per-round path. Durable checkpointing runs
+the loop in chunks of ``checkpoint_every`` supersteps via
+``init_state``/``iter_offset`` with a save between chunks. On a
 multi-node cluster the same protocol would exchange state via
 executor-local disk + torrent broadcast; that variant is
 intentionally not emulated here.
@@ -97,33 +99,30 @@ except ImportError:  # pragma: no cover — Connect-only; barrier never engages
     BARRIER_FALLBACK_ERRORS = (TimeoutError,)
 
 
-def warn_barrier_fallback(ex: BaseException, fallback: str) -> None:
-    """The gang was unschedulable or failed mid-run (one of
-    :data:`BARRIER_FALLBACK_ERRORS`) and the caller reruns on its
-    ``fallback`` path. A kernel bug raised inside a task lands here
-    too, so the fallback is LOUD; any other error propagates."""
-    import warnings
-
-    warnings.warn(
-        f"barrier fast path failed, falling back to {fallback}: "
-        f"{type(ex).__name__}: {str(ex)[:400]}",
-        RuntimeWarning,
-        stacklevel=3,
-    )
-
-
-def barrier_available(graph) -> bool:
-    from approximate_pagerank_public_spark.plans.blocks import shm_available
-
-    if os.environ.get("SPARK_GRAFT_BARRIER", "1") != "1":
-        return False
+def run_gang(graph, gang, fallback: str):
+    """The one barrier entry of every gang family: ``gang()`` (a
+    :func:`run_barrier_pagerank` or :func:`run_barrier_rounds` run over
+    ``graph``'s CSR blocks) and its result, or None — the caller then
+    runs its ``fallback`` path. None when the graph has no blocks (no
+    shm, or no edges), and when the gang was unschedulable or failed
+    mid-run (one of :data:`BARRIER_FALLBACK_ERRORS`). A kernel bug
+    raised inside a task lands there too, so that fallback is LOUD: a
+    ``RuntimeWarning`` first. Any other error propagates."""
     blocks = graph.blocks
-    return (
-        shm_available(graph.spark)
-        and blocks is not None
-        and blocks.num_partitions > 0
-        and getattr(blocks, "dst_disjoint", False)
-    )
+    if blocks is None or blocks.num_partitions == 0:
+        return None
+    try:
+        return gang()
+    except BARRIER_FALLBACK_ERRORS as ex:
+        import warnings
+
+        warnings.warn(
+            f"barrier fast path failed, falling back to {fallback}: "
+            f"{type(ex).__name__}: {str(ex)[:400]}",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+        return None
 
 
 def _task_slots(sc) -> int:
@@ -131,7 +130,7 @@ def _task_slots(sc) -> int:
     session pins to the shuffle-partition count and may exceed cores).
     A barrier gang larger than the slot count cannot ever schedule: the
     DAGScheduler retries 40x15 s then aborts. Only local masters reach
-    this path (see :func:`barrier_available`)."""
+    this path (shm blocks exist only there)."""
     master = sc.master
     if master.startswith("local["):
         inner = master[len("local["):-1].split(",")[0]

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 _SHM_DIR = os.environ.get("SPARK_GRAFT_SHM", "/dev/shm")
 
-_MANIFEST_SCHEMA = "pid long, n_edges long, n_dst long"
+_MANIFEST_SCHEMA = "pid long, n_edges long"
 
 # src rows per tile: at S=8 a tile's rank-state slice is 12288*64B
 # ~0.77 MB — resident in the 2 MB per-core L2. Without tiling the gather
@@ -347,31 +347,20 @@ class BlockStore:
                 [
                     pa.array([pid], type=pa.int64()),
                     pa.array([len(src)], type=pa.int64()),
-                    pa.array([len(arrays["udst"])], type=pa.int64()),
                 ],
-                names=["pid", "n_edges", "n_dst"],
+                names=["pid", "n_edges"],
             )
 
         self.manifest = edges.mapInArrow(build, _MANIFEST_SCHEMA).toPandas()
         self.pids = self.manifest["pid"].tolist()
         self.num_partitions = len(self.pids)
-        # cache each block's u_dst on the driver for the merge step
+        # each block's u_dst on the driver for the merge step; the Graph's
+        # dst-hash layout makes the blocks' dst sets disjoint, so the merge
+        # is a scatter-assign
         self._u_dst = {
             pid: np.load(os.path.join(self.dir, f"part_{pid}_udst.npy"), mmap_mode="r")
             for pid in self.pids
         }
-        # Hash partitioning by dst makes the blocks' dst sets disjoint, so
-        # the driver merge is a vectorized scatter-assign instead of the
-        # (unbuffered, ~5x slower) np.add.at. Skew-salted layouts overlap
-        # and keep the additive merge — detected once here, not assumed.
-        n_dst_total = int(self.manifest["n_dst"].sum())
-        if n_dst_total:
-            uni = len(
-                np.unique(np.concatenate([np.asarray(self._u_dst[p]) for p in self.pids]))
-            )
-            self.dst_disjoint = uni == n_dst_total
-        else:
-            self.dst_disjoint = True
 
     # ----------------------------------------------------------- supersteps
     def gather(self, rank2d: np.ndarray, op: str = "sum") -> np.ndarray:
@@ -390,10 +379,7 @@ class BlockStore:
         )
         out_ns = np.zeros((n, rank2d.shape[0]), dtype=np.float64)
         for pid, (p,) in parts.items():  # p: (K, S)
-            if self.dst_disjoint:
-                out_ns[np.asarray(self._u_dst[pid])] = p
-            else:
-                np.add.at(out_ns, self._u_dst[pid], p)
+            out_ns[np.asarray(self._u_dst[pid])] = p
         return np.ascontiguousarray(out_ns.T)
 
     def run_round(self, kernel, **arrays) -> dict[int, tuple]:

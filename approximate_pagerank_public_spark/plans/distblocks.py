@@ -41,8 +41,7 @@ BlockStore` cannot engage:
   partitions stays dst-disjoint. On a real cluster set ``num_blocks`` ≈
   a small multiple of executor count: per-superstep communication is
   then O(blocks·V) ≈ O(executors·V), the same replication factor a 1-D
-  partitioned cluster SpMV pays. Skew-salted layouts skip the coalesce
-  (it would re-merge the salted hub partitions).
+  partitioned cluster SpMV pays.
 
 Per superstep: ONE job — outbox pack (narrow over the checkpointed
 state) → packed messages SPILLED to the store's shared filesystem
@@ -276,18 +275,6 @@ class DistBlockStore:
             if f.startswith("db_") and f.endswith("_udst.npy")
         )
         self.num_partitions = len(self.pids)
-        n_dst_total = 0
-        all_udst = []
-        for pid in self.pids:
-            u = np.load(os.path.join(self.dir, f"db_{pid}_udst.npy"), mmap_mode="r")
-            n_dst_total += len(u)
-            all_udst.append(np.asarray(u))
-        if n_dst_total:
-            self.dst_disjoint = (
-                len(np.unique(np.concatenate(all_udst))) == n_dst_total
-            )
-        else:
-            self.dst_disjoint = True
 
     # ------------------------------------------------------------ superstep
     def contribs(self, state: DataFrame, n_sources: int, shuffle_partitions: int) -> DataFrame:
@@ -297,8 +284,9 @@ class DistBlockStore:
 
         Physical plan: outbox pack (narrow over cached state) → message
         shuffle (≤ P rows per state partition, binary payload) → block
-        SpMV (mmap-cached CSR, L2-tiled NumPy) — plus, for skew-salted
-        layouts whose blocks share dsts, a final partial+final hash agg.
+        SpMV (mmap-cached CSR, L2-tiled NumPy) — plus, when the sources
+        are split into column chunks, a hash agg that merges each dst's
+        chunk rows.
 
         At most ONE unmaterialized contribs plan may exist per store:
         building a plan reclaims the previous plan's spill dir, so an
@@ -472,7 +460,7 @@ class DistBlockStore:
             .drop("_route")
             .mapInArrow(spmv_kernel, out_schema)
         )
-        if chunks > 1 or not self.dst_disjoint:
+        if chunks > 1:
             out = out.groupBy("id").agg(
                 *[F.sum(f"c{i}").alias(f"c{i}") for i in range(s)]
             )

@@ -13,11 +13,13 @@ equivalent here:
 - degree / dangling tables derived once and cached
   (dangling bitmap construction: ``src/fpga/src/pagerank_coo.cpp:175-179``).
 
-Partitioning rationale at scale: the superstep kernel emits one partial
-sum per (partition, distinct dst); hashing edges by ``dst`` bounds the
-final merge's shuffle volume by O(P × distinct dst) and lets a hot dst
-(hub) be split across the partitions its in-edges land in — salting is
-inherent because the partial aggregation happens *before* the shuffle.
+Partitioning rationale at scale: hashing edges by ``dst`` gives every
+partition — and so every CSR block built from it — its own set of dst
+rows, as the reference pre-routes each stream block to the dst rows it
+owns (``spmv_coo_multi_stream.hpp:178-232``). A hub's in-edges all live
+in one block. Each block's partial sums are then final for its rows: the
+driver merge is a scatter-assign, and barrier-gang tasks write their
+rows without locks.
 """
 
 from __future__ import annotations
@@ -39,9 +41,6 @@ class Graph:
         num_vertices: int | None = None,
         num_partitions: int | None = None,
         vertices: DataFrame | None = None,
-        skew_split: bool = False,
-        hot_dst_threshold: int | None = None,
-        salt_buckets: int = 8,
         layout_ready: bool = False,
     ):
         self.spark: SparkSession = edges.sparkSession
@@ -53,59 +52,30 @@ class Graph:
             F.col("dst").cast("long"),
             F.col("weight").cast("double"),
         )
-        # pull-oriented physical layout, built once and reused every superstep
-        if layout_ready:
-            # caller guarantees the edges already arrive dst-disjoint
-            # with exactly `num_partitions` partitions (the ETL's fused
-            # dedup+layout exchange, operators/etl.py::build_edge_table)
-            # — re-shuffling here would pay the exchange twice
-            layout = base
-        elif skew_split:
-            # hub-vertex skew splitting: a hot dst whose in-edges exceed the
-            # threshold is salted into `salt_buckets` sub-keys so its edges
-            # spread across partitions; each sub-partition emits its own
-            # partial sum and the final groupBy(dst) merge is unchanged —
-            # the Spark analogue of the FPGA write-back FSM's block-local
-            # accumulation (spmv_coo_multi_stream.hpp:178-232).
-            if hot_dst_threshold is None:
-                cnt = base.count()
-                hot_dst_threshold = max(1024, 4 * cnt // self.num_partitions)
-            hot = (
-                base.groupBy("dst")
-                .count()
-                .where(F.col("count") > hot_dst_threshold)
-                .select("dst")
-            )
-            salted = base.join(F.broadcast(hot.withColumn("_hot", F.lit(1))), "dst", "left")
-            salted = salted.withColumn(
-                "_salt",
-                F.when(
-                    F.col("_hot").isNotNull(),
-                    F.pmod(F.xxhash64("src"), F.lit(salt_buckets)),
-                ).otherwise(F.lit(0)),
-            )
-            layout = salted.repartition(self.num_partitions, "dst", "_salt").select(
-                "src", "dst", "weight"
-            )
-        else:
-            layout = base.repartition(self.num_partitions, "dst")
+        # pull-oriented physical layout, built once and reused every
+        # superstep. With `layout_ready` the caller guarantees the edges
+        # already arrive dst-disjoint with exactly `num_partitions`
+        # partitions (the ETL's fused dedup+layout exchange,
+        # operators/etl.py::build_edge_table) — re-shuffling here would
+        # pay the exchange twice
+        layout = base if layout_ready else base.repartition(self.num_partitions, "dst")
         self.edges = layout.sortWithinPartitions("dst", "src").persist(
             StorageLevel.MEMORY_AND_DISK
         )
         self._releases: list[weakref.finalize] = []
         self.release_with(self.edges)
-        if num_vertices is None:
-            row = self.edges.agg(
-                F.max(F.greatest("src", "dst")).alias("mx"),
-                F.count("*").alias("m"),
-            ).first()
-            num_vertices = int(row["mx"]) + 1
-            self._num_edges = int(row["m"])
-        else:
-            self._num_edges = None
-        self.num_vertices = int(num_vertices)
+        # computes the cache now: a cached relation reports its dst-hash
+        # layout only once computed, and until then the first plan over
+        # it adds the exchanges that layout makes redundant
+        row = self.edges.agg(
+            F.max(F.greatest("src", "dst")).alias("mx"),
+            F.count("*").alias("m"),
+        ).first()
+        self.num_edges = int(row["m"])
+        self.num_vertices = (
+            int(row["mx"]) + 1 if num_vertices is None else int(num_vertices)
+        )
         self.vertex_names = vertices  # optional (id, entity) dictionary
-        self.skew_split = skew_split
         self._dangling_mask: np.ndarray | None = None
         self._blocks = None
         self._dist_blocks = None
@@ -156,8 +126,7 @@ class Graph:
 
         ``num_blocks=None`` lets the store pick block count from |E|
         (message volume ∝ blocks·|V|, so fewer/larger blocks shuffle
-        less — see distblocks.py); a skew-salted layout keeps its own
-        partitioning, since coalescing would re-merge the salted hubs.
+        less — see distblocks.py).
 
         An explicit ``num_blocks`` that differs from a memoized store's
         block count rebuilds the store (the memo must not silently
@@ -178,16 +147,9 @@ class Graph:
                 self.edges,
                 path=path,
                 num_blocks=num_blocks,
-                num_edges=None if self.skew_split else self.num_edges,
+                num_edges=self.num_edges,
             )
         return self._dist_blocks
-
-    # ---------------------------------------------------------------- sizes
-    @property
-    def num_edges(self) -> int:
-        if self._num_edges is None:
-            self._num_edges = self.edges.count()
-        return self._num_edges
 
     # ------------------------------------------------------------ relations
     @property

@@ -18,7 +18,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_at(cpus: int, env_extra: dict | None = None) -> dict:
+def run_at(cpus: int) -> dict:
     env = dict(os.environ)
     env.update(
         {
@@ -26,7 +26,6 @@ def run_at(cpus: int, env_extra: dict | None = None) -> dict:
             "BENCH_ONLY": "q_spmv_throughput",
         }
     )
-    env.update(env_extra or {})
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         capture_output=True,
@@ -44,16 +43,16 @@ def run_at(cpus: int, env_extra: dict | None = None) -> dict:
     return full[-1] if full else blobs[-1]
 
 
-def measure(n: int, env_extra: dict, label: str, note: str, trials: int | None = None) -> dict:
-    """Median throughput over `trials` fresh-JVM runs PER parallelism
-    level — a single-run efficiency is the ratio of two ±15% noisy
-    numbers on this VM (seen live: 0.67 and 0.82 for identical code);
-    the cross-JVM median pins both sides before taking the ratio. All
-    per-trial numbers are recorded alongside the medians."""
-    if trials is None:
-        trials = int(os.environ.get("SCALING_TRIALS", "3"))
-    los = [run_at(n, env_extra) for _ in range(trials)]
-    his = [run_at(4 * n, env_extra) for _ in range(trials)]
+def measure(n: int, label: str, note: str) -> dict:
+    """Median throughput over `SCALING_TRIALS` (default 3) fresh-JVM
+    runs PER parallelism level — a single-run efficiency is the ratio
+    of two ±15% noisy numbers on this VM (seen live: 0.67 and 0.82 for
+    identical code); the cross-JVM median pins both sides before taking
+    the ratio. All per-trial numbers are recorded alongside the
+    medians."""
+    trials = int(os.environ.get("SCALING_TRIALS", "3"))
+    los = [run_at(n) for _ in range(trials)]
+    his = [run_at(4 * n) for _ in range(trials)]
 
     def tputs(runs):
         return sorted(r["extra"]["spmv_edge_traversals_per_sec_median"] for r in runs)
@@ -85,11 +84,9 @@ def measure(n: int, env_extra: dict, label: str, note: str, trials: int | None =
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    barrier_only = "--barrier-only" in sys.argv
     results = [
         measure(
             n,
-            {},
             "barrier-fast-path",
             "engine default on local masters: ONE gang-scheduled barrier job "
             "for all supersteps, shm-shared state, L2-tiled SpMV kernel, "
@@ -97,20 +94,6 @@ def main() -> None:
             "(same input, N vs 4N cores, median-superstep throughput)",
         ),
     ]
-    if not barrier_only:
-        results.append(
-            measure(
-                n,
-                {"SPARK_GRAFT_BARRIER": "0"},
-                "per-superstep",
-                "fallback path (one Spark job per superstep, driver merge): "
-                "dominated by fixed per-job scheduling at this graph size, so "
-                "added cores do not help - why the barrier path is the default "
-                "on a single node; on a real cluster the per-job overhead "
-                "amortizes over much larger per-superstep work",
-                trials=1,
-            )
-        )
     print(json.dumps(results, indent=1))
     path = os.path.join(REPO, "BENCH_SCALING.json")
     hist = []

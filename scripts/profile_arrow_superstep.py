@@ -43,8 +43,7 @@ def main() -> None:
     t0 = time.perf_counter()
     store = g.dist_blocks()
     print(f"store build: {time.perf_counter() - t0:.1f}s  "
-          f"(messages={store.num_messages}, P={store.num_partitions}, "
-          f"dst_disjoint={store.dst_disjoint})", flush=True)
+          f"(messages={store.num_messages}, P={store.num_partitions})", flush=True)
 
     s = 8
     cols = [f"r{i}" for i in range(s)]

@@ -1,3 +1,5 @@
+import contextlib
+
 import numpy as np
 import pytest
 
@@ -56,3 +58,19 @@ def transcripts_t1(spark):
     )
 
     return synthesize_transcripts(spark, n_convs=200, seed=42).cache()
+
+
+@pytest.fixture
+def gang_fallback():
+    """``with gang_fallback():`` runs every barrier-gang family on its
+    fallback path, as if its gang had failed: the barrier entry
+    (``plans/barrier.py::run_gang``) returns None without running it."""
+    from approximate_pagerank_public_spark.plans import barrier
+
+    @contextlib.contextmanager
+    def forced():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(barrier, "run_gang", lambda graph, gang, fallback: None)
+            yield
+
+    return forced

@@ -73,7 +73,7 @@ def test_checkpoint_every_k(g_rand, tmp_path):
     assert manifest["latest"] == 4  # iterations 2 and 4 saved
 
 
-def test_checkpoint_parity_barrier_vs_per_superstep(g_rand, tmp_path, monkeypatch):
+def test_checkpoint_parity_barrier_vs_per_superstep(g_rand, tmp_path, gang_fallback):
     """Checkpointed runs agree bit-for-bit whether the supersteps run as
     barrier chunks (default) or one Spark job each (fallback), and both
     resume to the same converged state."""
@@ -81,9 +81,9 @@ def test_checkpoint_parity_barrier_vs_per_superstep(g_rand, tmp_path, monkeypatc
     ck_c = str(tmp_path / "ckc")
     pagerank(g_rand, mode="broadcast", max_iter=4, tol=0.0, checkpoint_dir=ck_b)
     res_b = pagerank(g_rand, mode="broadcast", checkpoint_dir=ck_b, resume=True)
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER", "0")
-    pagerank(g_rand, mode="broadcast", max_iter=4, tol=0.0, checkpoint_dir=ck_c)
-    res_c = pagerank(g_rand, mode="broadcast", checkpoint_dir=ck_c, resume=True)
+    with gang_fallback():
+        pagerank(g_rand, mode="broadcast", max_iter=4, tol=0.0, checkpoint_dir=ck_c)
+        res_c = pagerank(g_rand, mode="broadcast", checkpoint_dir=ck_c, resume=True)
     assert res_b.iterations == res_c.iterations
     assert res_b.converged and res_c.converged
     assert np.array_equal(res_b.ranks_np, res_c.ranks_np)

@@ -1,7 +1,7 @@
 """mode='distributed-arrow' — message-shuffle supersteps over shared-FS
 CSR blocks (plans/distblocks.py) must match the golden semantics and the
 other execution paths on every variant: plain PR, PPR, multi-PPR, the
-``norm`` flag, skew-salted (dst-overlapping) layouts, and mid-run resume.
+``norm`` flag, and mid-run resume.
 """
 
 import numpy as np
@@ -13,7 +13,6 @@ from approximate_pagerank_public_spark.operators.pagerank import (
     pagerank,
     personalized_pagerank,
 )
-from approximate_pagerank_public_spark.plans.graph import Graph
 
 
 @pytest.fixture(autouse=True, scope="module")
@@ -62,46 +61,6 @@ def test_arrow_dangling_norm_off_matches_broadcast(g_rand):
     # and the flag changes the result (g_rand has dangling vertices)
     c = personalized_pagerank(g_rand, 3, mode="distributed-arrow", max_iter=6, tol=0.0)
     assert not np.allclose(b.rank_vector(0), c.rank_vector(0), atol=1e-9)
-
-
-def test_arrow_skew_salted_layout_parity(spark):
-    """A skew-split layout's blocks overlap on hot dsts — dst_disjoint is
-    False and the contribs path must take the partial+final agg branch
-    and still match the golden."""
-    rng = np.random.default_rng(11)
-    src = rng.integers(0, 200, 3000)
-    dst = rng.integers(0, 200, 3000)
-    keep = src != dst
-    src, dst = src[keep], dst[keep]
-    # hub: half the vertices point at 7
-    hub_src = np.arange(100, 199)
-    src = np.concatenate([src, hub_src])
-    dst = np.concatenate([dst, np.full_like(hub_src, 7)])
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    df = spark.createDataFrame(pd.DataFrame({"src": src, "dst": dst}))
-    df = df.where(F.col("src") != F.col("dst")).distinct()
-    w = Window.partitionBy("src")
-    df = df.select("src", "dst", (F.lit(1.0) / F.count("*").over(w)).alias("weight"))
-    g = Graph(
-        df,
-        num_vertices=200,
-        num_partitions=8,
-        skew_split=True,
-        hot_dst_threshold=20,
-    )
-    try:
-        store = g.dist_blocks()
-        assert not store.dst_disjoint, "fixture must actually overlap dsts"
-        es, ed, ew = g.edges_numpy()
-        gold, _ = golden.golden_pagerank(es, ed, ew, 200, tol=0.0, max_iter=6)
-        res = pagerank(g, mode="distributed-arrow", max_iter=6, tol=0.0)
-        pdf = res.ranks().toPandas().sort_values("id")
-        assert np.allclose(pdf["rank"].to_numpy(), gold, atol=1e-12)
-    finally:
-        g.unpersist()
 
 
 def test_arrow_routing_invariants(g_rand):

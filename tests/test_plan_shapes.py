@@ -55,16 +55,6 @@ def _record_ckpts(monkeypatch, checkpoint: bool) -> list:
     return shapes
 
 
-@pytest.fixture(autouse=True, scope="module")
-def _computed_edge_caches(g_rand):
-    """A cached relation reports its partitioning once it has been
-    computed: before that, a plan over g_rand's dst-hash edges adds the
-    exchanges their layout makes redundant. Compute both edge caches
-    first, so a shape does not depend on which tests ran before."""
-    g_rand.edges.count()
-    g_rand.undirected().edges.count()
-
-
 def test_etl_edge_table_shape(spark, transcripts_t1):
     from approximate_pagerank_public_spark.operators.etl import build_edge_table
 

@@ -70,7 +70,7 @@ def test_triangles_match_golden_on_random_digraphs(spark, g):
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
 @given(g=digraphs())
-def test_barrier_parity_on_random_digraphs(spark, g, monkeypatch):
+def test_barrier_parity_on_random_digraphs(spark, g, gang_fallback):
     """Property: for any digraph, the gang-scheduled barrier loop and
     the per-superstep path agree to within accumulated ulps. (Exact
     bit-equality holds for the per-vertex axpb arithmetic — asserted on
@@ -85,9 +85,8 @@ def test_barrier_parity_on_random_digraphs(spark, g, monkeypatch):
     try:
         sources = [0, n // 2]
         res_b = multi_ppr(graph, sources, max_iter=7, tol=0.0)
-        monkeypatch.setenv("SPARK_GRAFT_BARRIER", "0")
-        res_c = multi_ppr(graph, sources, max_iter=7, tol=0.0)
-        monkeypatch.delenv("SPARK_GRAFT_BARRIER")
+        with gang_fallback():
+            res_c = multi_ppr(graph, sources, max_iter=7, tol=0.0)
         assert np.allclose(res_b.ranks_np, res_c.ranks_np, rtol=0, atol=1e-13)
     finally:
         graph.unpersist()

@@ -3,9 +3,10 @@
 ``plans.barrier.run_barrier_rounds`` runs every round of a synchronous
 per-block fixpoint in one gang-scheduled job: min-relaxation (BFS, CC,
 SCC, SSSP) through ``relax_block`` and LPA votes through
-``vote_block``. The per-round ``mapInArrow`` paths stay as the
-fallback; a gang failure falls back with a ``RuntimeWarning``, and any
-other error propagates.
+``vote_block``. The streamed per-round ``mapInArrow`` paths stay as
+the fallback; every family enters the gang through
+``plans.barrier.run_gang``, so a gang failure falls back with a
+``RuntimeWarning``, and any other error propagates.
 """
 
 import numpy as np
@@ -64,7 +65,7 @@ GRAPHS = {
 }
 
 
-def _lpa_paths(und, max_iter, monkeypatch):
+def _lpa_paths(und, max_iter, monkeypatch, gang_fallback):
     """``(labels, rounds)`` from the gang path, then the per-round path;
     asserts the gang really ran."""
     ran = []
@@ -78,22 +79,23 @@ def _lpa_paths(und, max_iter, monkeypatch):
     monkeypatch.setattr(barrier, "run_barrier_rounds", spy)
     gang = labelprop._lpa_broadcast(und, max_iter)
     assert ran == [gang[1]]
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER", "0")
-    per_round = labelprop._lpa_broadcast(und, max_iter)
+    with gang_fallback():
+        per_round = labelprop._lpa_broadcast(und, max_iter)
     assert len(ran) == 1
-    monkeypatch.delenv("SPARK_GRAFT_BARRIER")
     return gang, per_round
 
 
 @pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_barrier_lpa_matches_per_round_and_golden(spark, name, monkeypatch):
+def test_barrier_lpa_matches_per_round_and_golden(spark, name, monkeypatch, gang_fallback):
     g = GRAPHS[name](spark)
     try:
         und = g.undirected()
         s2, d2, w2 = und.edges_numpy()
         for max_iter in (1, 10):
             gold = golden_label_propagation(s2, d2, w2, g.num_vertices, max_iter=max_iter)
-            (lab_b, rounds_b), (lab_p, rounds_p) = _lpa_paths(und, max_iter, monkeypatch)
+            (lab_b, rounds_b), (lab_p, rounds_p) = _lpa_paths(
+                und, max_iter, monkeypatch, gang_fallback
+            )
             assert np.array_equal(lab_b, gold), max_iter
             assert np.array_equal(lab_p, gold), max_iter
             # the round the run stops at (fixpoint or max_iter) agrees
@@ -106,11 +108,11 @@ def test_barrier_lpa_matches_per_round_and_golden(spark, name, monkeypatch):
         g.unpersist()
 
 
-def test_barrier_lpa_matches_golden_on_random_graph(g_rand, monkeypatch):
+def test_barrier_lpa_matches_golden_on_random_graph(g_rand, monkeypatch, gang_fallback):
     und = g_rand.undirected()
     s2, d2, w2 = und.edges_numpy()
     gold = golden_label_propagation(s2, d2, w2, 300, max_iter=5)
-    (lab_b, rounds_b), (lab_p, rounds_p) = _lpa_paths(und, 5, monkeypatch)
+    (lab_b, rounds_b), (lab_p, rounds_p) = _lpa_paths(und, 5, monkeypatch, gang_fallback)
     assert np.array_equal(lab_b, gold)
     assert np.array_equal(lab_p, gold)
     assert rounds_b == rounds_p
@@ -155,14 +157,15 @@ def test_non_gang_error_propagates(g_rand, monkeypatch):
 
 def test_kernel_error_in_gang_warns_then_surfaces(g_rand, monkeypatch):
     """A kernel that raises inside the gang fails the barrier job: the
-    caller warns and reruns per round. LPA's per-round path does not run
-    ``vote_block``, so it still returns golden labels; the min-relax
-    per-round path runs the same broken kernel, so CC raises."""
+    caller warns and reruns on its streamed per-round path. Neither
+    LPA's nor the min-relax one runs a block kernel (``vote_block``,
+    ``relax_block``), so both still return golden labels."""
     from approximate_pagerank_public_spark.plans import blocks
 
     def broken(*args, **kwargs):  # nested, so it ships to the workers by value
         raise ValueError("kernel bug")
 
+    src, dst, _ = g_rand.edges_numpy()
     s2, d2, w2 = g_rand.undirected().edges_numpy()
     monkeypatch.setattr(labelprop, "vote_block", broken)
     with pytest.warns(RuntimeWarning, match="barrier fast path failed"):
@@ -172,5 +175,6 @@ def test_kernel_error_in_gang_warns_then_surfaces(g_rand, monkeypatch):
 
     monkeypatch.setattr(blocks, "relax_block", broken)
     with pytest.warns(RuntimeWarning, match="barrier fast path failed"):
-        with pytest.raises(Exception, match="ValueError: kernel bug"):
-            connected_components(g_rand, mode="broadcast")
+        cc = connected_components(g_rand, mode="broadcast")
+    got = cc.toPandas().sort_values("id")["component"].to_numpy()
+    assert np.array_equal(got, golden.golden_connected_components(src, dst, 300))

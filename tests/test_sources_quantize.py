@@ -104,17 +104,14 @@ def test_quantized_pagerank_accuracy_degrades_gracefully(g_rand):
     assert np.abs(q8.ranks_np[0] - gold).sum() > np.abs(q26.ranks_np[0] - gold).sum()
 
 
-def test_quantized_pagerank_barrier_vs_fallback_bit_parity(g_rand, monkeypatch):
+def test_quantized_pagerank_barrier_vs_fallback_bit_parity(g_rand, gang_fallback):
     """The quantization hook threads through both execution paths with
     identical results (it runs inside the barrier rowwork phase and
     after the fallback superstep — same point in the dataflow)."""
-    from approximate_pagerank_public_spark.plans.barrier import barrier_available
-
-    assert barrier_available(g_rand)
     q_b = quantized_pagerank(g_rand, total_bits=12, max_iter=15)
     assert q_b.phase_timings is not None  # proof the gang actually ran
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER", "0")
-    q_f = quantized_pagerank(g_rand, total_bits=12, max_iter=15)
+    with gang_fallback():
+        q_f = quantized_pagerank(g_rand, total_bits=12, max_iter=15)
     assert q_f.phase_timings is None
     assert np.array_equal(q_b.ranks_np, q_f.ranks_np)
 

@@ -195,11 +195,12 @@ def test_harmonic_centrality_golden_and_path_parity(g_rand, spark, monkeypatch):
         assert hc2[s] == hc[s], s
 
 
-def test_barrier_relax_matches_per_round_bit_parity(g_rand, monkeypatch):
+def test_barrier_relax_matches_per_round_bit_parity(g_rand, gang_fallback):
     """frontier_min_relax has two execution paths: all rounds in one
-    gang-scheduled barrier job (local masters) vs one mapInArrow job per
-    round. The barrier loop snapshots state per round, so distances,
-    round count, and convergence must be identical — for both unweighted
+    gang-scheduled barrier job (local masters) vs one streamed
+    ``spmv.gather`` min job per round (no blocks, or a failed gang).
+    The barrier loop snapshots state per round, so distances, round
+    count, and convergence must be identical — for both unweighted
     min-plus (BFS) and weighted SSSP float64 relaxation."""
     from approximate_pagerank_public_spark.operators import traversal
 
@@ -222,9 +223,9 @@ def test_barrier_relax_matches_per_round_bit_parity(g_rand, monkeypatch):
 
     b_bfs = run_bfs()
     b_sssp = run_sssp()
-    monkeypatch.setenv("SPARK_GRAFT_BARRIER", "0")
-    p_bfs = run_bfs()
-    p_sssp = run_sssp()
+    with gang_fallback():
+        p_bfs = run_bfs()
+        p_sssp = run_sssp()
     assert np.array_equal(b_bfs, p_bfs)
     assert np.array_equal(b_sssp[0], p_sssp[0])  # bit-identical f64
     assert b_sssp[1:] == p_sssp[1:]  # rounds + converged
